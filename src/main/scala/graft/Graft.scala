@@ -12,6 +12,33 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
+  /** Process-lived checkpoint-backed frames (the SparkEntry memo layer's
+    * pair tables, the daily bars of a live events snapshot) register their
+    * RDD ids here so the between-queries reaper below can evict everything
+    * else without re-paying the shared builds the memos exist to amortize.
+    */
+  private val pinnedRddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+
+  /** Register a memoized checkpoint-backed frame as process-lived. */
+  def pinForProcess(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    org.apache.spark.sql.GraftBridge.checkpointRddIds(df).foreach(pinnedRddIds.add(_))
+    df
+  }
+
+  /** Unpin a [[pinForProcess]] frame and free its blocks — for a frame
+    * whose source snapshot was superseded.
+    */
+  def release(df: org.apache.spark.sql.DataFrame): Unit = {
+    org.apache.spark.sql.GraftBridge.checkpointRddIds(df).foreach(pinnedRddIds.remove(_))
+    org.apache.spark.sql.GraftBridge.unpersistCheckpointed(df)
+  }
+
+  /** RDD ids currently pinned by [[pinForProcess]]. */
+  private[graft] def pinnedIds: Set[Int] = {
+    import scala.jdk.CollectionConverters._
+    pinnedRddIds.asScala.toSet
+  }
+
   /** Drop all cross-query executor state between independent benchmark
     * queries: every persisted RDD (a finished query's localCheckpoint
     * blocks — garbage once its action returned, but pinned until an
@@ -22,20 +49,12 @@ object Graft {
     * q_bfs_hops's 120M-row symmetrized edge checkpoint after ~390 prior
     * query runs). Blocking=false: eviction proceeds asynchronously, the
     * next query's timing is unaffected.
+    *
+    * Pinned frames survive. A snapshot frame (the daily bars of one events
+    * file set, see `SparkEntry.bars`) lives until its snapshot is
+    * superseded — a later read of the path lists a changed file set, and
+    * [[release]] frees it then — or until the threshold flush below runs.
     */
-  /** Process-lived checkpoint-backed frames (the SparkEntry memo layer's
-    * pair tables) register their RDD ids here so the between-queries
-    * reaper below can evict everything else without re-paying the shared
-    * builds the memos exist to amortize.
-    */
-  private val pinnedRddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Register a memoized checkpoint-backed frame as process-lived. */
-  def pinForProcess(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    org.apache.spark.sql.GraftBridge.checkpointRddIds(df).foreach(pinnedRddIds.add(_))
-    df
-  }
-
   def dropQueryState(spark: org.apache.spark.sql.SparkSession,
                      thresholdBytes: Long = 4L << 30): Unit = {
     // A finished query's checkpoint blocks are garbage the moment its

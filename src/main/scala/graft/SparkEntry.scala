@@ -3,7 +3,7 @@ package graft
 import graft.functions.Fns
 import graft.operators._
 import graft.streaming.EventsStream
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,8 +37,21 @@ object SparkEntry {
   private def lineitemNtz(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).withColumn("l_shipdate", col("l_shipdate").cast("timestamp_ntz"))
 
-  private def bars(s: SparkSession, dir: String): DataFrame =
-    Ohlc.dailyBars(events(s, dir))
+  /** Daily bars of the events table's current snapshot: built once per
+    * snapshot and shared by every bars key over it (and by Sinks' restates
+    * of derived tables). The frame is a lazy checkpoint — it fills in the
+    * first job that reads it and cuts the lineage there, so no shuffle
+    * stays reachable — pinned so the between-queries reaper keeps it, and
+    * released when a later read of the events path lists a changed file
+    * set. Each call hands out a fresh instance of the shared frame.
+    */
+  private def bars(s: SparkSession, dir: String): DataFrame = {
+    val snap = Tables.eventsSnapshot(s, dir)
+    GraftBridge.newInstance(snapshotMemo(s, snap, s"bars:$dir") {
+      Graft.pinForProcess(Graft.materialize(
+        Ohlc.dailyBars(Fns.normalizeTsNtz(snap.df, "ts")), eager = false))
+    })
+  }
 
   // String literals in comparisons coerce to the ts column's own timestamp
   // type, so cutoffs work whether the source reads as LTZ or NTZ.
@@ -73,7 +86,8 @@ object SparkEntry {
   // would both waste the dominant cost and silently DECOUPLE the models a
   // diagnostic is supposed to score. Keying on applicationId scopes every
   // entry (and any localCheckpoint-backed frame) to its own SparkContext.
-  private val shared = new java.util.concurrent.ConcurrentHashMap[String, Any]()
+  private val shared =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[Any]]()
 
   /** Invalidate every memoized frame/model. The benchmark harnesses drop
     * all persisted RDD blocks between independent queries
@@ -83,18 +97,45 @@ object SparkEntry {
     * must be cleared in the same breath and rebuild lazily.
     */
   def clearShared(): Unit = shared.clear()
-  // get/putIfAbsent rather than computeIfAbsent: builders nest (the pair
-  // builder trains through the centroid builder), and a recursive
-  // computeIfAbsent on one map is ILLEGAL; worst case under concurrency is
-  // a duplicated deterministic build, never a wrong value.
-  private def memo[T](s: SparkSession, key: String)(f: => T): T = {
+
+  /** Memoize `f` under `key` for this SparkContext. Builds are single-flight
+    * per key: the first caller builds, concurrent callers of the same key
+    * wait for its value, so a frame pinned inside `f` is pinned once. A
+    * failed build is forgotten and its error rethrown to every waiter.
+    * Builders nest on DIFFERENT keys (the pair builder trains through the
+    * centroid builder), which is why this is not a computeIfAbsent: a
+    * recursive computeIfAbsent on one map is illegal.
+    */
+  private[graft] def memo[T](s: SparkSession, key: String)(f: => T): T = {
     val full = s.sparkContext.applicationId + ":" + key
-    val existing = shared.get(full)
-    if (existing != null) existing.asInstanceOf[T]
-    else {
-      val v: Any = f
-      val prev = shared.putIfAbsent(full, v)
-      (if (prev != null) prev else v).asInstanceOf[T]
+    val mine = new java.util.concurrent.FutureTask[Any](() => f)
+    val task = shared.putIfAbsent(full, mine) match {
+      case null => mine.run(); mine
+      case other => other
+    }
+    try task.get().asInstanceOf[T]
+    catch {
+      case e: java.util.concurrent.ExecutionException =>
+        shared.remove(full, task)
+        throw e.getCause
+    }
+  }
+
+  /** [[memo]] for a frame derived from one table snapshot: keyed by the
+    * snapshot's fingerprint, and released (forgotten, unpinned, freed) when
+    * the snapshot is superseded, so at most one snapshot's frame per path
+    * stays live.
+    */
+  private def snapshotMemo(s: SparkSession, snap: graft.sources.Sources.Snapshot, key: String)(
+      f: => DataFrame): DataFrame = {
+    val full = s"$key@${snap.fingerprint}"
+    memo(s, full) {
+      val df = f
+      snap.onSupersede { () =>
+        shared.remove(s.sparkContext.applicationId + ":" + full)
+        Graft.release(df)
+      }
+      df
     }
   }
 

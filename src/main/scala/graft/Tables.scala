@@ -1,15 +1,18 @@
 package graft
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loaders for the driver testdata layout
   * (`<dir>/<table>.parquet`). Schemas come from the files; column pruning
   * and predicate pushdown are left to Catalyst — callers `select`/`filter`
-  * declaratively and the scan narrows itself.
+  * declaratively and the scan narrows itself. Every load goes through
+  * [[Sources.parquetSnapshot]], so a table whose files did not change since
+  * the last load reuses that load's listing and schema.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.readParquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
@@ -26,9 +29,14 @@ object Tables {
     * unconditionally; [[graft.SparkEntry]]'s events helper then normalizes
     * whatever dtype actually loaded to TIMESTAMP_NTZ.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame = eventsSnapshot(spark, dir).df
+
+  /** The events table's current [[Sources.Snapshot]], for frames derived
+    * from it that live as long as it does.
+    */
+  def eventsSnapshot(spark: SparkSession, dir: String): Sources.Snapshot = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(spark, dir, "events")
+    Sources.parquetSnapshot(spark, s"$dir/events.parquet")
   }
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
 

@@ -39,13 +39,6 @@ object Fns {
     }
   }
 
-  /** Per-entity time-ordered window: partition once on the entity key; all
-    * downstream per-entity ops (SMA, gaps, pct-change) reuse the same
-    * shuffle — one exchange for the whole time-series stage.
-    */
-  def entityWindow(partitionCol: Column, orderCol: Column): WindowSpec =
-    Window.partitionBy(partitionCol).orderBy(orderCol)
-
   /** Simple moving average over the trailing `n` rows (inclusive).
     * Reference load_yfinance_data.py:143-145 (`rolling(window=sma).mean()`):
     * pandas emits NULL until the window is full — guard with row_number.

@@ -92,11 +92,13 @@ object Quantiles {
     val rows = df.where(col(valueCol).isNotNull)
       .groupBy(encCol(keyCol).as("__k")).count()
       .limit((cap + 1).toInt).collect()
-    require(rows.length <= cap,
-      s"quantileCont over '$keyCol' has more than $cap groups — per-group quantiles are " +
-        s"driver-sized output; group by a coarser key or raise spark.graft.quantiles.maxGroups")
+    require(rows.length <= cap, tooManyGroups(keyCol, cap))
     rows.map(r => r.getString(0) -> r.getLong(1)).toMap
   }
+
+  private def tooManyGroups(keyCol: String, cap: Long): String =
+    s"quantileCont over '$keyCol' has more than $cap groups — per-group quantiles are " +
+      s"driver-sized output; group by a coarser key or raise spark.graft.quantiles.maxGroups"
 
   /** Exact 0-based order statistics per group: for each group key and
     * each requested rank, the rank-th smallest value (NULL values
@@ -458,13 +460,17 @@ object Quantiles {
     * in and the bisection skips its own counting job — one fewer pass over
     * the input. Counts MUST equal `count(valueCol is not null)` per group;
     * they define the rank targets, so a wrong count silently shifts the
-    * quantile (the same contract groupCounts fulfills internally).
+    * quantile (the same contract groupCounts fulfills internally). The
+    * same `spark.graft.quantiles.maxGroups` cap applies to the map.
     */
   def quantileContWithCounts(df: DataFrame, keyCol: String, valueCol: String,
                              qs: Seq[(Double, String)],
-                             counts: Map[String, Long]): DataFrame =
+                             counts: Map[String, Long]): DataFrame = {
+    val cap = maxGroups(df)
+    require(counts.size <= cap, tooManyGroups(keyCol, cap))
     quantileContCounted(df, keyCol, valueCol, qs,
       counts.map { case (k, n) => encRaw(k) -> n })
+  }
 
   /** [[quantileCont]] with the per-group counts supplied (encoded key
     * space) — lets a caller that already paid the counts pass (or whose

@@ -487,9 +487,6 @@ object Similarity {
     }.toDF("qid", idCol, "mmr_rank", "cosine", "mmr_score")
   }
 
-  def lshSignature(vecCol: String, planes: Int): Column =
-    graft.plans.Exprs.hyperplaneLsh(col(vecCol), planes)
-
   /** Dequantized vector (array<double>) from int8 codes + scale. */
   def dequantize(codesCol: String, scaleCol: String): Column =
     expr(s"transform($codesCol, c -> cast(c as double) * $scaleCol)")

@@ -100,7 +100,9 @@ object Sinks {
   /** Idempotent incremental append: filter the incoming frame to rows
     * strictly newer than the target's per-key max(ts) (the reference's
     * check_table_append_compatibility + to_sql append), then append. On an
-    * empty/absent target, everything is new.
+    * empty/absent target, everything is new. The target is read through
+    * [[Sources.readParquet]]: an unchanged target reuses its last listing
+    * and schema, and the append itself supersedes that snapshot.
     */
   def appendNewerThan(
       spark: SparkSession,
@@ -110,7 +112,7 @@ object Sinks {
       tsCol: String): Unit = {
     val fresh =
       try {
-        val existing = spark.read.parquet(path)
+        val existing = Sources.readParquet(spark, path)
         Incremental.newerThanExisting(existing, incoming, key, tsCol)
       } catch {
         // only "target doesn't exist yet" means first write — anything else

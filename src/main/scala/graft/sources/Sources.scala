@@ -15,6 +15,81 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** One read of a parquet path's file set: the listing and the inferred
+    * schema, paid once. `df` hands out a fresh instance of the same
+    * relation per call (new attribute ids, no listing, no schema job), so
+    * two reads of one snapshot still self-join like two independent reads.
+    * Frames derived from the snapshot register a release with
+    * [[onSupersede]]; it runs when a later read lists a changed file set.
+    */
+  final class Snapshot private[sources] (val fingerprint: String, relation: DataFrame) {
+    private var superseded = false
+    private val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
+
+    def df: DataFrame = org.apache.spark.sql.GraftBridge.newInstance(relation)
+
+    /** Run `release` once this snapshot is superseded — at once if it already is. */
+    def onSupersede(release: () => Unit): Unit = {
+      val now = synchronized {
+        if (!superseded) releases += release
+        superseded
+      }
+      if (now) release()
+    }
+
+    private[sources] def supersede(): Unit =
+      synchronized { superseded = true; val rs = releases.toList; releases.clear(); rs }
+        .foreach(_())
+  }
+
+  private val snapshots =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Snapshot]()
+
+  /** The parquet table at `path` as it is now: one [[Snapshot]] per
+    * (session, path, file set). The file set is listed again on every call
+    * — name, length and modification time of every file under the path —
+    * and a read whose listing matches the last one reuses it; a changed
+    * listing reads the path anew and supersedes the previous snapshot,
+    * releasing every frame derived from it. A missing path reads (and
+    * fails) the way `spark.read.parquet` does.
+    */
+  def parquetSnapshot(spark: SparkSession, path: String): Snapshot = {
+    snapshots.keySet.removeIf(_._1.sparkContext.isStopped)
+    val fp = fingerprint(spark, path)
+    var old: Snapshot = null
+    val snap = snapshots.compute((spark, path), (_, prev) =>
+      if (prev != null && prev.fingerprint == fp) prev
+      else {
+        old = prev
+        new Snapshot(fp, spark.read.parquet(path))
+      })
+    if (old != null) old.supersede()
+    snap
+  }
+
+  /** [[parquetSnapshot]]'s frame — the one parquet table reader. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquetSnapshot(spark, path).df
+
+  /** Digest of every file under `path` (name, length, mtime);
+    * empty for a missing path.
+    */
+  private def fingerprint(spark: SparkSession, path: String): String = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Seq.newBuilder[String]
+    try {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += s"${f.getPath.toUri.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}"
+      }
+    } catch { case _: java.io.FileNotFoundException => }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.result().sorted.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
   /** Reference column-name normalization: lowercase, spaces → underscores
     * (main.py `[column.lower() for column in ...]`,
     * sector.py `column.lower().replace(" ", "_")`).

@@ -30,6 +30,17 @@ object GraftBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A fresh instance of a relation-backed DataFrame (a file scan, a
+    * checkpoint): the same relation under new attribute ids, so two uses of
+    * one shared relation resolve apart in a self-join. Anything else comes
+    * back as is.
+    */
+  def newInstance(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case r: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
+      ofRows(df.sparkSession, r.newInstance())
+    case _ => df
+  }
+
   /** Free the blocks behind a (local)checkpointed DataFrame.
     * `Dataset.unpersist` only uncaches CacheManager entries and is a
     * SILENT NO-OP for checkpoint-backed datasets (their persistence lives

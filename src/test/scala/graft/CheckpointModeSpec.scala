@@ -78,6 +78,28 @@ class CheckpointModeSpec extends SparkSpec {
     assert(local.nonEmpty)
   }
 
+  test("snapshot bars frame identical under both modes") {
+    // each mode builds its own bars frame: two copies of the events table
+    // are two snapshots, so the reliable run cannot reuse the local frame
+    def store(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-snap").toString
+      Tables.events(spark, sfDir).write.parquet(s"$dir/events.parquet")
+      dir
+    }
+    def run(dir: String): Set[String] =
+      Seq("q_ohlc_daily", "q_sma", "q_gap_off_peak")
+        .flatMap(k => rows(SparkEntry.queries(k)(spark, dir)).map(k + _)).toSet
+    val (localDir, reliableDir) = (store(), store())
+    val local = run(localDir)
+    val reliable = withReliableCheckpoints {
+      val r = run(reliableDir)
+      assert(spark.sparkContext.getCheckpointDir.isDefined)
+      r
+    }
+    assert(local.nonEmpty)
+    assert(local == reliable)
+  }
+
   test("dedup connected components identical under both modes (incl. distributed rounds)") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 9L))

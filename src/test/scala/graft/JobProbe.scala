@@ -1,0 +1,36 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.SparkSession
+
+/** What ran while a block ran: the Spark jobs started and the RDDs of
+  * every stage submitted (by RDD class name, e.g. FileScanRDD).
+  */
+final class JobProbe extends SparkListener {
+  private val jobCount = new AtomicInteger()
+  private val names = new ConcurrentLinkedQueue[String]()
+  override def onJobStart(e: SparkListenerJobStart): Unit = jobCount.incrementAndGet()
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    e.stageInfo.rddInfos.foreach(r => names.add(r.name))
+  def jobs: Int = jobCount.get()
+  def rddNames: Set[String] = names.asScala.toSet
+}
+
+object JobProbe {
+  def during[T](spark: SparkSession)(f: => T): (T, JobProbe) = {
+    val sc = spark.sparkContext
+    GraftTestBridge.drainListenerBus(sc)
+    val probe = new JobProbe
+    sc.addSparkListener(probe)
+    try {
+      val v = f
+      GraftTestBridge.drainListenerBus(sc)
+      (v, probe)
+    } finally sc.removeSparkListener(probe)
+  }
+}

@@ -1,0 +1,51 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+
+/** The registry memo's concurrency contract: a key is built once however
+  * many callers race for it, so a frame pinned inside the build is pinned
+  * once, and a failed build is retried by the next caller.
+  */
+class MemoSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def race[T](n: Int)(f: => T): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(n)
+    val start = new CountDownLatch(1)
+    try {
+      val futures = (1 to n).map(_ => pool.submit(() => { start.await(); f }))
+      start.countDown()
+      futures.map(_.get(120, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+  }
+
+  test("concurrent builds of one key leave exactly one pinned RDD") {
+    val key = s"memo-race-${System.nanoTime()}"
+    val builds = new AtomicInteger()
+    val pinnedBefore = Graft.pinnedIds
+    val frames = race(4) {
+      SparkEntry.memo(spark, key) {
+        builds.incrementAndGet()
+        Thread.sleep(300) // hold the build open while the others arrive
+        Graft.pinForProcess(Graft.materialize((1 to 100).toDF("x"), eager = true))
+      }
+    }
+    assert(builds.get() === 1)
+    assert(frames.map(System.identityHashCode).distinct.size === 1)
+    val added = Graft.pinnedIds -- pinnedBefore
+    assert(added === GraftBridge.checkpointRddIds(frames.head).toSet)
+    assert(added.size === 1)
+    Graft.release(frames.head)
+  }
+
+  test("a failed build is forgotten: the next caller builds again") {
+    val key = s"memo-fail-${System.nanoTime()}"
+    intercept[IllegalStateException] {
+      SparkEntry.memo[DataFrame](spark, key)(throw new IllegalStateException("boom"))
+    }
+    assert(SparkEntry.memo(spark, key)(42) === 42)
+  }
+}

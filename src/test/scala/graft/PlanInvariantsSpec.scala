@@ -21,17 +21,45 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("time-series aggregates partial-combine: the shuffle moves bars, not ticks") {
+    // the bars keys read one checkpointed daily-bars frame per events
+    // snapshot (SparkEntry.bars); its build is the one tick-level
+    // aggregate: a partial + final pair around one exchange — no raw-tick
+    // repartition anywhere
+    val build = graft.operators.Ohlc.dailyBars(
+      graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
+      .queryExecution.executedPlan.toString()
+    assert(count(build, "Exchange") === 1, build)
+    assert(count(build, "HashAggregate") === 2, s"expected partial+final:\n$build")
+    // projections of the bars read the shared frame: no exchange, no scan
     for (q <- Seq("q_ohlc_daily", "q_dollar_volume", "q_gap_on_peak")) {
       val p = plan(q)
-      // partial + final aggregate pair around one exchange — no raw-tick
-      // repartition anywhere
-      assert(count(p, "Exchange") === 1, s"$q:\n$p")
-      assert(count(p, "HashAggregate") === 2, s"$q expected partial+final:\n$p")
+      assert(p.contains("Scan ExistingRDD") && !p.contains("FileScan"), s"$q:\n$p")
+      assert(count(p, "Exchange") === 0, s"$q:\n$p")
     }
-    // windowed derivatives add exactly one more exchange, carrying bars
+    // windowed derivatives add exactly one exchange, carrying bars
     for (q <- Seq("q_sma", "q_drawdown")) {
-      assert(count(plan(q), "Exchange") === 2, s"$q:\n${plan(q)}")
+      assert(count(plan(q), "Exchange") === 1, s"$q:\n${plan(q)}")
     }
+  }
+
+  test("bars keys over an unchanged store share one bars frame; an append rescans") {
+    import org.apache.spark.sql.functions._
+    val store = java.nio.file.Files.createTempDirectory("graft_plan_store").toString
+    val events = s"$store/events.parquet"
+    val ticks = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
+    val cut = lit("2024-01-20").cast("timestamp_ntz")
+    ticks.where(col("ts") < cut).write.parquet(events)
+    def sma() = SparkEntry.queries("q_sma")(spark, store)
+    SparkEntry.queries("q_ohlc_daily")(spark, store).collect()
+    // q_sma after q_ohlc_daily reads the bars frame: no parquet scan at all
+    val p = sma().queryExecution.executedPlan.toString()
+    assert(!p.contains("FileScan") && !p.contains("events.parquet"), p)
+    val (_, unchanged) = JobProbe.during(spark)(sma().collect())
+    assert(!unchanged.rddNames.contains("FileScanRDD"), unchanged.rddNames)
+    // an append changes the file set: the first bars key scans the store again
+    graft.sources.Sinks.appendNewerThan(spark, ticks.where(col("ts") >= cut), events, "user_id", "ts")
+    val (_, appended) = JobProbe.during(spark)(sma().collect())
+    assert(appended.rddNames.contains("FileScanRDD"), appended.rddNames)
   }
 
   test("pair generators never plan a nested-loop join") {
@@ -220,15 +248,15 @@ class PlanInvariantsSpec extends SparkSpec {
 
   test("round-5 analytics keep their scale shapes") {
     // EWMA: all ten lag terms share ONE window pass over ONE bar exchange
-    // (bars aggregate + window = two exchanges total, like q_sma)
+    // (over the shared bars frame, like q_sma)
     val ewma = plan("q_ewma")
-    assert(count(ewma, "Exchange") === 2, ewma)
+    assert(count(ewma, "Exchange") === 1, ewma)
     assert(count(ewma, "Window ") === 1, ewma)
-    // rolling volatility: same two-exchange window family as q_sma — the
-    // bar aggregate's exchange plus ONE entity-window exchange that the
-    // stacked lag and frame-sum Window operators share
+    // rolling volatility: same window family as q_sma — ONE entity-window
+    // exchange over the shared bars frame, which the stacked lag and
+    // frame-sum Window operators share
     val vol = plan("q_volatility")
-    assert(count(vol, "Exchange hashpartitioning") === 2, vol)
+    assert(count(vol, "Exchange hashpartitioning") === 1, vol)
     assert(count(vol, "Window ") === 2, vol)
     // corr matrix: the day-aligned self-join of the top-N series is
     // broadcast — no sort-merge join, no cartesian
@@ -307,7 +335,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // lag features: six window functions share the entityDay sort — the
     // plan pays ONE window-partition exchange over the bars
     val lf = plan("q_lag_features")
-    assert(count(lf, "Exchange") === 2, lf) // bars agg + one window exchange
+    assert(count(lf, "Exchange") === 1, lf) // one window exchange over the bars frame
   }
 
   test("round-9 operators keep their scale shapes") {

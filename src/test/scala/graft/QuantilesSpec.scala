@@ -135,6 +135,23 @@ class QuantilesSpec extends SparkSpec {
     assert(Quantiles.quantileCont(df, "k", "v", Seq(0.5 -> "p50")).count() === 50)
   }
 
+  test("caller-supplied counts are held to the same group cap") {
+    // quantileContWithCounts skips the counting pass, not the precondition:
+    // a counts map past the cap fails before any driver-side rank state
+    val df = (1 to 50).map(i => (s"user_$i", i.toDouble)).toDF("k", "v")
+    val counts = (1 to 50).map(i => s"user_$i" -> 1L).toMap
+    spark.conf.set("spark.graft.quantiles.maxGroups", "10")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Quantiles.quantileContWithCounts(df, "k", "v", Seq(0.5 -> "p50"), counts)
+      }
+      assert(e.getMessage.contains("spark.graft.quantiles.maxGroups"))
+      assert(e.getMessage.contains("coarser key"))
+    } finally spark.conf.unset("spark.graft.quantiles.maxGroups")
+    assert(Quantiles.quantileContWithCounts(df, "k", "v", Seq(0.5 -> "p50"), counts)
+      .count() === 50)
+  }
+
   test("a real string key equal to the NULL sentinel stays its own group") {
     // keys are carried with an out-of-band marker byte, so a StringType key
     // that literally holds "\u0000NULL" cannot merge with the null group

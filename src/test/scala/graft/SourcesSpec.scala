@@ -235,6 +235,93 @@ class SourcesSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  // ---- the snapshot reader: one listing and schema per file set ----
+
+  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
+  /** A one-table events store `<dir>/events.parquet` with `days` days of
+    * ticks for two users; returns the store dir.
+    */
+  private def eventsStore(days: Int): String = {
+    val dir = Files.createTempDirectory("graft_snap").toFile.getAbsolutePath
+    val rows = for (d <- 1 to days; u <- 1L to 2L; h <- Seq(10, 14))
+      yield (u, ts(f"2024-01-$d%02d $h:00:00"), d * 10.0 + u + h / 100.0)
+    rows.toDF("user_id", "ts", "value").write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  private def dayPull(d: Int) =
+    Seq((1L, ts(f"2024-01-$d%02d 12:00:00"), 1.0), (2L, ts(f"2024-01-$d%02d 12:00:00"), 2.0))
+      .toDF("user_id", "ts", "value")
+
+  private def barsRdd(dir: String): Int =
+    org.apache.spark.sql.GraftBridge.checkpointRddIds(
+      SparkEntry.queries("q_ohlc_daily")(spark, dir)).head
+
+  test("snapshot reader: a read after appendNewerThan returns the new rows") {
+    val path = s"${eventsStore(2)}/events.parquet"
+    assert(Sources.readParquet(spark, path).count() === 8)
+    Sinks.appendNewerThan(spark, dayPull(3), path, "user_id", "ts")
+    assert(Sources.readParquet(spark, path).count() === 10)
+    assert(Sources.readParquet(spark, path).where($"ts" >= ts("2024-01-03 00:00:00"))
+      .count() === 2)
+  }
+
+  test("snapshot reader: a read after restateDays in place returns the restated day") {
+    val out = Files.createTempDirectory("graft_snap_restate").toFile.getAbsolutePath + "/t"
+    Sinks.writeByDay(Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 10:00:00"), 999.0))
+      .toDF("user_id", "ts", "value"), out, "ts")
+    def values = Sources.readParquet(spark, out).orderBy($"ts").select($"value").as[Double]
+      .collect().toSeq
+    assert(values === Seq(1.0, 999.0))
+    Sinks.restateDays(Seq((2L, ts("2024-01-02 10:00:00"), 2.0)).toDF("user_id", "ts", "value"),
+      out, "ts")
+    assert(values === Seq(1.0, 2.0))
+  }
+
+  test("snapshot reader: a second read of an unchanged path starts no Spark job") {
+    val path = s"${eventsStore(2)}/events.parquet"
+    val (first, cold) = JobProbe.during(spark)(Sources.readParquet(spark, path))
+    assert(cold.jobs >= 1) // the first read infers the schema with a job
+    val (second, warm) = JobProbe.during(spark)(Sources.readParquet(spark, path))
+    assert(warm.jobs === 0)
+    assert(second.schema === first.schema)
+    // a fresh instance per read: the two reads still self-join apart
+    assert(first.join(second, first("user_id") === second("user_id") && first("ts") === second("ts"))
+      .count() === 8)
+  }
+
+  test("the bars frame of a live snapshot survives Graft.dropQueryState") {
+    val dir = eventsStore(3)
+    val before = SparkEntry.queries("q_ohlc_daily")(spark, dir).collect().toSet
+    val id = barsRdd(dir)
+    assert(Graft.pinnedIds.contains(id))
+    Graft.dropQueryState(spark)
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    // the next bars key reuses the same frame and reads no events file
+    val (after, probe) = JobProbe.during(spark)(
+      SparkEntry.queries("q_ohlc_daily")(spark, dir).collect().toSet)
+    assert(barsRdd(dir) === id)
+    assert(after === before)
+    assert(!probe.rddNames.contains("FileScanRDD"), probe.rddNames)
+  }
+
+  test("over N appends, one bars snapshot per path stays persisted") {
+    val dir = eventsStore(2)
+    val ids = (3 to 6).map { d =>
+      Sinks.appendNewerThan(spark, dayPull(d), s"$dir/events.parquet", "user_id", "ts")
+      val bars = SparkEntry.queries("q_ohlc_daily")(spark, dir)
+      assert(bars.count() === 2 * d) // one bar per user and day, the new day included
+      val id = barsRdd(dir)
+      assert(spark.sparkContext.getPersistentRDDs.contains(id))
+      id
+    }
+    assert(ids.distinct.size === ids.size) // each append made a new snapshot
+    val live = spark.sparkContext.getPersistentRDDs.keySet.intersect(ids.toSet)
+    assert(live === Set(ids.last), live)
+    assert(Graft.pinnedIds.intersect(ids.toSet) === Set(ids.last))
+  }
+
   test("graft_* SQL functions are callable after registration") {
     GraftFunctions.register(spark)
     Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b").createOrReplaceTempView("vecs")
