@@ -103,33 +103,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Graft.localScratchDir)
-      // Local-bench input-split sizing: the corpora here are MBs, so the
-      // 128 MB default folds every text file into one split and per-row
-      // CPU (regex scoring, kernels) serializes on one core. 1 MB splits
-      // restore scan parallelism at this SF; a real cluster keeps the
-      // default (100 TB / 128 MB is ~10^6 tasks of parallelism already).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "256k")
-      // Post-shuffle parallelism at this SF: AQE coalesces by target
-      // minPartitionSize (1 MB default), which folds these corpora's
-      // MB-scale shuffles into 1-4 partitions and serializes every
-      // window/aggregate stage downstream. 64 KB keeps small shuffles
-      // spread across the cores (measured: q_tfidf 1.9→1.1 s, q_pmi
-      // 1.3→1.0 s, q_rolling_corr 1.4→0.9 s, in-JVM interleaved A/B).
-      // Scale-safe by construction: the knob only binds when a shuffle is
-      // tiny; production-sized shuffles coalesce by size as before.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     // Optional comma-separated filter for local triage, e.g.
     // SPARK_GRAFT_ONLY=q_sma,q_ann_topk; full run when unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)

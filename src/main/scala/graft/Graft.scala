@@ -113,25 +113,65 @@ object Graft {
         else System.getProperty("java.io.tmpdir")
       }
 
-  /** Materialize an intermediate a query re-reads: RELIABLE checkpoint
-    * when a checkpoint location is configured (cluster runs — the frame
-    * survives executor loss, which executor-local blocks do not), local
-    * checkpoint otherwise (single-JVM sessions, where executor loss IS
-    * process death). The location comes from the SparkContext checkpoint
-    * dir if set, else the `spark.graft.checkpointDir` conf (wired to the
-    * context on first use). `eager = false` pipelines materialization
-    * into the first job that touches the frame instead of paying a
-    * barrier job per frame — the right default inside iterative loops and
-    * shared-subtree caches; `eager = true` when the caller immediately
-    * needs an action over the frame anyway (e.g. a count that gates the
-    * algorithm).
+  /** The session of the single-node entry points (Bench, ScaleBench,
+    * Verify and the dev tools): `local[SPARK_GRAFT_CPUS]`, defaulting to
+    * every available core, with one shuffle partition per core and
+    * scratch under [[localScratchDir]].
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", localScratchDir)
+      // Local-bench input-split sizing: the corpora here are MBs, so the
+      // 128 MB default folds every text file into one split and per-row
+      // CPU (regex scoring, kernels) serializes on one core. 1 MB splits
+      // restore scan parallelism at this SF; a real cluster keeps the
+      // default (100 TB / 128 MB is ~10^6 tasks of parallelism already).
+      .config("spark.sql.files.maxPartitionBytes", "1m")
+      .config("spark.sql.files.openCostInBytes", "256k")
+      // Post-shuffle parallelism at this SF: AQE coalesces by target
+      // minPartitionSize (1 MB default), which folds these corpora's
+      // MB-scale shuffles into 1-4 partitions and serializes every
+      // window/aggregate stage downstream. 64 KB keeps small shuffles
+      // spread across the cores (measured: q_tfidf 1.9→1.1 s, q_pmi
+      // 1.3→1.0 s, q_rolling_corr 1.4→0.9 s, in-JVM interleaved A/B).
+      // Scale-safe by construction: the knob only binds when a shuffle is
+      // tiny; production-sized shuffles coalesce by size as before.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Materialize an intermediate a query re-reads — the one checkpoint
+    * path of the library. RELIABLE checkpoint when a checkpoint location
+    * is configured (cluster runs — the frame survives executor loss,
+    * which executor-local blocks do not), local checkpoint otherwise
+    * (single-JVM sessions, where executor loss IS process death). The
+    * location comes from the SparkContext checkpoint dir if set, else the
+    * `spark.graft.checkpointDir` conf (wired to the context on first
+    * use). `eager = false` pipelines a local checkpoint into the first
+    * job that touches the frame instead of paying a barrier job per frame
+    * — the right default inside iterative loops and shared-subtree
+    * caches; `eager = true` when the caller immediately needs an action
+    * over the frame anyway (e.g. a count that gates the algorithm).
+    * Reliable checkpoints are always eager: a lazy one computes the frame
+    * in its first job and again in the follow-up job that writes the
+    * files, while the eager path computes it once, inside the write job.
     */
   def materialize(df: org.apache.spark.sql.DataFrame, eager: Boolean): org.apache.spark.sql.DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isEmpty)
       df.sparkSession.conf.getOption("spark.graft.checkpointDir")
         .filter(_.nonEmpty).foreach(sc.setCheckpointDir)
-    if (sc.getCheckpointDir.isDefined) df.checkpoint(eager)
+    if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
     else df.localCheckpoint(eager)
   }
 

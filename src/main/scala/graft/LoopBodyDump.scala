@@ -1,82 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.operators.{Dedup, Graph}
 
 /** Dump the formatted physical plan of ONE ITERATION BODY of the BSP
   * loops, pre-checkpoint — the evidence the final query plan cannot show
-  * (each round's frame is a localCheckpoint whose lineage hides the
-  * per-iteration exchanges). The bodies are reconstructed here with the
-  * same public building blocks and the same expressions as the loops in
-  * Graph.pagerank / Dedup.connectedComponents (kept in sync by eye — the
-  * point is the JOIN STRATEGY and EXCHANGE placement, which depend only
-  * on this shape). Usage: runMain graft.LoopBodyDump
+  * (each round's frame is a checkpoint whose lineage hides the
+  * per-iteration exchanges). The bodies come from the same builders the
+  * loops run: Graph.rankSetup/rankContributions (q_pagerank's input) and
+  * Dedup.ccEdges/ccFirstRound/ccRound (q_ngram_jaccard's pairs).
+  * Usage: runMain graft.LoopBodyDump
   */
 object LoopBodyDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Graft.localScratchDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.localSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-    // ---- pagerank iteration body (mirrors Graph.pagerank's loop) ----
-    val edges = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).dropDuplicates().localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint(false)
-    val n = nodes.count()
-    def hintSmall(df: org.apache.spark.sql.DataFrame) =
-      if (n <= 1000000L) broadcast(df) else df
-    val deg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-    val rank = nodes.withColumn("rank", lit(1.0 / n))
-      .join(hintSmall(deg.withColumnRenamed("src", "node")), Seq("node"), "left")
-      .localCheckpoint(false)
-    def term(c: org.apache.spark.sql.Column) = round(c, 12).cast("decimal(28,12)")
-    val nodeType = nodes.schema("node").dataType
-    val srcRank = rank.withColumnRenamed("node", "src")
-    val agg = e
-      .join(hintSmall(srcRank.where(col("__deg").isNotNull)
-        .select(col("src"), col("rank"), col("__deg"))), Seq("src"))
-      .select(col("dst").as("node"), term(col("rank") / col("__deg")).as("__c"))
-      .unionByName(srcRank.where(col("__deg").isNull)
-        .select(lit(null).cast(nodeType).as("node"), term(col("rank")).as("__c")))
-      .groupBy("node")
-      .agg(sum(col("__c")).cast("double").as("__in"))
+    val rank = Graph.rankSetup(SparkEntry.purchaseEdges(spark, dir), "src", "dst")
     println("==== pagerank ITERATION BODY (contribution aggregate, pre-checkpoint) ====")
-    agg.explain("formatted")
+    Graph.rankContributions(rank, rank.rank).explain("formatted")
 
-    // ---- Dedup.connectedComponents distributed ROUND body ----
-    import graft.operators.Dedup
-    val pairs = Dedup.ngramJaccard(Tables.documents(spark, dir), 0.4)
-      .select("id_a", "id_b")
-    val pairsM = pairs.localCheckpoint(false)
-    val cEdges = pairsM.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairsM.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .union(pairsM.select(col("id_a").as("src")).union(pairsM.select(col("id_b").as("src")))
-        .distinct().select(col("src").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    def jump(lab: org.apache.spark.sql.DataFrame) = lab.as("a")
-      .join(lab.select(col("id").as("component"), col("component").as("__cc")).as("b"),
-        Seq("component"), "left")
-      .select(col("id"), coalesce(col("__cc"), col("component")).as("component"))
-    val labels = jump(cEdges.groupBy(col("src").as("id")).agg(min(col("dst")).as("component")))
-      .localCheckpoint(false)
-    val next = jump(cEdges
-      .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("component", "__l"), "dst")
-      .groupBy(col("src").as("id"))
-      .agg(min(col("__l")).as("component")))
+    val pairs = SparkEntry.queries("q_ngram_jaccard")(spark, dir).select("id_a", "id_b")
+    val edges = Dedup.ccEdges(Graft.materialize(pairs, eager = false))
+    val labels = Graft.materialize(Dedup.ccFirstRound(edges), eager = false)
     println("==== Dedup.connectedComponents ROUND BODY (propagate + jump, pre-checkpoint) ====")
-    next.explain("formatted")
+    Dedup.ccRound(edges, labels).explain("formatted")
     spark.stop()
   }
 }

@@ -90,14 +90,17 @@ object QueryDag {
   }
 
   /** Run every stage once in topological order; each output eagerly
-    * materializes before its dependents read it. Returns outputs by name
+    * materializes ([[Graft.materialize]]: a reliable checkpoint under a
+    * checkpoint dir, a local one otherwise) before its dependents read it.
+    * Returns outputs by name
     * (checkpoint-backed — consume or persist before dropQueryState).
     */
   def run(spark: SparkSession, sfDir: String, stages: Seq[Stage]): Map[String, DataFrame] = {
     val outputs = scala.collection.mutable.Map[String, DataFrame]()
     topoOrder(stages).foreach { st =>
       outputs(st.name) =
-        materialize(st.build(spark, sfDir, st.deps.map(d => d -> outputs(d)).toMap))
+        Graft.materialize(st.build(spark, sfDir, st.deps.map(d => d -> outputs(d)).toMap),
+          eager = true)
     }
     outputs.toMap
   }
@@ -115,18 +118,11 @@ object QueryDag {
     topoOrder(stages).foreach { st =>
       outputs(st.name) =
         if (!dirty(st.name)) prior(st.name)
-        else materialize(st.build(spark, sfDir, st.deps.map(d => d -> outputs(d)).toMap))
+        else Graft.materialize(st.build(spark, sfDir, st.deps.map(d => d -> outputs(d)).toMap),
+          eager = true)
     }
     outputs.toMap
   }
-
-  /** Stage-boundary materialization: reliable checkpoint when a
-    * checkpoint dir is configured (cluster runs — outputs survive
-    * executor loss between stages), executor-local pinning otherwise.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
 
   // ---------------------------------------------------------------------
   // Persisted runs — the FAILURE-RECOVERY face. [[run]]'s checkpoints are

@@ -343,24 +343,7 @@ object ScaleBench {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"${Graft.localScratchDir}/graft-scale${mult}x")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Graft.localScratchDir)
-      // Local-bench input-split sizing: the corpora here are MBs, so the
-      // 128 MB default folds every text file into one split and per-row
-      // CPU (regex scoring, kernels) serializes on one core. 1 MB splits
-      // restore scan parallelism at this SF; a real cluster keeps the
-      // default (100 TB / 128 MB is ~10^6 tasks of parallelism already).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "256k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     generate(spark, base, out, mult)
     generateEvents(spark, base, out, mult)
     generatePart(spark, base, out, mult)

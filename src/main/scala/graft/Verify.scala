@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,24 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Graft.localScratchDir)
-      // Local-bench input-split sizing: the corpora here are MBs, so the
-      // 128 MB default folds every text file into one split and per-row
-      // CPU (regex scoring, kernels) serializes on one core. 1 MB splits
-      // restore scan parallelism at this SF; a real cluster keeps the
-      // default (100 TB / 128 MB is ~10^6 tasks of parallelism already).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "256k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     new java.io.File(outDir).mkdirs()
     // A query that fails here produces NO parquet and therefore NO row in
     // the driver's correctness compare (round 6: 48 silently-missing

@@ -82,7 +82,7 @@ object Activity {
     // bursts stay spread. The boundary frame (2 rows/session, ≪ events)
     // is materialized ONCE so the range aggregate and the prefix sum
     // don't each re-run the sessionization window.
-    val deltasM = deltas.localCheckpoint(true)
+    val deltasM = graft.Graft.materialize(deltas, eager = true)
     val r = deltasM.agg(min(col("__ord")), max(col("__ord"))).head()
     val chunk =
       if (r.isNullAt(0)) 1L << 20

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
@@ -11,26 +12,6 @@ import org.apache.spark.sql.functions._
   * the quadratic step runs per-bucket, not per-corpus.
   */
 object Dedup {
-
-  /** Eager materialization for iterative graph frontiers: reliable
-    * checkpoints when a checkpoint dir is configured (cluster runs — state
-    * survives executor loss mid-iteration; see [[graft.Graft.materialize]]
-    * and `spark.graft.checkpointDir`), executor-local pinning otherwise
-    * (single-JVM / session-lived graphs).
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    graft.Graft.materialize(df, eager = true)
-
-  /** LAZY materialization for shared subtrees consumed several times
-    * within one query (signature/gram tables): no barrier job — the frame
-    * computes inside the first job that touches it and later consumers
-    * read the cache. The compiled tokenize/shingle/minhash kernels are the
-    * dominant per-row cost of every near-dup path, so a subtree consumed
-    * k times otherwise pays the kernel k times (measured: q_dedup_minhash
-    * re-ran the signature pipeline 5x, q_dedup_incremental_near 13x).
-    */
-  private def materializeLazy(df: DataFrame): DataFrame =
-    graft.Graft.materialize(df, eager = false)
 
   /** Exact dedup: hash-groupBy on md5(text), keep the smallest id. One
     * shuffle on the 128-bit digest — uniform keys, no skew.
@@ -166,18 +147,18 @@ object Dedup {
     val target = batch.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val spread =
       if (batch.rdd.getNumPartitions >= target) batch else batch.repartition(target)
-    val batchGrams = materializeLazy(spread
+    val batchGrams = Graft.materialize(spread
       .select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-      .select(col("gid"), ngramsOfTokens("__toks", 3).as("grams")))
-    val batchSigs = materializeLazy(batchGrams.select(col("gid").as("id"),
-      minhashSignature("grams", numHashes).as("__sig")))
-    val storeCached = materializeLazy(storeSigs)
+      .select(col("gid"), ngramsOfTokens("__toks", 3).as("grams")), eager = false)
+    val batchSigs = Graft.materialize(batchGrams.select(col("gid").as("id"),
+      minhashSignature("grams", numHashes).as("__sig")), eager = false)
+    val storeCached = Graft.materialize(storeSigs, eager = false)
     val intra = deduplicateNear(batch, threshold, textCol, idCol,
       sigs = Some(batchSigs), oversizedStar = oversizedStar,
       maxBucketSize = maxBucketSize, numHashes = numHashes, bands = bands,
       gramTable = Some(batchGrams))
-    val intraSigs = materializeLazy(batchSigs
-      .join(intra.select(col(idCol).as("id")), Seq("id"), "left_semi"))
+    val intraSigs = Graft.materialize(batchSigs
+      .join(intra.select(col(idCol).as("id")), Seq("id"), "left_semi"), eager = false)
     def banded(sigs: DataFrame, side: String) = sigs
       .select(col("id").as(side), explode(lshBands("__sig", bands, rowsPerBand)).as("bb"))
       .select(col(side), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
@@ -207,7 +188,7 @@ object Dedup {
     // lshCandidatePairs' oversizedStar): an over-cap bucket contributes
     // its hub instead of disappearing, so its contribution to the
     // candidate join is O(other side), never bucket².
-    val stats = materializeLazy(
+    val stats = Graft.materialize(
       batchBands.select(col("band"), col("bucket"), col("bid").as("__id"), lit(1).as("__b"))
         .unionByName(storeBands.select(col("band"), col("bucket"),
           col("sid").as("__id"), lit(0).as("__b")))
@@ -215,7 +196,7 @@ object Dedup {
         .agg(sum(col("__b")).as("__nb"), sum(lit(1) - col("__b")).as("__ns"),
           min(when(col("__b") === 1, col("__id"))).as("__bmin"),
           min(when(col("__b") === 0, col("__id"))).as("__smin"))
-        .where(col("__nb") >= 1 && col("__ns") >= 1))
+        .where(col("__nb") >= 1 && col("__ns") >= 1), eager = false)
     def screened(bands: DataFrame, side: String, n: String, mn: String): DataFrame = {
       val small = bands.join(
         stats.where(col(n) <= maxBucketSize).select(col("band"), col("bucket")),
@@ -343,10 +324,10 @@ object Dedup {
     // over-cap family collapse (which reads it twice more) — lazily
     // materialized so the band explode + collect_list shuffle run once,
     // not once per consumer; bounded at 16 (id, hash) structs per doc
-    val buckets = materializeLazy(banded
+    val buckets = Graft.materialize(banded
       .groupBy(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .agg(collect_list(struct(col("id"), col("__fh"))).as("ms"))
-      .where(size(col("ms")) > 1))
+      .where(size(col("ms")) > 1), eager = false)
     val small = buckets.where(size(col("ms")) <= maxBucketSize)
       .select(transform(col("ms"), m => m.getField("id")).as("ids"))
       .select(explode(col("ids")).as("id_a"), col("ids"))
@@ -389,7 +370,7 @@ object Dedup {
     // join-backs — materialized lazily so the shingle+minhash kernel runs
     // once per corpus row, not three times (one full signature pipeline
     // per consumer in the unmaterialized plan)
-    val sigs = materializeLazy(minhashSignatures(docs, textCol, idCol, numHashes))
+    val sigs = Graft.materialize(minhashSignatures(docs, textCol, idCol, numHashes), eager = false)
     val pairs = lshCandidatePairs(sigs, numHashes, bands, maxBucketSize)
     pairs
       .join(sigs.select(col("id").as("id_a"), col("__sig").as("__sig_a")), "id_a")
@@ -439,9 +420,9 @@ object Dedup {
       val target = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val spread =
         if (docs.rdd.getNumPartitions >= target) docs else docs.repartition(target)
-      materializeLazy(spread
+      Graft.materialize(spread
         .select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-        .select(col("gid"), ngramsOfTokens("__toks", 3).as("grams")))
+        .select(col("gid"), ngramsOfTokens("__toks", 3).as("grams")), eager = false)
     }
     val cands = candidates.getOrElse(
       lshCandidatePairs(sigs.getOrElse(
@@ -468,10 +449,11 @@ object Dedup {
     * the (symmetrized) edge list + one min-aggregate — all shuffles on the
     * vertex id. Near-dup graphs are unions of SMALL components (dup
     * clusters), so the fixpoint arrives in O(cluster diameter) rounds —
-    * `maxIter` is a guard, not the expected cost. Each frontier is eagerly
-    * localCheckpoint'ed: iterative driver loops otherwise nest every prior
-    * round's plan into the next (quadratic analysis/optimization time and
-    * a lineage that re-runs the candidate pipeline on any cache eviction).
+    * `maxIter` is a guard, not the expected cost. Each frontier is
+    * checkpointed ([[graft.Graft.materialize]]): iterative driver loops
+    * otherwise nest every prior round's plan into the next (quadratic
+    * analysis/optimization time and a lineage that re-runs the candidate
+    * pipeline on any cache eviction).
     *
     * Output: (id, component) where component = min id of the connected set.
     *
@@ -488,14 +470,6 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           localSolveMaxEdges: Long = 1000 * 1000): DataFrame = {
-    // pointer jumping: adopt the label OF the current label — the effective
-    // diameter halves every round, so a length-d chain converges in O(log d)
-    // rounds, not O(d). One self-join of the (id, component) table, which is
-    // far smaller than the edge join.
-    def jump(lab: DataFrame): DataFrame = lab.as("a")
-      .join(lab.select(col("id").as("component"), col("component").as("__cc")).as("b"),
-        Seq("component"), "left")
-      .select(col("id"), coalesce(col("__cc"), col("component")).as("component"))
     // labels only ever DECREASE (min-propagation), so the frontier is at a
     // fixpoint iff the label sum is unchanged — one cheap aggregate over the
     // just-checkpointed frontier instead of a join-and-count against the
@@ -510,7 +484,7 @@ object Dedup {
     // count() below materializes it inside its own job, so the candidate
     // pipeline runs once either way and the eager-checkpoint barrier job
     // is saved (one fewer sequential driver round-trip per call).
-    val pairsM = materializeLazy(pairs.select(col("id_a"), col("id_b")))
+    val pairsM = Graft.materialize(pairs.select(col("id_a"), col("id_b")), eager = false)
     val idType = pairsM.schema("id_a").dataType
     val integralIds = idType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
@@ -550,16 +524,7 @@ object Dedup {
       return labeled.toSeq.toDF("id", "component")
         .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("component"))
     }
-    // distributed rounds. Self-loops (v, v) are appended to the symmetric
-    // edge list so "min over own ∪ neighbors' labels" is ONE join + ONE
-    // aggregate per iteration — no second join (and no union, whose
-    // constraint rewriting chokes when one branch joins the other's
-    // source) against the label table itself.
-    val edges = materialize(
-      pairsM.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairsM.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .union(pairsM.select(col("id_a").as("src")).union(pairsM.select(col("id_b").as("src")))
-          .distinct().select(col("src").as("src"), col("src").as("dst"))))
+    val edges = ccEdges(pairsM)
     GraftBridge.unpersistCheckpointed(pairsM)
     // ONE materialize action per round: the propagate plan is inlined under
     // the jump self-join, so it evaluates twice inside that single job —
@@ -568,25 +533,18 @@ object Dedup {
     // long before recompute does; lineage stays bounded because the round's
     // output is checkpointed).
     //
-    // Round 1 needs no label join at all: labels start as ids, so
-    // label(v) = min(v, min(neighbors)) is a direct aggregate over the
-    // self-looped edge list.
     // LAZY round frames: labelSum's aggregate is the action that
     // materializes each round's checkpoint — one job per round instead of
     // an eager-checkpoint job plus the aggregate. The superseded frontier
     // is unpersisted only AFTER labelSum has forced the new round's blocks
     // into existence (a lazy checkpoint that loses its input's blocks
     // before materializing cannot recompute — lineage is truncated).
-    var labels = materializeLazy(jump(
-      edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("component"))))
+    var labels = Graft.materialize(ccFirstRound(edges), eager = false)
     var prevSum = labelSum(labels)
     var iter = 1
     var converged = false
     while (!converged && iter < maxIter) {
-      val next = materializeLazy(jump(edges
-        .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("component", "__l"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("__l")).as("component"))))
+      val next = Graft.materialize(ccRound(edges, labels), eager = false)
       val s = labelSum(next) // materializes `next`
       // next's blocks exist now — the superseded frontier's can go.
       // Dataset.unpersist is a silent no-op for checkpoint-backed frames;
@@ -602,85 +560,47 @@ object Dedup {
     labels
   }
 
-  /** Connected components by ALTERNATING STARS (the large-star/small-star
-    * algorithm from the MapReduce connected-components literature): each
-    * round rewires every node's strictly-larger neighbors to its minimum
-    * neighbor (large-star), then its smaller-or-equal neighbors likewise
-    * (small-star), until the edge set stabilizes as stars centered on the
-    * component minima.
-    *
-    * Trade against [[connectedComponents]] (min-label propagation): the
-    * star rounds operate on the EDGE LIST only — no separate label table,
-    * and the edge list *contracts* toward |V| − #components as chains fold
-    * up, so hub-heavy or high-diameter graphs converge while shrinking
-    * their own shuffle volume. Label propagation keeps the (smaller) label
-    * frontier but re-joins the full original edge list every round. Use
-    * this variant when the candidate graph has long chains or huge
-    * near-dup clusters; both yield identical (id, min-id component) labels
-    * (spec-verified on random graphs).
+  /** The distributed rounds' edge list (src, dst), checkpointed: the
+    * materialized pair list symmetrized, plus a self-loop (v, v) per node,
+    * so "min over own ∪ neighbors' labels" is ONE join + ONE aggregate per
+    * round — no second join (and no union, whose constraint rewriting
+    * chokes when one branch joins the other's source) against the label
+    * table itself.
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // m(c) = min(N(c) ∪ {c}) per center node over the symmetric edge view
-    def sym(e: DataFrame): DataFrame =
-      e.select(col("a").as("c"), col("b").as("v"))
-        .union(e.select(col("b").as("c"), col("a").as("v")))
-    def mins(s: DataFrame): DataFrame =
-      s.groupBy(col("c")).agg(min(col("v")).as("__mn"))
-        .select(col("c"), least(col("c"), col("__mn")).as("m"))
-    // edge-set fingerprint for the fixpoint test: count + hash sum in one
-    // cheap aggregate over the just-checkpointed canonical edges
-    def fingerprint(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    // ONE materialization of the (possibly expensive) pairs lineage feeds
-    // both the edge set and the final self-loop rescue — re-reading
-    // `pairs` after the loop would re-run the whole candidate pipeline
-    val canon = materialize(
-      pairs.select(least(col("id_a"), col("id_b")).as("a"),
-        greatest(col("id_a"), col("id_b")).as("b")).distinct())
-    var edges = materialize(canon.where(col("a") =!= col("b")))
-    var prev = fingerprint(edges)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star: strictly-larger neighbors v > c hook to m (m ≤ c < v,
-      // so (m, v) is already canonical)
-      val s1 = sym(edges)
-      val large = materialize(s1.join(mins(s1), "c")
-        .where(col("v") > col("c"))
-        .select(col("m").as("a"), col("v").as("b"))
-        .where(col("a") =!= col("b")).distinct())
-      // small-star: neighbors v ≤ c (plus c itself) hook to m
-      val s2 = sym(large)
-      val small = materialize(s2.join(mins(s2), "c")
-        .where(col("v") <= col("c"))
-        .select(col("m").as("a"), col("v").as("b"))
-        .union(mins(s2).select(col("m").as("a"), col("c").as("b")))
-        .where(col("a") =!= col("b")).distinct())
-      GraftBridge.unpersistCheckpointed(large)
-      GraftBridge.unpersistCheckpointed(edges)
-      edges = small
-      val f = fingerprint(edges)
-      converged = f == prev
-      prev = f
-      iter += 1
-    }
-    // at the fixpoint every edge is (component-min, member)
-    val s = sym(edges)
-    val labeled = s.groupBy(col("c").as("id")).agg(min(col("v")).as("__mn"))
-      .select(col("id"), least(col("id"), col("__mn")).as("component"))
-    // nodes whose ONLY pairs were self-loops vanish with the a≠b filter
-    // above but are still singleton components — the other variants emit
-    // them, and the contract is identical labels. Reads the materialized
-    // canon, never the raw pairs lineage.
-    val selfOnly = canon.where(col("a") === col("b"))
-      .select(col("a").as("id")).distinct()
-      .join(labeled.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    labeled.union(selfOnly)
-  }
+  private[graft] def ccEdges(pairsM: DataFrame): DataFrame =
+    Graft.materialize(
+      pairsM.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairsM.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .union(pairsM.select(col("id_a").as("src")).union(pairsM.select(col("id_b").as("src")))
+          .distinct().select(col("src").as("src"), col("src").as("dst"))),
+      eager = true)
+
+  /** Pointer jumping: adopt the label OF the current label — the effective
+    * diameter halves every round, so a length-d chain converges in O(log d)
+    * rounds, not O(d). One self-join of the (id, component) table, which is
+    * far smaller than the edge join.
+    */
+  private def jump(lab: DataFrame): DataFrame = lab.as("a")
+    .join(lab.select(col("id").as("component"), col("component").as("__cc")).as("b"),
+      Seq("component"), "left")
+    .select(col("id"), coalesce(col("__cc"), col("component")).as("component"))
+
+  /** Round 1 needs no label join at all: labels start as ids, so
+    * label(v) = min(v, min(neighbors)) is a direct aggregate over the
+    * self-looped [[ccEdges]] list, then one jump.
+    */
+  private[graft] def ccFirstRound(edges: DataFrame): DataFrame =
+    jump(edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("component")))
+
+  /** One distributed round (id, component), pre-checkpoint: propagate
+    * (min over own ∪ neighbors' labels through the [[ccEdges]] join) +
+    * jump.
+    */
+  private[graft] def ccRound(edges: DataFrame, labels: DataFrame): DataFrame =
+    jump(edges
+      .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("component", "__l"), "dst")
+      .groupBy(col("src").as("id"))
+      .agg(min(col("__l")).as("component")))
 
   /** Open-addressing long→long hash map for the per-partition union-find
     * fold — primitive arrays, ~16 B/entry (a boxed HashMap costs ~5×,
@@ -1145,9 +1065,9 @@ object Dedup {
     // their lineage re-tokenizes the corpus — materialize once. LAZY: the
     // postings explode is the first consumer and pays the tokenize pass
     // inside its own job; no separate barrier job.
-    val g = materializeLazy(docs
+    val g = Graft.materialize(docs
       .select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-      .select(col("gid"), ngramsOfTokens("__toks", n).as("gs")))
+      .select(col("gid"), ngramsOfTokens("__toks", n).as("gs")), eager = false)
     val post = g.select(col("gid"), explode(col("gs")).as("g"))
     val rare = post.groupBy(col("g")).agg(count(lit(1)).as("__df"))
       .where(col("__df") >= 2 && col("__df") <= maxDf)

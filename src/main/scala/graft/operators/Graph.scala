@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -26,16 +27,6 @@ import org.apache.spark.sql.functions._
   * functions are involved.
   */
 object Graph {
-
-  /** Lazy materialization for the frames the BSP loops re-read: reliable
-    * checkpoints when a checkpoint location is configured
-    * (`spark.graft.checkpointDir` / SparkContext checkpoint dir — cluster
-    * runs, where executor loss must not lose loop state), executor-local
-    * blocks otherwise (single-JVM sessions). See [[graft.Graft.materialize]].
-    */
-  private implicit class MatOps(df: DataFrame) {
-    def graftMaterialize: DataFrame = graft.Graft.materialize(df, eager = false)
-  }
 
   private def term(c: Column): Column = round(c, 12).cast("decimal(28,12)")
 
@@ -70,7 +61,35 @@ object Graph {
     */
   def pagerank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    // localCheckpoint on every frame the loop re-reads: each iteration
+    val setup = rankSetup(edges, srcCol, dstCol)
+    val n = setup.n
+    var rank = setup.rank
+    for (_ <- 1 to iters) {
+      val agg = Graft.materialize(rankContributions(setup, rank), eager = false)
+      // the NULL group IS the dangling mass; absent (no dangling nodes or
+      // an empty graph) the coalesced re-aggregate still yields one row
+      val dangling = broadcast(agg.where(col("node").isNull)
+        .agg(coalesce(sum(col("__in")), lit(0.0)).as("__dm")))
+      rank = Graft.materialize(rank.select(col("node"), col("__deg"))
+        .join(hintSmall(agg.where(col("node").isNotNull), n), Seq("node"), "left")
+        .crossJoin(dangling)
+        .select(col("node"),
+          (lit((1 - damping) / n) + lit(damping) *
+            (coalesce(col("__in"), lit(0.0)) + col("__dm") / lit(n.toDouble)))
+            .as("rank"),
+          col("__deg")), eager = false)
+    }
+    rank.select(col("node"), col("rank"))
+  }
+
+  /** [[pagerank]]'s loop-invariant frames: the deduplicated edge list `e`
+    * (src, dst), the node count `n`, and the initial rank state `rank`
+    * (node, rank = 1/n, __deg).
+    */
+  private[graft] final case class RankSetup(e: DataFrame, n: Long, rank: DataFrame)
+
+  private[graft] def rankSetup(edges: DataFrame, srcCol: String, dstCol: String): RankSetup = {
+    // materialize every frame the loop re-reads: each iteration
     // references the previous rank TWICE (dangling mass + contributions),
     // so an unmaterialized lineage re-evaluates rank_{i-1} twice per step
     // — 2^iters evaluations of the base by the last iteration (measured:
@@ -92,62 +111,49 @@ object Graph {
     // duplicate into one partition, so the dedup aggregate runs on the
     // repartition's exchange instead of adding its own hash(src, dst)
     // exchange first — one |E|-sized shuffle in the setup, not two.
-    val e = edges
+    val e = Graft.materialize(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).dropDuplicates().graftMaterialize
-    val nodes = e.select(col("src").as("node"))
+      .repartition(col("src")).dropDuplicates(), eager = false)
+    val nodes = Graft.materialize(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().graftMaterialize
+      .distinct(), eager = false)
     val n = nodes.count() // scalar metadata, not data
-    val nodeType = nodes.schema("node").dataType
     // out-degree joins into the rank STATE once: each iteration's state
     // row is (node, rank, __deg), so the loop never re-joins deg — one
     // fewer join and one fewer broadcast build per iteration, and the
     // per-row terms are untouched (deg carried vs re-joined is the same
     // value), so the rank vector stays bit-identical.
     val deg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-    var rank = nodes.withColumn("rank", lit(1.0 / n))
-      .join(hintSmall(deg.withColumnRenamed("src", "node"), n), Seq("node"), "left")
-      .graftMaterialize
-    for (_ <- 1 to iters) {
-      // ONE aggregate per iteration: per-edge contribution rows keyed by
-      // their destination UNION the dangling nodes' rank rows keyed by
-      // NULL (real node ids are non-null by precondition — an edge list
-      // with NULL endpoints has no rank semantics), so the dangling mass
-      // rides the same shuffle/partial-agg pass as the contributions
-      // instead of paying its own aggregate + rank⋈deg join per
-      // iteration. Per-row terms are unchanged (round-12 decimal), so the
-      // rank vector stays bit-identical to the two-aggregate form.
-      // node-sized sides carry the broadcast hint when |V| fits the
-      // budget (see hintSmall): the edge list then never moves and the
-      // shuffle per iteration shrinks to the partial-aggregated
-      // contribution sums. Expressions are unchanged — the rank vector
-      // stays bit-identical either way.
-      val srcRank = rank.withColumnRenamed("node", "src")
-      val agg = e
-        .join(hintSmall(srcRank.where(col("__deg").isNotNull)
-          .select(col("src"), col("rank"), col("__deg")), n), Seq("src"))
-        .select(col("dst").as("node"), term(col("rank") / col("__deg")).as("__c"))
-        .unionByName(srcRank.where(col("__deg").isNull)
-          .select(lit(null).cast(nodeType).as("node"), term(col("rank")).as("__c")))
-        .groupBy("node")
-        .agg(sum(col("__c")).cast("double").as("__in"))
-        .graftMaterialize
-      // the NULL group IS the dangling mass; absent (no dangling nodes or
-      // an empty graph) the coalesced re-aggregate still yields one row
-      val dangling = broadcast(agg.where(col("node").isNull)
-        .agg(coalesce(sum(col("__in")), lit(0.0)).as("__dm")))
-      rank = rank.select(col("node"), col("__deg"))
-        .join(hintSmall(agg.where(col("node").isNotNull), n), Seq("node"), "left")
-        .crossJoin(dangling)
-        .select(col("node"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("__in"), lit(0.0)) + col("__dm") / lit(n.toDouble)))
-            .as("rank"),
-          col("__deg"))
-        .graftMaterialize
-    }
-    rank.select(col("node"), col("rank"))
+    val rank = Graft.materialize(nodes.withColumn("rank", lit(1.0 / n))
+      .join(hintSmall(deg.withColumnRenamed("src", "node"), n), Seq("node"), "left"),
+      eager = false)
+    RankSetup(e, n, rank)
+  }
+
+  /** One pagerank iteration's contribution aggregate (node, __in),
+    * pre-checkpoint. ONE aggregate per iteration: per-edge contribution
+    * rows keyed by their destination UNION the dangling nodes' rank rows
+    * keyed by NULL (real node ids are non-null by precondition — an edge
+    * list with NULL endpoints has no rank semantics), so the dangling mass
+    * rides the same shuffle/partial-agg pass as the contributions instead
+    * of paying its own aggregate + rank⋈deg join per iteration. Per-row
+    * terms are unchanged (round-12 decimal), so the rank vector stays
+    * bit-identical to the two-aggregate form. Node-sized sides carry the
+    * broadcast hint when |V| fits the budget (see hintSmall): the edge list
+    * then never moves and the shuffle per iteration shrinks to the
+    * partial-aggregated contribution sums.
+    */
+  private[graft] def rankContributions(setup: RankSetup, rank: DataFrame): DataFrame = {
+    val nodeType = rank.schema("node").dataType
+    val srcRank = rank.withColumnRenamed("node", "src")
+    setup.e
+      .join(hintSmall(srcRank.where(col("__deg").isNotNull)
+        .select(col("src"), col("rank"), col("__deg")), setup.n), Seq("src"))
+      .select(col("dst").as("node"), term(col("rank") / col("__deg")).as("__c"))
+      .unionByName(srcRank.where(col("__deg").isNull)
+        .select(lit(null).cast(nodeType).as("node"), term(col("rank")).as("__c")))
+      .groupBy("node")
+      .agg(sum(col("__c")).cast("double").as("__in"))
   }
 
   /** Hop value standing in for "unreached" in [[shortestHops]] — a plain
@@ -180,15 +186,15 @@ object Graph {
     // repartition before distinct (see pagerank): the symmetrized list is
     // deduped on the same hash(src) exchange that lays it out for the
     // per-round frontier joins — one 2|E|-sized shuffle, not two
-    val und = half
+    val und = Graft.materialize(half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).dropDuplicates().graftMaterialize
-    val nodes = und.select(col("src").as("node")).distinct().graftMaterialize
+      .repartition(col("src")).dropDuplicates(), eager = false)
+    val nodes = Graft.materialize(und.select(col("src").as("node")).distinct(), eager = false)
     // |V| gates the broadcast hints below (frontier and reached are both
     // ≤ |V|); the count reads the checkpoint the loop touches anyway
     val n = nodes.count()
-    var reached = nodes.where(col("node") === source)
-      .select(col("node"), lit(0L).as("hop")).graftMaterialize
+    var reached = Graft.materialize(nodes.where(col("node") === source)
+      .select(col("node"), lit(0L).as("hop")), eager = false)
     var frontier = reached
     var i = 1
     // EARLY EXIT on an empty frontier: BFS is semantically finished the
@@ -204,11 +210,10 @@ object Graph {
       val proposals = und
         .join(hintSmall(frontier.select(col("node").as("src")), n), Seq("src"), "left_semi")
         .select(col("dst").as("node")).distinct()
-      val newly = proposals
+      val newly = Graft.materialize(proposals
         .join(hintSmall(reached, n), Seq("node"), "left_anti")
-        .select(col("node"), lit(i.toLong).as("hop"))
-        .graftMaterialize
-      reached = reached.unionByName(newly).graftMaterialize
+        .select(col("node"), lit(i.toLong).as("hop")), eager = false)
+      reached = Graft.materialize(reached.unionByName(newly), eager = false)
       frontier = newly
       i += 1
     }
@@ -243,11 +248,11 @@ object Graph {
     // exchange — one 2|E|-sized shuffle in the setup, not two; the node
     // derivation below then needs NO exchange at all (hash(src) already
     // clusters src)
-    val und = half
+    val und = Graft.materialize(half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).dropDuplicates().graftMaterialize
+      .repartition(col("src")).dropDuplicates(), eager = false)
     // symmetrization puts every endpoint in src
-    val nodes = und.select(col("src").as("node")).distinct().graftMaterialize
+    val nodes = Graft.materialize(und.select(col("src").as("node")).distinct(), eager = false)
     // EARLY EXIT at the label fixpoint: labels only ever DECREASE under
     // min-propagation, so for integral ids an exact decimal label sum is
     // unchanged iff NO label changed — once stable, every further round
@@ -281,11 +286,11 @@ object Graph {
         .select(col("dst").as("node"), col("label"))
         .groupBy("node")
         .agg(min(col("label")).as("__nmin"))
-      label = label
+      label = Graft.materialize(label
         .join(hintSmall(neighborMin, n), Seq("node"), "left")
         .select(col("node"),
-          least(col("label"), coalesce(col("__nmin"), col("label"))).as("label"))
-        .graftMaterialize
+          least(col("label"), coalesce(col("__nmin"), col("label"))).as("label")),
+        eager = false)
       if (integralIds) {
         val s = labelSum(label)
         converged = s.compareTo(prevSum) == 0
@@ -349,15 +354,14 @@ object Graph {
     // canonical lo<hi + distinct; checkpointed — read three times (degrees,
     // wedge self-join, closing probe), recomputing the upstream join per
     // read would triple the dominant cost
-    val e = edges
+    val e = Graft.materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("src"),
         greatest(col(srcCol), col(dstCol)).as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct().graftMaterialize
-    val deg = e.select(col("src").as("node"))
+      .distinct(), eager = false)
+    val deg = Graft.materialize(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .graftMaterialize
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")), eager = false)
     // degrees are node-cardinality small next to the edge list — broadcast
     // onto both endpoints rather than shuffling edges twice
     val withDeg = e
@@ -365,11 +369,10 @@ object Graph {
       .join(broadcast(deg.select(col("node").as("dst"), col("deg").as("dd"))), Seq("dst"))
     val lt = col("ds") < col("dd") ||
       (col("ds") === col("dd") && col("src") < col("dst"))
-    val oriented = withDeg
+    val oriented = Graft.materialize(withDeg
       .select(when(lt, col("src")).otherwise(col("dst")).as("u"),
         when(lt, col("dst")).otherwise(col("src")).as("v"),
-        when(lt, col("dd")).otherwise(col("ds")).as("dv"))
-      .graftMaterialize
+        when(lt, col("dd")).otherwise(col("ds")).as("dv")), eager = false)
     // wedge = ordered pair of out-neighbors of a common u; the closing
     // edge, when present, is oriented exactly (v-side order-min → max)
     val cands = oriented.as("x")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Fns.dotExact
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -304,6 +304,22 @@ object Similarity {
       .orderBy(col("qid"))
   }
 
+  /** Collect a query batch to the driver, capped at
+    * `spark.graft.ann.maxBatchQueries`. The batched operators plan on the
+    * driver from the batch — that is their contract (a batch is
+    * request-sized, not corpus-sized), and like every driver-sized
+    * precondition here it fails loudly instead of OOMing when violated.
+    */
+  private def collectQueryBatch(queries: DataFrame, op: String): Array[Row] = {
+    val qCap = queries.sparkSession.conf
+      .get("spark.graft.ann.maxBatchQueries", "65536").toLong
+    val qRows = queries.limit((qCap + 1).toInt).collect()
+    require(qRows.length <= qCap,
+      s"$op collects the query batch to the driver — got more than " +
+        s"$qCap queries; split the batch or raise spark.graft.ann.maxBatchQueries")
+    qRows
+  }
+
   /** Shared two-phase batched top-k: codegen'd double screen over the
     * broadcast query batch, bounded-heap candidates, decimal-exact cosine
     * on survivors. The screen rank uses the SAME (rounded score, id)
@@ -329,7 +345,7 @@ object Similarity {
     // comes for free instead of costing a third evaluation.
     val qNeeded = Seq(col(idCol), col(vecCol)) ++ labelFilter.map(col)
     val qProj = queries.select(qNeeded: _*)
-    val qRows = qProj.collect()
+    val qRows = collectQueryBatch(qProj, "topKBatch")
     val qLocal = spark.createDataFrame(
       java.util.Arrays.asList(qRows: _*), qProj.schema)
     val qCols = Seq(col(idCol).as("qid"), col(vecCol).as("qv"),
@@ -656,17 +672,7 @@ object Similarity {
                    queries: DataFrame, k: Int, nprobe: Int = 4,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireLongIds(queries, idCol, "ivfTopKBatch")
-    // probe planning collects the query batch to the driver — that is the
-    // operator's contract (a batch is request-sized, not corpus-sized),
-    // and like every driver-sized precondition here it fails loudly
-    // instead of OOMing when violated
-    val qCap = index.sparkSession.conf
-      .get("spark.graft.ann.maxBatchQueries", "65536").toLong
-    val qRows = queries.select(col(idCol), col(vecCol))
-      .limit((qCap + 1).toInt).collect()
-    require(qRows.length <= qCap,
-      s"ivfTopKBatch plans probes on the driver from the query batch — got more than " +
-        s"$qCap queries; split the batch or raise spark.graft.ann.maxBatchQueries")
+    val qRows = collectQueryBatch(queries.select(col(idCol), col(vecCol)), "ivfTopKBatch")
     val probesOf: Map[Long, Seq[Int]] = qRows.map { r =>
       val qv = r.getSeq[Float](1).toArray.map(_.toDouble)
       r.getLong(0) -> probeCells(qv, centroids, nprobe).toSeq

@@ -41,16 +41,25 @@ object GraftBridge {
     case _ => df
   }
 
-  /** Free the blocks behind a (local)checkpointed DataFrame.
+  /** Free the blocks behind a (local)checkpointed DataFrame, and delete
+    * the files of a reliable checkpoint.
     * `Dataset.unpersist` only uncaches CacheManager entries and is a
     * SILENT NO-OP for checkpoint-backed datasets (their persistence lives
     * on the underlying RDD) — iterative loops that materialize a frontier
     * per round must release the superseded round through the RDD handle or
-    * executor storage grows by one frontier per iteration.
+    * executor storage grows by one frontier per iteration. Reliable
+    * checkpoints hold no blocks; their `rdd-*` directory is the state, so
+    * it goes instead (local checkpoints have none).
     */
   def unpersistCheckpointed(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(false)
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ =>
     }
 

@@ -41,6 +41,19 @@ class CheckpointModeSpec extends SparkSpec {
 
   private def docs: DataFrame = Tables.documents(spark, sfDir)
 
+  /** The reliable-checkpoint directories (`rdd-*` names) behind a frame. */
+  private def checkpointDirs(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
+    }.flatten.map(new org.apache.hadoop.fs.Path(_).getName).toSet
+
+  /** The `rdd-*` directories under the context's checkpoint dir. */
+  private def checkpointDirsOnDisk(): Set[String] = {
+    val root = new org.apache.hadoop.fs.Path(spark.sparkContext.getCheckpointDir.get)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+      .map(_.getPath.getName).filter(_.startsWith("rdd-")).toSet
+  }
+
   test("pagerank identical under local and reliable checkpoints") {
     val local = rows(Graph.pagerank(edges, iters = 5)
       .select(col("node"), round(col("rank"), 10).as("r")))
@@ -113,5 +126,63 @@ class CheckpointModeSpec extends SparkSpec {
     assert(l1 == r1)
     assert(l2 == r2)
     assert(l1 == l2)
+  }
+
+  test("a lazy frame under reliable checkpoints is computed once") {
+    // a lazy reliable checkpoint computes the frame in its first job and
+    // again in the job that writes the files; the eager write computes once
+    val n = 1000L
+    val computed = spark.sparkContext.longAccumulator("graft-ckpt-rows")
+    val bump = udf { (x: Long) => computed.add(1); x }.asNondeterministic()
+    withReliableCheckpoints {
+      val m = Graft.materialize(spark.range(n).select(bump(col("id")).as("x")), eager = false)
+      assert(m.count() === n)
+      assert(m.count() === n)
+    }
+    assert(computed.value === n)
+  }
+
+  test("distributed dedup components delete each superseded round's checkpoint files") {
+    import spark.implicits._
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    withReliableCheckpoints {
+      val comps = Dedup.connectedComponents(chain, maxIter = 10, localSolveMaxEdges = 0)
+      val kept = checkpointDirs(comps)
+      assert(kept.size === 1)
+      assert(checkpointDirsOnDisk() === kept)
+      val labels = comps.collect()
+      assert(labels.length === 64 && labels.forall(_.getLong(1) === 0L))
+    }
+  }
+
+  test("QueryDag.run with only spark.graft.checkpointDir set writes reliable checkpoints") {
+    val stages = Seq(
+      QueryDag.Stage("base", Nil, (s, _, _) => s.range(10).toDF("v")),
+      QueryDag.Stage("sum", Seq("base"), (_, _, in) => in("base").agg(sum(col("v")).as("s"))))
+    def run(): (Set[String], Long) = {
+      val out = QueryDag.run(spark, sfDir, stages)
+      (checkpointDirs(out("base")) ++ checkpointDirs(out("sum")),
+        out("sum").head().getLong(0))
+    }
+    val (localDirs, localSum) = run()
+    assert(localDirs.isEmpty)
+    withReliableCheckpoints {
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      val (dirs, s) = run()
+      assert(dirs.size === 2)
+      assert(dirs.subsetOf(checkpointDirsOnDisk()))
+      assert(s === localSum)
+    }
+    assert(localSum === 45L)
+  }
+
+  test("checkpointing query keys return identical rows under both modes") {
+    val keys = Seq("q_pairs_spread", "q_pair_quality", "q_time_between", "q_concurrency")
+    def run(): Map[String, Set[String]] =
+      keys.map(k => k -> rows(SparkEntry.queries(k)(spark, sfDir))).toMap
+    val local = run()
+    val reliable = withReliableCheckpoints(run())
+    keys.foreach(k => assert(local(k).nonEmpty, k))
+    assert(local == reliable)
   }
 }

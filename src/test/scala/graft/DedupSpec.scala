@@ -43,29 +43,6 @@ class DedupSpec extends SparkSpec {
     assert(local === dist)
   }
 
-  test("connectedComponentsStar agrees with label propagation on chains and random graphs") {
-    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val chainComps = Dedup.connectedComponentsStar(chain)
-      .as[(Long, Long)].collect()
-    assert(chainComps.length === 41 && chainComps.forall(_._2 === 0L))
-    // a node whose only pair is a self-loop is a singleton in EVERY variant
-    val withSelf = chain.union(Seq((99L, 99L)).toDF("id_a", "id_b"))
-    assert(Dedup.connectedComponentsStar(withSelf)
-      .as[(Long, Long)].collect().toMap.get(99L) === Some(99L))
-    assert(Dedup.connectedComponents(withSelf)
-      .as[(Long, Long)].collect().toMap.get(99L) === Some(99L))
-    val rnd = new scala.util.Random(13)
-    val pairs = Seq.fill(250) {
-      val a = rnd.nextInt(300).toLong; val b = rnd.nextInt(300).toLong
-      (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2).distinct.toDF("id_a", "id_b")
-    val star = Dedup.connectedComponentsStar(pairs)
-      .as[(Long, Long)].collect().toMap
-    val prop = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(star === prop)
-  }
-
   test("spanningForest preserves connectivity exactly: connectedComponentsScalable " +
     "≡ connectedComponents on chains, self-loops, random graphs, any partitioning") {
     val rnd = new scala.util.Random(23)

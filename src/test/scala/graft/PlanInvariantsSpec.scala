@@ -69,6 +69,33 @@ class PlanInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("BSP loop bodies: the pagerank step broadcasts the rank side, the CC round " +
+    "stays an equi-join within r12's exchanges") {
+    import graft.operators.{Dedup, Graph}
+    val setup = Graph.rankSetup(SparkEntry.purchaseEdges(spark, sfDir), "src", "dst")
+    val step = Graph.rankContributions(setup, setup.rank)
+      .queryExecution.executedPlan.toString()
+    // one shuffle (the contribution aggregate); the checkpointed edge list
+    // never moves, the rank side is the broadcast build
+    assert(count(step, "(?<!Broadcast)Exchange") === 1, step)
+    assert(count(step, "BroadcastHashJoin .*Inner, BuildRight") === 1, step)
+    assert(!step.contains("SortMergeJoin"), step)
+    val pairs = SparkEntry.queries("q_ngram_jaccard")(spark, sfDir).select("id_a", "id_b")
+    val edges = Dedup.ccEdges(Graft.materialize(pairs, eager = false))
+    val labels = Graft.materialize(Dedup.ccFirstRound(edges), eager = false)
+    val round = Dedup.ccRound(edges, labels).queryExecution.executedPlan.toString()
+    assert(!round.contains("NestedLoopJoin"), round)
+    assert(count(round, "Exchange") <= 7, round)
+  }
+
+  test("near-dup family keeps r12's exchange counts") {
+    for ((q, max) <- Seq("q_dedup_minhash" -> 5, "q_dedup_incremental_near" -> 11,
+        "q_ngram_jaccard" -> 5)) {
+      val p = plan(q)
+      assert(count(p, "Exchange") <= max, s"$q:\n$p")
+    }
+  }
+
   test("declared-vocabulary pivot is a single-exchange aggregate") {
     assert(count(plan("q_pivot_wide"), "Exchange") === 1)
   }

@@ -211,6 +211,19 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.ann.maxBatchQueries")
   }
 
+  test("topKBatch caps its collected query batch at spark.graft.ann.maxBatchQueries") {
+    val emb = Tables.embeddings(spark, sfDir)
+    spark.conf.set("spark.graft.ann.maxBatchQueries", "3")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Similarity.topKBatch(emb, emb.limit(10), 5)
+      }
+      assert(e.getMessage.contains("spark.graft.ann.maxBatchQueries"))
+      // under the cap the same call runs
+      assert(Similarity.topKBatch(emb, emb.limit(2), 5).count() > 0)
+    } finally spark.conf.unset("spark.graft.ann.maxBatchQueries")
+  }
+
   test("ivfTopKBatch equals per-query ivfTopKIndexed for every query in the batch") {
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Similarity.seedCentroids(emb, 8)
