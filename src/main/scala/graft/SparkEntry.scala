@@ -37,21 +37,39 @@ object SparkEntry {
   private def lineitemNtz(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).withColumn("l_shipdate", col("l_shipdate").cast("timestamp_ntz"))
 
-  /** Daily bars of the events table's current snapshot: built once per
-    * snapshot and shared by every bars key over it (and by Sinks' restates
-    * of derived tables). The frame is a lazy checkpoint — it fills in the
+  /** The event types q_pivot_wide and q_unpivot spread into columns. */
+  private val pivotTypes = Seq("click", "error", "purchase", "signup", "view")
+
+  /** The daily summary of the events table's current snapshot
+    * (Ohlc.dailySummary: the daily bars, each day's `last_ts`, its last
+    * purchase value as `shares` and last signup value as `outstanding`,
+    * and one `sum_<type>` per pivot type): built once per snapshot and
+    * shared by every daily-series key over it (and by Sinks' restates of
+    * derived tables). The frame is a lazy checkpoint — it fills in the
     * first job that reads it and cuts the lineage there, so no shuffle
     * stays reachable — pinned so the between-queries reaper keeps it, and
     * released when a later read of the events path lists a changed file
-    * set. Each call hands out a fresh instance of the shared frame.
+    * set. Each call hands out a fresh instance of the shared frame. A
+    * table without `event_type` (bare ticks) still gets its bars.
     */
-  private def bars(s: SparkSession, dir: String): DataFrame = {
+  private def daily(s: SparkSession, dir: String): DataFrame = {
     val snap = Tables.eventsSnapshot(s, dir)
-    GraftBridge.newInstance(snapshotMemo(s, snap, s"bars:$dir") {
+    GraftBridge.newInstance(snapshotMemo(s, snap, s"daily:$dir") {
       Graft.pinForProcess(Graft.materialize(
-        Ohlc.dailyBars(Fns.normalizeTsNtz(snap.df, "ts")), eager = false))
+        dailySummary(Fns.normalizeTsNtz(snap.df, "ts")), eager = false))
     })
   }
+
+  /** The aggregate behind [[daily]], over normalized events. */
+  private[graft] def dailySummary(ev: DataFrame): DataFrame = {
+    val typed = ev.columns.contains("event_type")
+    Ohlc.dailySummary(ev,
+      if (typed) Seq("shares" -> "purchase", "outstanding" -> "signup") else Nil,
+      if (typed) pivotTypes else Nil)
+  }
+
+  private def bars(s: SparkSession, dir: String): DataFrame =
+    daily(s, dir).select("user_id", "d", "open", "high", "low", "close", "volume")
 
   // String literals in comparisons coerce to the ts column's own timestamp
   // type, so cutoffs work whether the source reads as LTZ or NTZ.
@@ -335,9 +353,9 @@ object SparkEntry {
     }),
 
     "q_latest_date" -> ((s, dir) =>
-      events(s, dir)
+      daily(s, dir)
         .groupBy(col("user_id"))
-        .agg(max(col("ts")).as("latest_ts"), to_date(max(col("ts"))).as("latest_d"))),
+        .agg(max(col("last_ts")).as("latest_ts"), to_date(max(col("last_ts"))).as("latest_d"))),
 
     "q_scd2" -> ((s, dir) =>
       // type-2 history of each user's event_type: validity intervals from
@@ -1277,11 +1295,13 @@ object SparkEntry {
         .join(ordersNtz(s, dir), col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name", "c_mktsegment")),
 
-    "q_pivot_wide" -> ((s, dir) =>
-      PivotOps.pivotAgg(
-        events(s, dir), "user_id", "event_type",
-        Seq("click", "error", "purchase", "signup", "view"),
-        "value", exactSumD)),
+    "q_pivot_wide" -> ((s, dir) => {
+      // per-user totals of the daily per-type decimal sums: the decimal
+      // sum is exact, so this equals pivotAgg(events, …, exactSumD) bit
+      // for bit, without scanning the events
+      val totals = pivotTypes.map(t => sum(col(s"sum_$t")).cast("double").as(t))
+      daily(s, dir).groupBy(col("user_id")).agg(totals.head, totals.tail: _*)
+    }),
 
     "q_unpivot" -> ((s, dir) =>
       // melt ∘ pivot round trip: the wide frame stacks back to exactly
@@ -1289,10 +1309,9 @@ object SparkEntry {
       // relational op beside q_pivot_wide, checked against the DIRECT
       // long aggregate as the oracle
       PivotOps.melt(
-        PivotOps.pivotAgg(events(s, dir), "user_id", "event_type",
-          Seq("click", "error", "purchase", "signup", "view"),
+        PivotOps.pivotAgg(events(s, dir), "user_id", "event_type", pivotTypes,
           "value", exactSumD),
-        "user_id", Seq("click", "error", "purchase", "signup", "view"),
+        "user_id", pivotTypes,
         keyName = "event_type", valueName = "total")),
 
     "q_weighted_price" -> ((s, dir) =>
@@ -1363,22 +1382,15 @@ object SparkEntry {
 
     "q_sector_price" -> ((s, dir) => {
       // the reference's calculate_sector_price (sector.py:86-112): price
-      // history ⋈ share snapshots ⋈ shares outstanding, all date-aligned —
-      // one asOfMany pass = one shuffle for all three alignments
-      val ev = events(s, dir)
-      val history = bars(s, dir).select("user_id", "d", "close")
-      val shares = ev.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(max_by(col("value"), col("ts")).as("shares"))
-      val outstanding = ev.where(col("event_type") === "signup")
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(max_by(col("value"), col("ts")).as("outstanding"))
-      AsOfJoin
-        .asOfMany(history, Seq(shares -> Seq("shares"), outstanding -> Seq("outstanding")),
-          "user_id", "d")
-        .select(col("user_id"), col("d"), col("close"),
-          round(col("close") * col("shares") / nullif(col("outstanding"), lit(0.0)), 6)
-            .as("calculated_price"))
+      // history ⋈ share snapshots ⋈ shares outstanding, all date-aligned.
+      // Every purchase or signup day has a row in the daily summary, so
+      // each as-of lookup is a running last-non-null over the entity's
+      // days (same-day snapshots visible): one shuffle, no events scan
+      val asOf = entityDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      def latest(c: String) = last(col(c), ignoreNulls = true).over(asOf)
+      daily(s, dir).select(col("user_id"), col("d"), col("close"),
+        round(col("close") * latest("shares") / nullif(latest("outstanding"), lit(0.0)), 6)
+          .as("calculated_price"))
     }),
 
     "q_asof_state" -> ((s, dir) => {

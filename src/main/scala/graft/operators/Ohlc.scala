@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Daily OHLCV bars per entity from tick-level events — the Spark
@@ -16,19 +16,50 @@ import org.apache.spark.sql.functions._
   * 1000:1 tick:bar ratio that is ~500× more shuffled bytes.)
   */
 object Ohlc {
+  private def barAggs(tsCol: String, valueCol: String): Seq[Column] = Seq(
+    min_by(col(valueCol), col(tsCol)).as("open"),
+    max(col(valueCol)).as("high"),
+    min(col(valueCol)).as("low"),
+    max_by(col(valueCol), col(tsCol)).as("close"),
+    count(lit(1)).as("volume"))
+
   def dailyBars(
       events: DataFrame,
       entity: String = "user_id",
       tsCol: String = "ts",
-      valueCol: String = "value"): DataFrame =
+      valueCol: String = "value"): DataFrame = {
+    val aggs = barAggs(tsCol, valueCol)
     events
       .groupBy(col(entity), to_date(col(tsCol)).as("d"))
-      .agg(
-        min_by(col(valueCol), col(tsCol)).as("open"),
-        max(col(valueCol)).as("high"),
-        min(col(valueCol)).as("low"),
-        max_by(col(valueCol), col(tsCol)).as("close"),
-        count(lit(1)).as("volume"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[dailyBars]] widened, in the same single aggregate, by what the
+    * other per-entity daily series need, per (entity, day): `last_ts`, the
+    * day's last event time; per `latest` (name → type), the value of the
+    * day's last event of that type (null on a day without one); per `sums`
+    * type t, `sum_t`, the exact decimal(28,6) sum of its values, so totals
+    * over days equal a sum over the events bit for bit. Every day with an
+    * event has a row, so an as-of lookup of a typed value is a running
+    * last-non-null over the entity's days.
+    */
+  def dailySummary(
+      events: DataFrame,
+      latest: Seq[(String, String)],
+      sums: Seq[String],
+      entity: String = "user_id",
+      tsCol: String = "ts",
+      valueCol: String = "value",
+      typeCol: String = "event_type"): DataFrame = {
+    def of(t: String, c: String): Column = when(col(typeCol) === t, col(c))
+    val aggs = barAggs(tsCol, valueCol) ++
+      (max(col(tsCol)).as("last_ts") +:
+        latest.map { case (name, t) => max_by(of(t, valueCol), of(t, tsCol)).as(name) }) ++
+      sums.map(t => sum(of(t, valueCol).cast("decimal(28,6)")).as(s"sum_$t"))
+    events
+      .groupBy(col(entity), to_date(col(tsCol)).as("d"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
 
   /** Fine-resolution bars — get_stock_fine_resolution
     * (load_yfinance_data.py:137-141): same aggregate at an arbitrary
@@ -40,17 +71,14 @@ object Ohlc {
       resolution: String,
       entity: String = "user_id",
       tsCol: String = "ts",
-      valueCol: String = "value"): DataFrame =
+      valueCol: String = "value"): DataFrame = {
+    val aggs = barAggs(tsCol, valueCol)
     events
       .groupBy(col(entity), window(col(tsCol), resolution).as("w"))
-      .agg(
-        min_by(col(valueCol), col(tsCol)).as("open"),
-        max(col(valueCol)).as("high"),
-        min(col(valueCol)).as("low"),
-        max_by(col(valueCol), col(tsCol)).as("close"),
-        count(lit(1)).as("volume"))
+      .agg(aggs.head, aggs.tail: _*)
       .select(col(entity), col("w.start").as("bucket"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
+  }
 
   /** Bars as a MERGEABLE summary: the daily aggregate plus the open/close
     * event times that witness it. With the witnesses kept, two partial bars

@@ -72,21 +72,23 @@ object Sources {
     parquetSnapshot(spark, path).df
 
   /** Digest of every file under `path` (name, length, mtime);
-    * empty for a missing path.
+    * empty for a missing path. Walks `listStatus`, not `listFiles`: each
+    * of listFiles' LocatedFileStatus reads the file's permissions, which
+    * on the local file system without native Hadoop forks one `ls -ld`
+    * per file (Spark's HadoopFSUtils avoids it for the same reason).
     */
-  private def fingerprint(spark: SparkSession, path: String): String = {
+  private[graft] def fingerprint(spark: SparkSession, path: String): String = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Seq.newBuilder[String]
-    try {
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += s"${f.getPath.toUri.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}"
-      }
-    } catch { case _: java.io.FileNotFoundException => }
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) walk(f.getPath) else Seq(f))
+    digest(try walk(root) catch { case _: java.io.FileNotFoundException => Nil })
+  }
+
+  private[graft] def digest(files: Seq[org.apache.hadoop.fs.FileStatus]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    files.result().sorted.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    files.map(f => s"${f.getPath.toUri.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
+      .sorted.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
     md.digest().map(b => f"$b%02x").mkString
   }
 

@@ -100,7 +100,8 @@ class CheckpointModeSpec extends SparkSpec {
       dir
     }
     def run(dir: String): Set[String] =
-      Seq("q_ohlc_daily", "q_sma", "q_gap_off_peak")
+      Seq("q_ohlc_daily", "q_sma", "q_gap_off_peak", "q_gap_on_peak", "q_pct_change_ndays",
+        "q_sector_price", "q_pivot_wide", "q_latest_date")
         .flatMap(k => rows(SparkEntry.queries(k)(spark, dir)).map(k + _)).toSet
     val (localDir, reliableDir) = (store(), store())
     val local = run(localDir)

@@ -21,15 +21,16 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("time-series aggregates partial-combine: the shuffle moves bars, not ticks") {
-    // the bars keys read one checkpointed daily-bars frame per events
-    // snapshot (SparkEntry.bars); its build is the one tick-level
-    // aggregate: a partial + final pair around one exchange — no raw-tick
-    // repartition anywhere
-    val build = graft.operators.Ohlc.dailyBars(
-      graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
-      .queryExecution.executedPlan.toString()
-    assert(count(build, "Exchange") === 1, build)
-    assert(count(build, "HashAggregate") === 2, s"expected partial+final:\n$build")
+    // the bars keys read one checkpointed daily summary frame per events
+    // snapshot (SparkEntry.daily); its build, like plain daily bars, is one
+    // tick-level aggregate: a partial + final pair around one exchange —
+    // no raw-tick repartition anywhere
+    val ticks = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
+    for (built <- Seq(graft.operators.Ohlc.dailyBars(ticks), SparkEntry.dailySummary(ticks))) {
+      val build = built.queryExecution.executedPlan.toString()
+      assert(count(build, "Exchange") === 1, build)
+      assert(count(build, "HashAggregate") === 2, s"expected partial+final:\n$build")
+    }
     // projections of the bars read the shared frame: no exchange, no scan
     for (q <- Seq("q_ohlc_daily", "q_dollar_volume", "q_gap_on_peak")) {
       val p = plan(q)
@@ -51,11 +52,22 @@ class PlanInvariantsSpec extends SparkSpec {
     ticks.where(col("ts") < cut).write.parquet(events)
     def sma() = SparkEntry.queries("q_sma")(spark, store)
     SparkEntry.queries("q_ohlc_daily")(spark, store).collect()
-    // q_sma after q_ohlc_daily reads the bars frame: no parquet scan at all
-    val p = sma().queryExecution.executedPlan.toString()
-    assert(!p.contains("FileScan") && !p.contains("events.parquet"), p)
-    val (_, unchanged) = JobProbe.during(spark)(sma().collect())
+    // every reference key after q_ohlc_daily reads the snapshot's daily
+    // summary frame: no parquet scan at all
+    val reference = Seq("q_ohlc_daily", "q_sma", "q_gap_off_peak", "q_gap_on_peak",
+      "q_pct_change_ndays", "q_sector_price", "q_pivot_wide", "q_latest_date")
+    def ref(k: String) = SparkEntry.queries(k)(spark, store)
+    for (k <- reference) {
+      val p = ref(k).queryExecution.executedPlan.toString()
+      assert(!p.contains("FileScan") && !p.contains("events.parquet"), s"$k:\n$p")
+    }
+    val (_, unchanged) = JobProbe.during(spark)(reference.foreach(k => ref(k).collect()))
     assert(!unchanged.rddNames.contains("FileScanRDD"), unchanged.rddNames)
+    // the sector price's as-of lookups are one window over the summary:
+    // a single shuffle, no union of filtered aggregates
+    val sector = ref("q_sector_price").queryExecution.executedPlan.toString()
+    assert(this.count(sector, "Exchange hashpartitioning") === 1, sector)
+    assert(!sector.contains("Union"), sector)
     // an append changes the file set: the first bars key scans the store again
     graft.sources.Sinks.appendNewerThan(spark, ticks.where(col("ts") >= cut), events, "user_id", "ts")
     val (_, appended) = JobProbe.during(spark)(sma().collect())
@@ -146,11 +158,14 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("projections prune the parquet scan to the referenced columns") {
-    // a 2-column query must read 2 columns, not the table
-    val p = plan("q_latest_date")
+    // the daily summary (the one events scan of the daily-series keys)
+    // reads the 4 columns it aggregates, not the table
+    val p = SparkEntry.dailySummary(
+      graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
+      .queryExecution.executedPlan.toString()
     val read = "ReadSchema: [^\\n]+".r.findFirstIn(p).getOrElse(fail(p))
-    assert(read.contains("user_id") && read.contains("ts"), read)
-    assert(!read.contains("props") && !read.contains("event_type"), read)
+    for (c <- Seq("user_id", "ts", "event_type", "value")) assert(read.contains(c), read)
+    assert(!read.contains("props") && !read.contains("event_id"), read)
   }
 
   test("filters push down to the parquet scan") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.plans.GraftFunctions
 import graft.sources.{Sinks, Sources}
 import org.apache.spark.sql.functions._
@@ -289,6 +291,23 @@ class SourcesSpec extends SparkSpec {
     // a fresh instance per read: the two reads still self-join apart
     assert(first.join(second, first("user_id") === second("user_id") && first("ts") === second("ts"))
       .count() === 8)
+  }
+
+  test("snapshot fingerprint: the listStatus walk digests what listFiles lists") {
+    val out = Files.createTempDirectory("graft_snap_fp").toFile.getAbsolutePath + "/t"
+    Sinks.writeByDay(Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 10:00:00"), 2.0))
+      .toDF("user_id", "ts", "value"), out, "ts")
+    val onDisk = Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    assert(onDisk.exists(_.endsWith(".crc")) && onDisk.contains("_SUCCESS"), onDisk)
+    assert(onDisk.count(_.startsWith("day=")) === 2, onDisk)
+    val root = new org.apache.hadoop.fs.Path(out)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    val listed = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    while (it.hasNext) listed += it.next()
+    assert(listed.result().size >= 3) // _SUCCESS and one data file per day
+    assert(Sources.fingerprint(spark, out) === Sources.digest(listed.result()))
+    assert(Sources.fingerprint(spark, s"$out-missing") === Sources.digest(Nil))
   }
 
   test("the bars frame of a live snapshot survives Graft.dropQueryState") {
