@@ -12,32 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Process-lived checkpoint-backed frames (the SparkEntry memo layer's
-    * pair tables, the daily bars of a live events snapshot) register their
-    * RDD ids here so the between-queries reaper below can evict everything
-    * else without re-paying the shared builds the memos exist to amortize.
-    */
-  private val pinnedRddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Register a memoized checkpoint-backed frame as process-lived. */
-  def pinForProcess(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    org.apache.spark.sql.GraftBridge.checkpointRddIds(df).foreach(pinnedRddIds.add(_))
-    df
-  }
-
-  /** Unpin a [[pinForProcess]] frame and free its blocks — for a frame
-    * whose source snapshot was superseded.
-    */
-  def release(df: org.apache.spark.sql.DataFrame): Unit = {
-    org.apache.spark.sql.GraftBridge.checkpointRddIds(df).foreach(pinnedRddIds.remove(_))
-    org.apache.spark.sql.GraftBridge.unpersistCheckpointed(df)
-  }
-
-  /** RDD ids currently pinned by [[pinForProcess]]. */
-  private[graft] def pinnedIds: Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    pinnedRddIds.asScala.toSet
-  }
+  /** Memory gauge of the reaper's flush; the disk gauge is 4× it. */
+  private val FlushBytes = 4L << 30
 
   /** Drop all cross-query executor state between independent benchmark
     * queries: every persisted RDD (a finished query's localCheckpoint
@@ -50,42 +26,24 @@ object Graft {
     * query runs). Blocking=false: eviction proceeds asynchronously, the
     * next query's timing is unaffected.
     *
-    * Pinned frames survive. A snapshot frame (the daily bars of one events
-    * file set, see `SparkEntry.bars`) lives until its snapshot is
-    * superseded — a later read of the path lists a changed file set, and
-    * [[release]] frees it then — or until the threshold flush below runs.
+    * Frames owned by a live [[StateCache]] entry survive: evicting those
+    * would re-pay the shared model/pair builds once per query, which is
+    * the cost the cache exists to amortize.
     */
-  def dropQueryState(spark: org.apache.spark.sql.SparkSession,
-                     thresholdBytes: Long = 4L << 30): Unit = {
-    // A finished query's checkpoint blocks are garbage the moment its
-    // action returns, but the block manager pins them until an explicit
-    // unpersist — and letting them accumulate between queries both leaks
-    // toward OOM (observed on the 100× battery) and pressures every
-    // later query's execution memory. Evict them unconditionally,
-    // EXCEPT the registered process-lived memo frames (pinForProcess):
-    // evicting those would re-pay the shared model/pair builds once per
-    // query, which is the cost the memo layer exists to amortize.
+  def dropQueryState(spark: SparkSession): Unit = {
+    val owned = StateCache.ownedIds(spark)
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedRddIds.contains(id)) rdd.unpersist(blocking = false)
+      if (!owned.contains(id)) rdd.unpersist(blocking = false)
     }
-    // Full flush only past a storage threshold: above it even the memos
-    // go (the heap-OOM guard wins), and the memo MAP is cleared in the
-    // same breath — its checkpoint blocks just vanished, and handing out
-    // a stale frame would throw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; memos
-    // rebuild lazily. TWO gauges: memory blocks against `thresholdBytes`,
-    // disk blocks against 4× it — localCheckpoints persist at
+    // Past a storage gauge even the owned frames go (the heap-OOM guard
+    // wins); they rebuild lazily. TWO gauges: localCheckpoints persist at
     // MEMORY_AND_DISK, so under memory pressure blocks evict to disk,
     // where a memory-only gauge would sit below threshold while
     // checkpoint data accumulated unboundedly on this host's slow disk.
     val info = spark.sparkContext.getRDDStorageInfo
-    val usedMem = info.map(_.memSize).sum
-    val usedDisk = info.map(_.diskSize).sum
-    if (usedMem > thresholdBytes || usedDisk > 4 * thresholdBytes) {
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+    if (info.map(_.memSize).sum > FlushBytes || info.map(_.diskSize).sum > 4 * FlushBytes) {
+      StateCache.flush(spark)
       spark.catalog.clearCache()
-      SparkEntry.clearShared()
-      pinnedRddIds.clear()
     }
   }
 

@@ -1,6 +1,8 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import graft.StateCache
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
@@ -57,7 +59,7 @@ class PairGateRefused(message: String) extends IllegalArgumentException(message)
   * big-corpus case (output far over cap) never pays the floor pass: the
   * coarse estimate already refuses.
   *
-  * MEMOIZATION: (count, estimate) are memoized per process keyed on the
+  * MEMOIZATION: (count, estimate) are [[StateCache]] values keyed on the
   * corpus's canonicalized-plan semantic hash plus (who, params, cap,
   * sample target), like the ANN index builds — repeat invocations over
   * the same corpus (shared pair frames, multi-pass benches) skip the
@@ -124,7 +126,7 @@ object PairGate {
   /** One tier-2 verdict, recorded whether it passed or refused — the raw
     * material for estimate-vs-actual calibration artifacts. `p` is the
     * realized fraction the final estimate used; `memoHit` marks verdicts
-    * served from the per-process memo (no generator run happened).
+    * served from the memo (this call ran no generator).
     */
   final case class Estimation(who: String, params: String, n: Long, p: Double,
                               estimate: Long, cap: Long, refused: Boolean,
@@ -143,36 +145,24 @@ object PairGate {
 
   def clearRecorded(): Unit = record.clear()
 
-  // per-process memo: corpus counts keyed by plan identity, tier-2
-  // estimates keyed by (plan identity, who, params, cap, sample target).
-  // Values are tiny (two longs); the map lives for the process like the
-  // SparkEntry index memos.
-  private val countMemo = new ConcurrentHashMap[String, java.lang.Long]()
-  private val estMemo = new ConcurrentHashMap[String, (Double, Long)]()
-
-  /** Clears the memo — test hook (a spec that mutates a corpus in place
-    * under an unchanged plan must not see a stale verdict).
-    */
-  def clearMemo(): Unit = { countMemo.clear(); estMemo.clear() }
-
-  /** Stable-enough per-process identity for a corpus frame: the analyzed
-    * plan's semantic hash plus the schema. Two reads of the same table in
-    * one process canonicalize identically; a non-matching plan is only a
-    * memo MISS (recompute), never a wrong answer — the only failure mode
-    * is a 32-bit semantic-hash collision between two same-schema corpora
-    * fed to the same (who, params), acceptable for a sampling-noisy melt
-    * guard. Public so [[checkCounted]] callers that counted for their own
-    * geometry can still hand the memo a stable key.
+  /** Stable-enough identity for a corpus frame within one context (the
+    * cache is scoped to it): the analyzed plan's semantic hash plus the
+    * schema. Two reads of the same table canonicalize identically; a
+    * non-matching plan is only a memo MISS (recompute), never a wrong
+    * answer — the only failure mode is a 32-bit semantic-hash collision
+    * between two same-schema corpora fed to the same (who, params),
+    * acceptable for a sampling-noisy melt guard. Public so
+    * [[checkCounted]] callers that counted for their own geometry can
+    * still hand the memo a stable key.
     */
   def corpusKey(corpus: DataFrame): String =
-    corpus.sparkSession.sparkContext.applicationId + ":" +
-      corpus.semanticHash().toString + ":" + corpus.schema.catalogString
+    corpus.semanticHash().toString + ":" + corpus.schema.catalogString
 
   /** Memoized corpus count — shared with callers that need n for their own
     * geometry (grid sizing) so the gate's count is never a second job.
     */
-  def countMemoized(corpus: DataFrame): Long =
-    countMemo.computeIfAbsent(corpusKey(corpus), _ => corpus.count()).longValue()
+  def corpusCount(corpus: DataFrame): Long =
+    StateCache.value(corpus.sparkSession, s"pairgate.count:${corpusKey(corpus)}")(corpus.count())
 
   /** The tier-2 (realized fraction, full-corpus estimate) at the
     * configured sample target, WITH the escalating detectability floor
@@ -212,7 +202,7 @@ object PairGate {
            (estimate: Double => Long): Long = {
     val spark = corpus.sparkSession
     if (cap(spark) <= 0L) return -1L
-    val n = countMemoized(corpus)
+    val n = corpusCount(corpus)
     checkCounted(spark, n, who, params, remedy, memoKey = Some(corpusKey(corpus)))(estimate)
     n
   }
@@ -230,15 +220,11 @@ object PairGate {
     if (n.toDouble * (n - 1).toDouble / 2.0 <= mx.toDouble) return
     val target = spark.conf.get(RowsKey, "2048").toDouble
     require(target >= 2, s"$RowsKey must be >= 2 (got $target)")
-    val fullKey = memoKey.map(k => s"$k|$who|$params|cap=$mx|rows=$target")
-    val memoized = fullKey.flatMap(k => Option(estMemo.get(k)))
-    val (p, est) = memoized.getOrElse {
-      val verdict = tier2Estimate(spark, n)(estimate)
-      fullKey.foreach(k => estMemo.putIfAbsent(k, verdict))
-      verdict
-    }
-    record.add(Estimation(who, params, n, p, est, mx, refused = est > mx,
-      memoHit = memoized.isDefined))
+    var built = false
+    def verdict = { built = true; tier2Estimate(spark, n)(estimate) }
+    val (p, est) = memoKey.fold(verdict)(k =>
+      StateCache.value(spark, s"pairgate.estimate:$k|$who|$params|cap=$mx|rows=$target")(verdict))
+    record.add(Estimation(who, params, n, p, est, mx, refused = est > mx, memoHit = !built))
     if (est > mx) throw new PairGateRefused(
       s"$who estimates ~$est output pairs over $n rows (deterministic " +
         f"${p * 100}%.4f%% sample) — past $CapKey=$mx. $remedy; or raise " +

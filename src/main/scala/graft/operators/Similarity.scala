@@ -162,7 +162,7 @@ object Similarity {
   def estimateExactPairCount(embeddings: DataFrame, threshold: Double,
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): Long =
-    PairGate.tier2Estimate(embeddings.sparkSession, PairGate.countMemoized(embeddings))(
+    PairGate.tier2Estimate(embeddings.sparkSession, PairGate.corpusCount(embeddings))(
       estimateExactPairs(embeddings, threshold, idCol, vecCol))._2
 
   private def pairGateRemedy(threshold: Double): String =
@@ -191,7 +191,7 @@ object Similarity {
     val b =
       if (blocks > 0) blocks
       else {
-        val n = if (gateN >= 0) gateN else PairGate.countMemoized(embeddings)
+        val n = if (gateN >= 0) gateN else PairGate.corpusCount(embeddings)
         // parallelism-derived grid: cell count b(b+1)/2 ≈ 2× default
         // parallelism (1-Bucket-Theta guidance) …
         val fromPar = math.max(4, math.ceil(math.sqrt(
@@ -1053,7 +1053,7 @@ object Similarity {
     // one memoized count serves both consumers: the auto geometry (always
     // needs n) and the gate (only when enabled) — explicit geometry with
     // the gate disabled counts nothing
-    val n: Long = if (gateOn || planes == 0) PairGate.countMemoized(embeddings) else -1L
+    val n: Long = if (gateOn || planes == 0) PairGate.corpusCount(embeddings) else -1L
     val (planesEff, bandsEff) =
       if (planes > 0) (planes, bands)
       else {
@@ -1307,7 +1307,7 @@ object Similarity {
     // k ≤ 0 (the default) derives the cell count from the corpus size
     // ([[autoCellCount]]) so the in-cell screen stays ~linear in n.
     val centsList = centroids.getOrElse {
-      val kk = if (k > 0) k else autoCellCount(PairGate.countMemoized(embeddings))
+      val kk = if (k > 0) k else autoCellCount(PairGate.corpusCount(embeddings))
       val sample = Sampling.deterministicSample(embeddings, idCol, sampleFraction)
       Seq(kk, math.max(2, kk / 2)).distinct
         .map(g => kmeansCentroids(sample, g, iters, idCol, vecCol))

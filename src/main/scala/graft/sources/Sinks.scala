@@ -102,7 +102,8 @@ object Sinks {
     * check_table_append_compatibility + to_sql append), then append. On an
     * empty/absent target, everything is new. The target is read through
     * [[Sources.readParquet]]: an unchanged target reuses its last listing
-    * and schema, and the append itself supersedes that snapshot.
+    * and schema, and the first read after the append lists the new file
+    * set.
     */
   def appendNewerThan(
       spark: SparkSession,

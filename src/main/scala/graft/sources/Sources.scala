@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.StateCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -19,52 +20,26 @@ object Sources {
     * schema, paid once. `df` hands out a fresh instance of the same
     * relation per call (new attribute ids, no listing, no schema job), so
     * two reads of one snapshot still self-join like two independent reads.
-    * Frames derived from the snapshot register a release with
-    * [[onSupersede]]; it runs when a later read lists a changed file set.
     */
-  final class Snapshot private[sources] (val fingerprint: String, relation: DataFrame) {
-    private var superseded = false
-    private val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
-
+  final class Snapshot private[sources] (val source: StateCache.Source, relation: DataFrame) {
     def df: DataFrame = org.apache.spark.sql.GraftBridge.newInstance(relation)
-
-    /** Run `release` once this snapshot is superseded — at once if it already is. */
-    def onSupersede(release: () => Unit): Unit = {
-      val now = synchronized {
-        if (!superseded) releases += release
-        superseded
-      }
-      if (now) release()
-    }
-
-    private[sources] def supersede(): Unit =
-      synchronized { superseded = true; val rs = releases.toList; releases.clear(); rs }
-        .foreach(_())
   }
 
-  private val snapshots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Snapshot]()
-
   /** The parquet table at `path` as it is now: one [[Snapshot]] per
-    * (session, path, file set). The file set is listed again on every call
-    * — name, length and modification time of every file under the path —
-    * and a read whose listing matches the last one reuses it; a changed
-    * listing reads the path anew and supersedes the previous snapshot,
-    * releasing every frame derived from it. A missing path reads (and
-    * fails) the way `spark.read.parquet` does.
+    * (session, path, file set), held by [[StateCache]]. The file set is
+    * listed again on every call — name, length and modification time of
+    * every file under the path — and a read whose listing matches the last
+    * one reuses it; a changed listing invalidates the path, which frees
+    * every entry derived from the old file set, and reads the path anew. A
+    * missing path reads (and fails) the way `spark.read.parquet` does.
     */
   def parquetSnapshot(spark: SparkSession, path: String): Snapshot = {
-    snapshots.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = fingerprint(spark, path)
-    var old: Snapshot = null
-    val snap = snapshots.compute((spark, path), (_, prev) =>
-      if (prev != null && prev.fingerprint == fp) prev
-      else {
-        old = prev
-        new Snapshot(fp, spark.read.parquet(path))
-      })
-    if (old != null) old.supersede()
-    snap
+    val source = StateCache.Source(path, fingerprint(spark, path))
+    def snapshot = StateCache.value(spark, (spark, path), Some(source))(
+      new Snapshot(source, spark.read.parquet(path)))
+    val snap = snapshot
+    if (snap.source == source) snap
+    else { StateCache.invalidate(spark, path); snapshot }
   }
 
   /** [[parquetSnapshot]]'s frame — the one parquet table reader. */

@@ -64,8 +64,8 @@ object GraftBridge {
     }
 
   /** RDD ids behind a (local)checkpoint-backed DataFrame — lets the
-    * between-queries state reaper distinguish a process-lived memoized
-    * frame's blocks from a finished query's garbage.
+    * between-queries state reaper distinguish a frame graft.StateCache
+    * owns from a finished query's garbage.
     */
   def checkpointRddIds(df: DataFrame): Seq[Int] =
     df.queryExecution.analyzed.collect {

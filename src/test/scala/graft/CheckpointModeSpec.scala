@@ -186,4 +186,26 @@ class CheckpointModeSpec extends SparkSpec {
     keys.foreach(k => assert(local(k).nonEmpty, k))
     assert(local == reliable)
   }
+
+  test("StateCache.flush frees every owned frame, checkpoint files included, under both modes") {
+    def run(): Unit = {
+      StateCache.flush(spark) // earlier suites built these frames in the other mode
+      val bars = rows(SparkEntry.queries("q_ohlc_daily")(spark, sfDir))
+      assert(rows(SparkEntry.queries("q_pair_quality")(spark, sfDir)).nonEmpty)
+      val owned = StateCache.ownedIds(spark)
+      assert(owned.size >= 3, owned) // the daily frame and both pair tables
+      val reliable = spark.sparkContext.getCheckpointDir.isDefined
+      val files = owned.map(id => s"rdd-$id")
+      if (reliable) assert(files.subsetOf(checkpointDirsOnDisk()), files)
+      StateCache.flush(spark)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(owned).isEmpty)
+      if (reliable) assert(checkpointDirsOnDisk().intersect(files).isEmpty)
+      val again = SparkEntry.queries("q_ohlc_daily")(spark, sfDir)
+      assert(GraftBridge.checkpointRddIds(again).toSet.intersect(owned).isEmpty) // rebuilt
+      assert(rows(again) === bars)
+      StateCache.flush(spark) // leave no frame behind whose files the mode's cleanup deletes
+    }
+    run()
+    withReliableCheckpoints(run())
+  }
 }

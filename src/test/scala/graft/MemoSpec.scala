@@ -5,9 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 
-/** The registry memo's concurrency contract: a key is built once however
-  * many callers race for it, so a frame pinned inside the build is pinned
-  * once, and a failed build is retried by the next caller.
+/** The state cache's concurrency contract: a key is built once however
+  * many callers race for it, so a frame owned by the entry is owned once,
+  * and a failed build is retried by the next caller.
   */
 class MemoSpec extends SparkSpec {
   import spark.implicits._
@@ -25,27 +25,30 @@ class MemoSpec extends SparkSpec {
   test("concurrent builds of one key leave exactly one pinned RDD") {
     val key = s"memo-race-${System.nanoTime()}"
     val builds = new AtomicInteger()
-    val pinnedBefore = Graft.pinnedIds
+    val ownedBefore = StateCache.ownedIds(spark)
     val frames = race(4) {
-      SparkEntry.memo(spark, key) {
+      StateCache.frame(spark, key) {
         builds.incrementAndGet()
         Thread.sleep(300) // hold the build open while the others arrive
-        Graft.pinForProcess(Graft.materialize((1 to 100).toDF("x"), eager = true))
+        Graft.materialize((1 to 100).toDF("x"), eager = true)
       }
     }
     assert(builds.get() === 1)
-    assert(frames.map(System.identityHashCode).distinct.size === 1)
-    val added = Graft.pinnedIds -- pinnedBefore
+    // every caller gets its own instance of the one built frame
+    assert(frames.map(GraftBridge.checkpointRddIds).distinct.size === 1)
+    val added = StateCache.ownedIds(spark) -- ownedBefore
     assert(added === GraftBridge.checkpointRddIds(frames.head).toSet)
     assert(added.size === 1)
-    Graft.release(frames.head)
+    StateCache.flush(spark)
+    assert(StateCache.ownedIds(spark).isEmpty)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(added.head))
   }
 
   test("a failed build is forgotten: the next caller builds again") {
     val key = s"memo-fail-${System.nanoTime()}"
     intercept[IllegalStateException] {
-      SparkEntry.memo[DataFrame](spark, key)(throw new IllegalStateException("boom"))
+      StateCache.value[DataFrame](spark, key)(throw new IllegalStateException("boom"))
     }
-    assert(SparkEntry.memo(spark, key)(42) === 42)
+    assert(StateCache.value(spark, key)(42) === 42)
   }
 }

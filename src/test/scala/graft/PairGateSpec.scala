@@ -197,10 +197,35 @@ class PairGateSpec extends SparkSpec {
     assert(calls.size === 1, calls.mkString(","))
   }
 
+  test("racing tier-2 checks of one corpus run the estimator once") {
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val key = s"race-${System.nanoTime()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val outcomes = withCap(1000) {
+      val futures = (1 to 2).map(_ => pool.submit(() => {
+        start.await()
+        scala.util.Try(PairGate.checkCounted(spark, 1000000L, "race", "t=1", "remedy",
+          memoKey = Some(key)) { _ =>
+          runs.incrementAndGet()
+          Thread.sleep(300) // hold the estimate open while the other caller arrives
+          999999L
+        })
+      }))
+      start.countDown()
+      try futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      finally pool.shutdownNow()
+    }
+    assert(runs.get() === 1)
+    assert(outcomes.forall(_.failed.toOption.exists(_.isInstanceOf[PairGateRefused])), outcomes)
+    val recs = PairGate.recorded.filter(_.who == "race")
+    assert(recs.size === 2 && recs.count(!_.memoHit) === 1, recs.mkString(";"))
+  }
+
   test("tier-2 verdicts memoize per process and are recorded — passing and " +
     "refusing — for estimate-vs-actual calibration") {
     PairGate.clearRecorded()
-    PairGate.clearMemo()
+    StateCache.clear(spark)
     val dense = denseCorpus(310)
     withCap(1000) {
       intercept[PairGateRefused](Similarity.cosinePairsExact(dense, 0.4))

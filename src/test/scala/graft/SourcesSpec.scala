@@ -314,7 +314,7 @@ class SourcesSpec extends SparkSpec {
     val dir = eventsStore(3)
     val before = SparkEntry.queries("q_ohlc_daily")(spark, dir).collect().toSet
     val id = barsRdd(dir)
-    assert(Graft.pinnedIds.contains(id))
+    assert(StateCache.ownedIds(spark).contains(id))
     Graft.dropQueryState(spark)
     assert(spark.sparkContext.getPersistentRDDs.contains(id))
     // the next bars key reuses the same frame and reads no events file
@@ -338,7 +338,7 @@ class SourcesSpec extends SparkSpec {
     assert(ids.distinct.size === ids.size) // each append made a new snapshot
     val live = spark.sparkContext.getPersistentRDDs.keySet.intersect(ids.toSet)
     assert(live === Set(ids.last), live)
-    assert(Graft.pinnedIds.intersect(ids.toSet) === Set(ids.last))
+    assert(StateCache.ownedIds(spark).intersect(ids.toSet) === Set(ids.last))
   }
 
   test("graft_* SQL functions are callable after registration") {
