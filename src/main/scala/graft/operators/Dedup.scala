@@ -459,17 +459,25 @@ object Dedup {
     *
     * Size-adaptive: min-label propagation needs O(log n) ROUNDS (the min
     * must traverse the graph), and at local scale each round's fixed job
-    * overhead dominates. So once the pair list is materialized and counted,
-    * a graph at broadcast-table size (≤ `localSolveMaxEdges`, integral ids)
-    * is solved with driver-side union-find in one collect — the same
-    * size-based switch Spark itself makes for broadcast joins. The default
-    * (1M edges ≈ low-hundreds of MB transient driver heap with the boxed
-    * maps below) fits a default-sized driver; raise it in step with
-    * `spark.driver.memory`. Larger graphs (the 100 TB path: billions of
-    * candidate pairs) run the distributed rounds.
+    * overhead dominates. So the pair list is first read with the graph
+    * loops' one capped collect ([[LocalGraph.edges]]): a graph of at most
+    * `localSolveMaxEdges` edges (default [[LocalGraph.MaxEdges]], 1M) with
+    * integral ids is solved by union-find on primitive arrays in the
+    * driver ([[LocalGraph.components]]) — the same size-based switch Spark
+    * itself makes for broadcast joins. At the 1M-edge default the driver
+    * briefly holds the collected rows (on the order of 100 B an edge),
+    * then tens of MB of primitive arrays (no boxed maps); raise the cap in
+    * step with `spark.driver.memory`.
+    * Larger graphs (the 100 TB path: billions of candidate pairs) run the
+    * distributed rounds.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          localSolveMaxEdges: Long = 1000 * 1000): DataFrame = {
+                          localSolveMaxEdges: Long = LocalGraph.MaxEdges): DataFrame =
+    LocalGraph.edges(pairs, "id_a", "id_b", localSolveMaxEdges, undirected = false).map { g =>
+      LocalGraph.labelFrame(pairs.sparkSession, g, "id", "component", LocalGraph.components(g))
+    }.getOrElse(componentRounds(pairs, maxIter))
+
+  private def componentRounds(pairs: DataFrame, maxIter: Int): DataFrame = {
     // labels only ever DECREASE (min-propagation), so the frontier is at a
     // fixpoint iff the label sum is unchanged — one cheap aggregate over the
     // just-checkpointed frontier instead of a join-and-count against the
@@ -480,50 +488,9 @@ object Dedup {
     }
     // the pair list is consumed every iteration (and its lineage is usually
     // an expensive candidate pipeline — shingle/minhash/LSH or a pair join)
-    // — materialize it once before anything else. LAZY: the size gate's
-    // count() below materializes it inside its own job, so the candidate
-    // pipeline runs once either way and the eager-checkpoint barrier job
-    // is saved (one fewer sequential driver round-trip per call).
+    // — materialize it once before anything else. LAZY: the eager edge
+    // checkpoint below computes it inside its own job.
     val pairsM = Graft.materialize(pairs.select(col("id_a"), col("id_b")), eager = false)
-    val idType = pairsM.schema("id_a").dataType
-    val integralIds = idType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    if (integralIds && pairsM.count() <= localSolveMaxEdges) {
-      val spark = pairsM.sparkSession
-      val edgesLocal = pairsM
-        .select(col("id_a").cast("long"), col("id_b").cast("long")).collect()
-      // union-find with path compression; roots relabeled to the set minimum
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      edgesLocal.foreach { e =>
-        val (a, b) = (e.getLong(0), e.getLong(1))
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      val minOfRoot = new java.util.HashMap[Long, Long]()
-      parent.keySet().forEach { v =>
-        val r = find(v)
-        val m = minOfRoot.getOrDefault(r, Long.MaxValue)
-        if (v < m) minOfRoot.put(r, v)
-      }
-      val labeled = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size())
-      parent.keySet().forEach(v => labeled += ((v, minOfRoot.get(find(v)))))
-      GraftBridge.unpersistCheckpointed(pairsM)
-      import spark.implicits._
-      return labeled.toSeq.toDF("id", "component")
-        .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("component"))
-    }
     val edges = ccEdges(pairsM)
     GraftBridge.unpersistCheckpointed(pairsM)
     // ONE materialize action per round: the propagate plan is inlined under

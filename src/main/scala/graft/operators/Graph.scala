@@ -3,21 +3,30 @@ package graft.operators
 import graft.Graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Iterative graph analytics on DataFrames — PageRank as the
   * representative fixed-iteration algorithm (the influence/centrality
   * readout over an interaction graph, e.g. which suppliers sit at the
   * center of the purchase network).
   *
-  * Scale shape: each iteration is ONE keyed join of the edge list against
-  * the |nodes|-sized rank frame plus one partial-aggregated groupBy — the
-  * classic BSP step expressed declaratively, so Catalyst/AQE pick the join
-  * strategy per iteration (broadcast once ranks fit, shuffle-hash
-  * otherwise) and a 100 TB edge list just means a bigger shuffle, never a
-  * driver-side structure. Edge/node/degree frames are computed once and
-  * persisted across iterations; the dangling-node mass is a ONE-ROW
-  * broadcast frame per iteration (the house stats-frame idiom — no driver
-  * collect in the loop).
+  * Size gate: the BSP loops (pagerank, label propagation, BFS) first read
+  * the edge list with ONE capped collect ([[LocalGraph.edges]]). A graph of
+  * at most `localSolveMaxEdges` edges (default [[LocalGraph.MaxEdges]], 1M)
+  * with integral ids is solved in the driver on a CSR and returned as a
+  * local frame with the loop's exact rows; a small graph otherwise pays a
+  * job round-trip per round for work a driver does in milliseconds. Over
+  * the cap, or with string ids, the distributed loop below runs unchanged.
+  *
+  * Scale shape of the distributed loop: each iteration is ONE keyed join of
+  * the edge list against the |nodes|-sized rank frame plus one
+  * partial-aggregated groupBy — the classic BSP step expressed
+  * declaratively, so Catalyst/AQE pick the join strategy per iteration
+  * (broadcast once ranks fit, shuffle-hash otherwise) and a 100 TB edge
+  * list just means a bigger shuffle. Edge/node/degree frames are computed
+  * once and persisted across iterations; the dangling-node mass is a
+  * ONE-ROW broadcast frame per iteration (the house stats-frame idiom — no
+  * driver collect in the loop).
   *
   * Determinism (the oracle contract): per-edge contributions and the
   * dangling mass are rounded to 12 decimals and accumulated in decimal
@@ -57,10 +66,22 @@ object Graph {
     * `r'(v) = (1-d)/N + d·(Σ_{u→v} r(u)/deg(u) + D/N)`.
     *
     * Returns (node, rank) for ALL nodes, rank unrounded (callers round at
-    * the output boundary).
+    * the output boundary). Graphs under the size gate solve in the driver,
+    * bit-identical ([[LocalGraph.pagerank]]); a damping outside [0, 1]
+    * always runs distributed (the kernel's exact sums assume ranks ≤ 1).
     */
   def pagerank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-               srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+               srcCol: String = "src", dstCol: String = "dst",
+               localSolveMaxEdges: Long = LocalGraph.MaxEdges): DataFrame = {
+    val cap = if (damping >= 0 && damping <= 1) localSolveMaxEdges else 0L
+    LocalGraph.edges(edges, srcCol, dstCol, cap, undirected = false).map { g =>
+      val rank = LocalGraph.pagerank(g, iters, damping)
+      LocalGraph.frame(edges.sparkSession, g, "node", "rank", DoubleType)(rank(_))
+    }.getOrElse(pagerankLoop(edges, iters, damping, srcCol, dstCol))
+  }
+
+  private def pagerankLoop(edges: DataFrame, iters: Int, damping: Double,
+                           srcCol: String, dstCol: String): DataFrame = {
     val setup = rankSetup(edges, srcCol, dstCol)
     val n = setup.n
     var rank = setup.rank
@@ -94,19 +115,21 @@ object Graph {
     // so an unmaterialized lineage re-evaluates rank_{i-1} twice per step
     // — 2^iters evaluations of the base by the last iteration (measured:
     // 20 s vs 5 s at sf0.1). Checkpointing collapses each frame to a
-    // LogicalRDD: plans stay shallow, every step runs once. LAZY (blocks
-    // compute on first touch, then cache) so the steps pipeline into few
-    // jobs instead of one barrier per frame — worth ~15% over eager here.
-    // On a real cluster the same truncation holds; a reliable checkpoint
-    // dir (vs executor-local blocks) is the only swap for fault tolerance
-    // at 100 TB. Remaining cost profile at sf0.1 (600k edges, 16.5k
+    // LogicalRDD: plans stay shallow, every step runs once. LAZY defers
+    // only a frame's final stage into its first consumer's job: under AQE,
+    // building the checkpoint already runs the frame's shuffle map stages
+    // as jobs, so every lazy frame with an exchange costs its map-stage
+    // jobs at construction (why small graphs skip this loop: see the size
+    // gate in the header). On a real cluster the same truncation holds; a
+    // reliable checkpoint dir (vs executor-local blocks) is the only swap
+    // for fault tolerance at 100 TB. Remaining cost profile at sf0.1 (600k edges, 16.5k
     // nodes): ~3.9 s one-time input materialization, ~0.27 s per
     // iteration — the marginal iteration cost is the scale-relevant term.
-    // edges are hash-partitioned on src ONCE before the checkpoint:
-    // LogicalRDD preserves the physical partitioning, so every
-    // iteration's edge⋈rank join co-locates on the big side and only the
-    // |nodes|-sized rank frame moves — the 100 TB-critical property (the
-    // edge list is shuffled once per query, not once per iteration).
+    // edges are hash-partitioned on src before the checkpoint, but under
+    // AQE the layout does NOT survive it: the LogicalRDD reports unknown
+    // partitioning, so above spark.graft.graph.broadcastNodes every
+    // iteration's edge⋈rank join re-shuffles the edge list (an open
+    // ROADMAP item: keep a frame's layout through Graft.materialize).
     // repartition BEFORE distinct: hash(src) clusters every (src, dst)
     // duplicate into one partition, so the dedup aggregate runs on the
     // repartition's exchange instead of adding its own hash(src, dst)
@@ -179,9 +202,19 @@ object Graph {
     * `iters` hops carries its exact hop count, farther nodes
     * [[Unreached]]. Same one-time setup as the other BSP loops: the
     * symmetrized edge list hash-partitions on src once and checkpoints.
+    * Graphs under the size gate run the same BFS in the driver
+    * ([[LocalGraph.hops]]).
     */
   def shortestHops(edges: DataFrame, source: Long, iters: Int = 6,
-                   srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+                   srcCol: String = "src", dstCol: String = "dst",
+                   localSolveMaxEdges: Long = LocalGraph.MaxEdges): DataFrame =
+    LocalGraph.edges(edges, srcCol, dstCol, localSolveMaxEdges, undirected = true).map { g =>
+      val hop = LocalGraph.hops(g, source, iters)
+      LocalGraph.frame(edges.sparkSession, g, "node", "hop", LongType)(hop(_))
+    }.getOrElse(hopsLoop(edges, source, iters, srcCol, dstCol))
+
+  private def hopsLoop(edges: DataFrame, source: Long, iters: Int,
+                       srcCol: String, dstCol: String): DataFrame = {
     val half = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // repartition before distinct (see pagerank): the symmetrized list is
     // deduped on the same hash(src) exchange that lays it out for the
@@ -239,10 +272,18 @@ object Graph {
     * scale shape and lineage-truncation story as [[pagerank]]: per round,
     * ONE keyed join of the symmetrized edge list against the
     * |nodes|-sized label frame + a partial-aggregated min, everything
-    * localCheckpoint'd.
+    * localCheckpoint'd. Graphs under the size gate run the same k rounds in
+    * the driver ([[LocalGraph.minLabels]]).
     */
   def connectedComponents(edges: DataFrame, iters: Int = 5,
-                          srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+                          srcCol: String = "src", dstCol: String = "dst",
+                          localSolveMaxEdges: Long = LocalGraph.MaxEdges): DataFrame =
+    LocalGraph.edges(edges, srcCol, dstCol, localSolveMaxEdges, undirected = true).map { g =>
+      LocalGraph.labelFrame(edges.sparkSession, g, "node", "label", LocalGraph.minLabels(g, iters))
+    }.getOrElse(labelLoop(edges, iters, srcCol, dstCol))
+
+  private def labelLoop(edges: DataFrame, iters: Int,
+                        srcCol: String, dstCol: String): DataFrame = {
     val half = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // repartition before distinct (see pagerank): dedup rides the layout
     // exchange — one 2|E|-sized shuffle in the setup, not two; the node

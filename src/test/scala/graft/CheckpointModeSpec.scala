@@ -54,12 +54,14 @@ class CheckpointModeSpec extends SparkSpec {
       .map(_.getPath.getName).filter(_.startsWith("rdd-")).toSet
   }
 
+  // The graph specs pin `localSolveMaxEdges = 0`: these tiny long-id
+  // graphs would otherwise solve in the driver, past every checkpoint.
   test("pagerank identical under local and reliable checkpoints") {
-    val local = rows(Graph.pagerank(edges, iters = 5)
+    val local = rows(Graph.pagerank(edges, iters = 5, localSolveMaxEdges = 0)
       .select(col("node"), round(col("rank"), 10).as("r")))
     val reliable = withReliableCheckpoints {
       assert(spark.sparkContext.getCheckpointDir.isEmpty)
-      val r = rows(Graph.pagerank(edges, iters = 5)
+      val r = rows(Graph.pagerank(edges, iters = 5, localSolveMaxEdges = 0)
         .select(col("node"), round(col("rank"), 10).as("r")))
       // the conf was actually honored: the context now has a checkpoint dir
       assert(spark.sparkContext.getCheckpointDir.isDefined)
@@ -70,6 +72,17 @@ class CheckpointModeSpec extends SparkSpec {
   }
 
   test("BFS hops and label propagation identical under both modes") {
+    val localHops = rows(Graph.shortestHops(edges, source = 1L, iters = 6, localSolveMaxEdges = 0))
+    val localCc = rows(Graph.connectedComponents(edges, iters = 10, localSolveMaxEdges = 0))
+    val (relHops, relCc) = withReliableCheckpoints {
+      (rows(Graph.shortestHops(edges, source = 1L, iters = 6, localSolveMaxEdges = 0)),
+        rows(Graph.connectedComponents(edges, iters = 10, localSolveMaxEdges = 0)))
+    }
+    assert(localHops == relHops)
+    assert(localCc == relCc)
+  }
+
+  test("BFS hops and label propagation identical under both modes at the default cap") {
     val localHops = rows(Graph.shortestHops(edges, source = 1L, iters = 6))
     val localCc = rows(Graph.connectedComponents(edges, iters = 10))
     val (relHops, relCc) = withReliableCheckpoints {
@@ -78,6 +91,9 @@ class CheckpointModeSpec extends SparkSpec {
     }
     assert(localHops == relHops)
     assert(localCc == relCc)
+    // and the driver-side solve returns the distributed loop's rows
+    assert(localHops == rows(Graph.shortestHops(edges, source = 1L, iters = 6, localSolveMaxEdges = 0)))
+    assert(localCc == rows(Graph.connectedComponents(edges, iters = 10, localSolveMaxEdges = 0)))
   }
 
   test("near-dedup pipeline identical under both modes") {

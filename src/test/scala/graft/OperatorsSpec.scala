@@ -485,19 +485,19 @@ class OperatorsSpec extends SparkSpec {
     assert(full === Map(1L -> 2L, 2L -> 1L, 3L -> 0L, 4L -> 1L, 5L -> 2L))
   }
 
-  test("BSP early exit: BFS stops at an empty frontier and components at the " +
-    "label fixpoint — a huge round budget costs the same jobs as the diameter") {
+  /** `localSolveMaxEdges = 0` pins the distributed loops; the default cap
+    * solves this tiny long-id graph in the driver.
+    */
+  private def bspEarlyExit(cap: Long): Unit = {
     // MEASURED by Spark job count, not just timing: with the exits, the
-    // extra 90+ budgeted rounds must launch zero additional jobs
-    def jobsDuring(f: => Unit): Int = {
-      val t = spark.sparkContext.statusTracker
-      val before = t.getJobIdsForGroup(null).length
-      f
-      t.getJobIdsForGroup(null).length - before
-    }
+    // extra 90+ budgeted rounds must launch zero additional jobs. Counted
+    // by a listener: the status tracker keeps only the last
+    // spark.ui.retainedJobs jobs, so differences of its job list go
+    // negative once a long run passes that many.
+    def jobsDuring(f: => Unit): Int = JobProbe.during(spark)(f)._2.jobs
     val edges = (1L to 5L).map(i => (i, i + 1)).toDF("src", "dst") // diameter 5
     def hops(iters: Int): Map[Long, Long] =
-      Graph.shortestHops(edges, source = 1L, iters = iters)
+      Graph.shortestHops(edges, source = 1L, iters = iters, localSolveMaxEdges = cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     var small: Map[Long, Long] = null
     var huge: Map[Long, Long] = null
@@ -508,12 +508,21 @@ class OperatorsSpec extends SparkSpec {
     // 93-round budget difference must be free
     assert(jHuge <= jSmall + 2, s"BFS iters=100 ran $jHuge jobs vs $jSmall at iters=7")
     def comps(iters: Int): Map[Long, Long] =
-      Graph.connectedComponents(edges, iters = iters)
+      Graph.connectedComponents(edges, iters = iters, localSolveMaxEdges = cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cSmall = jobsDuring { small = comps(8) }
     val cHuge = jobsDuring { huge = comps(100) }
     assert(small.values.toSet === Set(1L) && huge === small)
     assert(cHuge <= cSmall + 2, s"components iters=100 ran $cHuge jobs vs $cSmall at iters=8")
+  }
+
+  test("BSP early exit: BFS stops at an empty frontier and components at the " +
+    "label fixpoint — a huge round budget costs the same jobs as the diameter") {
+    bspEarlyExit(cap = 0L)
+  }
+
+  test("BSP early exit at the default cap: a huge round budget costs the same jobs as the diameter") {
+    bspEarlyExit(cap = LocalGraph.MaxEdges)
   }
 
   test("Analytics.giniBySegment: zero for equal orders, known value for a skewed pair") {
