@@ -133,6 +133,18 @@ object Graft {
     else df.localCheckpoint(eager)
   }
 
+  /** Spread an under-partitioned input across `spark.sql.shuffle.partitions`
+    * — the one partition rule of the per-row kernels (screen dots, shingle
+    * and signature passes, decimal refines). A corpus that fits in one file
+    * arrives as ONE scan split and would serialize those kernels on one
+    * core. Gated: an input that already has at least that many partitions
+    * (every table at cluster scale) passes through without an exchange.
+    */
+  private[graft] def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+  }
+
   def enable(spark: SparkSession): Unit = {
     GraftFunctions.register(spark)
     if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {

@@ -95,6 +95,33 @@ object SparkEntry {
   // meaningful where 6 would quantize the signal away
   private def exactSumD12(c: Column): Column = sum(c.cast("decimal(28,12)")).cast("double")
 
+  /** The decimal moments of paired series x, y — (s1, s2, sxx, syy, sxy,
+    * n), each sum by `exactSum` — for [[pearson]].
+    */
+  private def pearsonMoments(x: Column, y: Column, exactSum: Column => Column): Seq[Column] =
+    Seq(exactSum(x).as("s1"), exactSum(y).as("s2"),
+      exactSum(x * x).as("sxx"), exactSum(y * y).as("syy"), exactSum(x * y).as("sxy"),
+      count(lit(1)).cast("double").as("n"))
+
+  /** Pearson correlation from decimal moments, rounded to 6 (NULL on a
+    * zero-variance series): over the columns n, sx, sy, sxx, syy, sxy —
+    * [[pearsonMoments]]' names by default.
+    */
+  private def pearson(sx: String = "s1", sy: String = "s2", sxx: String = "sxx",
+                      syy: String = "syy", sxy: String = "sxy"): Column = {
+    val n = col("n")
+    round((n * col(sxy) - col(sx) * col(sy)) /
+      nullif(sqrt(n * col(sxx) - col(sx) * col(sx)) *
+        sqrt(n * col(syy) - col(sy) * col(sy)), lit(0.0)), 6)
+  }
+
+  /** The 10 most active entities (most daily bars, ties to the lower id)
+    * of a bars frame, as (user_id) — the series the pair keys correlate.
+    */
+  private def topActive(b: DataFrame): DataFrame =
+    b.groupBy(col("user_id")).agg(count(lit(1)).as("__n"))
+      .orderBy(col("__n").desc, col("user_id")).limit(10).select("user_id")
+
   // ---- per-context shared artifacts ------------------------------------
   // Model-sized state that several query keys consume (trained codebooks,
   // a materialized truth set, persisted index builds) is built once per
@@ -147,13 +174,23 @@ object SparkEntry {
         eager = true)
     }
 
-  /** q_pagerank's purchase network: customer→supplier edges (src, dst)
-    * from orders⋈lineitem, node ids custkey·2 / suppkey·2+1.
+  /** The purchase network of q_pagerank, q_bfs_hops and q_components:
+    * customer→supplier edges (src, dst) from orders⋈lineitem, node ids
+    * custkey·2 / suppkey·2+1 — LONGS through the whole iteration (the
+    * distinct/joins shuffle 8-byte keys, not strings; measured ~40%
+    * cheaper on the edge build), rendered by [[purchaseNode]] only at the
+    * output boundary. `orderFilter` restricts the orders side.
     */
-  private[graft] def purchaseEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
+  private[graft] def purchaseEdges(s: SparkSession, dir: String,
+                                   orderFilter: Column = lit(true)): DataFrame =
+    Tables.orders(s, dir).where(orderFilter)
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+
+  /** A purchase-network node id rendered as 'c<custkey>' / 's<suppkey>'. */
+  private def purchaseNode(id: Column): Column =
+    when(id % 2 === 0, concat(lit("c"), shiftright(id, 1)))
+      .otherwise(concat(lit("s"), shiftright(id, 1)))
 
   // Persisted ANN indexes live under the session-scoped scratch root: the
   // applicationId in the path means concurrent runs (Bench + Verify on the
@@ -348,21 +385,17 @@ object SparkEntry {
     "q_gap_off_peak" -> ((s, dir) =>
       bars(s, dir).select(
         col("user_id"), col("d"), col("open"),
-        round((col("open") - lag(col("open"), 1).over(entityDay))
-          / nullif(lag(col("open"), 1).over(entityDay), lit(0.0)) * 100, 6).as("gap_pct"))),
+        round(Fns.gapOffPeak(col("open"), entityDay), 6).as("gap_pct"))),
 
     "q_gap_on_peak" -> ((s, dir) =>
       bars(s, dir).select(
         col("user_id"), col("d"),
-        round((col("close") - col("open")) / nullif(col("open"), lit(0.0)) * 100, 6)
-          .as("gap_pct"))),
+        round(Fns.gapOnPeak(col("open"), col("close")), 6).as("gap_pct"))),
 
-    "q_pct_change_ndays" -> ((s, dir) => {
-      val firstC = first(col("close")).over(entityDay.rowsBetween(-4, Window.currentRow))
+    "q_pct_change_ndays" -> ((s, dir) =>
       bars(s, dir).select(
         col("user_id"), col("d"), col("close"),
-        round((col("close") - firstC) / nullif(firstC, lit(0.0)) * 100, 6).as("pct_change"))
-    }),
+        round(Fns.pctChangeFromFirst(col("close"), 5, entityDay), 6).as("pct_change"))),
 
     "q_drawdown" -> ((s, dir) => {
       val runMax = max(col("close"))
@@ -423,24 +456,14 @@ object SparkEntry {
       // engine-specific float accumulation. The day-aligned self-join is
       // broadcast — N series of daily bars is model-sized by design.
       val b = bars(s, dir)
-      val top = b.groupBy(col("user_id")).agg(count(lit(1)).as("__n"))
-        .orderBy(col("__n").desc, col("user_id")).limit(10).select("user_id")
-      val tb = b.join(broadcast(top), Seq("user_id")).select("user_id", "d", "close")
+      val tb = b.join(broadcast(topActive(b)), Seq("user_id")).select("user_id", "d", "close")
       val pairs = tb.select(col("user_id").as("u1"), col("d"), col("close").as("x"))
         .join(broadcast(tb.select(col("user_id").as("u2"), col("d"), col("close").as("y"))),
           Seq("d"))
         .where(col("u1") < col("u2"))
-      pairs.groupBy(col("u1"), col("u2"))
-        .agg(exactSumD(col("x")).as("s1"), exactSumD(col("y")).as("s2"),
-          exactSumD(col("x") * col("x")).as("sxx"),
-          exactSumD(col("y") * col("y")).as("syy"),
-          exactSumD(col("x") * col("y")).as("sxy"),
-          count(lit(1)).cast("double").as("n"))
-        .select(col("u1"), col("u2"),
-          round((col("n") * col("sxy") - col("s1") * col("s2")) /
-            nullif(sqrt(col("n") * col("sxx") - col("s1") * col("s1")) *
-              sqrt(col("n") * col("syy") - col("s2") * col("s2")), lit(0.0)), 6)
-            .as("corr_close"))
+      val m = pearsonMoments(col("x"), col("y"), exactSumD)
+      pairs.groupBy(col("u1"), col("u2")).agg(m.head, m.tail: _*)
+        .select(col("u1"), col("u2"), pearson().as("corr_close"))
     }),
 
     "q_vwap" -> ((s, dir) =>
@@ -459,9 +482,7 @@ object SparkEntry {
       // q_corr_pairs recipe with ONE extra lag window; pair space stays
       // N²·days with N ranked top-10, decimal-exact moments.
       val b = bars(s, dir)
-      val top = b.groupBy(col("user_id")).agg(count(lit(1)).as("__n"))
-        .orderBy(col("__n").desc, col("user_id")).limit(10).select("user_id")
-      val ret = b.join(broadcast(top), Seq("user_id"))
+      val ret = b.join(broadcast(topActive(b)), Seq("user_id"))
         .select(col("user_id"), col("d"),
           dailyReturn
             .as("r"))
@@ -473,17 +494,9 @@ object SparkEntry {
       val pairs = ret.select(col("user_id").as("u1"), col("d"), col("r").as("ra"))
         .join(broadcast(lagged), Seq("d"))
         .where(col("u1") =!= col("u2"))
-      pairs.groupBy(col("u1"), col("u2"))
-        .agg(exactSumD12(col("ra")).as("s1"), exactSumD12(col("rb")).as("s2"),
-          exactSumD12(col("ra") * col("ra")).as("sxx"),
-          exactSumD12(col("rb") * col("rb")).as("syy"),
-          exactSumD12(col("ra") * col("rb")).as("sxy"),
-          count(lit(1)).cast("double").as("n"))
-        .select(col("u1"), col("u2"),
-          round((col("n") * col("sxy") - col("s1") * col("s2")) /
-            nullif(sqrt(col("n") * col("sxx") - col("s1") * col("s1")) *
-              sqrt(col("n") * col("syy") - col("s2") * col("s2")), lit(0.0)), 6)
-            .as("leadlag_corr"))
+      val m = pearsonMoments(col("ra"), col("rb"), exactSumD12)
+      pairs.groupBy(col("u1"), col("u2")).agg(m.head, m.tail: _*)
+        .select(col("u1"), col("u2"), pearson().as("leadlag_corr"))
     }),
 
     "q_beta" -> ((s, dir) => {
@@ -523,17 +536,9 @@ object SparkEntry {
       val pairs = ret
         .select(col("user_id"), col("r"), lag(col("r"), 1).over(entityDay).as("rp"))
         .where(col("r").isNotNull && col("rp").isNotNull)
-      pairs.groupBy(col("user_id"))
-        .agg(exactSumD12(col("r")).as("s1"), exactSumD12(col("rp")).as("s2"),
-          exactSumD12(col("r") * col("r")).as("sxx"),
-          exactSumD12(col("rp") * col("rp")).as("syy"),
-          exactSumD12(col("r") * col("rp")).as("sxy"),
-          count(lit(1)).cast("double").as("n"))
-        .select(col("user_id"), col("n").cast("long").as("n_pairs"),
-          round((col("n") * col("sxy") - col("s1") * col("s2")) /
-            nullif(sqrt(col("n") * col("sxx") - col("s1") * col("s1")) *
-              sqrt(col("n") * col("syy") - col("s2") * col("s2")), lit(0.0)), 6)
-            .as("ac1"))
+      val m = pearsonMoments(col("r"), col("rp"), exactSumD12)
+      pairs.groupBy(col("user_id")).agg(m.head, m.tail: _*)
+        .select(col("user_id"), col("n").cast("long").as("n_pairs"), pearson().as("ac1"))
     }),
 
     "q_rolling_corr" -> ((s, dir) => {
@@ -560,10 +565,7 @@ object SparkEntry {
           count(lit(1)).over(f).cast("double").as("n"))
         .select(col("user_id"), col("d"),
           when(col("n") >= 10,
-            round((col("n") * col("srm") - col("sr") * col("sm")) /
-              nullif(sqrt(col("n") * col("srr") - col("sr") * col("sr")) *
-                sqrt(col("n") * col("smm") - col("sm") * col("sm")), lit(0.0)), 6)
-              + lit(0.0))
+            pearson(sx = "sr", sy = "sm", sxx = "srr", syy = "smm", sxy = "srm") + lit(0.0))
             .as("roll_corr"))
     }),
 
@@ -1586,16 +1588,10 @@ object SparkEntry {
     "q_pagerank" -> ((s, dir) => {
       // purchase-network centrality: customer→supplier edges from
       // orders⋈lineitem, 5 damped synchronous iterations (d = 0.85) with
-      // uniform dangling-mass redistribution; top-25 by rounded rank.
-      // Node ids are LONGS (custkey·2 / suppkey·2+1) through the whole
-      // iteration — the distinct/joins shuffle 8-byte keys, not strings
-      // (measured ~40% cheaper on the edge build) — and render to
-      // 'c<key>'/'s<key>' only at the 25-row output boundary.
+      // uniform dangling-mass redistribution; top-25 by rounded rank,
+      // rendered to 'c<key>'/'s<key>' only at the 25-row output boundary.
       Graph.pagerank(purchaseEdges(s, dir), iters = 5, damping = 0.85)
-        .select(
-          when(col("node") % 2 === 0, concat(lit("c"), shiftright(col("node"), 1)))
-            .otherwise(concat(lit("s"), shiftright(col("node"), 1))).as("node"),
-          round(col("rank"), 6).as("rank"))
+        .select(purchaseNode(col("node")).as("node"), round(col("rank"), 6).as("rank"))
         .orderBy(col("rank").desc, col("node"))
         .limit(25)
     }),
@@ -1828,12 +1824,7 @@ object SparkEntry {
       // graph: 6 rounds of min-distance propagation, same co-partitioned
       // BSP shape as q_components; sentinel (not NULL) for unreached so
       // the propagation is pure integer arithmetic cross-engine
-      val edges = Tables.orders(s, dir)
-        .join(Tables.lineitem(s, dir),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      Graph.shortestHops(edges, source = 2L, iters = 6)
+      Graph.shortestHops(purchaseEdges(s, dir), source = 2L, iters = 6)
         .where(col("hop") < Graph.Unreached)
         .groupBy(col("hop"))
         .agg(count(lit(1)).as("n_nodes"))
@@ -1967,19 +1958,11 @@ object SparkEntry {
       // construction), 10 rounds of min-label propagation (resolves
       // diameter ≤ 10 — at 5 this graph was measurably unconverged: the
       // label count depended on the id ordering); 25 largest components
-      val edges = Tables.orders(s, dir)
-        .where(col("o_totalprice") > 495000)
-        .join(Tables.lineitem(s, dir),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      Graph.connectedComponents(edges, iters = 10)
+      Graph.connectedComponents(
+        purchaseEdges(s, dir, col("o_totalprice") > 495000), iters = 10)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_nodes"))
-        .select(
-          when(col("label") % 2 === 0, concat(lit("c"), shiftright(col("label"), 1)))
-            .otherwise(concat(lit("s"), shiftright(col("label"), 1))).as("component"),
-          col("n_nodes"))
+        .select(purchaseNode(col("label")).as("component"), col("n_nodes"))
         .orderBy(col("n_nodes").desc, col("component"))
         .limit(25)
     }),
@@ -3095,18 +3078,6 @@ object SparkEntry {
          |FROM r$iters ORDER BY rank DESC, node LIMIT 25""".stripMargin
   }
 
-  /** q_components' oracle — `iters` min-label-propagation rounds unrolled
-    * as chained CTEs, mirroring Graph.connectedComponents round-for-round.
-    * Labels are the long node ids under min, rendered to 'c<k>'/'s<k>'
-    * only at the output; equality is structural by construction. CTEs
-    * MATERIALIZED for the same exponential-inlining reason as
-    * [[pagerankOracleSql]] (2^iters base re-evaluations otherwise).
-    */
-  /** q_bfs_hops' oracle — `iters` min-distance-propagation rounds unrolled
-    * as MATERIALIZED chained CTEs (same exponential-inlining hazard as
-    * [[componentsOracleSql]]); the 999999 sentinel mirrors
-    * Graph.Unreached so no NULL semantics are involved anywhere.
-    */
   /** The dataset-card oracle, shared VERBATIM by q_dataset_card (one
     * keyed aggregate) and q_card_stream (the foreachBatch maintenance
     * face incl. a replayed batch): identical rows by construction.
@@ -3133,6 +3104,11 @@ object SparkEntry {
       |  SELECT DISTINCT a.c AS src, b.c AS dst
       |  FROM cells a JOIN cells b ON a.p = b.p AND a.m = b.m AND a.c < b.c)""".stripMargin
 
+  /** q_bfs_hops' oracle — `iters` min-distance-propagation rounds unrolled
+    * as MATERIALIZED chained CTEs (same exponential-inlining hazard as
+    * [[componentsOracleSql]]); the 999999 sentinel mirrors
+    * Graph.Unreached so no NULL semantics are involved anywhere.
+    */
   private def bfsOracleSql(source: Long, iters: Int): String = {
     val head =
       s"""WITH h AS MATERIALIZED (
@@ -3156,6 +3132,13 @@ object SparkEntry {
          |WHERE hop < 999999 GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
+  /** q_components' oracle — `iters` min-label-propagation rounds unrolled
+    * as chained CTEs, mirroring Graph.connectedComponents round-for-round.
+    * Labels are the long node ids under min, rendered to 'c<k>'/'s<k>'
+    * only at the output; equality is structural by construction. CTEs
+    * MATERIALIZED for the same exponential-inlining reason as
+    * [[pagerankOracleSql]] (2^iters base re-evaluations otherwise).
+    */
   private def componentsOracleSql(iters: Int): String = {
     val head =
       """WITH h AS MATERIALIZED (

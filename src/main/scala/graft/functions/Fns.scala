@@ -58,23 +58,27 @@ object Fns {
     (open + close) / lit(2) * volume
 
   /** Off-peak gap %: (open − lag(open))/lag(open) × 100.
-    * load_yfinance_data.py:154-158 (the reference shifts `Open`).
+    * load_yfinance_data.py:154-158 (the reference shifts `Open`). Every
+    * ratio here divides by `nullif(divisor, 0)`: a zero divisor yields
+    * NULL (pandas' inf/NaN has no SQL value), and under ANSI mode — Spark
+    * 4's default — an unguarded zero divisor raises DIVIDE_BY_ZERO. The
+    * operation order is the oracle's: difference ÷ divisor, then × 100.
     */
   def gapOffPeak(open: Column, w: WindowSpec): Column = {
     val prev = lag(open, 1).over(w)
-    (open - prev) / prev * lit(100)
+    (open - prev) / nullif(prev, lit(0.0)) * 100
   }
 
   /** On-peak gap %: (close − open)/open × 100 — load_yfinance_data.py:160-164. */
   def gapOnPeak(open: Column, close: Column): Column =
-    (close - open) / open * lit(100)
+    (close - open) / nullif(open, lit(0.0)) * 100
 
   /** % change vs the first value inside the trailing `n`-row window —
     * sectors.py:168-180 (n-day relative price movement).
     */
   def pctChangeFromFirst(value: Column, n: Int, w: WindowSpec): Column = {
     val start = first(value).over(w.rowsBetween(-(n - 1), Window.currentRow))
-    (value - start) * lit(100) / start
+    (value - start) / nullif(start, lit(0.0)) * 100
   }
 
   /** "12.3 M" / "1.2 B" → long shares — sectors.py:124-135 (the reference

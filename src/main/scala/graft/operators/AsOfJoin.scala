@@ -142,17 +142,6 @@ object AsOfJoin {
       .drop("__v", "__t")
   }
 
-  /** Broadcast as-of: when the right side is dimension-sized (the
-    * reference's share snapshots — thousands of rows), the union+window
-    * path still shuffles the FACT table on the key. Here the dim packs
-    * into one sorted (t, v) timeline array per key, broadcasts, and each
-    * fact row binary-searches its at-or-before value map-side
-    * (SortedAsOfLookup) — the fact side is never shuffled or sorted at
-    * all. Timestamps compare as unix micros (NTZ interpreted in the
-    * session zone on both sides, so ordering is preserved); `valueCol`
-    * must be numeric (cast to double). Ties on t resolve to the largest
-    * value, matching sort_array's struct ordering.
-    */
   /** Size-adaptive as-of — the skew-bounded entry point. The union+window
     * shape shuffles BOTH sides once by key, and AQE cannot help a skewed
     * window the way it helps a skewed join: skew handling splits join
@@ -189,6 +178,17 @@ object AsOfJoin {
         key, tsCol, Seq(outCol))
   }
 
+  /** Broadcast as-of: when the right side is dimension-sized (the
+    * reference's share snapshots — thousands of rows), the union+window
+    * path still shuffles the FACT table on the key. Here the dim packs
+    * into one sorted (t, v) timeline array per key, broadcasts, and each
+    * fact row binary-searches its at-or-before value map-side
+    * (SortedAsOfLookup) — the fact side is never shuffled or sorted at
+    * all. Timestamps compare as unix micros (NTZ interpreted in the
+    * session zone on both sides, so ordering is preserved); `valueCol`
+    * must be numeric (cast to double). Ties on t resolve to the largest
+    * value, matching sort_array's struct ordering.
+    */
   def asOfBroadcast(
       facts: DataFrame,
       dims: DataFrame,

@@ -144,12 +144,8 @@ object Dedup {
     // side is the caller's frame: at scale it is a PERSISTED signature
     // store (a parquet read), where the cache is one linear scan pinned
     // instead of three.
-    val target = batch.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val spread =
-      if (batch.rdd.getNumPartitions >= target) batch else batch.repartition(target)
-    val batchGrams = Graft.materialize(spread
-      .select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-      .select(col("gid"), ngramsOfTokens("__toks", 3).as("grams")), eager = false)
+    val batchGrams = Graft.materialize(
+      wordGrams(Graft.spread(batch), 3, textCol, idCol), eager = false)
     val batchSigs = Graft.materialize(batchGrams.select(col("gid").as("id"),
       minhashSignature("grams", numHashes).as("__sig")), eager = false)
     val storeCached = Graft.materialize(storeSigs, eager = false)
@@ -247,6 +243,18 @@ object Dedup {
   def ngramsOfTokens(toksCol: String, n: Int): Column =
     graft.plans.Exprs.wordNgrams(col(toksCol), n)
 
+  /** The word n-gram table of a corpus, (gid, grams): whitespace tokens
+    * ([[tokens]]) → one compiled n-gram pass per row. `rows = true`
+    * explodes it to one (gid, gram) row per n-gram instead of one set per
+    * document.
+    */
+  private[graft] def wordGrams(docs: DataFrame, n: Int, textCol: String, idCol: String,
+                              rows: Boolean = false): DataFrame = {
+    val grams = ngramsOfTokens("__toks", n)
+    docs.select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
+      .select(col("gid"), (if (rows) explode(grams) else grams).as("grams"))
+  }
+
   /** MinHash signature: `num` permutations — one compiled pass per row via
     * graft.plans.MinHashSignature (each shingle hashed once, permutations
     * are long-mixes; no per-element lambda interpretation).
@@ -273,18 +281,10 @@ object Dedup {
       idCol: String = "doc_id",
       numHashes: Int = 64): DataFrame = {
     // a small corpus often arrives as one parquet file = one partition;
-    // spread it so the O(shingles × hashes) signature work uses every core.
-    // GATED on the input actually being under-partitioned: a 100 TB table
-    // already has more splits than cores, and an unconditional repartition
-    // would ship the whole text corpus through an exchange for nothing.
-    val target = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val spread =
-      if (docs.rdd.getNumPartitions >= target) docs else docs.repartition(target)
-    spread
-      .select(col(idCol).as("id"), tokens(textCol).as("__toks"))
-      .select(col("id"), ngramsOfTokens("__toks", 3).as("__sh"))
-      .withColumn("__sig", minhashSignature("__sh", numHashes))
-      .select(col("id"), col("__sig"))
+    // spread it so the O(shingles × hashes) signature work uses every core
+    // (gated: a 100 TB table already has more splits than cores)
+    wordGrams(Graft.spread(docs), 3, textCol, idCol)
+      .select(col("gid").as("id"), minhashSignature("grams", numHashes).as("__sig"))
   }
 
   /** Distinct candidate pairs (id_a < id_b) from banded signatures. The
@@ -410,20 +410,14 @@ object Dedup {
     // grams (minhashSignatures computes the identical word-3-gram array
     // before hashing), so the corpus-sized compiled kernels run once
     // instead of once per consumer. Lazy checkpoint: no barrier job, the
-    // first consumer materializes it. The spread gate (see
-    // minhashSignatures) keeps a single-split corpus from serializing the
-    // kernel on one core; at scale the scan has splits and it's a no-op.
-    // A caller that already holds the (gid, grams) table (the incremental
-    // pipeline, which also derives its signatures from it) passes it in
-    // via `gramTable` and the pass is skipped entirely.
-    val grams = gramTable.getOrElse {
-      val target = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val spread =
-        if (docs.rdd.getNumPartitions >= target) docs else docs.repartition(target)
-      Graft.materialize(spread
-        .select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-        .select(col("gid"), ngramsOfTokens("__toks", 3).as("grams")), eager = false)
-    }
+    // first consumer materializes it. The spread gate (Graft.spread) keeps
+    // a single-split corpus from serializing the kernel on one core; at
+    // scale the scan has splits and it's a no-op. A caller that already
+    // holds the (gid, grams) table (the incremental pipeline, which also
+    // derives its signatures from it) passes it in via `gramTable` and the
+    // pass is skipped entirely.
+    val grams = gramTable.getOrElse(Graft.materialize(
+      wordGrams(Graft.spread(docs), 3, textCol, idCol), eager = false))
     val cands = candidates.getOrElse(
       lshCandidatePairs(sigs.getOrElse(
         grams.select(col("gid").as("id"), minhashSignature("grams", numHashes).as("__sig"))),
@@ -478,14 +472,6 @@ object Dedup {
     }.getOrElse(componentRounds(pairs, maxIter))
 
   private def componentRounds(pairs: DataFrame, maxIter: Int): DataFrame = {
-    // labels only ever DECREASE (min-propagation), so the frontier is at a
-    // fixpoint iff the label sum is unchanged — one cheap aggregate over the
-    // just-checkpointed frontier instead of a join-and-count against the
-    // previous one. decimal(38,0): exact at any id range / node count.
-    def labelSum(lab: DataFrame): java.math.BigDecimal = {
-      val r = lab.agg(sum(col("component").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
     // the pair list is consumed every iteration (and its lineage is usually
     // an expensive candidate pipeline — shingle/minhash/LSH or a pair join)
     // — materialize it once before anything else. LAZY: the eager edge
@@ -500,19 +486,23 @@ object Dedup {
     // long before recompute does; lineage stays bounded because the round's
     // output is checkpointed).
     //
-    // LAZY round frames: labelSum's aggregate is the action that
+    // LAZY round frames: the label-sum aggregate is the action that
     // materializes each round's checkpoint — one job per round instead of
     // an eager-checkpoint job plus the aggregate. The superseded frontier
-    // is unpersisted only AFTER labelSum has forced the new round's blocks
-    // into existence (a lazy checkpoint that loses its input's blocks
-    // before materializing cannot recompute — lineage is truncated).
+    // is unpersisted only AFTER the label sum has forced the new round's
+    // blocks into existence (a lazy checkpoint that loses its input's
+    // blocks before materializing cannot recompute — lineage is
+    // truncated). Labels only ever DECREASE (min-propagation), so the
+    // frontier is at a fixpoint iff the label sum is unchanged
+    // ([[Graph.labelSum]]) — one cheap aggregate over the just-checkpointed
+    // frontier instead of a join-and-count against the previous one.
     var labels = Graft.materialize(ccFirstRound(edges), eager = false)
-    var prevSum = labelSum(labels)
+    var prevSum = Graph.labelSum(labels, "component")
     var iter = 1
     var converged = false
     while (!converged && iter < maxIter) {
       val next = Graft.materialize(ccRound(edges, labels), eager = false)
-      val s = labelSum(next) // materializes `next`
+      val s = Graph.labelSum(next, "component") // materializes `next`
       // next's blocks exist now — the superseded frontier's can go.
       // Dataset.unpersist is a silent no-op for checkpoint-backed frames;
       // release through the RDD handle
@@ -665,12 +655,7 @@ object Dedup {
     val spark = pairs.sparkSession
     import spark.implicits._
     val idType = pairs.schema("id_a").dataType
-    val integral = idType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    require(integral,
+    require(LocalGraph.integral(idType),
       s"spanningForest folds ids through a primitive union-find — integral ids only, " +
         s"got ${idType.catalogString} (hash or dictionary-encode upstream)")
     pairs
@@ -792,13 +777,11 @@ object Dedup {
     */
   def contaminatedIds(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    def grams(df: DataFrame) = df
-      .select(col(idCol).as("__gid"), tokens(textCol).as("__toks"))
-      .select(col("__gid"), explode(ngramsOfTokens("__toks", n)).as("g"))
-    val benchGrams = grams(benchmark).select(col("g")).distinct()
-    grams(corpus)
-      .join(broadcast(benchGrams), "g")
-      .select(col("__gid").as(idCol)).distinct()
+    val benchGrams = wordGrams(benchmark, n, textCol, idCol, rows = true)
+      .select(col("grams")).distinct()
+    wordGrams(corpus, n, textCol, idCol, rows = true)
+      .join(broadcast(benchGrams), "grams")
+      .select(col("gid").as(idCol)).distinct()
   }
 
   /** Eval-integrity leak report — the INVERSE direction of
@@ -815,13 +798,11 @@ object Dedup {
     */
   def contaminationReport(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
                           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    def grams(df: DataFrame) = df
-      .select(col(idCol).as("__gid"), tokens(textCol).as("__toks"))
-      .select(col("__gid"), explode(ngramsOfTokens("__toks", n)).as("g"))
-    val bg = grams(benchmark).select(col("__gid").as("__bid"), col("g")).distinct()
-    val pairs = grams(corpus)
-      .join(broadcast(bg), "g")
-      .select(col("__bid"), col("__gid").as("__cid")).distinct()
+    val bg = wordGrams(benchmark, n, textCol, idCol, rows = true)
+      .select(col("gid").as("__bid"), col("grams")).distinct()
+    val pairs = wordGrams(corpus, n, textCol, idCol, rows = true)
+      .join(broadcast(bg), "grams")
+      .select(col("__bid"), col("gid").as("__cid")).distinct()
     val counts = pairs.groupBy(col("__bid").as("bench_id"))
       .agg(count(lit(1)).as("n_leaked_docs"))
     benchmark.select(col(idCol).as("bench_id"))
@@ -845,22 +826,19 @@ object Dedup {
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
                          expectedGrams: Long = 1000 * 1000, numBits: Long = 8L * 1000 * 1000,
                          textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    def grams(df: DataFrame) = df
-      .select(col(idCol).as("__gid"), tokens(textCol).as("__toks"))
-      .select(col("__gid"), explode(ngramsOfTokens("__toks", n)).as("g"))
-    val benchGrams = grams(benchmark).select(col("g")).distinct()
+    val benchGrams = wordGrams(benchmark, n, textCol, idCol, rows = true)
+      .select(col("grams")).distinct()
     // the sketch is MODEL-sized (numBits/8 bytes regardless of gram count)
     // and might_contain requires a constant filter — driver-resident like
     // every codebook, shipped once inside the plan
     val bloomBytes = benchGrams
-      .agg(graft.plans.Exprs.bloomAgg(xxhash64(col("g")), expectedGrams, numBits).as("__bf"))
+      .agg(graft.plans.Exprs.bloomAgg(xxhash64(col("grams")), expectedGrams, numBits).as("__bf"))
       .head().getAs[Array[Byte]](0)
-    val candidates = grams(corpus)
-      .where(graft.plans.Exprs.bloomMightContain(lit(bloomBytes), xxhash64(col("g"))))
-      .select(col("__gid"), col("g"))
+    val candidates = wordGrams(corpus, n, textCol, idCol, rows = true)
+      .where(graft.plans.Exprs.bloomMightContain(lit(bloomBytes), xxhash64(col("grams"))))
     val contaminated = candidates
-      .join(benchGrams, "g")
-      .select(col("__gid").as(idCol)).distinct()
+      .join(benchGrams, "grams")
+      .select(col("gid").as(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
@@ -1032,10 +1010,8 @@ object Dedup {
     // their lineage re-tokenizes the corpus — materialize once. LAZY: the
     // postings explode is the first consumer and pays the tokenize pass
     // inside its own job; no separate barrier job.
-    val g = Graft.materialize(docs
-      .select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-      .select(col("gid"), ngramsOfTokens("__toks", n).as("gs")), eager = false)
-    val post = g.select(col("gid"), explode(col("gs")).as("g"))
+    val g = Graft.materialize(wordGrams(docs, n, textCol, idCol), eager = false)
+    val post = g.select(col("gid"), explode(col("grams")).as("g"))
     val rare = post.groupBy(col("g")).agg(count(lit(1)).as("__df"))
       .where(col("__df") >= 2 && col("__df") <= maxDf)
       .select("g")
@@ -1046,8 +1022,8 @@ object Dedup {
       .select(col("a.gid").as("id_a"), col("b.gid").as("id_b"))
       .distinct()
     candPairs
-      .join(g.select(col("gid").as("id_a"), col("gs").as("gs_a")), "id_a")
-      .join(g.select(col("gid").as("id_b"), col("gs").as("gs_b")), "id_b")
+      .join(g.select(col("gid").as("id_a"), col("grams").as("gs_a")), "id_a")
+      .join(g.select(col("gid").as("id_b"), col("grams").as("gs_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         round(size(array_intersect(col("gs_a"), col("gs_b"))).cast("double") /
           least(size(col("gs_a")), size(col("gs_b"))).cast("double"), 6)

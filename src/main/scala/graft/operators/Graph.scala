@@ -213,19 +213,42 @@ object Graph {
       LocalGraph.frame(edges.sparkSession, g, "node", "hop", LongType)(hop(_))
     }.getOrElse(hopsLoop(edges, source, iters, srcCol, dstCol))
 
-  private def hopsLoop(edges: DataFrame, source: Long, iters: Int,
-                       srcCol: String, dstCol: String): DataFrame = {
+  /** The undirected loops' one-time setup ([[shortestHops]],
+    * [[connectedComponents]]): the symmetrized, deduplicated edge list
+    * `und` (src, dst), its nodes (node) and the node count `n`, which
+    * gates the loops' broadcast hints (every per-round frame is ≤ |V|).
+    */
+  private final case class Undirected(und: DataFrame, nodes: DataFrame, n: Long)
+
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): Undirected = {
     val half = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // repartition before distinct (see pagerank): the symmetrized list is
     // deduped on the same hash(src) exchange that lays it out for the
-    // per-round frontier joins — one 2|E|-sized shuffle, not two
+    // per-round joins — one 2|E|-sized shuffle, not two; the node
+    // derivation below then needs NO exchange at all (hash(src) already
+    // clusters src, and symmetrization puts every endpoint in src)
     val und = Graft.materialize(half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src")).dropDuplicates(), eager = false)
     val nodes = Graft.materialize(und.select(col("src").as("node")).distinct(), eager = false)
-    // |V| gates the broadcast hints below (frontier and reached are both
-    // ≤ |V|); the count reads the checkpoint the loop touches anyway
-    val n = nodes.count()
+    // the count reads the checkpoint the loop touches anyway
+    Undirected(und, nodes, nodes.count())
+  }
+
+  /** The exact label-sum fixpoint probe of the min-label loops: labels
+    * only ever DECREASE under min-propagation, so for integral ids an
+    * exact decimal(38,0) sum of `labelCol` (exact at any id range and node
+    * count) is unchanged iff NO label changed. One cheap aggregate over a
+    * just-checkpointed frame — and the action that materializes it.
+    */
+  private[operators] def labelSum(lab: DataFrame, labelCol: String): java.math.BigDecimal = {
+    val r = lab.agg(sum(col(labelCol).cast("decimal(38,0)"))).head()
+    if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
+  }
+
+  private def hopsLoop(edges: DataFrame, source: Long, iters: Int,
+                       srcCol: String, dstCol: String): DataFrame = {
+    val Undirected(und, nodes, n) = undirected(edges, srcCol, dstCol)
     var reached = Graft.materialize(nodes.where(col("node") === source)
       .select(col("node"), lit(0L).as("hop")), eager = false)
     var frontier = reached
@@ -284,38 +307,15 @@ object Graph {
 
   private def labelLoop(edges: DataFrame, iters: Int,
                         srcCol: String, dstCol: String): DataFrame = {
-    val half = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // repartition before distinct (see pagerank): dedup rides the layout
-    // exchange — one 2|E|-sized shuffle in the setup, not two; the node
-    // derivation below then needs NO exchange at all (hash(src) already
-    // clusters src)
-    val und = Graft.materialize(half
-      .union(half.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).dropDuplicates(), eager = false)
-    // symmetrization puts every endpoint in src
-    val nodes = Graft.materialize(und.select(col("src").as("node")).distinct(), eager = false)
-    // EARLY EXIT at the label fixpoint: labels only ever DECREASE under
-    // min-propagation, so for integral ids an exact decimal label sum is
-    // unchanged iff NO label changed — once stable, every further round
+    val Undirected(und, nodes, n) = undirected(edges, srcCol, dstCol)
+    // EARLY EXIT at the label fixpoint ([[labelSum]], the same test
+    // Dedup.connectedComponents uses): once stable, every further round
     // is a no-op and the output is already the `iters`-round answer
-    // (stable ⇒ identical for any larger round count). One cheap
-    // aggregate per round over the just-checkpointed frame, the same
-    // test Dedup.connectedComponents uses. Non-integral ids (string
-    // labels don't sum) run the fixed round count unchanged.
-    val integralIds = nodes.schema("node").dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    def labelSum(lab: DataFrame): java.math.BigDecimal = {
-      val r = lab.agg(sum(col("label").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-    // |V| gates the broadcast hints below (label and neighbor-min frames
-    // are both |V|-sized); the count reads the checkpointed node frame
-    val n = nodes.count()
+    // (stable ⇒ identical for any larger round count). Non-integral ids
+    // (string labels don't sum) run the fixed round count unchanged.
+    val integralIds = LocalGraph.integral(nodes.schema("node").dataType)
     var label = nodes.withColumn("label", col("node"))
-    var prevSum = if (integralIds) labelSum(label) else null
+    var prevSum = if (integralIds) labelSum(label, "label") else null
     var iter = 0
     var converged = false
     // label frames carry the broadcast hint when |V| fits the budget (see
@@ -333,7 +333,7 @@ object Graph {
           least(col("label"), coalesce(col("__nmin"), col("label"))).as("label")),
         eager = false)
       if (integralIds) {
-        val s = labelSum(label)
+        val s = labelSum(label, "label")
         converged = s.compareTo(prevSum) == 0
         prevSum = s
       }

@@ -38,7 +38,10 @@ private[graft] object LocalGraph {
     */
   val MaxEdges: Long = 1000L * 1000L
 
-  private def integral(t: DataType): Boolean = t match {
+  /** The id types every graph kernel takes: the integral types, which a
+    * long holds exactly (and a decimal label sum adds exactly).
+    */
+  def integral(t: DataType): Boolean = t match {
     case LongType | IntegerType | ShortType | ByteType => true
     case _ => false
   }
@@ -68,7 +71,19 @@ private[graft] object LocalGraph {
     // the one collect a gated key runs while its plan is built — it stands
     // in for every BSP round's jobs; capped at cap + 1 rows (never a count
     // followed by a collect), so an over-cap input sends at most that many
-    // rows to the driver
+    // rows to the driver. It plans as CollectLimitExec, whose executeTake
+    // reads ONE partition in a first job and, while fewer than cap + 1 rows
+    // have arrived, the next partitions in further jobs (4× as many each
+    // time, spark.sql.limit.scaleUpFactor): an under-cap graph is read in
+    // one job from a single-partition input, two from 2-5 partitions,
+    // three from 6-25. Neither one-job form is taken:
+    //   - limit(cap + 1) followed by a single-partition exchange runs one
+    //     job, but every input partition writes up to cap + 1 rows to
+    //     shuffle first, so an over-cap graph (the 100× rung) ships up to
+    //     its whole edge list through the exchange before the gate says no;
+    //   - raising spark.sql.limit.initialNumPartitions reads every
+    //     partition in the first job, but it is a session conf: setting it
+    //     here mutates the caller's shared session for every other query.
     val rows = pair.select(col(srcCol).cast(LongType), col(dstCol).cast(LongType))
       .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
     if (rows.length > cap || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None

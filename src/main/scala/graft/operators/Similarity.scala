@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Graft
 import graft.functions.Fns.dotExact
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -21,18 +22,6 @@ object Similarity {
   def normExact(c: String): Column =
     sqrt(dotExact(c, c))
 
-  /** Spread a small scan across the session's parallelism: a corpus that
-    * fits in one file arrives as ONE scan split, and every per-row kernel
-    * downstream (screen dots, decimal refines) serializes on one core. At
-    * cluster scale the scan already carries ≥ shuffle.partitions splits
-    * and this is a no-op — the gate keeps it from ever adding an exchange
-    * to a well-partitioned table.
-    */
-  private def spreadSmallScan(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
   /** All pairs (a < b) with cosine > threshold — brute force, for corpora
     * small enough to broadcast one side (the verification baseline).
     *
@@ -45,14 +34,9 @@ object Similarity {
   def cosinePairs(embeddings: DataFrame, threshold: Double,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // spread the streamed side: a single-file corpus would otherwise run
-    // the O(n²) pair loop on one core. Gated — an already-well-partitioned
-    // table skips the exchange (brute force is the small-side baseline, but
-    // the guard costs nothing)
-    val target = embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val spread =
-      if (embeddings.rdd.getNumPartitions >= target) embeddings
-      else embeddings.repartition(target)
-    val n = spread.select(col(idCol).as("id"), col(vecCol).as("v"), normExact(vecCol).as("nrm"))
+    // the O(n²) pair loop on one core
+    val n = Graft.spread(embeddings)
+      .select(col(idCol).as("id"), col(vecCol).as("v"), normExact(vecCol).as("nrm"))
     val a = n.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = n.select(col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
@@ -80,45 +64,49 @@ object Similarity {
       .limit(k)
   }
 
-  /** Exact cosine-threshold pair join, grid-blocked — the 100 TB shape for
-    * the oracle-exact semantics (every pair with cosine > τ, no recall
-    * loss). An exact all-pairs threshold join is intrinsically O(n²)
-    * compute; what this operator fixes is the *distribution* and the
-    * *bandwidth* of that quadratic:
-    *
-    *   - rows are hashed into `blocks` blocks and replicated to grid cells
-    *     (i ≤ j), a theta-join on an equi key (Okcan & Riedewald, SIGMOD'11)
-    *     — every cell is an independent |Bᵢ|×|Bⱼ| task, so the pair loop
-    *     parallelizes evenly across the cluster with NO broadcast of either
-    *     side and no BroadcastNestedLoopJoin;
-    *   - the replicated payload is int8 quantization codes (4× smaller than
-    *     float vectors), screened by a codegen'd integer dot product plus a
-    *     per-pair quantization error BOUND (|Σqa·qb·sa·sb − a·b| ≤
-    *     sa·sb·(½Σ|qa| + ½Σ|qb| + d/4), from |x − s·q| ≤ s/2), so the
-    *     screen can never drop a true pair — recall is provably 1.0;
-    *   - only screen survivors (≈ true pairs + bound slack) are joined back
-    *     to their float vectors for the decimal-exact cosine that defines
-    *     the output.
-    *
-    * When approximate recall is acceptable, `cosinePairsBucketed` below is
-    * the sub-quadratic path; this one is for when the answer must be exact.
+  /** The int8 screen predicate of every quantized pair join (grid-exact,
+    * SemDeDup cells): the int8 dot product plus the quantization error
+    * bound |Σ qa·qb·sa·sb − a·b| ≤ sa·sb·(½Σ|qa| + ½Σ|qb| + d/4) (from the
+    * per-element rounding bound |x − s·q| ≤ s/2), over the double norms,
+    * clears τ with a 1e-9 margin — so the screen can never drop a true
+    * pair; tightening or fixing the bound here changes all of them in
+    * lockstep (the hyperplane-bucketed screen's compiled kernel,
+    * graft.plans.BucketScreenPairs, states the same bound in Java terms).
+    * Operates on the conventional screen-side column names (ca/cb codes,
+    * sa/sb scales, s1a/s1b code sums, na/nb norms).
     */
-  /** `blocks` ≤ 0 picks the grid from cluster parallelism: cell count
-    * b(b+1)/2 ≈ 2× default parallelism balances the fixed quadratic work
-    * evenly (1-Bucket-Theta guidance) while keeping the replication factor
-    * (each row ships to b+1 cells) as low as that allows — the knob scales
-    * itself from local[32] to a 1000-executor cluster.
+  private def int8Screen(threshold: Double): Column = {
+    val errBound = col("sa") * col("sb") *
+      (lit(0.5) * (col("s1a") + col("s1b")) + lit(0.25) * size(col("ca")))
+    (graft.plans.Exprs.dotInt8(col("ca"), col("cb")).cast("double") * col("sa") * col("sb")
+      + errBound) / nullif(col("na") * col("nb"), lit(0.0)) > threshold - 1e-9
+  }
+
+  /** The exact verify of screen survivors (id_a, id_b): vectors join back
+    * by id for the decimal-exact cosine that defines every emitted pair.
+    * The decimal NORM rides the per-ID vector projection (one decimal dot
+    * per corpus row — the same linear class as a quantize pass), not the
+    * per-pair projection: in the dedup regime survivors ≫ ids, so
+    * norm-per-pair would re-derive each id's norm once per partner
+    * (measured: the τ=0.4 truth set's dominant cost was exactly this
+    * recompute). Same doubles, same multiply order — bit-identical cosine.
+    * `broadcastVecs` pins the vector side as the broadcast build (see
+    * [[cosinePairsBucketed]]).
     */
-  /** Int8-screen error bound — correctness-critical and single-sourced:
-    * |Σ qa·qb·sa·sb − a·b| ≤ sa·sb·(½Σ|qa| + ½Σ|qb| + d/4), from the
-    * per-element rounding bound |x − s·q| ≤ s/2. Every quantized screen
-    * (grid-exact, hyperplane-bucketed, SemDeDup cells) adds THIS bound so
-    * the screen can never drop a true pair; tightening or fixing it here
-    * changes all of them in lockstep. Operates on the conventional
-    * screen-side column names (sa/sb, s1a/s1b, ca).
-    */
-  private def int8ErrBound: Column = col("sa") * col("sb") *
-    (lit(0.5) * (col("s1a") + col("s1b")) + lit(0.25) * size(col("ca")))
+  private def verifyExact(survivors: DataFrame, embeddings: DataFrame, threshold: Double,
+                          idCol: String, vecCol: String,
+                          broadcastVecs: Boolean = false): DataFrame = {
+    val vecs0 = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"),
+      normExact(vecCol).as("nd"))
+    val vecs = if (broadcastVecs) broadcast(vecs0) else vecs0
+    survivors
+      .join(vecs.select(col("id").as("id_a"), col("v").as("va"), col("nd").as("na_d")), "id_a")
+      .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("nd").as("nb_d")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        round(dotExact("va", "vb") / nullif(col("na_d") * col("nb_d"), lit(0.0)), 6)
+          .as("cosine"))
+      .where(col("cosine") > threshold)
+  }
 
   /** [[PairGate]] tier-2 estimator shared by every embedding pair
     * generator: the exact τ-pair count on the deterministic id sample,
@@ -169,7 +157,36 @@ object Similarity {
     s"raise the cosine threshold (now $threshold) or switch to a " +
       "top-k-per-vector variant (topKBatch)"
 
-  /** `gated = false` skips the output-cardinality gate — ONLY for
+  /** Exact cosine-threshold pair join, grid-blocked — the 100 TB shape for
+    * the oracle-exact semantics (every pair with cosine > τ, no recall
+    * loss). An exact all-pairs threshold join is intrinsically O(n²)
+    * compute; what this operator fixes is the *distribution* and the
+    * *bandwidth* of that quadratic:
+    *
+    *   - rows are hashed into `blocks` blocks and replicated to grid cells
+    *     (i ≤ j), a theta-join on an equi key (Okcan & Riedewald, SIGMOD'11)
+    *     — every cell is an independent |Bᵢ|×|Bⱼ| task, so the pair loop
+    *     parallelizes evenly across the cluster with NO broadcast of either
+    *     side and no BroadcastNestedLoopJoin;
+    *   - the replicated payload is int8 quantization codes (4× smaller than
+    *     float vectors), screened by a codegen'd integer dot product plus a
+    *     per-pair quantization error BOUND (|Σqa·qb·sa·sb − a·b| ≤
+    *     sa·sb·(½Σ|qa| + ½Σ|qb| + d/4), from |x − s·q| ≤ s/2), so the
+    *     screen can never drop a true pair — recall is provably 1.0;
+    *   - only screen survivors (≈ true pairs + bound slack) are joined back
+    *     to their float vectors for the decimal-exact cosine that defines
+    *     the output.
+    *
+    * When approximate recall is acceptable, `cosinePairsBucketed` below is
+    * the sub-quadratic path; this one is for when the answer must be exact.
+    *
+    * `blocks` ≤ 0 picks the grid from cluster parallelism: cell count
+    * b(b+1)/2 ≈ 2× default parallelism balances the fixed quadratic work
+    * evenly (1-Bucket-Theta guidance) while keeping the replication factor
+    * (each row ships to b+1 cells) as low as that allows — the knob scales
+    * itself from local[32] to a 1000-executor cluster.
+    *
+    * `gated = false` skips the output-cardinality gate — ONLY for
     * consumers that reduce the pair stream to a linear artifact without
     * ever materializing it as a table (the spanning-forest keep path,
     * [[graft.operators.Dedup.connectedComponentsScalable]]): there the
@@ -227,33 +244,14 @@ object Similarity {
       .withColumn("gi", explode(expr("sequence(0, blk)")))
       .select(col("gi"), col("blk").as("gj"), col("id").as("ib"), col("nrm").as("nb"),
         col("qscale").as("sb"), col("codes").as("cb"), col("s1").as("s1b"))
-    val errBound = int8ErrBound
     val screened = sideA.join(sideB, Seq("gi", "gj"))
       // diagonal cells see each unordered pair twice (both rows on both
       // sides); off-diagonal cells exactly once with arbitrary id order
       .where(col("gi") < col("gj") || col("ia") < col("ib"))
-      .where((graft.plans.Exprs.dotInt8(col("ca"), col("cb")).cast("double")
-        * col("sa") * col("sb") + errBound)
-        / nullif(col("na") * col("nb"), lit(0.0)) > threshold - 1e-9)
+      .where(int8Screen(threshold))
       .select(least(col("ia"), col("ib")).as("id_a"), greatest(col("ia"), col("ib")).as("id_b"))
-    // exact decimal cosine ONLY for survivors: vectors join back by id.
-    // The decimal NORM rides the per-ID vecs projection (one decimal dot
-    // per corpus row — the same linear class as the quantize pass above),
-    // not the per-pair projection: in the dedup regime survivors ≫ ids,
-    // so norm-per-pair would re-derive each id's norm once per partner
-    // (measured: the τ=0.4 truth set's dominant cost was exactly this
-    // recompute). Same doubles, same multiply order — bit-identical
-    // cosine.
-    val vecs = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"),
-      normExact(vecCol).as("nd"))
-    screened
-      .join(vecs.select(col("id").as("id_a"), col("v").as("va"), col("nd").as("na_d")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("nd").as("nb_d")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(dotExact("va", "vb")
-          / nullif(col("na_d") * col("nb_d"), lit(0.0)), 6)
-          .as("cosine"))
-      .where(col("cosine") > threshold)
+    // exact decimal cosine ONLY for survivors
+    verifyExact(screened, embeddings, threshold, idCol, vecCol)
   }
 
   /** Batched brute-force top-k: ALL queries against the corpus in ONE scan
@@ -353,8 +351,22 @@ object Similarity {
       labelFilter.map(l => col(l).as("__ql"))
     val q = broadcast(qLocal.select(qCols: _*))
     // per-row kernels below parallelize over the corpus side's partitions
-    // — spread a single-split scan (see spreadSmallScan; no-op at scale)
-    val e = spreadSmallScan(embeddings)
+    // — spread a single-split scan (no-op at scale)
+    val e = Graft.spread(embeddings)
+    val eCols = Seq(col(idCol), col(vecCol).as("v"),
+      sqrt(graft.plans.Exprs.dot(col(vecCol), col(vecCol))).as("nrm")) ++
+      labelFilter.map(col)
+    val screen = e
+      .select(eCols: _*)
+      .crossJoin(q)
+      .where(labelFilter.fold(col(idCol) =!= col("qid"))(l => col(l) =!= col("__ql")))
+    // the screen projection (qid, id, ...carried, __dcos) → the 4k+16
+    // candidate margin per query
+    def candidates(carry: Column*): DataFrame = graft.plans.GroupTopK.topKPerKey(
+      screen.select(Seq(col("qid"), col(idCol)) ++ carry :+
+        (graft.plans.Exprs.dot(col("v"), col("qv"))
+          / nullif(col("nrm") * col("qn"), lit(0.0))).as("__dcos"): _*),
+      Seq("qid"), Seq(round(col("__dcos"), 6).desc, col(idCol).asc), 4 * k + 16)
     // Two refine shapes, gated on batch size (both produce bit-identical
     // output — same expressions, same ordering):
     //   - LARGE batches (≥ spark.graft.topk.joinBackMinQueries): the
@@ -374,50 +386,23 @@ object Similarity {
     //     ×0.65 under the unconditional join-back at sf0.1).
     val joinBackMin =
       spark.conf.get("spark.graft.topk.joinBackMinQueries", "64").toInt
-    if (qRows.length >= joinBackMin) {
-      val eCols = Seq(col(idCol), col(vecCol).as("v"),
-        sqrt(graft.plans.Exprs.dot(col(vecCol), col(vecCol))).as("nrm")) ++
-        labelFilter.map(col)
-      val screened = e
-        .select(eCols: _*)
-        .crossJoin(q)
-        .where(labelFilter.fold(col(idCol) =!= col("qid"))(l => col(l) =!= col("__ql")))
-        .select(col("qid"), col(idCol),
-          (graft.plans.Exprs.dot(col("v"), col("qv"))
-            / nullif(col("nrm") * col("qn"), lit(0.0))).as("__dcos"))
-      val candidates = graft.plans.GroupTopK.topKPerKey(
-        screened, Seq("qid"), Seq(round(col("__dcos"), 6).desc, col(idCol).asc), 4 * k + 16)
-      val withVecs = e
-        .select(col(idCol), col(vecCol).as("v"), normExact(vecCol).as("__nd"))
-        .join(broadcast(candidates.select(col("qid"), col(idCol))), Seq(idCol))
-        .join(broadcast(qLocal.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-          normExact(vecCol).as("__qnd"))), Seq("qid"))
-      val refined = withVecs.select(col("qid"), col(idCol),
-        round(dotExact("v", "qv")
-          / nullif(col("__nd") * col("__qnd"), lit(0.0)), 6)
-          .as("cosine"))
-      graft.plans.GroupTopK.topKPerKey(
-        refined, Seq("qid"), Seq(col("cosine").desc, col(idCol).asc), k)
-    } else {
-      val eCols = Seq(col(idCol), col(vecCol).as("v"),
-        sqrt(graft.plans.Exprs.dot(col(vecCol), col(vecCol))).as("nrm")) ++
-        labelFilter.map(col)
-      val screened = e
-        .select(eCols: _*)
-        .crossJoin(q)
-        .where(labelFilter.fold(col(idCol) =!= col("qid"))(l => col(l) =!= col("__ql")))
-        .select(col("qid"), col(idCol), col("v"), col("qv"),
-          (graft.plans.Exprs.dot(col("v"), col("qv"))
-            / nullif(col("nrm") * col("qn"), lit(0.0))).as("__dcos"))
-      val candidates = graft.plans.GroupTopK.topKPerKey(
-        screened, Seq("qid"), Seq(round(col("__dcos"), 6).desc, col(idCol).asc), 4 * k + 16)
-      val refined = candidates.select(col("qid"), col(idCol),
-        round(dotExact("v", "qv")
-          / nullif(sqrt(dotExact("v", "v")) * sqrt(dotExact("qv", "qv")), lit(0.0)), 6)
-          .as("cosine"))
-      graft.plans.GroupTopK.topKPerKey(
-        refined, Seq("qid"), Seq(col("cosine").desc, col(idCol).asc), k)
-    }
+    val refined =
+      if (qRows.length >= joinBackMin)
+        e.select(col(idCol), col(vecCol).as("v"), normExact(vecCol).as("__nd"))
+          .join(broadcast(candidates().select(col("qid"), col(idCol))), Seq(idCol))
+          .join(broadcast(qLocal.select(col(idCol).as("qid"), col(vecCol).as("qv"),
+            normExact(vecCol).as("__qnd"))), Seq("qid"))
+          .select(col("qid"), col(idCol),
+            round(dotExact("v", "qv")
+              / nullif(col("__nd") * col("__qnd"), lit(0.0)), 6)
+              .as("cosine"))
+      else
+        candidates(col("v"), col("qv")).select(col("qid"), col(idCol),
+          round(dotExact("v", "qv")
+            / nullif(sqrt(dotExact("v", "v")) * sqrt(dotExact("qv", "qv")), lit(0.0)), 6)
+            .as("cosine"))
+    graft.plans.GroupTopK.topKPerKey(
+      refined, Seq("qid"), Seq(col("cosine").desc, col(idCol).asc), k)
   }
 
   /** Hard-negative mining for contrastive training data: for each query
@@ -435,11 +420,6 @@ object Similarity {
                     labelCol: String = "label"): DataFrame =
     topKBatchImpl(embeddings, queries, k, idCol, vecCol, labelFilter = Some(labelCol))
 
-  /** Random-hyperplane LSH signature: sign bits of dot products against
-    * `planes` pseudo-random hyperplanes derived from xxhash64(dim, plane) —
-    * deterministic, no driver-side randomness, one compiled pass per row
-    * (graft.plans.HyperplaneLSH).
-    */
   /** Maximal-Marginal-Relevance re-ranking of a batched top-N candidate
     * set (Carbonell & Goldstein 1998): greedily pick k of each query's
     * candidates maximizing λ·rel(d) − (1−λ)·max_{s∈selected} cos(d, s) —
@@ -645,9 +625,7 @@ object Similarity {
   def ivfTopKIndexed(index: DataFrame, centroids: Array[Array[Double]],
                      query: DataFrame, k: Int, nprobe: Int = 4,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qRow = query.select(col(idCol), col(vecCol)).head()
-    val qv = qRow.getSeq[Float](1).toArray.map(_.toDouble)
-    val probes = probeCells(qv, centroids, nprobe)
+    val probes = probeCells(singleQuery(query, idCol, vecCol)._2, centroids, nprobe)
     val q = broadcast(query
       .select(col(idCol).as("qid"), col(vecCol).as("qv"), normExact(vecCol).as("qn")))
     index
@@ -775,14 +753,6 @@ object Similarity {
     embeddings.select(col(idCol),
       graft.plans.Exprs.pqEncode(col(vecCol), codebooks).as("codes"))
 
-  /** Approximate top-k by PQ asymmetric distance: the query's
-    * inner-product and reconstruction-norm lookup tables are built
-    * driver-side (O(ksub·dims), no job), and the scan scores each row with
-    * m table lookups — no float vectors are read at probe time. Compose
-    * with a persisted [[pqEncoded]] index for repeated queries; re-rank the
-    * top candidates against float vectors when exact ordering matters.
-    * Estimates are engine-specific (rows-only check, like IVF/LSH).
-    */
   /** Coarse-probe selection, single-sourced for every IVF probe path:
     * the `nprobe` cells whose centroids have the highest inner product
     * with the query (ties to the lower cell index). A tie-break or metric
@@ -807,6 +777,16 @@ object Similarity {
     }
   }
 
+  /** The single-query probes' driver-side prelude: the query's id, its
+    * vector as doubles and that vector's double L2 norm — one `head()`.
+    */
+  private def singleQuery(query: DataFrame, idCol: String,
+                          vecCol: String): (Any, Array[Double], Double) = {
+    val r = query.select(col(idCol), col(vecCol)).head()
+    val qv = r.getSeq[Float](1).toArray.map(_.toDouble)
+    (r.get(0), qv, math.sqrt(qv.map(x => x * x).sum))
+  }
+
   /** The query-collecting ANN paths (pqTopK / ivfPq* / ivfTopKBatch) key
     * their driver-side probe maps on bigint ids — check loudly instead of
     * a mid-job ClassCastException when a corpus arrives with int/string
@@ -819,15 +799,19 @@ object Similarity {
       s"$who requires a bigint $idCol (driver-side probe maps are keyed on Long); got ${dt.catalogString} — cast upstream")
   }
 
+  /** Approximate top-k by PQ asymmetric distance: the query's
+    * inner-product and reconstruction-norm lookup tables are built
+    * driver-side (O(ksub·dims), no job), and the scan scores each row with
+    * m table lookups — no float vectors are read at probe time. Compose
+    * with a persisted [[pqEncoded]] index for repeated queries; re-rank the
+    * top candidates against float vectors when exact ordering matters.
+    * Estimates are engine-specific (rows-only check, like IVF/LSH).
+    */
   def pqTopK(encoded: DataFrame, codebooks: Array[Array[Array[Double]]],
              query: DataFrame, k: Int,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireLongIds(query, idCol, "pqTopK")
-    val qRow = query.select(col(idCol), col(vecCol)).head()
-    val qid = qRow.getLong(0)
-    val qv = qRow.getSeq[Float](1).toArray.map(_.toDouble)
-    val qNorm = math.sqrt(qv.map(x => x * x).sum)
-    val dsub = codebooks(0)(0).length
+    val (qid, qv, qNorm) = singleQuery(query, idCol, vecCol)
     val ipLut = ipLutOf(qv, codebooks)
     val normSqLut = codebooks.map(_.map(c => c.map(x => x * x).sum))
     encoded
@@ -898,12 +882,8 @@ object Similarity {
                 query: DataFrame, k: Int, nprobe: Int = 4,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireLongIds(query, idCol, "ivfPqTopK")
-    val qRow = query.select(col(idCol), col(vecCol)).head()
-    val qid = qRow.getLong(0)
-    val qv = qRow.getSeq[Float](1).toArray.map(_.toDouble)
-    val qNorm = math.sqrt(qv.map(x => x * x).sum)
+    val (qid, qv, qNorm) = singleQuery(query, idCol, vecCol)
     val probes = probeCells(qv, centroids, nprobe)
-    val dsub = codebooks(0)(0).length
     val ipLut = ipLutOf(qv, codebooks)
     val normSqLut = codebooks.map(_.map(c => c.map(x => x * x).sum))
     index
@@ -954,10 +934,7 @@ object Similarity {
                         query: DataFrame, k: Int, nprobe: Int = 4,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireLongIds(query, idCol, "ivfPqResidualTopK")
-    val qRow = query.select(col(idCol), col(vecCol)).head()
-    val qid = qRow.getLong(0)
-    val qv = qRow.getSeq[Float](1).toArray.map(_.toDouble)
-    val qNorm = math.sqrt(qv.map(x => x * x).sum)
+    val (qid, qv, qNorm) = singleQuery(query, idCol, vecCol)
     val probes = probeCells(qv, centroids, nprobe)
     val probeSet = probes.toSet
     val dsub = codebooks(0)(0).length
@@ -1153,16 +1130,7 @@ object Similarity {
                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val survivors = lshCandidatePairsBucketed(embeddings, threshold, planes, bands,
       maxBucketSize, targetBucket, bandsMax, idCol, vecCol)
-    val vecs0 = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"),
-      normExact(vecCol).as("nrm"))
-    val vecs = if (broadcastVecs) broadcast(vecs0) else vecs0
-    survivors
-      .join(vecs.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(dotExact("va", "vb") / nullif(col("na") * col("nb"), lit(0.0)), 6)
-          .as("cosine"))
-      .where(col("cosine") > threshold)
+    verifyExact(survivors, embeddings, threshold, idCol, vecCol, broadcastVecs)
   }
 
   /** SemDeDup pair generation (Abbas et al., arXiv:2303.09540): k-means
@@ -1181,37 +1149,8 @@ object Similarity {
     PairGate.check(embeddings, "semdedupPairs", s"tau=$threshold",
       pairGateRemedy(threshold))(
       estimateExactPairs(embeddings, threshold, idCol, vecCol))
-    val lite = embeddings
-      .select(col(idCol).as("id"),
-        sqrt(graft.plans.Exprs.dot(col(vecCol), col(vecCol))).as("nrm"),
-        graft.plans.Exprs.quantizeInt8(col(vecCol)).as("q"),
-        graft.plans.Exprs.nearestCentroid(col(vecCol), centroids).as("cell"))
-      .select(col("id"), col("nrm"), col("cell"), col("q.qscale").as("qscale"),
-        col("q.codes").as("codes"), col("q.s1").as("s1"))
-    val a = lite.select(col("cell"), col("id").as("ia"), col("nrm").as("na"),
-      col("qscale").as("sa"), col("codes").as("ca"), col("s1").as("s1a"))
-    val bSide = lite.select(col("cell"), col("id").as("ib"), col("nrm").as("nb"),
-      col("qscale").as("sb"), col("codes").as("cb"), col("s1").as("s1b"))
-    val errBound = int8ErrBound
-    val screened = a.join(bSide, Seq("cell"))
-      .where(col("ia") < col("ib"))
-      .where((graft.plans.Exprs.dotInt8(col("ca"), col("cb")).cast("double")
-        * col("sa") * col("sb") + errBound)
-        / nullif(col("na") * col("nb"), lit(0.0)) > threshold - 1e-9)
-      .select(col("ia").as("id_a"), col("ib").as("id_b"))
-    // per-ID decimal norms (see cosinePairsExact): survivors ≫ ids in the
-    // dedup regime, so norm-per-pair re-derives each id's norm once per
-    // partner; same doubles, same multiply order — bit-identical cosine
-    val vecs = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"),
-      normExact(vecCol).as("nd"))
-    screened
-      .join(vecs.select(col("id").as("id_a"), col("v").as("va"), col("nd").as("na_d")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("nd").as("nb_d")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(dotExact("va", "vb")
-          / nullif(col("na_d") * col("nb_d"), lit(0.0)), 6)
-          .as("cosine"))
-      .where(col("cosine") > threshold)
+    verifyExact(cellScreens(embeddings, Seq(centroids), threshold, idCol, vecCol).head,
+      embeddings, threshold, idCol, vecCol)
   }
 
   /** Ensemble SemDeDup pairs: the union of [[semdedupPairs]] under several
@@ -1222,8 +1161,8 @@ object Similarity {
     * clustering's worst case) while each member stays the bounded
     * Σ cell² shape. Union-then-distinct is sound because every member
     * pair is already exact-verified.
-    */
-  /** `gated = false`: see [[cosinePairsExact]] — reserved for pair-stream
+    *
+    * `gated = false`: see [[cosinePairsExact]] — reserved for pair-stream
     * consumers with linear outputs (the scalable keep path).
     */
   def semdedupPairsEnsemble(embeddings: DataFrame,
@@ -1234,12 +1173,22 @@ object Similarity {
       PairGate.check(embeddings, "semdedupPairsEnsemble", s"tau=$threshold",
         pairGateRemedy(threshold))(
         estimateExactPairs(embeddings, threshold, idCol, vecCol))
-    // ONE pass computes the norm, the int8 codes, and every clustering's
-    // cell id; each member then pays only its screen join, and the
-    // decimal-exact verify runs ONCE over the deduplicated union of
-    // screened candidates (a fused union-then-verify — naively unioning
-    // semdedupPairs would re-quantize the corpus and re-verify shared
-    // candidates per member).
+    // the decimal-exact verify runs ONCE over the deduplicated union of
+    // the members' screened candidates (a fused union-then-verify —
+    // naively unioning semdedupPairs would re-quantize the corpus and
+    // re-verify shared candidates per member)
+    verifyExact(cellScreens(embeddings, centsList, threshold, idCol, vecCol)
+      .reduce(_.unionByName(_)).dropDuplicates("id_a", "id_b"),
+      embeddings, threshold, idCol, vecCol)
+  }
+
+  /** The SemDeDup screen, one (id_a, id_b) frame per clustering in
+    * `centsList`: the id-ordered pairs sharing a cell that pass
+    * [[int8Screen]]. ONE pass computes the norm, the int8 codes and every
+    * clustering's cell id; each member then pays only its screen join.
+    */
+  private def cellScreens(embeddings: DataFrame, centsList: Seq[Array[Array[Double]]],
+                          threshold: Double, idCol: String, vecCol: String): Seq[DataFrame] = {
     val cellCols = centsList.zipWithIndex.map { case (c, i) =>
       graft.plans.Exprs.nearestCentroid(col(vecCol), c).as(s"cell$i")
     }
@@ -1250,31 +1199,16 @@ object Similarity {
       .select(Seq(col("id"), col("nrm"), col("q.qscale").as("qscale"),
         col("q.codes").as("codes"), col("q.s1").as("s1")) ++
         centsList.indices.map(i => col(s"cell$i")): _*)
-    val errBound = int8ErrBound
-    val screened = centsList.indices.map { i =>
+    centsList.indices.map { i =>
       val a = lite.select(col(s"cell$i").as("cell"), col("id").as("ia"), col("nrm").as("na"),
         col("qscale").as("sa"), col("codes").as("ca"), col("s1").as("s1a"))
       val b = lite.select(col(s"cell$i").as("cell"), col("id").as("ib"), col("nrm").as("nb"),
         col("qscale").as("sb"), col("codes").as("cb"), col("s1").as("s1b"))
       a.join(b, Seq("cell"))
         .where(col("ia") < col("ib"))
-        .where((graft.plans.Exprs.dotInt8(col("ca"), col("cb")).cast("double")
-          * col("sa") * col("sb") + errBound)
-          / nullif(col("na") * col("nb"), lit(0.0)) > threshold - 1e-9)
+        .where(int8Screen(threshold))
         .select(col("ia").as("id_a"), col("ib").as("id_b"))
-    }.reduce(_.unionByName(_)).dropDuplicates("id_a", "id_b")
-    // per-ID decimal norms (see cosinePairsExact) — bit-identical cosine,
-    // strictly fewer interpreted-decimal evaluations
-    val vecs = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"),
-      normExact(vecCol).as("nd"))
-    screened
-      .join(vecs.select(col("id").as("id_a"), col("v").as("va"), col("nd").as("na_d")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("nd").as("nb_d")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(dotExact("va", "vb")
-          / nullif(col("na_d") * col("nb_d"), lit(0.0)), 6)
-          .as("cosine"))
-      .where(col("cosine") > threshold)
+    }
   }
 
   /** SemDeDup keep-rows: sample-trained k-means cells (two granularities,

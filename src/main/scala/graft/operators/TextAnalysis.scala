@@ -133,10 +133,6 @@ object TextAnalysis {
     Seq(thr).toDF("__thr")
   }
 
-  /** Document fingerprint: md5 of the normalized text (lowercase, strip
-    * non-alphanumerics, collapse whitespace) — catches trivially-reformatted
-    * duplicates that exact hashing misses.
-    */
   /** Type-token ratio: distinct tokens / total tokens over lowercased
     * whitespace tokens — the standard repetition/boilerplate signal
     * (near-zero for templated spam, high for natural prose). Scan-speed
@@ -170,6 +166,10 @@ object TextAnalysis {
       ip, "<IP>")
   }
 
+  /** Document fingerprint: md5 of the normalized text (lowercase, strip
+    * non-alphanumerics, collapse whitespace) — catches trivially-reformatted
+    * duplicates that exact hashing misses.
+    */
   def fingerprint(textCol: String): Column =
     md5(trim(regexp_replace(regexp_replace(lower(col(textCol)), "[^a-z0-9 ]", ""), " +", " ")))
 
@@ -650,15 +650,13 @@ object TextAnalysis {
     */
   def ngramNovelty(docs: DataFrame, n: Int = 8, textCol: String = "text",
                    idCol: String = "doc_id"): DataFrame = {
-    val grams = docs
-      .withColumn("__toks", Dedup.tokens(textCol))
-      .select(col(idCol), explode(Dedup.ngramsOfTokens("__toks", n)).as("g"))
-    val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    grams.join(df, Seq("g"))
-      .groupBy(col(idCol))
+    val grams = Dedup.wordGrams(docs, n, textCol, idCol, rows = true)
+    val df = grams.groupBy(col("grams")).agg(count(lit(1)).as("df"))
+    grams.join(df, Seq("grams"))
+      .groupBy(col("gid"))
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("df") === 1, lit(1L)).otherwise(lit(0L))).as("n_unique"))
-      .select(col(idCol), col("n_grams"), col("n_unique"),
+      .select(col("gid").as(idCol), col("n_grams"), col("n_unique"),
         round(col("n_unique") / col("n_grams").cast("double"), 6).as("novelty"))
   }
 

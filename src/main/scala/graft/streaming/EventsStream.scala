@@ -443,21 +443,6 @@ object EventsStream {
       .where(col("quality") >= col("__thr"))
       .drop("__k", "__thr")
 
-  /** Streaming winsorization — robust normalization's continuous face,
-    * completing the batch/streaming symmetry for the exact-quantile
-    * family. Each arriving row's value clips to its group's [lo, hi]
-    * bounds computed from the LANDED corpus
-    * (`Quantiles.quantileCont(landed, key, value, Seq(lo -> "__lo",
-    * hi -> "__hi"))`) — a live stream cannot see its own quantiles, and
-    * pinning the bounds to data at rest makes replayed batches make
-    * identical decisions (the same contract as the quality-gate threshold
-    * and the temperature-mix rates). The bounds frame is group-sized and
-    * broadcast; the stream side never shuffles (stateless stream-static
-    * left join + projection). Rows whose group has no landed bounds pass
-    * through UNCLIPPED with `clipped = false` — a new entity must not be
-    * silently distorted by another group's tails; refresh the bounds via
-    * foreachBatch re-resolution when live refresh matters.
-    */
   /** Stream-static entity resolution — the continuous face of
     * [[graft.operators.Dedup.fuzzyCanonicalize]] and the discovery-side
     * complement of the reference's FIXED symbol rewrite
@@ -492,6 +477,21 @@ object EventsStream {
       .drop("__from", "canonical")
   }
 
+  /** Streaming winsorization — robust normalization's continuous face,
+    * completing the batch/streaming symmetry for the exact-quantile
+    * family. Each arriving row's value clips to its group's [lo, hi]
+    * bounds computed from the LANDED corpus
+    * (`Quantiles.quantileCont(landed, key, value, Seq(lo -> "__lo",
+    * hi -> "__hi"))`) — a live stream cannot see its own quantiles, and
+    * pinning the bounds to data at rest makes replayed batches make
+    * identical decisions (the same contract as the quality-gate threshold
+    * and the temperature-mix rates). The bounds frame is group-sized and
+    * broadcast; the stream side never shuffles (stateless stream-static
+    * left join + projection). Rows whose group has no landed bounds pass
+    * through UNCLIPPED with `clipped = false` — a new entity must not be
+    * silently distorted by another group's tails; refresh the bounds via
+    * foreachBatch re-resolution when live refresh matters.
+    */
   def winsorizeStream(stream: DataFrame, bounds: DataFrame,
                       keyCol: String = "event_type",
                       valueCol: String = "value"): DataFrame =

@@ -43,6 +43,24 @@ class FnsSpec extends SparkSpec {
     assert(out(2).getDouble(1) === 20.0)
   }
 
+  test("reference formulas give NULL on a zero divisor under ANSI mode") {
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      // open 0 then 5: off-peak divides by the previous open (0), on-peak
+      // by the first row's open (0), pct-change by the window start (0)
+      val df = Seq(("a", 1, 0.0, 5.0), ("a", 2, 5.0, 6.0)).toDF("k", "t", "open", "close")
+      val w = Window.partitionBy($"k").orderBy($"t")
+      val rows = df.select($"t", Fns.gapOffPeak($"open", w).as("off"),
+        Fns.gapOnPeak($"open", $"close").as("on"),
+        Fns.pctChangeFromFirst($"open", 5, w).as("pct")).orderBy($"t").collect()
+      assert(rows(1).isNullAt(1)) // (5 − 0) / 0
+      assert(rows(0).isNullAt(2)) // (5 − 0) / 0
+      assert(rows(1).getDouble(2) === 20.0) // (6 − 5) / 5 × 100
+      assert(rows(0).isNullAt(3) && rows(1).isNullAt(3)) // window start 0
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
   test("parseMagnitude handles M/B suffixes, separators, and garbage") {
     val df = Seq("12.3 M", "1.2 B", "1,234.5 M", "nonsense", "2.5 b").toDF("s")
       .select(Fns.parseMagnitude($"s").as("v"))

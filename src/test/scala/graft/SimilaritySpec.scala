@@ -166,6 +166,32 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("topKBatch and hardNegatives give the same rows on both sides of the join-back gate") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val labeled = emb.withColumn("label", $"vec_id" % 3)
+    val queries = emb.orderBy($"vec_id").limit(3)
+    val key = "spark.graft.topk.joinBackMinQueries"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    def both(): (Seq[(Long, Long, Double)], Seq[(Long, Long, Double)]) =
+      (rows(Similarity.topKBatch(emb, queries, 7)),
+        rows(Similarity.hardNegatives(labeled, labeled.orderBy($"vec_id").limit(3), 5)))
+    val prev = spark.conf.getOption(key)
+    val (batchSmall, negSmall) = both() // 3 queries < the default 64: refine on candidates
+    spark.conf.set(key, "1")
+    val (batchJoin, negJoin) = try both() // 3 ≥ 1: the join-back refine
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(batchSmall.nonEmpty && negSmall.nonEmpty)
+    assert(batchJoin === batchSmall)
+    assert(negJoin === negSmall)
+    val perQuery = queries.collect().toSeq.flatMap { qr =>
+      val qid = qr.getLong(0)
+      Similarity.topK(emb, emb.where($"vec_id" === qid), 7)
+        .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+    }.sorted
+    assert(batchSmall === perQuery)
+  }
+
   test("mmrRerank trades a redundant near-duplicate for coverage; rank 1 is pure relevance") {
     // corpus: A and A' nearly identical (both very close to the query),
     // B distinct with moderate relevance. Plain top-2 = {A, A'};
