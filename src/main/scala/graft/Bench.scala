@@ -17,6 +17,13 @@ object Bench {
     sb.append('"').toString
   }
 
+  /** A failed key's one-line summary: the exception class and the first
+    * line of its message, capped at 300 characters.
+    */
+  def failure(e: Throwable): String =
+    (e.getClass.getSimpleName + ": " +
+      Option(e.getMessage).getOrElse("").takeWhile(_ != '\n')).take(300)
+
   /** One bench run's artifact: per-query min-of-passes seconds for the
     * queries that SUCCEEDED in every pass, per-query error text for the
     * ones that didn't, and the raw per-pass samples behind the min. A
@@ -83,8 +90,7 @@ object Bench {
           try { selected(name)(spark, sfDir).count(); true }
           catch {
             case e: Throwable =>
-              errors(name) = (e.getClass.getSimpleName + ": " +
-                Option(e.getMessage).getOrElse("").takeWhile(_ != '\n')).take(300)
+              errors(name) = failure(e)
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9

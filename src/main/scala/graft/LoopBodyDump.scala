@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Graph}
+import graft.registry.QueryKit
 
 /** Dump the formatted physical plan of ONE ITERATION BODY of the BSP
   * loops, pre-checkpoint — the evidence the final query plan cannot show
@@ -15,7 +16,7 @@ object LoopBodyDump {
     val spark = Graft.localSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-    val rank = Graph.rankSetup(SparkEntry.purchaseEdges(spark, dir), "src", "dst")
+    val rank = Graph.rankSetup(QueryKit.purchaseEdges(spark, dir), "src", "dst")
     println("==== pagerank ITERATION BODY (contribution aggregate, pre-checkpoint) ====")
     Graph.rankContributions(rank, rank.rank).explain("formatted")
 

@@ -1,5 +1,9 @@
 package graft
 
+import graft.registry.CurationQueries.CurationStream
+import graft.registry.DedupQueries.DedupEmbedding
+import graft.registry.Registry
+import graft.registry.RetrievalQueries.AnnLsh
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -182,98 +186,14 @@ object ScaleBench {
     ()
   }
 
-  /** Every key that reads only documents/embeddings — the full LLM-data
-    * surface, including the quality diagnostics (recall must SURVIVE the
-    * scale-up, not just finish). Grouped for the report; timed flat.
-    */
-  private val dedupAnn = Seq(
-    "q_dedup_exact", "q_dedup_keep", "q_dedup_minhash", "q_ngram_jaccard",
-    "q_bitext_mine",
-    "q_dedup_simhash", "q_dedup_cluster", "q_dedup_near_keep",
-    "q_dedup_incremental_near", "q_winnow_overlap", "q_semdedup",
-    "q_containment", "q_dedup_containment_keep",
-    "q_dedup_embedding", "q_dedup_embedding_keep",
-    "q_ann_topk", "q_ann_batch", "q_ann_lsh", "q_ann_ivf",
-    "q_ann_ivf_indexed", "q_ann_ivfpq_indexed", "q_ann_ivf_append",
-    "q_kmeans", "q_ann_recall", "q_ann_mmr", "q_pca_project",
-    "q_pq_topk", "q_ann_ivfpq", "q_embed_mean", "q_hard_negatives",
-    "q_dedup_incremental", "q_pair_quality")
-  private val text = Seq(
-    "q_lang_id", "q_quality_score", "q_quality_gate", "q_classifier", "q_token_count",
-    "q_type_token", "q_vocab", "q_char_diversity", "q_bigram_frac",
-    "q_repetition", "q_compress_ratio", "q_c4_rules", "q_charlm",
-    "q_wordlm", "q_bpe", "q_unigram_lm", "q_tokenizer_quality", "q_tfidf",
-    "q_fingerprint", "q_winnow_fingerprint", "q_simhash_pairs",
-    "q_boilerplate", "q_decontaminate", "q_decontaminate_bloom",
-    "q_contamination_report",
-    "q_chunk_split", "q_pack_sequences", "q_shard_assign", "q_pipeline_e2e",
-    "q_dag_run",
-    "q_curation_stream", "q_url_normalize", "q_dedup_url", "q_bm25_topk", "q_domain_cap",
-    "q_span_dedup",
-    "q_domain_stats", "q_scrub_pii", "q_profile", "q_sample_hash",
-    "q_split_assign", "q_stratified_sample", "q_corpus_mix",
-    "q_mix_temperature", "q_frame_sample", "q_multimodal_features",
-    "q_pmi", "q_kl_divergence", "q_percentile_rank", "q_readability",
-    "q_code_detect", "q_zipf_slope", "q_survivorship",
-    "q_ngram_novelty", "q_dataset_card", "q_card_stream")
-  /** Every key that reads events — the reference stock surface plus the
-    * analytics/streaming-mirror families. Included so the time-series
-    * windows (SMA/EWMA/drawdown), as-of joins, funnel/retention and the
-    * runningSumAuto skew switch carry MEASURED scale evidence, not just
-    * plan-level arguments.
-    */
-  private val events = Seq(
-    "q_ohlc_daily", "q_ohlc_15min", "q_fill_forward", "q_incremental_append",
-    "q_incremental_shuffled", "q_latest_date", "q_sma", "q_dollar_volume",
-    "q_gap_off_peak", "q_gap_on_peak", "q_rolling_median", "q_pct_change_ndays", "q_drawdown",
-    "q_ewma", "q_volatility", "q_corr_pairs", "q_bollinger", "q_rsi",
-    "q_macd", "q_pivot_wide", "q_asof_join", "q_asof_ttl", "q_asof_forward",
-    "q_asof_nearest", "q_asof_broadcast", "q_sector_price", "q_asof_state",
-    "q_stream_join", "q_incremental_bars", "q_stream_topk", "q_hll_merge",
-    "q_theta_sets", "q_market_day", "q_schema_evolution", "q_window_agg",
-    "q_running_sum", "q_sessionize", "q_funnel", "q_funnel_stream",
-    "q_retention", "q_rollup", "q_histogram", "q_json_props",
-    "q_quantiles_approx", "q_quantiles", "q_quantiles_scalable",
-    "q_robust_stats", "q_winsorize", "q_winsorize_stream",
-    "q_quantile_bins", "q_psi_drift", "q_zscore",
-    "q_distinct_users", "q_approx_distinct", "q_interval_join",
-    "q_scd2", "q_cdc_merge", "q_beta", "q_autocorr", "q_obv",
-    "q_seasonality", "q_benford", "q_entropy", "q_target_encoding",
-    "q_markov_transition", "q_trend_decompose", "q_skew_kurt",
-    "q_minmax_scale", "q_lag_features", "q_ks_test",
-    "q_table_diff", "q_user_growth", "q_gap_detect", "q_ab_test",
-    "q_rolling_outliers", "q_unpivot", "q_vwap", "q_lead_lag",
-    "q_rolling_corr", "q_stochastic", "q_cusum",
-    "q_sharpe", "q_donchian", "q_atr", "q_chi_square", "q_mannwhitney",
-    "q_robust_scale", "q_sliding_window", "q_key_skew", "q_cube",
-    "q_quantile_disc", "q_attribution", "q_time_between",
-    "q_rrf_fusion", "q_rank_eval", "q_grouping_sets", "q_pagerank",
-    "q_weighted_sample", "q18_big_orders", "q_components",
-    "q13_cust_orders", "q15_top_supplier", "q16_supplier_classes",
-    "q22_idle_customers", "q_bfs_hops", "q_gini", "q9_profit", "q_cohort_orders",
-    "q_rolling_distinct", "q_concurrency", "q_path_top", "q_reach_stream",
-    "q_forecast_eval",
-    "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
-    "q_weighted_price", "q_market_basket", "q_salted_join",
-    "q_fk_integrity", "q_anti_join", "q_topk_per_key",
-    "q4_order_priority", "q11_important_stock", "q14_promo_revenue",
-    "q17_small_qty_revenue", "q21_last_shippers", "q_triangles",
-    "q_degree_hist", "q_sortino", "q_var_es", "q_pairs_spread",
-    "q7_nation_trade", "q19_disjunctive", "q20_dominant_suppliers")
-
-  /** Record-linkage keys (read the scaled part table). */
-  private val linkage = Seq("q_fuzzy_match", "q_fuzzy_dedup",
-    "q_normalize_symbol", "q_parse_magnitude")
-
-  private val family = dedupAnn ++ text ++ events ++ linkage
-
-  /** Optional comma-separated key subset (SPARK_GRAFT_KEYS) — the 30×/100×
-    * rungs run a representative slice instead of the whole surface so a
-    * deeper decade stays affordable.
+  /** The registry's keys, less any outside the optional comma-separated
+    * SPARK_GRAFT_KEYS subset — the 30×/100× rungs run a representative
+    * slice instead of the whole surface so a deeper decade stays
+    * affordable.
     */
   private def selectedFamily: Seq[String] = {
     val only = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(',').map(_.trim).toSet)
-    family.filter(n => only.forall(_.contains(n)))
+    Registry.specs.map(_.name).filter(n => only.forall(_.contains(n)))
   }
 
   /** q_curation_stream's batch mirror with the eval suite pinned to the
@@ -322,8 +242,7 @@ object ScaleBench {
           gated(name) = Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(300)
           outcome = "  GATED"
         case e: Throwable =>
-          errors(name) = (e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").takeWhile(_ != '\n')).take(300)
+          errors(name) = Bench.failure(e)
           outcome = "  FAILED"
       }
       val ok = outcome.isEmpty
@@ -396,7 +315,7 @@ object ScaleBench {
       try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
     val lshDiag =
-      if (errors.contains("q_ann_lsh") || !selectedFamily.contains("q_ann_lsh")) ""
+      if (errors.contains(AnnLsh) || !selectedFamily.contains(AnnLsh)) ""
       else {
         def d(dir: String): (Long, Long, Long) = ungatedDiag {
           val emb = Tables.embeddings(spark, dir)
@@ -419,8 +338,7 @@ object ScaleBench {
     // calibration (estimate / actual) is measured on every battery, not
     // only when a rung trips.
     val embDiag =
-      if (errors.contains("q_dedup_embedding") ||
-        !selectedFamily.contains("q_dedup_embedding")) ""
+      if (errors.contains(DedupEmbedding) || !selectedFamily.contains(DedupEmbedding)) ""
       else {
         def d(dir: String): (Long, Long, Long) = ungatedDiag {
           val emb = Tables.embeddings(spark, dir)
@@ -454,7 +372,7 @@ object ScaleBench {
       }.mkString(""","pair_gate_verdicts":[""", ",", "]")
     }
     val fixedSuite =
-      if (!okFamily.contains("q_curation_stream")) ""
+      if (!okFamily.contains(CurationStream)) ""
       else {
         def t(corpusDir: String): Double =
           (1 to iters).map { _ =>

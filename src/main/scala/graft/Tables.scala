@@ -26,7 +26,7 @@ object Tables {
     * `nanosAsLong` maps it to a raw long), TIMESTAMP(MICROS), and a plain
     * int64 of epoch-nanos. Setting the legacy conf is harmless for the
     * non-nanos encodings (it only affects NANOS columns), so it stays on
-    * unconditionally; [[graft.SparkEntry]]'s events helper then normalizes
+    * unconditionally; [[graft.registry.QueryKit]]'s events helper then normalizes
     * whatever dtype actually loaded to TIMESTAMP_NTZ.
     */
   def events(spark: SparkSession, dir: String): DataFrame = eventsSnapshot(spark, dir).df

@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.Bench.jsonStr
+import graft.registry.{Oracle, QuerySpec, Registry}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus each registry key's oracle SQL in oracle_sql.json, for the
+  * driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated key filter — local dev only;
@@ -22,28 +25,16 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        errors(name) = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("").takeWhile(_ != '\n')).take(300)
+        errors(name) = Bench.failure(e)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Registry.specs
+      .collect { case QuerySpec(k, _, Oracle(sql)) => s"${jsonStr(k)}: ${jsonStr(sql)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, m) => s"${q(k)}: ${q(m)}" }.mkString("{", ",", "}")
+      .map { case (k, m) => s"${jsonStr(k)}: ${jsonStr(m)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +

@@ -307,6 +307,10 @@ object Similarity {
     * driver from the batch — that is their contract (a batch is
     * request-sized, not corpus-sized), and like every driver-sized
     * precondition here it fails loudly instead of OOMing when violated.
+    * The collect therefore runs while the plan is built: topKBatch plans
+    * over the batch as a local relation whose size picks its refine
+    * shape, and ivfTopKBatch's per-query probe cells are a map literal
+    * and the index's partition filter.
     */
   private def collectQueryBatch(queries: DataFrame, op: String): Array[Row] = {
     val qCap = queries.sparkSession.conf
@@ -779,6 +783,12 @@ object Similarity {
 
   /** The single-query probes' driver-side prelude: the query's id, its
     * vector as doubles and that vector's double L2 norm — one `head()`.
+    *
+    * The `head()` runs while the plan is built, so `explain()` on
+    * q_ann_ivf_indexed, q_pq_topk or q_ann_ivfpq_indexed runs this one
+    * job. It cannot move into execution: the probe cells (the partition
+    * filter a persisted index prunes on) and the PQ lookup tables are
+    * plan literals computed from the query vector.
     */
   private def singleQuery(query: DataFrame, idCol: String,
                           vecCol: String): (Any, Array[Double], Double) = {

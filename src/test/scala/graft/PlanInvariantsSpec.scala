@@ -1,5 +1,7 @@
 package graft
 
+import graft.registry.QueryKit
+
 /** The plans we rely on at 100 TB, asserted — a regression gate so a
   * refactor can't silently reintroduce a sort-merge join, a nested-loop
   * pair generator, or an extra exchange into the headline queries.
@@ -22,11 +24,11 @@ class PlanInvariantsSpec extends SparkSpec {
 
   test("time-series aggregates partial-combine: the shuffle moves bars, not ticks") {
     // the bars keys read one checkpointed daily summary frame per events
-    // snapshot (SparkEntry.daily); its build, like plain daily bars, is one
+    // snapshot (QueryKit.daily); its build, like plain daily bars, is one
     // tick-level aggregate: a partial + final pair around one exchange —
     // no raw-tick repartition anywhere
     val ticks = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    for (built <- Seq(graft.operators.Ohlc.dailyBars(ticks), SparkEntry.dailySummary(ticks))) {
+    for (built <- Seq(graft.operators.Ohlc.dailyBars(ticks), QueryKit.dailySummary(ticks))) {
       val build = built.queryExecution.executedPlan.toString()
       assert(count(build, "Exchange") === 1, build)
       assert(count(build, "HashAggregate") === 2, s"expected partial+final:\n$build")
@@ -84,7 +86,7 @@ class PlanInvariantsSpec extends SparkSpec {
   test("BSP loop bodies: the pagerank step broadcasts the rank side, the CC round " +
     "stays an equi-join within r12's exchanges") {
     import graft.operators.{Dedup, Graph}
-    val setup = Graph.rankSetup(SparkEntry.purchaseEdges(spark, sfDir), "src", "dst")
+    val setup = Graph.rankSetup(QueryKit.purchaseEdges(spark, sfDir), "src", "dst")
     val step = Graph.rankContributions(setup, setup.rank)
       .queryExecution.executedPlan.toString()
     // one shuffle (the contribution aggregate); the checkpointed edge list
@@ -160,7 +162,7 @@ class PlanInvariantsSpec extends SparkSpec {
   test("projections prune the parquet scan to the referenced columns") {
     // the daily summary (the one events scan of the daily-series keys)
     // reads the 4 columns it aggregates, not the table
-    val p = SparkEntry.dailySummary(
+    val p = QueryKit.dailySummary(
       graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
       .queryExecution.executedPlan.toString()
     val read = "ReadSchema: [^\\n]+".r.findFirstIn(p).getOrElse(fail(p))

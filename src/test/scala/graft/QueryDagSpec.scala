@@ -146,6 +146,7 @@ class QueryDagSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(dag === fused)
     assert(dag.nonEmpty)
-    assert(SparkEntry.oracleSql("q_dag_run") === SparkEntry.oracleSql("q_pipeline_e2e"))
+    val checks = graft.registry.Registry.specs.map(q => q.name -> q.check).toMap
+    assert(checks("q_dag_run") === checks("q_pipeline_e2e"))
   }
 }

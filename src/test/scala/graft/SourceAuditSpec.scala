@@ -13,6 +13,9 @@ import scala.jdk.CollectionConverters._
   *
   * Each operator rule has one definition: a marker unique to the rule's
   * expression (matching its inline copies too) occurs exactly once.
+  *
+  * The query keys are declared once, in the registry's family objects:
+  * the tools that run every key name none of them.
   */
 class SourceAuditSpec extends SparkSpec {
 
@@ -66,12 +69,22 @@ class SourceAuditSpec extends SparkSpec {
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
+  private def source(file: String): String =
+    sources.collectFirst { case (p, src) if p.getFileName.toString == file => src }.get
+
   test("the reference-formula keys call Fns") {
-    val entry = sources.collectFirst {
-      case (p, src) if p.getFileName.toString == "SparkEntry.scala" => src
-    }.get
+    val family = source("ReferenceQueries.scala")
     val missing = Seq("Fns.gapOffPeak(", "Fns.gapOnPeak(", "Fns.pctChangeFromFirst(",
-      "Fns.sma(", "Fns.dollarVolume(").filterNot(entry.contains(_))
+      "Fns.sma(", "Fns.dollarVolume(").filterNot(family.contains(_))
     assert(missing.isEmpty, missing.mkString(", "))
+  }
+
+  test("the tools name no query key: they iterate the registry") {
+    val keyLiteral = """"q(_|\d+_)\w+"""".r
+    val hits = Seq("ScaleBench.scala", "Verify.scala").flatMap { f =>
+      keyLiteral.findAllIn(source(f)).map(k => s"$f: $k")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(keyLiteral.findFirstIn(source("Bench.scala")).isDefined) // the pattern finds a key
   }
 }
