@@ -123,14 +123,21 @@ object Graft {
     * Reliable checkpoints are always eager: a lazy one computes the frame
     * in its first job and again in the follow-up job that writes the
     * files, while the eager path computes it once, inside the write job.
+    *
+    * The frame keeps the layout its rows have (`GraftBridge.withFinalLayout`):
+    * a frame hash-partitioned on a key before the checkpoint reads back
+    * partitioned on it, so a window, aggregate or join on that key plans
+    * no exchange of its own.
     */
   def materialize(df: org.apache.spark.sql.DataFrame, eager: Boolean): org.apache.spark.sql.DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isEmpty)
       df.sparkSession.conf.getOption("spark.graft.checkpointDir")
         .filter(_.nonEmpty).foreach(sc.setCheckpointDir)
-    if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager)
+    val checkpointed =
+      if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager)
+    org.apache.spark.sql.GraftBridge.withFinalLayout(checkpointed, df)
   }
 
   /** Spread an under-partitioned input across `spark.sql.shuffle.partitions`

@@ -27,7 +27,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   *     persisted RDD no live entry owns, and [[flush]] frees the owned ones
   *     past its storage gauges;
   *   - [[invalidate]] forgets every entry tied to a path once a read lists
-  *     a new file set there, and frees their frames.
+  *     a new file set there, and frees their frames; after an append, the
+  *     old file set's frames live on until the frame merged forward from
+  *     them is built ([[release]]) or the listing changes again.
   */
 object StateCache {
 
@@ -86,11 +88,22 @@ object StateCache {
       build: => DataFrame): DataFrame =
     GraftBridge.newInstance(entry(s, key, source, isFrame = true)(build))
 
-  /** Forget every entry tied to `path` and free their frames — a read
-    * listed a new file set there.
+  /** The frame under `key` if its build has finished, without building
+    * it: a fresh instance, as [[frame]] hands out.
     */
-  def invalidate(s: SparkSession, path: String): Unit =
-    forget(s)(_.source.exists(_.path == path))
+  def live(s: SparkSession, key: Any): Option[DataFrame] =
+    Option(entries(s).get(key)).flatMap(_.builtFrame).map(GraftBridge.newInstance)
+
+  /** Forget every entry tied to `path` and free their frames — a read
+    * listed a new file set there. The frame entries built from
+    * `keepFramesOf` stay, for a frame of the new file set to be merged
+    * forward from; [[release]] frees them, and so does the next call here.
+    */
+  def invalidate(s: SparkSession, path: String, keepFramesOf: Option[Source] = None): Unit =
+    forget(s)(e => e.source.exists(_.path == path) && !(e.isFrame && e.source == keepFramesOf))
+
+  /** Forget every entry built from `source` and free their frames. */
+  def release(s: SparkSession, source: Source): Unit = forget(s)(_.source.contains(source))
 
   /** Forget and free every frame entry. Values hold no blocks and stay. */
   def flush(s: SparkSession): Unit = forget(s)(_.isFrame)

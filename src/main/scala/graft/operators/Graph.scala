@@ -125,18 +125,20 @@ object Graph {
     // for fault tolerance at 100 TB. Remaining cost profile at sf0.1 (600k edges, 16.5k
     // nodes): ~3.9 s one-time input materialization, ~0.27 s per
     // iteration — the marginal iteration cost is the scale-relevant term.
-    // edges are hash-partitioned on src before the checkpoint, but under
-    // AQE the layout does NOT survive it: the LogicalRDD reports unknown
-    // partitioning, so above spark.graft.graph.broadcastNodes every
-    // iteration's edge⋈rank join re-shuffles the edge list (an open
-    // ROADMAP item: keep a frame's layout through Graft.materialize).
+    // edges are hash-partitioned on src before the checkpoint, and the
+    // layout survives it (Graft.materialize): above
+    // spark.graft.graph.broadcastNodes each iteration's edge⋈rank join
+    // shuffles only the rank side to the edge list's partitioning. The
+    // count is explicit because a coalesced layout is one a join's other
+    // side cannot be shuffled to match, so both sides would move again.
     // repartition BEFORE distinct: hash(src) clusters every (src, dst)
     // duplicate into one partition, so the dedup aggregate runs on the
     // repartition's exchange instead of adding its own hash(src, dst)
-    // exchange first — one |E|-sized shuffle in the setup, not two.
+    // exchange first — one |E|-sized shuffle per query, in the setup.
+    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val e = Graft.materialize(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).dropDuplicates(), eager = false)
+      .repartition(parts, col("src")).dropDuplicates(), eager = false)
     val nodes = Graft.materialize(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct(), eager = false)

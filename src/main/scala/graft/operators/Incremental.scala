@@ -23,8 +23,24 @@ object Incremental {
       incoming: DataFrame,
       key: String,
       tsCol: String,
+      broadcastLatest: Boolean = true): DataFrame =
+    newerThan(latest(existing, key, tsCol), incoming, key, tsCol, broadcastLatest)
+
+  /** The watermark [[newerThan]] filters against: per `key`, the max of
+    * `tsCol` over `existing`, as (key, __latest_ts).
+    */
+  def latest(existing: DataFrame, key: String, tsCol: String): DataFrame =
+    existing.groupBy(col(key)).agg(max(col(tsCol)).as("__latest_ts"))
+
+  /** The `incoming` rows strictly newer than their key's [[latest]]
+    * watermark; a key without one passes whole.
+    */
+  def newerThan(
+      latest: DataFrame,
+      incoming: DataFrame,
+      key: String,
+      tsCol: String,
       broadcastLatest: Boolean = true): DataFrame = {
-    val latest = existing.groupBy(col(key)).agg(max(col(tsCol)).as("__latest_ts"))
     val latestSide = if (broadcastLatest) broadcast(latest) else latest
     incoming
       .join(latestSide, Seq(key), "left")

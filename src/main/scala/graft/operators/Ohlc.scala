@@ -34,14 +34,22 @@ object Ohlc {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** [[dailyBars]] widened, in the same single aggregate, by what the
-    * other per-entity daily series need, per (entity, day): `last_ts`, the
-    * day's last event time; per `latest` (name → type), the value of the
-    * day's last event of that type (null on a day without one); per `sums`
-    * type t, `sum_t`, the exact decimal(28,6) sum of its values, so totals
-    * over days equal a sum over the events bit for bit. Every day with an
-    * event has a row, so an as-of lookup of a typed value is a running
+  /** The MERGEABLE daily summary per (entity, day): [[dailyBars]] plus
+    * what the other per-entity daily series need — `last_ts`, the day's
+    * last event time; per `latest` (name → type), the value of the day's
+    * last event of that type (null on a day without one); per `sums` type
+    * t, `sum_t`, the exact decimal(28,6) sum of its values, so totals over
+    * days equal a sum over the events bit for bit. Every day with an event
+    * has a row, so an as-of lookup of a typed value is a running
     * last-non-null over the entity's days.
+    *
+    * Each value picked by time keeps its witness time (`first_ts` for
+    * open, `last_ts` for close, `<name>_ts` per `latest` entry), so two
+    * summaries of the same (entity, day) combine with [[mergeDaily]] into
+    * the summary of all their events. This is that merge over each event
+    * taken as a one-row summary ([[summaryRows]]): one aggregate, whether
+    * it summarizes the whole history or merges a stored summary with a new
+    * batch of events.
     */
   def dailySummary(
       events: DataFrame,
@@ -50,15 +58,55 @@ object Ohlc {
       entity: String = "user_id",
       tsCol: String = "ts",
       valueCol: String = "value",
+      typeCol: String = "event_type"): DataFrame =
+    mergeDaily(summaryRows(events, latest, sums, entity, tsCol, valueCol, typeCol),
+      latest, sums, entity)
+
+  /** Each event as the one-row [[dailySummary]] of its (entity, day). */
+  def summaryRows(
+      events: DataFrame,
+      latest: Seq[(String, String)],
+      sums: Seq[String],
+      entity: String = "user_id",
+      tsCol: String = "ts",
+      valueCol: String = "value",
       typeCol: String = "event_type"): DataFrame = {
     def of(t: String, c: String): Column = when(col(typeCol) === t, col(c))
-    val aggs = barAggs(tsCol, valueCol) ++
-      (max(col(tsCol)).as("last_ts") +:
-        latest.map { case (name, t) => max_by(of(t, valueCol), of(t, tsCol)).as(name) }) ++
-      sums.map(t => sum(of(t, valueCol).cast("decimal(28,6)")).as(s"sum_$t"))
-    events
-      .groupBy(col(entity), to_date(col(tsCol)).as("d"))
-      .agg(aggs.head, aggs.tail: _*)
+    val (ts, v) = (col(tsCol), col(valueCol))
+    events.select(Seq(col(entity), to_date(ts).as("d"), v.as("open"), ts.as("first_ts"),
+      v.as("high"), v.as("low"), v.as("close"), ts.as("last_ts"), lit(1L).as("volume")) ++
+      latest.flatMap { case (name, t) => Seq(of(t, valueCol).as(name), of(t, tsCol).as(s"${name}_ts")) } ++
+      sums.map(t => of(t, valueCol).cast("decimal(28,6)").as(s"sum_$t")): _*)
+  }
+
+  /** Merge any union of [[dailySummary]] / [[summaryRows]] frames with the
+    * same `latest` and `sums` into one row per (entity, day). Open, close
+    * and each `latest` value are picked by the (time, value) struct: two
+    * events sharing the extreme time would otherwise tie-break by arrival
+    * order, and a choice made differently in two partial summaries would
+    * make the merge differ from a summary of everything. The struct keys
+    * plan as a SortAggregate.
+    */
+  def mergeDaily(
+      parts: DataFrame,
+      latest: Seq[(String, String)],
+      sums: Seq[String],
+      entity: String = "user_id"): DataFrame = {
+    def witness(ts: String, v: String): Column = when(col(ts).isNotNull, struct(col(ts), col(v)))
+    val aggs = Seq(
+      min_by(col("open"), witness("first_ts", "open")).as("open"),
+      min(col("first_ts")).as("first_ts"),
+      max(col("high")).as("high"),
+      min(col("low")).as("low"),
+      max_by(col("close"), witness("last_ts", "close")).as("close"),
+      max(col("last_ts")).as("last_ts"),
+      sum(col("volume")).as("volume")) ++
+      latest.flatMap { case (name, _) =>
+        Seq(max_by(col(name), witness(s"${name}_ts", name)).as(name),
+          max(col(s"${name}_ts")).as(s"${name}_ts"))
+      } ++
+      sums.map(t => sum(col(s"sum_$t")).as(s"sum_$t"))
+    parts.groupBy(col(entity), col("d")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Fine-resolution bars — get_stock_fine_resolution
@@ -79,57 +127,6 @@ object Ohlc {
       .select(col(entity), col("w.start").as("bucket"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
   }
-
-  /** Bars as a MERGEABLE summary: the daily aggregate plus the open/close
-    * event times that witness it. With the witnesses kept, two partial bars
-    * for the same (entity, day) combine associatively — min_by on
-    * (open, open_ts), max_by on (close, close_ts), min/max/sum on the rest
-    * — so yesterday's persisted bar table and today's ingest batch merge
-    * with [[mergeBars]] instead of re-scanning the full tick history. At
-    * 100 TB this is the difference between an incremental refresh touching
-    * one day of ticks and a recompute touching all of them.
-    */
-  def mergeableBars(
-      events: DataFrame,
-      entity: String = "user_id",
-      tsCol: String = "ts",
-      valueCol: String = "value"): DataFrame =
-    events
-      .groupBy(col(entity), to_date(col(tsCol)).as("d"))
-      .agg(
-        // witness = (ts, value) struct: two ticks sharing the extreme
-        // timestamp would otherwise tie-break arbitrarily, and an
-        // arbitrary choice made differently in two partials breaks merge
-        // associativity (incremental refresh ≠ recompute). Cost: struct
-        // ordering keys plan as SortAggregate, not HashAggregate — the
-        // partial combine and bar-sized shuffle are unchanged, but each
-        // task sorts its slice; acceptable for the incremental path, which
-        // touches one ingest batch, not the full history
-        min_by(col(valueCol), struct(col(tsCol), col(valueCol))).as("open"),
-        min(col(tsCol)).as("open_ts"),
-        max(col(valueCol)).as("high"),
-        min(col(valueCol)).as("low"),
-        max_by(col(valueCol), struct(col(tsCol), col(valueCol))).as("close"),
-        max(col(tsCol)).as("close_ts"),
-        count(lit(1)).as("volume"))
-
-  /** Merge any union of [[mergeableBars]] frames (persisted table + new
-    * batches): one partial-aggregated groupBy over BAR-count rows — the
-    * tick stream never reappears. The result is again mergeable.
-    */
-  def mergeBars(parts: DataFrame, entity: String = "user_id"): DataFrame =
-    parts
-      .groupBy(col(entity), col("d"))
-      .agg(
-        // same struct tie-break as mergeableBars: equal witness times across
-        // partials must resolve identically to stay associative
-        min_by(col("open"), struct(col("open_ts"), col("open"))).as("open"),
-        min(col("open_ts")).as("open_ts"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), struct(col("close_ts"), col("close"))).as("close"),
-        max(col("close_ts")).as("close_ts"),
-        sum(col("volume")).as("volume"))
 
   /** Gap-fill over a continuous per-entity date spine with
     * last-observation-carried-forward — the reference's continuous date

@@ -3,6 +3,7 @@ package registry
 
 import graft.functions.Fns
 import graft.operators._
+import graft.sources.DailySummary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,35 +35,12 @@ object QueryKit {
   private[registry] def lineitemNtz(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).withColumn("l_shipdate", col("l_shipdate").cast("timestamp_ntz"))
 
-  /** The event types q_pivot_wide and q_unpivot spread into columns. */
-  private[registry] val pivotTypes = Seq("click", "error", "purchase", "signup", "view")
-
   /** The daily summary of the events table's current snapshot
-    * (Ohlc.dailySummary: the daily bars, each day's `last_ts`, its last
-    * purchase value as `shares` and last signup value as `outstanding`,
-    * and one `sum_<type>` per pivot type): built once per snapshot and
-    * shared by every daily-series key over it (and by Sinks' restates of
-    * derived tables). The frame is a lazy checkpoint — it fills in the
-    * first job that reads it and cuts the lineage there, so no shuffle
-    * stays reachable — owned by a [[StateCache]] entry tied to the
-    * snapshot, so the between-queries reaper keeps it and a later read of
-    * the events path that lists a changed file set frees it. A table
-    * without `event_type` (bare ticks) still gets its bars.
+    * ([[graft.sources.DailySummary]]): built once per snapshot, merged
+    * forward after an append, and shared by every daily-series key over it.
     */
-  private[registry] def daily(s: SparkSession, dir: String): DataFrame = {
-    val snap = Tables.eventsSnapshot(s, dir)
-    StateCache.frame(s, s"daily:$dir@${snap.source.fingerprint}", Some(snap.source)) {
-      Graft.materialize(dailySummary(Fns.normalizeTsNtz(snap.df, "ts")), eager = false)
-    }
-  }
-
-  /** The aggregate behind [[daily]], over normalized events. */
-  private[graft] def dailySummary(ev: DataFrame): DataFrame = {
-    val typed = ev.columns.contains("event_type")
-    Ohlc.dailySummary(ev,
-      if (typed) Seq("shares" -> "purchase", "outstanding" -> "signup") else Nil,
-      if (typed) pivotTypes else Nil)
-  }
+  private[registry] def daily(s: SparkSession, dir: String): DataFrame =
+    DailySummary.of(s, Tables.eventsSnapshot(s, dir))
 
   private[registry] def bars(s: SparkSession, dir: String): DataFrame =
     daily(s, dir).select("user_id", "d", "open", "high", "low", "close", "volume")
@@ -199,17 +177,18 @@ object QueryKit {
     s"${Graft.localScratchDir}/graft-index-${s.sparkContext.applicationId}"
 
   /** The bar store behind q_incremental_bars: the pre-cutoff history's
-    * mergeable bars persisted as day-partitioned parquet, built ONCE per
-    * (process, dataset). The query then measures what an incremental
-    * refresh actually costs — a bar-store read + the fresh batch's
-    * aggregate + a bar-sized merge — instead of silently re-deriving
+    * daily summary (bars and their witness times) persisted as
+    * day-partitioned parquet, built ONCE per (process, dataset). The query
+    * then measures what an incremental refresh actually costs — a
+    * bar-store read + one merge aggregate over the stored rows and the
+    * fresh batch's ticks — instead of silently re-deriving
     * history from ticks on every run (which models recompute, not
     * persistence).
     */
   private[registry] def sharedBarStore(s: SparkSession, dir: String): String =
     StateCache.value(s, s"barstore:$dir") {
       val path = s"${indexRoot(s)}/bars_${new java.io.File(dir).getName}"
-      Ohlc.mergeableBars(events(s, dir).where(col("ts") < tsNtz("2024-01-20")))
+      Ohlc.dailySummary(events(s, dir).where(col("ts") < tsNtz("2024-01-20")), Nil, Nil)
         .write.mode("overwrite").partitionBy("d").parquet(path)
       path
     }

@@ -4,6 +4,7 @@ package registry
 import graft.functions.Fns
 import graft.operators._
 import graft.registry.QueryKit._
+import graft.sources.DailySummary
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -366,7 +367,7 @@ object ReferenceQueries {
       // per-user totals of the daily per-type decimal sums: the decimal
       // sum is exact, so this equals pivotAgg(events, …, exactSumD) bit
       // for bit, without scanning the events
-      val totals = pivotTypes.map(t => sum(col(s"sum_$t")).cast("double").as(t))
+      val totals = DailySummary.eventTypes.map(t => sum(col(s"sum_$t")).cast("double").as(t))
       daily(s, dir).groupBy(col("user_id")).agg(totals.head, totals.tail: _*)
     },
       Oracle(
@@ -384,9 +385,9 @@ object ReferenceQueries {
       // relational op beside q_pivot_wide, checked against the DIRECT
       // long aggregate as the oracle
       PivotOps.melt(
-        PivotOps.pivotAgg(events(s, dir), "user_id", "event_type", pivotTypes,
+        PivotOps.pivotAgg(events(s, dir), "user_id", "event_type", DailySummary.eventTypes,
           "value", exactSumD),
-        "user_id", pivotTypes,
+        "user_id", DailySummary.eventTypes,
         keyName = "event_type", valueName = "total"),
       Oracle(
         """SELECT user_id, event_type,
@@ -536,15 +537,15 @@ object ReferenceQueries {
           |ASOF LEFT JOIN outst ON b.user_id = outst.user_id AND b.d >= outst.d""".stripMargin)),
 
     QuerySpec("q_incremental_bars", (s, dir) => {
-      // incremental refresh through the mergeable-bar algebra: the history
-      // half REALLY persists (day-partitioned parquet bar store, built once
-      // per process like the ANN indexes), so what this query measures is
-      // the incremental path it models — read stored BARS, aggregate only
-      // the fresh batch's ticks, merge — never a re-derivation of history.
-      // Oracle = full recompute (they must agree).
+      // incremental refresh through the daily summary's merge: the history
+      // half REALLY persists (day-partitioned parquet summary store, built
+      // once per process like the ANN indexes), so what this query measures
+      // is the incremental path it models — read stored summary rows, take
+      // each fresh tick as a one-row summary, merge in one aggregate — never
+      // a re-derivation of history. Oracle = full recompute (they must agree).
       val stored = s.read.parquet(sharedBarStore(s, dir))
-      val fresh = Ohlc.mergeableBars(events(s, dir).where(col("ts") >= tsNtz("2024-01-20")))
-      Ohlc.mergeBars(stored.unionByName(fresh))
+      val fresh = Ohlc.summaryRows(events(s, dir).where(col("ts") >= tsNtz("2024-01-20")), Nil, Nil)
+      Ohlc.mergeDaily(stored.unionByName(fresh), Nil, Nil)
         .select("user_id", "d", "open", "high", "low", "close", "volume")
     },
       Oracle(

@@ -101,9 +101,14 @@ object Sinks {
     * strictly newer than the target's per-key max(ts) (the reference's
     * check_table_append_compatibility + to_sql append), then append. On an
     * empty/absent target, everything is new. The target is read through
-    * [[Sources.readParquet]]: an unchanged target reuses its last listing
-    * and schema, and the first read after the append lists the new file
-    * set.
+    * [[Sources.parquetSnapshot]]: an unchanged target reuses its last
+    * listing and schema, and the first read after the append lists the new
+    * file set.
+    *
+    * The watermark comes from the target's live [[DailySummary]] when
+    * there is one (`max(last_ts)` per `user_id`, see
+    * [[DailySummary.watermark]]): no scan of the store. Without one, it is
+    * the per-key max over a scan of the target, as before.
     */
   def appendNewerThan(
       spark: SparkSession,
@@ -113,8 +118,10 @@ object Sinks {
       tsCol: String): Unit = {
     val fresh =
       try {
-        val existing = Sources.readParquet(spark, path)
-        Incremental.newerThanExisting(existing, incoming, key, tsCol)
+        val snap = Sources.parquetSnapshot(spark, path)
+        val latest = DailySummary.watermark(spark, snap, key, tsCol)
+          .getOrElse(Incremental.latest(snap.df, key, tsCol))
+        Incremental.newerThan(latest, incoming, key, tsCol)
       } catch {
         // only "target doesn't exist yet" means first write — anything else
         // (corrupt files, permissions) must surface

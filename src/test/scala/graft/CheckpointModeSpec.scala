@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioningLike, Partitioning}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph}
 
@@ -223,5 +225,85 @@ class CheckpointModeSpec extends SparkSpec {
     }
     run()
     withReliableCheckpoints(run())
+  }
+
+  // ---- the layout a frame keeps through Graft.materialize ----
+
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The partitioning the checkpoint behind `df` declares. */
+  private def layout(df: DataFrame): Partitioning =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.outputPartitioning }.get
+
+  private def partitions(df: DataFrame): Int =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd.getNumPartitions }.get
+
+  test("a materialized frame keeps its hash layout under both modes with AQE on") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    val df = spark.range(0, 2000).select(($"id" % 37).as("k"), $"id".as("v")).repartition($"k")
+    val want = rows(df.groupBy("k").agg(sum("v")))
+    def check(mode: String): Unit = for (eager <- Seq(false, true)) {
+      val m = Graft.materialize(df, eager)
+      layout(m) match {
+        case h: HashPartitioningLike =>
+          assert(h.expressions.map(_.toString).exists(_.startsWith("k#")), s"$mode: $h")
+          assert(h.numPartitions === partitions(m), s"$mode: $h")
+        case other => fail(s"$mode, eager=$eager: $other")
+      }
+      val agg = m.groupBy("k").agg(sum("v"))
+      val plan = agg.queryExecution.executedPlan.toString()
+      assert(!plan.contains("Exchange"), s"$mode, eager=$eager:\n$plan")
+      assert(rows(agg) == want, s"$mode, eager=$eager")
+    }
+    check("local")
+    withReliableCheckpoints(check("reliable"))
+  }
+
+  test("a join of kept-layout frames with different coalescing returns the unpartitioned join") {
+    import spark.implicits._
+    val frames = Seq(
+      spark.range(0, 20000).select(($"id" % 101).as("k"), $"id".as("a")),
+      spark.range(0, 300).select(($"id" % 101).as("k"), ($"id" * 7).as("b")),
+      spark.range(0, 1000).select(($"id" % 53).as("k"), ($"id" + 1).as("c")))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // three layouts of one key: AQE-coalesced to a few partitions, to
+      // one, and an uncoalesced explicit count
+      val kept = Seq(
+        withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "48k",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
+          Graft.materialize(frames(0).repartition($"k"), eager = true)
+        },
+        Graft.materialize(frames(1).repartition($"k"), eager = true),
+        Graft.materialize(frames(2).repartition(3, $"k"), eager = true))
+      val layouts = kept.map(layout)
+      assert(layouts.map(_.numPartitions).distinct.size === 3, layouts)
+      layouts.foreach(l => assert(l.isInstanceOf[HashPartitioningLike], l))
+      for (i <- 0 until 3; j <- i + 1 until 3)
+        assert(rows(kept(i).join(kept(j), "k")) == rows(frames(i).join(frames(j), "k")), (i, j))
+    }
+  }
+
+  test("distributed pagerank over the broadcast cap shuffles the edge list once per query") {
+    import spark.implicits._
+    val raw = for (i <- 0L until 30L; j <- 0L until 30L if (i * 7 + j * 3) % 5 != 0) yield (i, j)
+    val edges = (raw ++ raw.take(100)).toDF("src", "dst")
+    def ranks(): Set[String] = rows(Graph.pagerank(edges, iters = 3, localSolveMaxEdges = 0))
+    val broadcastRanks = ranks()
+    withConf("spark.graft.graph.broadcastNodes" -> "0", "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (shuffledRanks, probe) = JobProbe.during(spark)(ranks())
+      // every other shuffle moves node-sized rows; only the setup's
+      // repartition writes the edge list
+      assert(probe.shuffleRecords.count(_ >= raw.size) === 1, probe.shuffleRecords)
+      assert(shuffledRanks == broadcastRanks)
+    }
   }
 }

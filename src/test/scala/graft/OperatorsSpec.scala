@@ -280,40 +280,56 @@ class OperatorsSpec extends SparkSpec {
     assert(out(1).getDouble(1) === 5.0)
   }
 
+  private val summaryLatest = Seq("shares" -> "purchase", "outstanding" -> "signup")
+
+  private def summaryRowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toSeq).toSet
+
   test("mergeable bars: any split of the tick stream merges to the full recompute") {
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
       .withColumn("ts", $"ts".cast("timestamp"))
-    val full = Ohlc.dailyBars(ev)
-      .select("user_id", "d", "open", "high", "low", "close", "volume")
-      .collect().map(_.toSeq).toSet
-    // three arbitrary slices (by event id mod) — not even time-contiguous
-    val parts = (0 to 2).map(i => Ohlc.mergeableBars(ev.where($"event_id" % 3 === i)))
-    val merged = Ohlc.mergeBars(parts.reduce(_ union _))
-      .select("user_id", "d", "open", "high", "low", "close", "volume")
-      .collect().map(_.toSeq).toSet
-    assert(merged === full)
+    val sums = Seq("click", "purchase")
+    val full = Ohlc.dailySummary(ev, summaryLatest, sums)
+    // the summary's bars are the daily bars
+    val bars = Seq("user_id", "d", "open", "high", "low", "close", "volume")
+    assert(summaryRowSet(full.select(bars.map(col): _*)) ===
+      summaryRowSet(Ohlc.dailyBars(ev).select(bars.map(col): _*)))
+    // three arbitrary slices (by event id mod) — not even time-contiguous —
+    // summarized apart, then merged
+    val parts = (0 to 2).map(i => Ohlc.dailySummary(ev.where($"event_id" % 3 === i), summaryLatest, sums))
+    val merged = Ohlc.mergeDaily(parts.reduce(_ unionByName _), summaryLatest, sums)
+    assert(summaryRowSet(merged) === summaryRowSet(full))
+    // a stored summary merged with raw ticks, each a one-row summary
+    val forward = Ohlc.mergeDaily(parts.head.unionByName(
+      Ohlc.summaryRows(ev.where($"event_id" % 3 =!= 0), summaryLatest, sums)), summaryLatest, sums)
+    assert(summaryRowSet(forward) === summaryRowSet(full))
   }
 
   test("mergeable bars: duplicate extreme timestamps split across partials still merge deterministically") {
     // two ticks share the day's min AND max instant, landing in different
-    // partial frames — the struct tie-break must pick the same open/close
-    // as a single-pass aggregate over everything
+    // partial frames — the (ts, value) struct tie-break must pick the same
+    // open/close/shares as the full build over everything
     val ev = Seq(
       (1L, ts("2024-01-01 09:00:00"), 9.0),
       (1L, ts("2024-01-01 09:00:00"), 5.0),
       (1L, ts("2024-01-01 16:00:00"), 7.0),
       (1L, ts("2024-01-01 16:00:00"), 3.0)
-    ).toDF("user_id", "ts", "value")
-    val single = Ohlc.mergeableBars(ev)
-      .select("user_id", "d", "open", "close").collect().map(_.toSeq).toSet
+    ).toDF("user_id", "ts", "value").withColumn("event_type", lit("purchase"))
+    val single = Ohlc.dailySummary(ev, summaryLatest, Nil)
     for (splitBit <- 0 to 1) {
-      val a = Ohlc.mergeableBars(ev.where($"value" % 2 === splitBit))
-      val b = Ohlc.mergeableBars(ev.where($"value" % 2 =!= splitBit))
-      val merged = Ohlc.mergeBars(a.union(b))
-        .select("user_id", "d", "open", "close").collect().map(_.toSeq).toSet
-      assert(merged === single, s"split $splitBit")
+      val a = ev.where($"value" % 2 === splitBit)
+      val b = ev.where($"value" % 2 =!= splitBit)
+      val merged = Ohlc.mergeDaily(Ohlc.dailySummary(a, summaryLatest, Nil)
+        .unionByName(Ohlc.dailySummary(b, summaryLatest, Nil)), summaryLatest, Nil)
+      assert(summaryRowSet(merged) === summaryRowSet(single), s"split $splitBit")
+      val forward = Ohlc.mergeDaily(Ohlc.dailySummary(a, summaryLatest, Nil)
+        .unionByName(Ohlc.summaryRows(b, summaryLatest, Nil)), summaryLatest, Nil)
+      assert(summaryRowSet(forward) === summaryRowSet(single), s"split $splitBit, ticks")
     }
-    assert(single.head(2) === 5.0 && single.head(3) === 7.0) // min-value / max-value ties
+    val r = single.head()
+    // min-value / max-value ties
+    assert((r.getAs[Double]("open"), r.getAs[Double]("close"), r.getAs[Double]("shares")) === (5.0, 7.0, 7.0))
+    assert(r.isNullAt(r.fieldIndex("outstanding")))
   }
 
   test("HLL sketch per-day union estimates within 5% of exact distinct") {

@@ -24,24 +24,28 @@ class PlanInvariantsSpec extends SparkSpec {
 
   test("time-series aggregates partial-combine: the shuffle moves bars, not ticks") {
     // the bars keys read one checkpointed daily summary frame per events
-    // snapshot (QueryKit.daily); its build, like plain daily bars, is one
+    // snapshot (DailySummary); its build, like plain daily bars, is one
     // tick-level aggregate: a partial + final pair around one exchange —
-    // no raw-tick repartition anywhere
+    // no raw-tick repartition anywhere. The summary then lays its BARS out
+    // by user_id: a second exchange, above the final aggregate
     val ticks = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    for (built <- Seq(graft.operators.Ohlc.dailyBars(ticks), QueryKit.dailySummary(ticks))) {
-      val build = built.queryExecution.executedPlan.toString()
-      assert(count(build, "Exchange") === 1, build)
-      assert(count(build, "HashAggregate") === 2, s"expected partial+final:\n$build")
-    }
+    val bars = graft.operators.Ohlc.dailyBars(ticks).queryExecution.executedPlan.toString()
+    assert(count(bars, "Exchange") === 1, bars)
+    assert(count(bars, "HashAggregate") === 2, s"expected partial+final:\n$bars")
+    val build = graft.sources.DailySummary.build(ticks).queryExecution.executedPlan.toString()
+    assert(count(build, "Exchange") === 2, build)
+    assert(count(build, "Aggregate\\(") === 2, s"expected partial+final:\n$build")
+    val layout = build.indexOf("Exchange hashpartitioning(user_id")
+    assert(layout >= 0 && layout < build.indexOf("Aggregate("), build)
     // projections of the bars read the shared frame: no exchange, no scan
     for (q <- Seq("q_ohlc_daily", "q_dollar_volume", "q_gap_on_peak")) {
       val p = plan(q)
       assert(p.contains("Scan ExistingRDD") && !p.contains("FileScan"), s"$q:\n$p")
       assert(count(p, "Exchange") === 0, s"$q:\n$p")
     }
-    // windowed derivatives add exactly one exchange, carrying bars
+    // windowed derivatives over the user-laid-out frame add no exchange
     for (q <- Seq("q_sma", "q_drawdown")) {
-      assert(count(plan(q), "Exchange") === 1, s"$q:\n${plan(q)}")
+      assert(count(plan(q), "Exchange") === 0, s"$q:\n${plan(q)}")
     }
   }
 
@@ -66,9 +70,14 @@ class PlanInvariantsSpec extends SparkSpec {
     val (_, unchanged) = JobProbe.during(spark)(reference.foreach(k => ref(k).collect()))
     assert(!unchanged.rddNames.contains("FileScanRDD"), unchanged.rddNames)
     // the sector price's as-of lookups are one window over the summary:
-    // a single shuffle, no union of filtered aggregates
+    // no shuffle (the summary is laid out by user), no union of filtered
+    // aggregates; nor do the other per-user reference keys shuffle
     val sector = ref("q_sector_price").queryExecution.executedPlan.toString()
-    assert(this.count(sector, "Exchange hashpartitioning") === 1, sector)
+    assert(this.count(sector, "Exchange") === 0, sector)
+    for (k <- Seq("q_sma", "q_gap_off_peak", "q_pct_change_ndays", "q_pivot_wide", "q_latest_date")) {
+      val p = ref(k).queryExecution.executedPlan.toString()
+      assert(this.count(p, "Exchange") === 0, s"$k:\n$p")
+    }
     assert(!sector.contains("Union"), sector)
     // an append changes the file set: the first bars key scans the store again
     graft.sources.Sinks.appendNewerThan(spark, ticks.where(col("ts") >= cut), events, "user_id", "ts")
@@ -111,7 +120,11 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("declared-vocabulary pivot is a single-exchange aggregate") {
-    assert(count(plan("q_pivot_wide"), "Exchange") === 1)
+    // over the user-laid-out daily summary the per-user totals need no
+    // exchange at all
+    val p = plan("q_pivot_wide")
+    assert(count(p, "Exchange") === 0, p)
+    assert(count(p, "HashAggregate") === 2, p)
   }
 
   test("per-group top-k plans the custom operator, not a window sort") {
@@ -162,7 +175,7 @@ class PlanInvariantsSpec extends SparkSpec {
   test("projections prune the parquet scan to the referenced columns") {
     // the daily summary (the one events scan of the daily-series keys)
     // reads the 4 columns it aggregates, not the table
-    val p = QueryKit.dailySummary(
+    val p = graft.sources.DailySummary.build(
       graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
       .queryExecution.executedPlan.toString()
     val read = "ReadSchema: [^\\n]+".r.findFirstIn(p).getOrElse(fail(p))
@@ -277,30 +290,30 @@ class PlanInvariantsSpec extends SparkSpec {
 
   test("incremental bar merge reads STORED bars — only the fresh batch scans ticks") {
     val p = plan("q_incremental_bars")
-    // the history half must come from the persisted day-partitioned bar
-    // store (a plain parquet scan of bar rows — no aggregate above it),
-    // leaving exactly one mergeableBars partial+final pair for the fresh
-    // batch plus the merge's pair: 4 aggregates, 2 partial_min_by, and
-    // two exchanges (fresh bars + merge). A third min_by or aggregate
-    // means history is being re-derived from ticks again.
+    // the history half must come from the persisted day-partitioned
+    // summary store (a plain parquet scan of summary rows — no aggregate
+    // above it), and the fresh batch's ticks enter the merge as one-row
+    // summaries: ONE partial+final pair, one partial_min_by and one
+    // exchange. A second aggregate pair means history is being re-derived
+    // from ticks again.
     assert(!p.contains("SortMergeJoin"), p)
     assert(p.contains("/bars_"), p) // history = bar-store scan
-    assert(count(p, "Aggregate\\(") === 4, p)
-    assert(count(p, "partial_min_by") === 2, p)
-    assert(count(p, "Exchange") === 2, p)
+    assert(count(p, "Aggregate\\(") === 2, p)
+    assert(count(p, "partial_min_by") === 1, p)
+    assert(count(p, "Exchange") === 1, p)
   }
 
   test("round-5 analytics keep their scale shapes") {
-    // EWMA: all ten lag terms share ONE window pass over ONE bar exchange
-    // (over the shared bars frame, like q_sma)
+    // EWMA: all ten lag terms share ONE window pass over the shared bars
+    // frame, laid out by user, like q_sma: no exchange
     val ewma = plan("q_ewma")
-    assert(count(ewma, "Exchange") === 1, ewma)
+    assert(count(ewma, "Exchange") === 0, ewma)
     assert(count(ewma, "Window ") === 1, ewma)
-    // rolling volatility: same window family as q_sma — ONE entity-window
-    // exchange over the shared bars frame, which the stacked lag and
-    // frame-sum Window operators share
+    // rolling volatility: same window family as q_sma — the stacked lag
+    // and frame-sum Window operators share the bars frame's user layout:
+    // no exchange
     val vol = plan("q_volatility")
-    assert(count(vol, "Exchange hashpartitioning") === 1, vol)
+    assert(count(vol, "Exchange hashpartitioning") === 0, vol)
     assert(count(vol, "Window ") === 2, vol)
     // corr matrix: the day-aligned self-join of the top-N series is
     // broadcast — no sort-merge join, no cartesian
@@ -376,10 +389,10 @@ class PlanInvariantsSpec extends SparkSpec {
     // shuffle, but never a nested-loop or cartesian
     val td = plan("q_table_diff")
     assert(!td.contains("BroadcastNestedLoopJoin") && !td.contains("CartesianProduct"), td)
-    // lag features: six window functions share the entityDay sort — the
-    // plan pays ONE window-partition exchange over the bars
+    // lag features: six window functions share the entityDay sort over the
+    // bars frame's user layout — no window-partition exchange
     val lf = plan("q_lag_features")
-    assert(count(lf, "Exchange") === 1, lf) // one window exchange over the bars frame
+    assert(count(lf, "Exchange") === 0, lf)
   }
 
   test("round-9 operators keep their scale shapes") {
