@@ -105,25 +105,6 @@ object QueryDag {
     outputs.toMap
   }
 
-  /** Restatement: recompute the `changed` stages and their transitive
-    * dependents, reusing `prior` outputs for every untouched stage.
-    */
-  def restate(spark: SparkSession, sfDir: String, stages: Seq[Stage],
-              prior: Map[String, DataFrame], changed: Set[String]): Map[String, DataFrame] = {
-    changed.foreach(c => require(stages.exists(_.name == c), s"unknown stage '$c'"))
-    val dirty = affected(stages, changed)
-    stages.filterNot(s => dirty(s.name)).foreach(s => require(prior.contains(s.name),
-      s"restate needs the prior output of untouched stage '${s.name}'"))
-    val outputs = scala.collection.mutable.Map[String, DataFrame]()
-    topoOrder(stages).foreach { st =>
-      outputs(st.name) =
-        if (!dirty(st.name)) prior(st.name)
-        else Graft.materialize(st.build(spark, sfDir, st.deps.map(d => d -> outputs(d)).toMap),
-          eager = true)
-    }
-    outputs.toMap
-  }
-
   // ---------------------------------------------------------------------
   // Persisted runs — the FAILURE-RECOVERY face. [[run]]'s checkpoints are
   // session-lived; a driver crash between stages loses everything. Here

@@ -186,8 +186,8 @@ object Fns {
         when(isMarketDay(c, cal), c).otherwise(acc) }
 }
 
-/** A trading calendar as a data DIMENSION rather than code: the closure
-  * dates plus the covered range, with NULL-outside-range semantics
+/** A trading calendar as data rather than code: the closure dates plus
+  * the covered range, with NULL-outside-range semantics
   * preserved (an unlisted date beyond the range is UNKNOWN, not open —
   * the guard a static list needs that a live
   * `pandas_market_calendars`-style resolver doesn't). The reference keeps
@@ -205,24 +205,4 @@ object MarketCalendar {
   /** The built-in NYSE closure calendar 2020–2026 ([[Fns.marketHolidays]]). */
   val nyse: MarketCalendar =
     MarketCalendar(Fns.marketHolidays, Fns.marketCalendarStart, Fns.marketCalendarEnd)
-
-  /** Load a calendar from an exchange-calendar dimension table with one
-    * row per covered day: (`dateCol` DATE, `openCol` BOOLEAN). Coverage is
-    * the table's [min, max] date; closures are the non-open rows (weekend
-    * rows are tolerated — the day-of-week test already excludes them).
-    * The collect is calendar-sized (hundreds of rows/decade) — driver
-    * model state like every codebook here, never data-sized.
-    */
-  def fromDF(cal: org.apache.spark.sql.DataFrame,
-             dateCol: String = "d", openCol: String = "is_open"): MarketCalendar = {
-    val rows = cal
-      .select(col(dateCol).cast("date").cast("string").as("d"),
-        col(openCol).cast("boolean").as("o"))
-      .collect().map(r => (r.getString(0), r.getBoolean(1)))
-    require(rows.nonEmpty, "empty market calendar table")
-    MarketCalendar(
-      holidays = rows.filter(!_._2).map(_._1).toSeq.sorted,
-      start = rows.map(_._1).min,
-      end = rows.map(_._1).max)
-  }
 }

@@ -142,42 +142,6 @@ object AsOfJoin {
       .drop("__v", "__t")
   }
 
-  /** Size-adaptive as-of — the skew-bounded entry point. The union+window
-    * shape shuffles BOTH sides once by key, and AQE cannot help a skewed
-    * window the way it helps a skewed join: skew handling splits join
-    * partitions, but a window's partitionBy(key) frame must see the whole
-    * key in one task, so one pathological key (one ticker = 30% of the
-    * ticks) serializes into a single straggler at scale. When the right
-    * side is dimension-sized — the overwhelmingly common as-of shape:
-    * sparse snapshots against a dense fact stream — [[asOfBroadcast]]
-    * sidesteps the exposure entirely: the fact side is never shuffled or
-    * sorted, so a hot fact key costs nothing beyond its scan. This wrapper
-    * makes that switch automatically: dims at or under `maxBroadcastRows`
-    * (CBO row estimate when available, one cheap dim-side count otherwise)
-    * take the broadcast path; larger dims fall back to union+window, where
-    * the residual hot-key exposure should be bounded upstream by
-    * pre-aggregating facts (the two-stage bar shape) before windowing.
-    * `valueCol` is cast to double on both paths so the switch never changes
-    * the output type.
-    */
-  def asOfAuto(
-      facts: DataFrame,
-      dims: DataFrame,
-      key: String,
-      tsCol: String,
-      valueCol: String,
-      outCol: String,
-      maxBroadcastRows: Long = 1000 * 1000): DataFrame = {
-    val dimRows = dims.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.longValue).getOrElse(dims.select(col(key)).count())
-    if (dimRows <= maxBroadcastRows)
-      asOfBroadcast(facts, dims, key, tsCol, valueCol, outCol)
-    else
-      asOf(facts,
-        dims.select(col(key), col(tsCol), col(valueCol).cast("double").as(outCol)),
-        key, tsCol, Seq(outCol))
-  }
-
   /** Broadcast as-of: when the right side is dimension-sized (the
     * reference's share snapshots — thousands of rows), the union+window
     * path still shuffles the FACT table on the key. Here the dim packs

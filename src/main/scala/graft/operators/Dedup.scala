@@ -229,10 +229,6 @@ object Dedup {
     intra.join(seen.unionByName(exactSeen), Seq(idCol), "left_anti")
   }
 
-  /** Character k-shingle set of `textCol` (distinct). */
-  def charShingles(textCol: String, k: Int): Column = expr(
-    s"array_distinct(transform(sequence(1, greatest(length($textCol) - ${k - 1}, 1)), i -> substring($textCol, i, $k)))")
-
   /** Whitespace tokens of `textCol`, lowercased. */
   def tokens(textCol: String): Column =
     split(trim(lower(col(textCol))), "\\s+")

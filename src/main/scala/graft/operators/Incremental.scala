@@ -33,7 +33,9 @@ object Incremental {
     existing.groupBy(col(key)).agg(max(col(tsCol)).as("__latest_ts"))
 
   /** The `incoming` rows strictly newer than their key's [[latest]]
-    * watermark; a key without one passes whole.
+    * watermark; a key without one passes whole. The rows keep `incoming`'s
+    * column order (the USING join would put the key first), so files
+    * appended to a store read back with the store's schema.
     */
   def newerThan(
       latest: DataFrame,
@@ -45,17 +47,6 @@ object Incremental {
     incoming
       .join(latestSide, Seq(key), "left")
       .where(col("__latest_ts").isNull || col(tsCol) > col("__latest_ts"))
-      .drop("__latest_ts")
-  }
-
-  /** Global (un-keyed) variant — the literal reference behavior for a single
-    * ticker table: filter rows after the table-wide latest date.
-    */
-  def newerThanGlobal(existing: DataFrame, incoming: DataFrame, tsCol: String): DataFrame = {
-    val latest = existing.agg(max(col(tsCol)).as("__latest_ts"))
-    incoming
-      .join(broadcast(latest))
-      .where(col("__latest_ts").isNull || col(tsCol) > col("__latest_ts"))
-      .drop("__latest_ts")
+      .select(incoming.columns.map(col).toIndexedSeq: _*)
   }
 }

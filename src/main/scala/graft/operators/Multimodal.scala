@@ -22,21 +22,6 @@ object Multimodal {
   case class MediaFeatures(doc_id: Long, kind: String, byte_len: Int, checksum: Long,
                            features: Array[Double])
 
-  /** Attach a binary payload + typed metadata to each document. In
-    * production the payload column comes straight from parquet; here it is
-    * derived from text so the pipeline is runnable.
-    */
-  def attachBinary(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      col("text").cast("binary").as("payload"),
-      struct(
-        when(col("doc_id") % 3 === 0, "image")
-          .when(col("doc_id") % 3 === 1, "audio")
-          .otherwise("video").as("kind"),
-        (col("n_chars") % 1920).cast("int").as("width"),
-        (col("n_chars") % 1080).cast("int").as("height")).as("meta"))
-
   /** Deterministic fake decode: a real implementation would decode the
     * payload (image/audio/video) and emit a fixed-length feature vector.
     * The fake folds bytes into a 16-bin histogram — stable, cheap, testable.
@@ -93,31 +78,6 @@ object Multimodal {
           Frame(r.doc_id, c, math.max(until - from, 0), crc)
         }
       }
-    }
-  }
-
-  /** Resize stub: a real implementation decodes, scales to (w, h) and
-    * re-encodes; the fake deterministically resamples the byte payload to
-    * the target pixel budget so downstream schema/size expectations hold.
-    */
-  def resizeStub(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val target = math.max(1, w * h / 64)
-    val out = new Array[Byte](target)
-    if (payload.nonEmpty) {
-      var i = 0
-      while (i < target) {
-        out(i) = payload((i.toLong * payload.length / target).toInt)
-        i += 1
-      }
-    }
-    out
-  }
-
-  /** Batch resize over media records: metadata updates with the payload. */
-  def resize(media: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map(r => r.copy(payload = resizeStub(r.payload, w, h), width = w, height = h))
     }
   }
 

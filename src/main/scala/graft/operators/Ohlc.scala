@@ -23,18 +23,7 @@ object Ohlc {
     max_by(col(valueCol), col(tsCol)).as("close"),
     count(lit(1)).as("volume"))
 
-  def dailyBars(
-      events: DataFrame,
-      entity: String = "user_id",
-      tsCol: String = "ts",
-      valueCol: String = "value"): DataFrame = {
-    val aggs = barAggs(tsCol, valueCol)
-    events
-      .groupBy(col(entity), to_date(col(tsCol)).as("d"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The MERGEABLE daily summary per (entity, day): [[dailyBars]] plus
+  /** The MERGEABLE daily summary per (entity, day): the OHLCV bar plus
     * what the other per-entity daily series need — `last_ts`, the day's
     * last event time; per `latest` (name → type), the value of the day's
     * last event of that type (null on a day without one); per `sums` type

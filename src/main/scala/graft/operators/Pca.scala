@@ -160,14 +160,4 @@ object Pca {
     }
     df.select(col(idCol) +: pcs: _*)
   }
-
-  /** Explained-variance diagnostic (the scree row): eigenvalues of the fit
-    * covariance and each component's share of total variance, as data.
-    */
-  def explainedVariance(fit: DataFrame, vecCol: String, k: Int): Seq[(Int, Double, Double)] = {
-    val (_, _, cov) = moments(fit, vecCol)
-    val (values, _) = eigenSym(cov)
-    val total = values.sum
-    (0 until k).map(i => (i + 1, values(i), values(i) / total))
-  }
 }

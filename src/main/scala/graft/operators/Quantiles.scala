@@ -45,11 +45,11 @@ object Quantiles {
 
   private val B = 8 // bits per pass; 256-bucket histograms, 64/B passes
 
-  /** Sentinel standing in for a NULL group key in [[orderStatistics]]'s
-    * public rank map (equi-joins drop null keys). INTERNALLY keys are
-    * carried with a marker byte — "\u0000" for the null group, "\u0001" +
-    * key for real groups — so a real StringType key that happens to equal
-    * this sentinel can never merge with the null group.
+  /** Sentinel standing in for a NULL group key in [[quantileContWithCounts]]'s
+    * count map (equi-joins drop null keys). INTERNALLY keys are carried
+    * with a marker byte — "\u0000" for the null group, "\u0001" + key for
+    * real groups — so a real StringType key that happens to equal this
+    * sentinel can never merge with the null group.
     */
   val NullKey = "\u0000NULL"
 
@@ -99,21 +99,6 @@ object Quantiles {
   private def tooManyGroups(keyCol: String, cap: Long): String =
     s"quantileCont over '$keyCol' has more than $cap groups — per-group quantiles are " +
       s"driver-sized output; group by a coarser key or raise spark.graft.quantiles.maxGroups"
-
-  /** Exact 0-based order statistics per group: for each group key and
-    * each requested rank, the rank-th smallest value (NULL values
-    * excluded; a NULL group key is addressed by the [[NullKey]] sentinel —
-    * use [[quantileCont]] for null-group-aware output). Requesting a key
-    * with no rows fails loudly.
-    */
-  def orderStatistics(df: DataFrame, keyCol: String, valueCol: String,
-                      ranksOf: Map[String, Seq[Long]]): Map[(String, Long), Double] = {
-    val base = df.where(col(valueCol).isNotNull)
-      .select(encCol(keyCol).as("__k"),
-        graft.plans.Exprs.doubleSortBits(col(valueCol).cast("double")).as("__u"))
-    val enc = ranksOf.map { case (k, rs) => encRaw(k) -> rs }
-    orderStatsEnc(base, enc).map { case ((k, r), v) => (decEnc(k), r) -> v }
-  }
 
   /** Bisection core over a pre-encoded base (`__k` encoded string key,
     * `__u` order-preserving bits). Keys in `ranksOf` and in the result are
@@ -353,12 +338,11 @@ object Quantiles {
   /** The reference side of a PSI monitor, computed once: the k-quantile
     * bin bounds and the SMOOTHED reference proportion per (group, bin)
     * (`__p`, Laplace (c + 0.5)/(n + k/2)) — both model-sized (group × k
-    * rows). A streaming monitor materializes these at build time and
-    * scores every micro-batch against them ([[psiAgainst]]); the batch
-    * [[populationStability]] is exactly that composition.
+    * rows), scored against by [[psiAgainst]]; [[populationStability]] is
+    * that composition.
     */
-  def psiReference(reference: DataFrame, keyCol: String, valueCol: String,
-                   k: Int = 10): (DataFrame, DataFrame) = {
+  private def psiReference(reference: DataFrame, keyCol: String, valueCol: String,
+                           k: Int = 10): (DataFrame, DataFrame) = {
     require(k >= 2 && k <= 256, "need 2 <= k <= 256 bins")
     val qs = (1 until k).map(i => i.toDouble / k -> s"__b$i")
     val bounds = quantileCont(reference, keyCol, valueCol, qs)
@@ -381,8 +365,8 @@ object Quantiles {
     * reference emit nothing — a new entity has no reference distribution
     * to drift from.
     */
-  def psiAgainst(current: DataFrame, keyCol: String, valueCol: String, k: Int,
-                 bounds: DataFrame, refProps: DataFrame): DataFrame = {
+  private def psiAgainst(current: DataFrame, keyCol: String, valueCol: String, k: Int,
+                         bounds: DataFrame, refProps: DataFrame): DataFrame = {
     val cc = binCounts(current, bounds, keyCol, valueCol)
     val filled = refProps
       .join(broadcast(cc), Seq("__k", "bin"), "left")
@@ -394,35 +378,6 @@ object Quantiles {
       .select(col("__k"), ((col("__p") - q) * log(col("__p") / q)).as("__term"))
       .groupBy(col("__k").as(keyCol))
       .agg(round(sum(col("__term").cast("decimal(28,12)")).cast("double"), 6).as("psi"))
-  }
-
-  /** Grid-KS of `current` against a [[psiReference]] bounds frame — the
-    * sup-norm companion to [[psiAgainst]]. The reference's CDF at its own
-    * i/k-th quantile bound is i/k BY CONSTRUCTION, so only the current
-    * side needs counting: one pass computes, per group, the fraction of
-    * rows at or below each bound, and KS_grid = max_i |F_cur(b_i) − i/k| —
-    * within 1/k of the exact two-sample statistic, with model-sized state
-    * (group × k) and no access to the reference rows at score time.
-    * Groups absent from the reference emit nothing (same contract as PSI).
-    */
-  def ksAgainst(current: DataFrame, keyCol: String, valueCol: String, k: Int,
-                bounds: DataFrame): DataFrame = {
-    val boundCols = bounds.columns.filter(_.startsWith("__b"))
-      .sortBy(_.drop(3).toInt)
-    val pre = current.where(col(valueCol).isNotNull)
-      .join(broadcast(bounds), current(keyCol).cast("string") <=> bounds(keyCol))
-      .select(bounds(keyCol).as("__k") +: col(valueCol) +: boundCols.map(col): _*)
-    val aggs = boundCols.map { n =>
-      sum((col(valueCol) <= col(n)).cast("long")).as("__c" + n.drop(3))
-    } :+ count(lit(1)).as("__n")
-    val st = pre.groupBy(col("__k")).agg(aggs.head, aggs.tail: _*)
-    val devs = boundCols.map { n =>
-      val i = n.drop(3).toInt
-      abs(col("__c" + i).cast("double") / col("__n").cast("double")
-        - lit(i.toDouble / k))
-    }
-    val ks = if (devs.size == 1) devs.head else greatest(devs: _*)
-    st.select(col("__k").as(keyCol), col("__n").as("n"), round(ks, 6).as("ks"))
   }
 
   /** Shared branch-free bin assignment + count against a bounds frame. */

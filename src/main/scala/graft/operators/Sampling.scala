@@ -142,13 +142,9 @@ object Sampling {
     applyRates(df, temperatureRates(df, stratumCol, alpha), stratumCol, idCol)
 
   /** The rates alone: stratum → integer membership threshold (out of 2^16),
-    * kept counts ∝ n_s^alpha realized downsampling-only. Factored out so a
-    * STREAM can sample against rates computed from the landed corpus
-    * ([[graft.streaming.EventsStream.temperatureMixStream]]): the rule
-    * needs global per-stratum counts, which a live stream can't see — the
-    * corpus it has already landed can.
+    * kept counts ∝ n_s^alpha realized downsampling-only.
     */
-  def temperatureRates(df: DataFrame, stratumCol: String, alpha: Double): DataFrame = {
+  private def temperatureRates(df: DataFrame, stratumCol: String, alpha: Double): DataFrame = {
     require(alpha >= 0 && alpha <= 1, "alpha must be in [0,1]")
     val counts = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
     val nMin = counts.agg(min(col("__n")).as("__nmin"))
@@ -165,8 +161,8 @@ object Sampling {
     * compared only when < 2^16 (rate-1 strata skip the fixed-width hex
     * comparison, which can't represent "keep all").
     */
-  def applyRates(df: DataFrame, rates: DataFrame, stratumCol: String,
-                 idCol: String): DataFrame =
+  private def applyRates(df: DataFrame, rates: DataFrame, stratumCol: String,
+                         idCol: String): DataFrame =
     df.join(broadcast(rates), stratumCol)
       .where(col("__t") >= 65536 ||
         substring(md5(col(idCol).cast("string")), 1, 4)

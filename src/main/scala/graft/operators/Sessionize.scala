@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Batch sessionization — the windowed mirror of
-  * streaming.EventsStream.sessionize (flatMapGroupsWithState): a session is
-  * a maximal run of same-key events whose successive gaps are ≤ `gapSec`.
+/** Batch sessionization: a session is a maximal run of same-key events
+  * whose successive gaps are ≤ `gapSec`.
   *
   * Classic two-window shape: flag rows whose gap from the previous event
   * exceeds the threshold, running-sum the flags into a session ordinal,

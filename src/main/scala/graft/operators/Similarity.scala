@@ -309,8 +309,7 @@ object Similarity {
     * precondition here it fails loudly instead of OOMing when violated.
     * The collect therefore runs while the plan is built: topKBatch plans
     * over the batch as a local relation whose size picks its refine
-    * shape, and ivfTopKBatch's per-query probe cells are a map literal
-    * and the index's partition filter.
+    * shape.
     */
   private def collectQueryBatch(queries: DataFrame, op: String): Array[Row] = {
     val qCap = queries.sparkSession.conf
@@ -487,21 +486,6 @@ object Similarity {
     }.toDF("qid", idCol, "mmr_rank", "cosine", "mmr_score")
   }
 
-  /** Dequantized vector (array<double>) from int8 codes + scale. */
-  def dequantize(codesCol: String, scaleCol: String): Column =
-    expr(s"transform($codesCol, c -> cast(c as double) * $scaleCol)")
-
-  /** Quantize an embeddings frame: id, scale, int8 codes — one compiled
-    * pass per row (graft.plans.Int8Quantize): per-vector scale = max|x|/127,
-    * 4× smaller storage/shuffle for a ~1e-2 cosine error, the standard
-    * trade for 100 TB embedding tables.
-    */
-  def quantized(embeddings: DataFrame, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame =
-    embeddings
-      .select(col(idCol), graft.plans.Exprs.quantizeInt8(col(vecCol)).as("q"))
-      .select(col(idCol), col("q.qscale").as("qscale"), col("q.codes").as("codes"))
-
   /** Deterministic seed centroids: the `nlist` lowest-id vectors,
     * L2-normalized. nlist rows is model-sized (like a broadcast dim) —
     * collecting them to the driver is the same footprint as broadcasting
@@ -577,24 +561,6 @@ object Similarity {
     buildIvfIndex(batch, centroids, idCol, vecCol)
       .write.mode("append").partitionBy("cent_idx").parquet(indexPath)
 
-  /** The REPLAY-IDEMPOTENT form of [[appendToIvfIndex]] for streaming
-    * maintenance: the batch lands under (cent_idx, batch_id) with dynamic
-    * partition overwrite, so a foreachBatch replay after failure
-    * OVERWRITES its own (cell, batch) partitions instead of duplicating
-    * vectors — the exactly-once contract micro-batch sinks need. Write
-    * the base index into the same layout with `batchId = -1`; probes read
-    * the whole tree unchanged (cent_idx stays the leading partition
-    * level, so cell pruning still fires; the extra batch_id column is
-    * inert to the scorers).
-    */
-  def writeIvfBatch(indexPath: String, vectors: DataFrame,
-                    centroids: Array[Array[Double]], batchId: Long,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    buildIvfIndex(vectors, centroids, idCol, vecCol)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cent_idx", "batch_id").parquet(indexPath)
-
   /** Per-cell occupancy snapshot of an IVF index — nlist-bounded
     * (model-sized driver state), the thing to capture at train time and
     * compare after appends.
@@ -640,40 +606,6 @@ object Similarity {
         round(dotExact("v", "qv") / nullif(col("nrm") * col("qn"), lit(0.0)), 6).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
-  }
-
-  /** Batched IVF probes: many queries against one prebuilt index in a
-    * single scan. Probe cells are picked per query driver-side (the
-    * codebook is driver-resident); the scan reads only the UNION of probed
-    * cells (partition-pruned on a persisted index), each row pairs only
-    * with the queries that probed its cell (map-side array_contains on a
-    * broadcast probe list), and per-query top-k comes from the bounded-heap
-    * GroupTopK — shuffle ≤ k rows per query per task.
-    */
-  def ivfTopKBatch(index: DataFrame, centroids: Array[Array[Double]],
-                   queries: DataFrame, k: Int, nprobe: Int = 4,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    requireLongIds(queries, idCol, "ivfTopKBatch")
-    val qRows = collectQueryBatch(queries.select(col(idCol), col(vecCol)), "ivfTopKBatch")
-    val probesOf: Map[Long, Seq[Int]] = qRows.map { r =>
-      val qv = r.getSeq[Float](1).toArray.map(_.toDouble)
-      r.getLong(0) -> probeCells(qv, centroids, nprobe).toSeq
-    }.toMap
-    val allProbed = probesOf.values.flatten.toSeq.distinct
-    // probe lists as ONE map literal (O(1) expression depth — a per-query
-    // when-chain would nest |queries| deep and blow up analysis time)
-    val probesLit = typedLit(probesOf)
-    val q = broadcast(queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"), normExact(vecCol).as("qn"))
-      .withColumn("probes", element_at(probesLit, col("qid"))))
-    val scored = index
-      .where(col("cent_idx").isin(allProbed: _*))
-      .crossJoin(q)
-      .where(array_contains(col("probes"), col("cent_idx")) && col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol),
-        round(dotExact("v", "qv") / nullif(col("nrm") * col("qn"), lit(0.0)), 6).as("cosine"))
-    graft.plans.GroupTopK.topKPerKey(
-      scored, Seq("qid"), Seq(col("cosine").desc, col(idCol).asc), k)
   }
 
   /** IVF (inverted-file) approximate top-k: coarse-quantize every vector to
@@ -797,7 +729,7 @@ object Similarity {
     (r.get(0), qv, math.sqrt(qv.map(x => x * x).sum))
   }
 
-  /** The query-collecting ANN paths (pqTopK / ivfPq* / ivfTopKBatch) key
+  /** The query-collecting ANN paths (pqTopK / ivfPqResidualTopK) key
     * their driver-side probe maps on bigint ids — check loudly instead of
     * a mid-job ClassCastException when a corpus arrives with int/string
     * ids. (The fully type-generic paths — topK/topKBatch/ivfTopKIndexed —
@@ -857,51 +789,6 @@ object Similarity {
           / nullif(sqrt(dotExact("v", "v")) * sqrt(dotExact("qv", "qv")), lit(0.0)), 6)
           .as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** The combined IVF-PQ index: coarse cell (compiled NearestCentroid) +
-    * m-byte PQ codes (compiled PqEncode) per vector — the standard
-    * billion-scale ANN layout (FAISS IVF-PQ): partition-prune to nprobe
-    * cells, then ADC-scan codes without touching float vectors. Both
-    * assignments are map-side; scan → sink has zero shuffles. Write
-    * `partitionBy("cent_idx")` like [[buildIvfIndex]].
-    *
-    * Codes here quantize the raw vector: one LUT per query, the simplest
-    * probe. When the corpus actually clusters, prefer
-    * [[buildIvfPqResidualIndex]]/[[ivfPqResidualTopK]] — residual coding
-    * spends the same m×ksub budget on the within-cell structure (the FAISS
-    * default) at the cost of per-probed-cell cross tables.
-    */
-  def buildIvfPqIndex(embeddings: DataFrame, centroids: Array[Array[Double]],
-                      codebooks: Array[Array[Array[Double]]],
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    embeddings.select(col(idCol),
-      graft.plans.Exprs.nearestCentroid(col(vecCol), centroids).as("cent_idx"),
-      graft.plans.Exprs.pqEncode(col(vecCol), codebooks).as("codes"))
-
-  /** Top-k against an IVF-PQ index: probe cells picked driver-side against
-    * the coarse codebook, ADC scoring over only the probed cells' codes —
-    * per probed row the work is m table lookups; with a cent_idx-partitioned
-    * index the scan itself is partition-pruned. Approximate on two axes
-    * (cell recall × PQ distortion); re-rank survivors against float vectors
-    * when exact order matters.
-    */
-  def ivfPqTopK(index: DataFrame, centroids: Array[Array[Double]],
-                codebooks: Array[Array[Array[Double]]],
-                query: DataFrame, k: Int, nprobe: Int = 4,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    requireLongIds(query, idCol, "ivfPqTopK")
-    val (qid, qv, qNorm) = singleQuery(query, idCol, vecCol)
-    val probes = probeCells(qv, centroids, nprobe)
-    val ipLut = ipLutOf(qv, codebooks)
-    val normSqLut = codebooks.map(_.map(c => c.map(x => x * x).sum))
-    index
-      .where(col("cent_idx").isin(probes.toSeq: _*) && col(idCol) =!= qid)
-      .select(col(idCol),
-        round(graft.plans.Exprs.pqAdcScore(col("codes"), ipLut, normSqLut, qNorm), 6)
-          .as("adc_cosine"))
-      .orderBy(col("adc_cosine").desc, col(idCol))
       .limit(k)
   }
 
@@ -1003,7 +890,7 @@ object Similarity {
     * This is the published LSH complexity n^(1+ρ), ρ =
     * ln(1/p₁)/ln(1/p₂) with p₂ ≈ ½ for unrelated vectors — sub-quadratic,
     * never linear; for loose thresholds (ρ → 1) prefer the cell-bucketed
-    * generators (semdedupPairs / cosinePairsExact's int8 grid), which
+    * generators (semdedupPairsEnsemble / cosinePairsExact's int8 grid), which
     * scale with cluster occupancy instead.
     *
     * The candidate cross product never exists as rows: each bucket carries
@@ -1143,28 +1030,9 @@ object Similarity {
     verifyExact(survivors, embeddings, threshold, idCol, vecCol, broadcastVecs)
   }
 
-  /** SemDeDup pair generation (Abbas et al., arXiv:2303.09540): k-means
-    * cells as the bucketing stage — candidate pairs come only from rows
-    * sharing a cell, so the quadratic step is Σ cell², never corpus²,
-    * and the join is a plain equi-join on `cell`. Verification is the
-    * same two-phase shape as [[cosinePairsExact]]: compiled int8 screen
-    * with the error-bound margin, decimal-exact cosine only for
-    * survivors. Missed cross-cell pairs are the SemDeDup tradeoff
-    * (bounded in the spec against the exact grid join); emitted pairs
-    * are exact-verified, so downstream drops are always sound.
-    */
-  def semdedupPairs(embeddings: DataFrame, centroids: Array[Array[Double]],
-                    threshold: Double,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    PairGate.check(embeddings, "semdedupPairs", s"tau=$threshold",
-      pairGateRemedy(threshold))(
-      estimateExactPairs(embeddings, threshold, idCol, vecCol))
-    verifyExact(cellScreens(embeddings, Seq(centroids), threshold, idCol, vecCol).head,
-      embeddings, threshold, idCol, vecCol)
-  }
-
-  /** Ensemble SemDeDup pairs: the union of [[semdedupPairs]] under several
-    * independent clusterings. A true pair is missed only if EVERY
+  /** Ensemble SemDeDup pairs (Abbas et al., arXiv:2303.09540): the pairs
+    * whose cosine clears the threshold inside a k-means cell, unioned over
+    * several independent clusterings. A true pair is missed only if EVERY
     * clustering splits it across cells — boundary misses are largely
     * uncorrelated between granularities, so two clusterings lift recall
     * substantially (0.39 → measured ≥0.6 on the near-isotropic testdata,
@@ -1185,8 +1053,8 @@ object Similarity {
         estimateExactPairs(embeddings, threshold, idCol, vecCol))
     // the decimal-exact verify runs ONCE over the deduplicated union of
     // the members' screened candidates (a fused union-then-verify —
-    // naively unioning semdedupPairs would re-quantize the corpus and
-    // re-verify shared candidates per member)
+    // naively unioning one verified pair set per clustering would
+    // re-quantize the corpus and re-verify shared candidates per member)
     verifyExact(cellScreens(embeddings, centsList, threshold, idCol, vecCol)
       .reduce(_.unionByName(_)).dropDuplicates("id_a", "id_b"),
       embeddings, threshold, idCol, vecCol)
@@ -1219,49 +1087,5 @@ object Similarity {
         .where(int8Screen(threshold))
         .select(col("ia").as("id_a"), col("ib").as("id_b"))
     }
-  }
-
-  /** SemDeDup keep-rows: sample-trained k-means cells (two granularities,
-    * k and k/2 — see [[semdedupPairsEnsemble]]) → within-cell
-    * exact-verified pairs → connected components → lowest id per group
-    * survives. The full semantic-dedup pass a pretraining pipeline runs
-    * between exact dedup and quality filtering; every stage is the
-    * bounded shape proven elsewhere in this file (codebook = model-sized
-    * driver state, assignment map-side compiled, components
-    * size-adaptive).
-    *
-    * COMPLETES past the pair cap: the keep DECISION needs the pair
-    * graph's transitive closure, never the pair table itself, so the
-    * exact-verified pair stream runs UNGATED straight into the
-    * spanning-forest fold ([[graft.operators.Dedup.connectedComponentsScalable]])
-    * — pairs are consumed pipelined at O(nodes) space per partition,
-    * every materialized artifact (forest, labels, keep set) is
-    * node-linear, and a corpus whose τ-pair table is 100× over
-    * `spark.graft.pairs.maxOutput` still yields its keep set. The pair
-    * TABLE faces (q_dedup_embedding, pair diagnostics) stay gated — there
-    * the over-cap table IS the output.
-    */
-  def semdedupKeep(embeddings: DataFrame, k: Int = 0, threshold: Double = 0.7,
-                   iters: Int = 2, sampleFraction: Double = 0.25,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   centroids: Option[Seq[Array[Array[Double]]]] = None): DataFrame = {
-    // `centroids` lets a pipeline that already trained the ensemble (e.g. a
-    // quality diagnostic scoring the same clustering) pass it in — codebooks
-    // are model-sized driver state, trained once per corpus snapshot.
-    // k ≤ 0 (the default) derives the cell count from the corpus size
-    // ([[autoCellCount]]) so the in-cell screen stays ~linear in n.
-    val centsList = centroids.getOrElse {
-      val kk = if (k > 0) k else autoCellCount(PairGate.corpusCount(embeddings))
-      val sample = Sampling.deterministicSample(embeddings, idCol, sampleFraction)
-      Seq(kk, math.max(2, kk / 2)).distinct
-        .map(g => kmeansCentroids(sample, g, iters, idCol, vecCol))
-    }
-    val pairs = semdedupPairsEnsemble(embeddings, centsList, threshold, idCol, vecCol,
-      gated = false)
-      .select("id_a", "id_b")
-    val losers = graft.operators.Dedup.connectedComponentsScalable(pairs)
-      .where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    embeddings.join(losers, Seq(idCol), "left_anti")
   }
 }

@@ -31,30 +31,6 @@ object Skew {
       .drop("__salt")
   }
 
-  /** Two-phase salted aggregation: partial aggregate on (key, salt), final
-    * on key. For algebraic aggregates Spark's map-side partial aggregation
-    * usually makes this unnecessary; it matters when the partial combine is
-    * defeated (high-cardinality composite values, collect-style aggregates).
-    */
-  def saltedSum(df: DataFrame, key: String, valueCol: String, salts: Int): DataFrame =
-    df.withColumn(
-        "__salt", pmod(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol).cast("decimal(28,6)")).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).cast("double").as(s"sum_$valueCol"))
-
-  /** Plain per-entity running sum: ONE entity-partitioned ordered window —
-    * the default shape for every per-entity time-series op here, and the
-    * one place AQE can't help with skew: a window's partitionBy(key) frame
-    * must see the whole key in one task, so a pathological key (one ticker
-    * = 30% of raw ticks) serializes into a single straggler.
-    */
-  def runningSum(df: DataFrame, key: String, tsCol: String, valueCol: String,
-                 outCol: String = "running"): DataFrame =
-    df.withColumn(outCol,
-      sum(col(valueCol)).over(Window.partitionBy(col(key)).orderBy(col(tsCol))))
-
   /** Two-stage bucketed running sum — the skew fallback for RAW per-entity
     * windows over un-pre-aggregated streams (SURVEY §5's residual
     * exposure). The window is split on a time bucket that is a MONOTONE
@@ -90,26 +66,5 @@ object Skew {
     partial.join(offsets, Seq(key, "__b"))
       .withColumn(outCol, col("__part") + coalesce(col("__off"), lit(0)))
       .drop("__b", "__part", "__off")
-  }
-
-  /** Skew-aware running sum: measure the hottest key's share with one
-    * partial-combined count (the same measure-then-plan move AQE makes
-    * from shuffle stats), and take the two-stage bucketed window when it
-    * reaches `skewThreshold`, the plain single-window plan otherwise —
-    * the cheap plan for the common case, the parallel one for the
-    * pathological key.
-    */
-  def runningSumAuto(df: DataFrame, key: String, tsCol: String, valueCol: String,
-                     outCol: String = "running",
-                     bucket: Column => Column = to_date(_),
-                     skewThreshold: Double = 0.3): DataFrame = {
-    val r = df.groupBy(col(key)).agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n")), sum(col("__n"))).head()
-    val hotShare =
-      if (r.isNullAt(0) || r.getLong(1) == 0L) 0.0
-      else r.getLong(0).toDouble / r.getLong(1)
-    if (hotShare >= skewThreshold)
-      runningSumBucketed(df, key, tsCol, valueCol, outCol, bucket)
-    else runningSum(df, key, tsCol, valueCol, outCol)
   }
 }

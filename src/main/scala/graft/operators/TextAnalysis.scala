@@ -91,9 +91,9 @@ object TextAnalysis {
     * oracle can reproduce); the one-row threshold broadcasts back, so the
     * gate is scan → one-row cross join → filter: no data-sized shuffle at
     * all. `percentile()` buffers every score in one aggregation buffer —
-    * fine at benchmark scale; at corpus scale compute the SAME exact
-    * threshold in bounded memory with [[qualityThresholdScalable]]
-    * (radix-bisection passes, see [[Quantiles]]).
+    * fine at benchmark scale; at corpus scale the same exact threshold
+    * comes in bounded memory from [[Quantiles.quantileCont]] over the
+    * scores (radix-bisection passes).
     */
   def qualityGate(docs: DataFrame, quantile: Double = 0.25,
                   textCol: String = "text", idCol: String = "doc_id",
@@ -115,23 +115,6 @@ object TextAnalysis {
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     qualityScore(landed, textCol, idCol)
       .agg(expr(s"percentile(quality, $quantile)").as("__thr"))
-
-  /** [[qualityThreshold]] in bounded memory: the identical exact
-    * interpolated percentile via [[Quantiles.quantileCont]]'s radix
-    * bisection — no per-group value buffer, so the landed corpus can be
-    * any size. Trades 2–4 extra scans of the scored frame for that bound;
-    * the regex scoring pass dominates each scan, so persist the scored
-    * frame upstream when it fits.
-    */
-  def qualityThresholdScalable(landed: DataFrame, quantile: Double = 0.25,
-                               textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val spark = landed.sparkSession
-    val scored = qualityScore(landed, textCol, idCol).withColumn("__g", lit("all"))
-    val thr = Quantiles.quantileCont(scored, "__g", "quality", Seq(quantile -> "__thr"))
-      .head().getDouble(1)
-    import spark.implicits._
-    Seq(thr).toDF("__thr")
-  }
 
   /** Type-token ratio: distinct tokens / total tokens over lowercased
     * whitespace tokens — the standard repetition/boilerplate signal
@@ -244,7 +227,7 @@ object TextAnalysis {
   /** Per-domain quota cap — keep at most `cap` documents per canonical host,
     * chosen by quality rank (the C4/RefinedWeb counter to a single domain
     * flooding the corpus; the mirror of up-weighting in
-    * [[graft.operators.Sampling.corpusMix]]). Rank ties resolve on the
+    * [[graft.operators.Sampling.mixCorpora]]). Rank ties resolve on the
     * rounded quality then id, so the kept set is deterministic in any
     * engine. The ranking runs on the bounded-heap GroupTopK operator: the
     * rank stage shuffles `cap` rows per host, not every document — at

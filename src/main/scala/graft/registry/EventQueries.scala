@@ -422,7 +422,7 @@ object EventQueries {
 
     QuerySpec("q_key_skew", (s, dir) => {
       // join-key distribution audit (the observability face of
-      // Skew.saltedJoin and runningSumAuto's measured hot-key switch):
+      // Skew.saltedJoin's hot-key split):
       // per-(type, key) counts, each hot key's share of its type, top-10
       // per type via the bounded-heap GroupTopK — no window sort over the
       // key table, totals broadcast from the already-reduced counts

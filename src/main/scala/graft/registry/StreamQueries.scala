@@ -94,8 +94,7 @@ object StreamQueries {
           |FROM events""".stripMargin)),
 
     QuerySpec("q_sessionize", (s, dir) =>
-      // batch mirror of the streaming flatMapGroupsWithState sessionizer:
-      // 30-min inactivity gap closes a session
+      // a 30-min inactivity gap closes a session
       Sessionize.byGap(events(s, dir), gapSec = 1800),
       Oracle(
         """WITH flagged AS (

@@ -150,52 +150,6 @@ object Sources {
     normalizeColumns(
       spark.read.option("header", "true").option("inferSchema", "true").csv(path))
 
-  /** JSONL corpus ingestion — the interchange format LLM training corpora
-    * actually arrive in (one JSON document per line, gzip-splittable per
-    * file). Declared schema, never inference (inference is an extra full
-    * pass AND anchors the schema to whichever files were sampled);
-    * PERMISSIVE mode keeps malformed lines instead of killing a
-    * 100 TB job at the first truncated shard, and quarantines them:
-    * the returned frame carries a `__corrupt` column holding the raw bad
-    * line (null for clean rows), so the caller can count / divert them
-    * (`where(col("__corrupt").isNotNull)`) into a reject sink rather than
-    * silently dropping data. Multiline JSON is deliberately NOT enabled:
-    * multiline documents make files non-splittable.
-    *
-    * Spark caveat: a query whose referenced columns are ONLY `__corrupt`
-    * (e.g. `df.where($"__corrupt".isNotNull).count()`) is disallowed on a
-    * raw JSON scan — persist the frame (or land it to parquet) before
-    * auditing rejects, which a reject-sink pipeline does anyway.
-    */
-  def readJsonlCorpus(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val withCorrupt = schema.add("__corrupt", org.apache.spark.sql.types.StringType)
-    normalizeColumns(
-      spark.read
-        .schema(withCorrupt)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "__corrupt")
-        .json(path))
-  }
-
-  /** CSV corpus ingestion with the same quarantine contract as
-    * [[readJsonlCorpus]]: declared schema (no inference pass — a schema
-    * inference scan reads the corpus TWICE and types drift with the
-    * sample), PERMISSIVE mode, malformed lines land whole in `__corrupt`
-    * instead of silently nulling — the reject-sink split
-    * (Sinks.writeWithRejects) works unchanged on either format.
-    */
-  def readCsvCorpus(spark: SparkSession, path: String, schema: StructType,
-                    header: Boolean = true): DataFrame = {
-    val withCorrupt = schema.add("__corrupt", org.apache.spark.sql.types.StringType)
-    normalizeColumns(
-      spark.read
-        .schema(withCorrupt)
-        .option("header", header.toString)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "__corrupt")
-        .csv(path))
-  }
-
   /** Holdings table ingestion — the create_sector_shares_dataframe cleanup
     * (sector.py:156-173) on a (ticker, weight, shares_held) source: drop the
     * placeholder '-' rows, nulls and tickers containing '6' (the reference's
@@ -226,31 +180,5 @@ object Sources {
     clean
       .groupBy(lit(asOfDate).cast("date").as("date"))
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** An events directory as a stream: parquet files dropped into `dir` are
-    * consumed incrementally — file-source streaming is the zero-infra
-    * stand-in for the reference's daily re-pull loop.
-    */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream.schema(schema).parquet(dir)
-    // watermarks require TIMESTAMP (LTZ), so unlike the batch/oracle path
-    // the stream keeps the session-zone type (UTC session ⇒ same instants).
-    // The physical encoding of ts varies across testdata generations —
-    // branch on what actually loaded, as in Fns.normalizeTsNtz.
-    import org.apache.spark.sql.types._
-    schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampType => raw
-      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case other =>
-        // fail like the batch loader (Fns.normalizeTsNtz): a silent cast
-        // would null the timestamps and drop every row at the watermark
-        throw new IllegalArgumentException(
-          s"unsupported physical type for streaming ts column: $other")
-    }
   }
 }

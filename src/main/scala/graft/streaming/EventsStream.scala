@@ -29,40 +29,6 @@ object EventsStream {
       .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("total"))
   }
 
-  /** Hopping-window face of [[windowedAgg]] (the streaming side of
-    * q_sliding_window): 1 h windows sliding every 30 min, so each event
-    * lands in size/slide = 2 open windows. State is (types × open windows)
-    * and the watermark finalizes a window once per slide step — the
-    * overlap multiplies state by the constant size/slide, never the event
-    * rate.
-    */
-  def slidingAgg(events: DataFrame): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", "1 hour") else events
-    src
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(28,6)")).cast("double").as("total"))
-      .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("total"))
-  }
-
-  /** Daily OHLCV bars maintained continuously — the streaming face of
-    * Ohlc.dailyBars (identical aggregate functions), with a 1-day watermark
-    * bounding state to the open day per entity.
-    */
-  def streamingBars(events: DataFrame): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", "1 day") else events
-    src
-      .groupBy(col("user_id"), window(col("ts"), "1 day").as("w"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        count(lit(1)).as("volume"))
-      .select(col("user_id"), col("w.start").cast("date").as("d"),
-        col("open"), col("high"), col("low"), col("close"), col("volume"))
-  }
-
   /** Watermarked stream-stream interval join: each fact (click) row pairs
     * with the dim (purchase) rows for the same key within `lookbackSec`
     * BEFORE it. Both sides' state is bounded by watermark + interval — the
@@ -82,28 +48,6 @@ object EventsStream {
         col("dim_ts") <= col("fact_ts"),
       "leftOuter")
       .select(col("user_id"), col("fact_ts"), col("fact_value"), col("dim_ts"), col("dim_value"))
-  }
-
-  /** Streaming NEAR-dedup for a document stream: rows whose SimHash64
-    * fingerprints collide within the watermark delay collapse to the first
-    * arrival — trivially-reformatted duplicates (the normalizer runs before
-    * hashing) fold together without any pairwise comparison, the only
-    * near-dup shape a one-pass stream admits (bucketed LSH candidate
-    * generation needs a second pass over the bucket; run the batch
-    * operators over the landed data for hamming > 0 recall). State per
-    * fingerprint expires with the watermark — O(docs within the delay).
-    * Batch path: the same fingerprint through dropDuplicates.
-    */
-  def nearDedupWithinWatermark(docs: DataFrame, textCol: String = "text",
-                               delay: String = "1 hour"): DataFrame = {
-    val normed = lower(regexp_replace(col(textCol), "\\s+", " "))
-    val keyed = docs.withColumn("__simhash",
-      graft.plans.Exprs.simhash(split(trim(normed), " ")))
-    val out =
-      if (docs.isStreaming)
-        keyed.withWatermark("ts", delay).dropDuplicatesWithinWatermark("__simhash")
-      else keyed.dropDuplicates("__simhash")
-    out.drop("__simhash")
   }
 
   /** Daily-reach maintenance — the streaming side of q_rolling_distinct's
@@ -133,19 +77,6 @@ object EventsStream {
       .select(col("w.start").cast("date").as("d"), col("daily_active"))
   }
 
-  /** Streaming exact dedup on `keys`: duplicates arriving within the
-    * watermark delay of each other collapse to the first arrival; state per
-    * key expires with the watermark, so memory is O(keys within the delay),
-    * not O(all keys ever) — the difference between dropDuplicates (unbounded
-    * state, eventually OOM on an infinite stream) and the production shape.
-    * Batch path: plain dropDuplicates (same key semantics, no time bound).
-    */
-  def dedupWithinWatermark(events: DataFrame, keys: Seq[String],
-                           delay: String = "1 hour"): DataFrame =
-    if (events.isStreaming)
-      events.withWatermark("ts", delay).dropDuplicatesWithinWatermark(keys)
-    else events.dropDuplicates(keys)
-
   /** Streaming incremental dedup — the continuous face of
     * `Dedup.deduplicateIncremental`: a live document stream anti-joins its
     * md5 fingerprints against the persisted STORE (stream-static left_anti
@@ -172,147 +103,6 @@ object EventsStream {
     out.drop("__h")
   }
 
-  /** Micro-batch exact dedup against a LARGE fingerprint store with no
-    * store-side shuffle — the 100 TB form of [[incrementalDedupStream]]'s
-    * store join. A stream-static left_anti shuffles (or re-broadcasts) the
-    * ENTIRE store every micro-batch: at fingerprint-store scale that
-    * shuffle IS the pipeline's cost. Here the batch's distinct hashes
-    * (micro-batch-sized by construction) broadcast INTO a store semi-join
-    * — the store is only ever SCANNED, column-pruned to its hash — and the
-    * surviving duplicate hashes (≤ batch size) broadcast back for the
-    * anti-join. Admission semantics are identical to the stream-static
-    * left_anti; in-batch duplicates collapse keep-min-id as in the batch
-    * mirror. Streaming cannot express this flip in-plan (the stream side
-    * may not sit right of a semi-join), which is exactly what foreachBatch
-    * is for — see [[curationForeachBatch]].
-    */
-  def dedupAgainstStoreBatch(batch: DataFrame, store: DataFrame,
-                             textCol: String = "text",
-                             idCol: String = "doc_id"): DataFrame = {
-    val hashed = batch.withColumn("__h", md5(col(textCol)))
-    val batchHashes = hashed.select(col("__h")).distinct()
-    val dups = store
-      .join(broadcast(batchHashes), store("text_hash") === col("__h"), "left_semi")
-      .select(col("text_hash").as("__dup_h"))
-    val unseen = hashed.join(broadcast(dups), hashed("__h") === col("__dup_h"), "left_anti")
-    graft.plans.GroupTopK.topKPerKey(unseen, Seq("__h"), Seq(col(idCol).asc), 1)
-      .drop("__h")
-  }
-
-  /** CDC upsert maintenance via foreachBatch — the continuous face of
-    * [[graft.operators.Cdc.mergeChangelog]]: a changelog stream keeps a
-    * keyed snapshot table current (event time governs — the newest row by
-    * ts wins, so a late batch carrying older changes cannot regress
-    * already-merged state; `deleteOp` rows are tombstones).
-    *
-    * The snapshot is partitioned by a HASH BUCKET of the key, and each
-    * micro-batch (1) resolves which buckets its keys touch — ≤ `nBuckets`
-    * ints, driver-safe by construction, (2) reads ONLY those buckets back
-    * (partition-pruned scan), (3) merges batch against them — one
-    * row_number shuffle, no join — and (4) dynamically overwrites just
-    * the touched partitions. Per-batch cost is ∝ touched-bucket volume,
-    * never store size: the shape that keeps a 100 TB snapshot current
-    * from a trickle changelog. Replay-idempotent (a crash between write
-    * and checkpoint commit re-merges the same changes onto the already-
-    * merged buckets and converges), so the exactly-once contract holds on
-    * the at-least-once foreachBatch.
-    */
-  def cdcUpsertForeachBatch(changes: DataFrame, snapshotDir: String,
-                            nBuckets: Int = 64,
-                            keyCol: String = "user_id", tsCol: String = "ts",
-                            tieCol: String = "event_id",
-                            opCol: String = "event_type",
-                            deleteOp: String = "error",
-                            valueCols: Seq[String] = Seq("value"))(
-      onBatch: (Long, Int) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val bucketOf = pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).cast("int")
-    changes.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val s = batch.sparkSession
-      val chg = batch.toDF()
-      val touched = chg.select(bucketOf.as("__b")).distinct()
-        .collect().map(_.getInt(0))
-      if (touched.nonEmpty) {
-        val snapCols = (col(keyCol) +: valueCols.map(col)) :+ col(tsCol)
-        val hasStore = {
-          val p = new org.apache.hadoop.fs.Path(snapshotDir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.exists(p) && fs.listStatus(p)
-            .exists(_.getPath.getName.startsWith("__bucket="))
-        }
-        val existing =
-          if (hasStore)
-            s.read.parquet(snapshotDir)
-              .where(col("__bucket").isin(touched.map(Int.box): _*))
-              .select(snapCols: _*)
-          else chg.select(snapCols: _*).limit(0)
-        val merged = graft.operators.Cdc.mergeChangelog(existing, chg, keyCol,
-            tsCol, tieCol, opCol, deleteOp, valueCols)
-          .select(snapCols: _*)
-          .withColumn("__bucket", bucketOf)
-          .persist()
-        // materialize the cache BEFORE the overwrite: the merge reads the
-        // very store the write below replaces, and a lazy persist only
-        // fills during the write — a cache loss after the overwrite would
-        // recompute against the replaced files (FileNotFound, or a wrong
-        // surviving set under ignoreMissingFiles). Collecting the
-        // surviving buckets first closes that window and is the same
-        // model-sized collect either way.
-        val surviving = merged.select(col("__bucket")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        merged
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket").parquet(snapshotDir)
-        merged.unpersist()
-        // dynamic overwrite only rewrites partitions PRESENT in the output:
-        // a tombstone wave that empties a bucket produces no rows for it,
-        // so the stale partition must be dropped explicitly or the deleted
-        // keys resurrect
-        // Hadoop FileSystem API, not java.io: the snapshot can live on any
-        // supported scheme (HDFS, object store), not just the local disk
-        val conf = s.sparkContext.hadoopConfiguration
-        (touched.toSet -- surviving).foreach { b =>
-          val p = new org.apache.hadoop.fs.Path(s"$snapshotDir/__bucket=$b")
-          val fs = p.getFileSystem(conf)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        onBatch(batchId, touched.length)
-      }
-    }
-  }
-
-  /** Streaming restatement into a [[graft.sources.v2.QuoteStoreCatalog]]
-    * table — the DSv2 write surface's streaming face, closing the loop
-    * between the feed (QuoteFeedProvider, read), the store (QuoteStore,
-    * batch write) and the stream: a correction feed keeps the day-
-    * partitioned store current without a batch driver.
-    *
-    * CONTRACT (Sinks.restateDays at micro-batch cadence): each incoming
-    * batch carries COMPLETE day snapshots — dynamic partition overwrite
-    * replaces exactly the days present in the batch and touches no other
-    * directory. That makes the sink REPLAY-IDEMPOTENT on the
-    * at-least-once foreachBatch: a crash between the store commit and the
-    * checkpoint commit re-delivers the same batch, which overwrites its
-    * own days with identical content and converges — the same
-    * exactly-once argument as [[cdcUpsertForeachBatch]], with the day
-    * directory as the convergence unit. (A batch carrying PARTIAL days
-    * would need the CDC merge face instead; that is what
-    * cdcUpsertForeachBatch is for.)
-    *
-    * `onBatch(batchId, daysTouched)` mirrors the CDC sink's observer —
-    * the day list is batch-sized by construction (a correction feed
-    * restates days, not rows), so the observing collect is model-sized.
-    */
-  def quoteStoreForeachBatch(quotes: DataFrame, table: String)(
-      onBatch: (Long, Int) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    quotes.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val days = batch.select(col("day")).distinct().collect()
-      if (days.nonEmpty) {
-        batch.toDF().writeTo(table).overwritePartitions()
-        onBatch(batchId, days.length)
-      }
-    }
-
   /** One micro-batch of streaming dataset-card maintenance — the release
     * card (q_dataset_card's grain) kept current with EXACTLY-ONCE
     * semantics on the at-least-once foreachBatch delivery, from two
@@ -320,12 +110,10 @@ object EventsStream {
     *  - additive stats (docs / chars / tokens per (source, lang)) land as
     *    per-batch DELTA partitions keyed by batchId via dynamic
     *    partition overwrite — a replayed batch overwrites ITS OWN
-    *    partition with identical content and converges (the
-    *    [[cdcUpsertForeachBatch]] argument with batchId as the unit);
+    *    partition with identical content and converges;
     *  - the exact-dup hash store appends only hashes ABSENT from the
     *    store: the batch's distinct hashes broadcast INTO a store
-    *    semi-join (store SCAN-only, never shuffled — the
-    *    [[dedupAgainstStoreBatch]] discipline) and the surviving
+    *    semi-join (store SCAN-only, never shuffled) and the surviving
     *    duplicates broadcast back for the anti-join, so a replay
     *    re-drops whatever the crashed attempt already appended.
     * The card itself is DERIVED ([[readCard]]), never stored — no
@@ -363,15 +151,6 @@ object EventsStream {
     } finally { b.unpersist(); () }
   }
 
-  /** [[cardMergeBatch]] as a foreachBatch sink — the streaming face. */
-  def cardForeachBatch(docs: DataFrame, storeDir: String,
-                       textCol: String = "text")(
-      onBatch: Long => Unit = _ => ()): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      cardMergeBatch(batch.toDF(), storeDir, batchId, textCol)
-      onBatch(batchId)
-    }
-
   /** Derive the current dataset card from the two card stores — identical
     * columns and rounding to the batch [[graft.operators.TextAnalysis
     * .datasetCard]], so one oracle checks both faces. Deltas aggregate to
@@ -396,33 +175,6 @@ object EventsStream {
       .orderBy(col("source"), col("lang"))
   }
 
-  /** The curation pipeline via foreachBatch — the form that scales the
-    * store join (see [[dedupAgainstStoreBatch]]) and re-reads the static
-    * frames every micro-batch (fresh file listing, so store appends and
-    * threshold refreshes take effect without a query restart, the
-    * [[temperatureMixStreamRefreshing]] contract). `sink` receives each
-    * batch's curated manifest plus the batch id.
-    */
-  def curationForeachBatch(docs: DataFrame,
-                           threshold: () => DataFrame,
-                           store: () => DataFrame,
-                           benchGrams: DataFrame, n: Int = 8,
-                           textCol: String = "text", idCol: String = "doc_id")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // the suite is static: build the bloom screen ONCE at query-build
-    // time, not inside the per-batch closure (threshold/store, by
-    // contrast, are () => frames precisely so they re-resolve per batch)
-    val screen = decontaminator(benchGrams, n, textCol)
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val gated = qualityGateStream(batch.toDF(), threshold(), textCol, idCol,
-        keep = Seq(textCol, "ts"))
-      val deduped = dedupAgainstStoreBatch(gated, store(), textCol, idCol)
-      val curated = screen(deduped)
-        .select(col(idCol), col("ts"), col("n_tokens"), col("quality"))
-      sink(curated, batchId)
-    }
-  }
-
   /** Streaming quality gate — the continuous face of
     * `TextAnalysis.qualityGate`: each arriving document is scored at scan
     * speed and kept iff its quality clears the threshold frame
@@ -432,7 +184,7 @@ object EventsStream {
     * a live stream cannot see its own percentile, and pinning the cut to
     * data at rest makes replayed batches make identical decisions. For
     * live refresh, wrap in foreachBatch and recompute the threshold per
-    * micro-batch (the temperatureMixStreamRefreshing pattern).
+    * micro-batch.
     */
   def qualityGateStream(docs: DataFrame, threshold: DataFrame,
                         textCol: String = "text", idCol: String = "doc_id",
@@ -443,40 +195,6 @@ object EventsStream {
       .where(col("quality") >= col("__thr"))
       .drop("__k", "__thr")
 
-  /** Stream-static entity resolution — the continuous face of
-    * [[graft.operators.Dedup.fuzzyCanonicalize]] and the discovery-side
-    * complement of the reference's FIXED symbol rewrite
-    * (functions.py:144-150): the rewrite table (value → canonical
-    * spelling) is resolved ONCE at query build from the landed reference
-    * corpus, collapsed to a local relation (vocabulary-sized by the
-    * linkage contract, gated), and broadcast-joined per batch at scan
-    * speed — zero state, zero per-batch jobs against the reference.
-    * Values the landed vocabulary never saw pass through unchanged
-    * (`resolved` = own spelling), the same unseen-entity contract as
-    * winsorizeStream; rebuild the query when the landed corpus should
-    * refresh the vocabulary.
-    */
-  def canonicalizeStream(stream: DataFrame, reference: DataFrame,
-                         idCol: String, strCol: String,
-                         maxDist: Int = 2): DataFrame = {
-    import graft.operators.Dedup
-    val spark = reference.sparkSession
-    val cap = spark.conf.get("spark.graft.linkage.maxVocab", "1000000").toLong
-    val rewrite = Dedup.fuzzyCanonicalize(reference, idCol, strCol, maxDist)
-      .select(col(strCol).as("__from"), col("canonical")).distinct()
-      .limit((cap + 1).toInt)
-    val rows = rewrite.collect()
-    require(rows.length <= cap,
-      s"canonicalizeStream ships the rewrite table as a broadcast — more than $cap " +
-        s"distinct values in '$strCol'; raise spark.graft.linkage.maxVocab or " +
-        "canonicalize in foreachBatch with the batch-side join")
-    val local = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), rewrite.schema)
-    stream.join(broadcast(local), stream(strCol) === col("__from"), "left")
-      .withColumn("resolved", coalesce(col("canonical"), stream(strCol)))
-      .drop("__from", "canonical")
-  }
-
   /** Streaming winsorization — robust normalization's continuous face,
     * completing the batch/streaming symmetry for the exact-quantile
     * family. Each arriving row's value clips to its group's [lo, hi]
@@ -485,7 +203,7 @@ object EventsStream {
     * hi -> "__hi"))`) — a live stream cannot see its own quantiles, and
     * pinning the bounds to data at rest makes replayed batches make
     * identical decisions (the same contract as the quality-gate threshold
-    * and the temperature-mix rates). The bounds frame is group-sized and
+    * and the decontamination gram set). The bounds frame is group-sized and
     * broadcast; the stream side never shuffles (stateless stream-static
     * left join + projection). Rows whose group has no landed bounds pass
     * through UNCLIPPED with `clipped = false` — a new entity must not be
@@ -506,71 +224,6 @@ object EventsStream {
       .withColumn("clipped", col("__lo").isNotNull && col(valueCol).isNotNull &&
         (col(valueCol) < col("__lo") || col(valueCol) > col("__hi")))
       .drop("__lo", "__hi")
-
-  /** Streaming drift monitor — each micro-batch's Population Stability
-    * Index against the LANDED reference distribution
-    * ([[graft.operators.Quantiles.psiReference]]): the retrain alarm,
-    * continuously. The reference bin bounds and smoothed proportions are
-    * materialized ONCE at build time (model-sized: group × k rows — a
-    * micro-batch must never re-run the landed quantiles); each batch then
-    * bins at scan speed against the broadcast bounds and `sink` receives
-    * one (group, psi, batch_id) row per group per batch. Groups absent
-    * from the reference emit nothing — a new entity has no reference
-    * distribution to drift from; extend the landed corpus and rebuild the
-    * monitor when it should.
-    */
-  def psiMonitor(stream: DataFrame, reference: DataFrame,
-                 keyCol: String = "event_type", valueCol: String = "value",
-                 k: Int = 10)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Quantiles
-    val spark = reference.sparkSession
-    val (bounds, props) = Quantiles.psiReference(reference, keyCol, valueCol, k)
-    // BOTH reference frames collapse to local relations at build time —
-    // passing the lazy `bounds` plan through would re-run the landed
-    // quantile aggregation inside every micro-batch (and silently shift
-    // the baseline if the reference path grows between batches)
-    val boundsLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(bounds.collect().toSeq, 1), bounds.schema)
-    val propsLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(props.collect().toSeq, 1), props.schema)
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(Quantiles.psiAgainst(batch.toDF(), keyCol, valueCol, k, boundsLocal, propsLocal)
-          .withColumn("batch_id", lit(batchId)), batchId)
-        ()
-    }
-  }
-
-  /** Streaming grid-KS drift monitor — [[psiMonitor]]'s sup-norm sibling
-    * ([[graft.operators.Quantiles.ksAgainst]]): each micro-batch's
-    * empirical CDF is compared against the LANDED reference's quantile
-    * grid at the grid points, where the reference CDF is i/k by
-    * construction — so scoring a batch never touches reference rows, only
-    * the model-sized broadcast bounds. PSI reacts to mass reallocation
-    * between bins; KS bounds the worst single CDF gap — a narrow shift
-    * that PSI smears across two bins still moves the sup-norm. Same
-    * build-once contract: bounds materialize at query build, a batch must
-    * never re-run the landed quantiles.
-    */
-  def ksMonitor(stream: DataFrame, reference: DataFrame,
-                keyCol: String = "event_type", valueCol: String = "value",
-                k: Int = 10)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Quantiles
-    val spark = reference.sparkSession
-    val (bounds, _) = Quantiles.psiReference(reference, keyCol, valueCol, k)
-    // materialize at build time (same contract as psiMonitor): a lazy
-    // bounds plan would re-execute the reference quantiles every batch
-    val boundsLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(bounds.collect().toSeq, 1), bounds.schema)
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(Quantiles.ksAgainst(batch.toDF(), keyCol, valueCol, k, boundsLocal)
-          .withColumn("batch_id", lit(batchId)), batchId)
-        ()
-    }
-  }
 
   /** Streaming benchmark decontamination — the continuous face of
     * `Dedup.decontaminate`. The batch shape (explode grams → semi-join →
@@ -663,77 +316,6 @@ object EventsStream {
       .select(col(idCol), col("ts"), col("n_tokens"), col("quality"))
   }
 
-  /** Streaming temperature-scaled mixture — the continuous face of
-    * Sampling.temperatureMix, closing the batch/streaming asymmetry in the
-    * sampling family. The temperature rule needs GLOBAL per-stratum counts,
-    * which a live stream cannot see (a global aggregate feeding a join
-    * against its own stream would stack two stateful ops and still answer
-    * "rates as of when?"); the production shape samples the stream against
-    * rates computed from the LANDED corpus. That contract is explicit here:
-    * `rates` is a static frame — `Sampling.temperatureRates(spark.read
-    * .parquet(landedDir), …)` — and a stream-static join re-evaluates the
-    * static side every micro-batch, so overwriting the rates table
-    * REFRESHES the broadcast as the corpus grows, without restarting the
-    * query. Membership stays the deterministic md5-prefix test keyed on
-    * (id, stratum rate): a rate refresh changes sampling going forward but
-    * can never retroactively resample rows already emitted, and replays
-    * after failure make identical decisions — exactly-once-safe.
-    *
-    * This stateless form joins one FIXED rates frame (a running query pins
-    * the static side's resolved file listing at start — overwriting those
-    * files breaks the query, it does not refresh it); for live refresh use
-    * [[temperatureMixStreamRefreshing]].
-    */
-  def temperatureMixStream(stream: DataFrame, rates: DataFrame,
-                           stratumCol: String = "lang",
-                           idCol: String = "doc_id"): DataFrame =
-    graft.operators.Sampling.applyRates(stream, rates, stratumCol, idCol)
-
-  /** The refresh-capable form: foreachBatch RE-READS the rates table at
-    * every micro-batch (a fresh read re-lists files, where a stream-static
-    * join pins the listing once at query start), so overwriting
-    * `ratesDir` — e.g. a scheduled job re-running
-    * `Sampling.temperatureRates` over the grown corpus — changes sampling
-    * from the next micro-batch on, with no query restart. `sink` receives
-    * each batch's sampled rows plus the batch id (foreachBatch's
-    * exactly-once contract: the id is stable across replays, and so is the
-    * md5 membership, so an idempotent sink dedups replays).
-    */
-  def temperatureMixStreamRefreshing(stream: DataFrame, ratesDir: String,
-                                     stratumCol: String = "lang",
-                                     idCol: String = "doc_id")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val rates = batch.sparkSession.read.parquet(ratesDir)
-      sink(graft.operators.Sampling.applyRates(batch, rates, stratumCol, idCol), batchId)
-    }
-
-  /** Streaming IVF index maintenance — the continuous face of
-    * [[graft.operators.Similarity.appendToIvfIndex]]: every micro-batch of
-    * new vectors is assigned with the FROZEN centroids and landed into the
-    * persisted (cent_idx, batch_id) layout
-    * ([[graft.operators.Similarity.writeIvfBatch]]) — dynamic partition
-    * overwrite keyed by foreachBatch's stable batch id makes a replay
-    * after failure overwrite ITSELF instead of duplicating vectors, the
-    * micro-batch sink's exactly-once contract. After each batch the
-    * cell-occupancy drift vs the train-time `baseline` goes to
-    * `onBatch(batchId, drift)` — the retrain trigger: the caller schedules
-    * kmeansCentroids + a full re-encode when drift crosses its policy
-    * threshold; until then probes serve uninterrupted from the merged,
-    * still-cell-pruned index.
-    */
-  def ivfMaintenanceStream(vectors: DataFrame, indexPath: String,
-                           centroids: Array[Array[Double]],
-                           baseline: Map[Int, Long])(
-      onBatch: (Long, Double) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      import graft.operators.Similarity
-      Similarity.writeIvfBatch(indexPath, batch, centroids, batchId)
-      val drift = Similarity.ivfOccupancyDrift(baseline,
-        Similarity.ivfCellCounts(batch.sparkSession.read.parquet(indexPath)))
-      onBatch(batchId, drift)
-    }
-
   case class AsOfIn(user_id: Long, ts: Timestamp, is_dim: Boolean, value: Double)
   case class AsOfBuffers(facts: Seq[(Long, Double)], dims: Seq[(Long, Double)])
   case class AsOfOut(user_id: Long, ts: Timestamp, value: Double, dim_value: Option[Double])
@@ -817,25 +399,6 @@ object EventsStream {
           }
           out.iterator
         })
-  }
-
-  /** Sessionization through the built-in session window — the declarative
-    * sibling of [[sessionize]] (custom state) and operators.Sessionize
-    * (batch windows): `session_window(ts, gap)` merges events whose gaps
-    * stay under `gapSec`, state expires with the watermark, and the SAME
-    * expression aggregates a batch frame. Prefer this when per-session
-    * output is a plain aggregate; drop to [[sessionize]] when the session
-    * logic needs imperative state (mid-session emission, custom close
-    * conditions).
-    */
-  def sessionizeWindowed(events: DataFrame, gapSec: Long = 1800): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", "10 seconds") else events
-    src
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapSec seconds").as("sw"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(28,6)")).cast("double").as("total_value"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("n_events"), col("total_value"))
   }
 
   case class WinCount(wstart: Timestamp, wend: Timestamp, user_id: Long, n: Long)
@@ -922,54 +485,4 @@ object EventsStream {
   }
 
   case class Ev(user_id: Long, ts: Timestamp, event_type: String, value: Double)
-  case class SessionState(nEvents: Long, total: Double, startMs: Long, lastMs: Long)
-  case class SessionOut(user_id: Long, n_events: Long, total_value: Double, duration_sec: Double)
-
-  /** Sessionization with explicit state: a session closes after `gapSec` of
-    * event-time inactivity — either inline (the key's next event arrives
-    * past the gap) or via event-time timeout once the watermark passes the
-    * gap. Event-time (not processing-time) timeout matters operationally:
-    * batches trigger only on data/watermark progress, so an idle stream is
-    * idle — no busy empty-batch loop. State per user is O(1).
-    */
-  def sessionize(events: Dataset[Ev], gapSec: Long = 1800): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val streaming = events.isStreaming
-    val src = if (streaming) events.withWatermark("ts", "10 seconds") else events
-    src
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (userId: Long, rows: Iterator[Ev], state: GroupState[SessionState]) => {
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(userId, s.nEvents, s.total, (s.lastMs - s.startMs) / 1000.0))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastMs <= gapSec * 1000 =>
-                  cur = Some(s.copy(nEvents = s.nEvents + 1, total = s.total + e.value, lastMs = t))
-                case Some(s) =>
-                  closed += SessionOut(userId, s.nEvents, s.total, (s.lastMs - s.startMs) / 1000.0)
-                  cur = Some(SessionState(1, e.value, t, t))
-                case None =>
-                  cur = Some(SessionState(1, e.value, t, t))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (streaming) {
-                // must stay ahead of the current watermark or Spark rejects it
-                val wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(math.max(s.lastMs + gapSec * 1000, wm + 1))
-              }
-            }
-            closed.result().iterator
-          }
-        })
-  }
 }

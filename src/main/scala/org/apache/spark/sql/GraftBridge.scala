@@ -150,12 +150,4 @@ object GraftBridge {
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.isCheckpointed
     }.forall(identity)
-
-  /** Reset the context's checkpoint directory (SparkContext exposes set but
-    * no unset). Lets a spec exercise the reliable-checkpoint mode of
-    * graft.Graft.materialize and then restore local-checkpoint behavior
-    * for the suites that follow in the shared test session.
-    */
-  def clearCheckpointDir(spark: SparkSession): Unit =
-    spark.sparkContext.checkpointDir = None
 }

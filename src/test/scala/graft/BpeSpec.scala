@@ -9,22 +9,6 @@ class BpeSpec extends SparkSpec {
   // the classic Sennrich et al. worked example: est-family pairs dominate
   private val counts = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
 
-  test("ModelStore round-trips BPE and Unigram models exactly") {
-    import graft.operators.Unigram
-    import graft.sources.ModelStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_models").toFile.getAbsolutePath
-    val merges = Bpe.trainMerges(counts, 10)
-    ModelStore.saveBpe(spark, merges, s"$dir/bpe")
-    val merges2 = ModelStore.loadBpe(spark, s"$dir/bpe")
-    assert(merges2 === merges) // rank ORDER is part of the model
-    assert(Bpe.encodeWord("newest", merges2) === Bpe.encodeWord("newest", merges))
-    val uni = Unigram.train(counts, vocabSize = 30)
-    ModelStore.saveUnigram(spark, uni, s"$dir/uni")
-    val uni2 = ModelStore.loadUnigram(spark, s"$dir/uni")
-    assert(uni2 === uni) // log-probs bit-exact through parquet doubles
-    assert(Unigram.encodeWord("newest", uni2, 8) === Unigram.encodeWord("newest", uni, 8))
-  }
-
   test("trainMerges reproduces the hand-worked merge order on the classic corpus") {
     val merges = Bpe.trainMerges(counts, 3)
     // (e,s) appears in newest(6)+widest(3)=9 — the max; then es+t, then est+</w>

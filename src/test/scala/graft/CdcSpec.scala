@@ -224,7 +224,7 @@ class CdcSpec extends SparkSpec {
     // reference: same bars → returns → market mean → trailing-30 Pearson,
     // plain double arithmetic on the driver
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val bars = graft.operators.Ohlc.dailyBars(ev)
+    val bars = RefBars.dailyBars(ev)
       .select($"user_id", $"d", $"close")
       .collect().map(r => (r.getLong(0), r.getDate(1).toString, r.getDouble(2)))
     val byUser = bars.groupBy(_._1).map { case (u, rs) =>
@@ -269,7 +269,7 @@ class CdcSpec extends SparkSpec {
     val got = SparkEntry.queries("q_cusum")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getDate(1).toString) -> r.getDouble(2)).toMap
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val bars = graft.operators.Ohlc.dailyBars(ev)
+    val bars = RefBars.dailyBars(ev)
       .select($"user_id", $"d", $"close")
       .collect().map(r => (r.getLong(0), r.getDate(1).toString, r.getDouble(2)))
     var checked = 0
@@ -306,7 +306,7 @@ class CdcSpec extends SparkSpec {
     val q = SparkEntry.queries("q_beta")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val bars = graft.operators.Ohlc.dailyBars(ev).select($"user_id", $"d", $"close")
+    val bars = RefBars.dailyBars(ev).select($"user_id", $"d", $"close")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"d")
     val ret = bars.select($"user_id", $"d",
@@ -323,7 +323,7 @@ class CdcSpec extends SparkSpec {
 
   test("q_sharpe equals a driver-side mean/sd·√252 recount; q_atr equals a TR SMA-14 recount") {
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val bars = graft.operators.Ohlc.dailyBars(ev)
+    val bars = RefBars.dailyBars(ev)
       .select($"user_id", $"d", $"high", $"low", $"close")
       .collect()
       .map(r => (r.getLong(0), r.getDate(1).toString, r.getDouble(2), r.getDouble(3), r.getDouble(4)))
@@ -372,7 +372,7 @@ class CdcSpec extends SparkSpec {
 
   test("q_donchian: channel equals trailing-20 extremes, breakout flags are causal") {
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val bars = graft.operators.Ohlc.dailyBars(ev)
+    val bars = RefBars.dailyBars(ev)
       .select($"user_id", $"d", $"high", $"low", $"close")
       .collect()
       .map(r => (r.getLong(0), r.getDate(1).toString, r.getDouble(2), r.getDouble(3), r.getDouble(4)))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SpecBridge}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioningLike, Partitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -24,7 +24,7 @@ class CheckpointModeSpec extends SparkSpec {
     try f
     finally {
       spark.conf.unset("spark.graft.checkpointDir")
-      GraftBridge.clearCheckpointDir(spark)
+      SpecBridge.clearCheckpointDir(spark)
       // best-effort cleanup of the spec's checkpoint files
       def rm(p: java.io.File): Unit = {
         Option(p.listFiles()).foreach(_.foreach(rm))

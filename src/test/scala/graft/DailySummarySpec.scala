@@ -63,7 +63,7 @@ class DailySummarySpec extends SparkSpec {
       .agg(max_by(col("value"), col("ts")).as(name))
     val direct = Map(
       "q_sector_price" -> AsOfJoin
-        .asOfMany(Ohlc.dailyBars(ev).select("user_id", "d", "close"),
+        .asOfMany(RefBars.dailyBars(ev).select("user_id", "d", "close"),
           Seq(lastOf("purchase", "shares") -> Seq("shares"),
             lastOf("signup", "outstanding") -> Seq("outstanding")),
           "user_id", "d")

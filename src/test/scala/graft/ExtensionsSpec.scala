@@ -162,14 +162,4 @@ class ExtensionsSpec extends SparkSpec {
       .as[(String, Double)].collect().toMap
     assert(salted === plain)
   }
-
-  test("saltedSum equals a direct aggregation") {
-    val df = Tables.lineitem(spark, sfDir)
-    val direct = df.groupBy("l_returnflag")
-      .agg(sum($"l_quantity".cast("decimal(28,6)")).cast("double").as("s"))
-      .as[(String, Double)].collect().toMap
-    val salted = Skew.saltedSum(df, "l_returnflag", "l_quantity", 16)
-      .as[(String, Double)].collect().toMap
-    assert(salted === direct)
-  }
 }

@@ -11,7 +11,7 @@ class FinanceStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val returns: Map[Long, Seq[(java.sql.Date, Double)]] = {
-    val bars = graft.operators.Ohlc.dailyBars(
+    val bars = RefBars.dailyBars(
       graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
       .select($"user_id", $"d", $"close")
       .as[(Long, java.sql.Date, Double)].collect()
@@ -68,7 +68,7 @@ class FinanceStatsSpec extends SparkSpec {
       .as[(java.sql.Date, Double, Double)].collect()
     assert(rows.nonEmpty)
     // aligned day set == intersection of the two entities' bar days
-    val bars = graft.operators.Ohlc.dailyBars(
+    val bars = RefBars.dailyBars(
       graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
       .select($"user_id", $"d").as[(Long, java.sql.Date)].collect()
     val d1 = bars.filter(_._1 == 1L).map(_._2.toString).toSet

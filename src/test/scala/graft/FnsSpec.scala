@@ -122,20 +122,12 @@ class FnsSpec extends SparkSpec {
   }
 
   test("market-day functions honor an INJECTED calendar dimension") {
-    // a toy exchange calendar loaded from a (d, is_open) dimension table
-    // covering one week of 2030: Wed 2030-01-09 is a made-up closure the
-    // NYSE table knows nothing about; weekend rows are tolerated
-    val calDf = Seq(
-      ("2030-01-07", true),  // Mon
-      ("2030-01-08", true),  // Tue
-      ("2030-01-09", false), // Wed — exchange-specific closure
-      ("2030-01-10", true),  // Thu
-      ("2030-01-11", true),  // Fri
-      ("2030-01-12", false), // Sat (redundant with the dow test)
-      ("2030-01-13", false)  // Sun
-    ).toDF("d", "is_open").select(to_date($"d").as("d"), $"is_open")
-    val cal = graft.functions.MarketCalendar.fromDF(calDf)
-    assert(cal.start === "2030-01-07" && cal.end === "2030-01-13")
+    // a toy exchange calendar covering one week of 2030: Wed 2030-01-09
+    // is a made-up closure the NYSE table knows nothing about; the weekend
+    // is closed by the day-of-week test, listed or not
+    val cal = graft.functions.MarketCalendar(
+      holidays = Seq("2030-01-09", "2030-01-12", "2030-01-13"),
+      start = "2030-01-07", end = "2030-01-13")
     val m = Seq("2030-01-08", "2030-01-09", "2030-01-10", "2030-01-06", "2030-02-01")
       .toDF("d").select(Fns.isMarketDay(to_date($"d"), cal).as("m")).collect()
     assert(m(0).getBoolean(0) === true)   // Tue open

@@ -9,21 +9,25 @@ class OperatorsSpec extends SparkSpec {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("Ohlc.dailyBars picks open/close by time and aggregates high/low/volume") {
+  test("daily bars pick open/close by time and aggregate high/low/volume") {
     val ev = Seq(
       (1L, ts("2024-01-01 09:00:00"), 10.0),
       (1L, ts("2024-01-01 12:00:00"), 30.0),
       (1L, ts("2024-01-01 16:00:00"), 20.0),
       (1L, ts("2024-01-02 09:00:00"), 5.0)
     ).toDF("user_id", "ts", "value")
-    val bars = Ohlc.dailyBars(ev).orderBy($"d").collect()
-    assert(bars.length === 2)
-    val b0 = bars(0)
-    assert(b0.getDouble(2) === 10.0) // open
-    assert(b0.getDouble(3) === 30.0) // high
-    assert(b0.getDouble(4) === 10.0) // low
-    assert(b0.getDouble(5) === 20.0) // close
-    assert(b0.getLong(6) === 3L)     // volume
+    // the summary's bar columns and the specs' reference bars alike
+    val cols = Seq("user_id", "d", "open", "high", "low", "close", "volume").map(col)
+    for (df <- Seq(Ohlc.dailySummary(ev, Nil, Nil), RefBars.dailyBars(ev))) {
+      val bars = df.select(cols: _*).orderBy($"d").collect()
+      assert(bars.length === 2)
+      val b0 = bars(0)
+      assert(b0.getDouble(2) === 10.0) // open
+      assert(b0.getDouble(3) === 30.0) // high
+      assert(b0.getDouble(4) === 10.0) // low
+      assert(b0.getDouble(5) === 20.0) // close
+      assert(b0.getLong(6) === 3L)     // volume
+    }
   }
 
   test("Incremental.newerThanExisting keeps only strictly-newer rows per key") {
@@ -38,29 +42,6 @@ class OperatorsSpec extends SparkSpec {
     val out = Incremental.newerThanExisting(existing, incoming, "user_id", "ts")
       .select($"value").as[Double].collect().sorted
     assert(out.toSeq === Seq(11.0, 12.0, 13.0))
-  }
-
-  test("Incremental.newerThanGlobal filters on the table-wide latest timestamp") {
-    val existing = Seq((1L, ts("2024-01-05 00:00:00"), 1.0)).toDF("user_id", "ts", "value")
-    val incoming = Seq(
-      (1L, ts("2024-01-05 00:00:00"), 10.0), // equal instant — dropped
-      (2L, ts("2024-01-04 00:00:00"), 11.0), // older than GLOBAL max — dropped
-      (3L, ts("2024-01-06 00:00:00"), 12.0)  // newer — kept
-    ).toDF("user_id", "ts", "value")
-    val out = Incremental.newerThanGlobal(existing, incoming, "ts")
-      .select($"value").as[Double].collect().toSeq
-    assert(out === Seq(12.0))
-    // empty existing table → everything is new
-    val empty = existing.where(lit(false))
-    assert(Incremental.newerThanGlobal(empty, incoming, "ts").count() === 3)
-  }
-
-  test("PivotOps.pivotDynamic discovers the vocabulary and matches the declared pivot") {
-    val ev = Seq((1L, "a", 2.0), (1L, "b", 3.0), (2L, "a", 5.0)).toDF("k", "t", "v")
-    val dyn = PivotOps.pivotDynamic(ev, "k", "t", sum($"v"))
-    assert(dyn.columns.toSeq === Seq("k", "a", "b"))
-    val declared = PivotOps.pivotAgg(ev, "k", "t", Seq("a", "b"), "v", sum(_))
-    assert(dyn.collect().map(_.toSeq).toSet === declared.collect().map(_.toSeq).toSet)
   }
 
   test("AsOfJoin.asOf picks the most recent right row at-or-before, else null") {
@@ -137,28 +118,6 @@ class OperatorsSpec extends SparkSpec {
     // the ONLY exchanges are the dim aggregation + its broadcast — the fact
     // stream stays map-side (no hashpartitioning of the click rows)
     assert(!plan.contains("SortMergeJoin"), plan)
-  }
-
-  test("asOfAuto: broadcast path below the dim gate, union+window above, same results") {
-    // a skewed window partition can't be split by AQE, so the switch to the
-    // fact-shuffle-free broadcast path is the skew bound for dim-sized rights
-    val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val clicks = ev.where($"event_type" === "click").select("event_id", "user_id", "ts")
-    val purchases = ev.where($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"value")
-    def resultOf(df: org.apache.spark.sql.DataFrame) = df
-      .select("event_id", "v").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    val small = AsOfJoin.asOfAuto(clicks, purchases, "user_id", "ts", "value", "v")
-    val smallPlan = small.queryExecution.executedPlan.toString()
-    assert(smallPlan.contains("BroadcastExchange"), s"dim-sized right must broadcast:\n$smallPlan")
-    assert(!smallPlan.contains("Window"), s"broadcast path must not window:\n$smallPlan")
-    val large = AsOfJoin.asOfAuto(clicks, purchases, "user_id", "ts", "value", "v",
-      maxBroadcastRows = 0)
-    val largePlan = large.queryExecution.executedPlan.toString()
-    assert(largePlan.contains("Window"), s"above the gate: union+window:\n$largePlan")
-    assert(resultOf(small) === resultOf(large))
-    assert(resultOf(small).nonEmpty)
   }
 
   test("theta sketch set algebra is exact below sketch capacity") {
@@ -262,16 +221,6 @@ class OperatorsSpec extends SparkSpec {
       Seq("user_id", "bucket", "open", "high", "low", "close", "volume"))
   }
 
-  test("PivotOps.projectToVocabulary drops departed columns and adds missing ones") {
-    // snapshot has x (stays), w (ticker left the index), lacks z (new ticker)
-    val snap = Seq((1L, 1.0, 9.0)).toDF("k", "x", "w")
-    val out = PivotOps.projectToVocabulary(snap, Seq("k"), Seq("x", "z"))
-    assert(out.columns.toSeq === Seq("k", "x", "z"))
-    val r = out.head()
-    assert(r.getDouble(1) === 1.0 && r.isNullAt(2))
-    assert(out.schema("z").dataType.simpleString === "double")
-  }
-
   test("Analytics.weightedPrice = sum(price*qty)/sum(qty) per brand") {
     val li = Seq((1L, 10.0, 2.0), (1L, 20.0, 3.0), (2L, 5.0, 1.0)).toDF("l_partkey", "l_extendedprice", "l_quantity")
     val p = Seq((1L, "B1"), (2L, "B2")).toDF("p_partkey", "p_brand")
@@ -293,7 +242,7 @@ class OperatorsSpec extends SparkSpec {
     // the summary's bars are the daily bars
     val bars = Seq("user_id", "d", "open", "high", "low", "close", "volume")
     assert(summaryRowSet(full.select(bars.map(col): _*)) ===
-      summaryRowSet(Ohlc.dailyBars(ev).select(bars.map(col): _*)))
+      summaryRowSet(RefBars.dailyBars(ev).select(bars.map(col): _*)))
     // three arbitrary slices (by event id mod) — not even time-contiguous —
     // summarized apart, then merged
     val parts = (0 to 2).map(i => Ohlc.dailySummary(ev.where($"event_id" % 3 === i), summaryLatest, sums))
@@ -774,7 +723,10 @@ class OperatorsSpec extends SparkSpec {
       .select($"user_id", $"ts", $"value", $"running")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2, t._3))
-    val plain = Skew.runningSum(df, "user_id", "ts", "value")
+    // the plain plan: ONE entity-partitioned ordered window
+    def runningSum(d: org.apache.spark.sql.DataFrame) = d.withColumn("running",
+      sum($"value").over(Window.partitionBy($"user_id").orderBy($"ts")))
+    val plain = runningSum(df)
     val bucketed = Skew.runningSumBucketed(df, "user_id", "ts", "value")
     assert(canon(bucketed) === canon(plain))
     // equal-timestamp ties get the same cumulative value in both plans
@@ -783,7 +735,7 @@ class OperatorsSpec extends SparkSpec {
       (1L, ts("2024-01-01 09:00:00"), 2.0),
       (1L, ts("2024-01-02 09:00:00"), 4.0)).toDF("user_id", "ts", "value")
     assert(canon(Skew.runningSumBucketed(tied, "user_id", "ts", "value"))
-      === canon(Skew.runningSum(tied, "user_id", "ts", "value")))
+      === canon(runningSum(tied)))
     // the two-stage SHAPE: the data-sized window partitions on
     // (key, bucket); only the bucket-count offset window partitions on
     // the bare key — and the plain plan is a single bare-key window
@@ -797,16 +749,6 @@ class OperatorsSpec extends SparkSpec {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
     assert(plainWins.size === 1)
-    // the auto switch: 30% hot share takes the bucketed plan at the 0.3
-    // default threshold; a uniform stream keeps the single-window plan
-    val autoHot = Skew.runningSumAuto(df, "user_id", "ts", "value")
-    assert(autoHot.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size === 2)
-    val autoFlat = Skew.runningSumAuto(
-      (0 until 1000).map(i => (i.toLong % 50, ts("2024-01-01 09:00:00"), 1.0))
-        .toDF("user_id", "ts", "value"), "user_id", "ts", "value")
-    assert(autoFlat.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size === 1)
   }
 
   test("Profile.benford extracts the first significant digit exactly") {
@@ -834,7 +776,7 @@ class OperatorsSpec extends SparkSpec {
       assert(rs.head.getLong(2) === 0L) // first day: no prior close, sv = 0
     }
     // differential vs an independent recomputation of the final OBV
-    val bars = graft.operators.Ohlc.dailyBars(
+    val bars = RefBars.dailyBars(
       graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"user_id").orderBy($"d")
     val finals = bars
@@ -892,7 +834,7 @@ class OperatorsSpec extends SparkSpec {
     }
     // differential: decimal power-sum moments vs Spark's skewness()/kurtosis()
     val ev = graft.functions.Fns.normalizeTsNtz(Tables.events(spark, sfDir), "ts")
-    val bars = graft.operators.Ohlc.dailyBars(ev)
+    val bars = RefBars.dailyBars(ev)
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"user_id").orderBy($"d")
     val ret = bars.select($"user_id",
         ($"close" / nullif(lag($"close", 1).over(w), lit(0.0)) - 1).as("r"))

@@ -97,11 +97,8 @@ class PairGateSpec extends SparkSpec {
       assert(e1.getMessage.contains("lshCandidatePairsBucketed"), e1.getMessage)
       val cents = Array(Array.tabulate(8)(d => if (d == 0) 1.0 else 0.0))
       val e2 = intercept[IllegalArgumentException](
-        Similarity.semdedupPairs(dense, cents, 0.4))
-      assert(e2.getMessage.contains("semdedupPairs"), e2.getMessage)
-      val e3 = intercept[IllegalArgumentException](
         Similarity.semdedupPairsEnsemble(dense, Seq(cents), 0.4))
-      assert(e3.getMessage.contains("semdedupPairsEnsemble"), e3.getMessage)
+      assert(e2.getMessage.contains("semdedupPairsEnsemble"), e2.getMessage)
     }
   }
 
@@ -269,11 +266,6 @@ class PairGateSpec extends SparkSpec {
       intercept[PairGateRefused](Similarity.cosinePairsExact(clustered, 0.4))
       val kept = keepOf(Similarity.cosinePairsExact(clustered, 0.4, gated = false))
       assert(kept === (0L until 40L), kept.take(50).mkString(","))
-      // the composed SemDeDup keep face completes under the same cap
-      val cents = Array.tabulate(4, 40)((c, d) => if (d % 4 == c) 0.5 else 0.0)
-      val sem = Similarity.semdedupKeep(clustered, threshold = 0.4,
-        centroids = Some(Seq(cents)))
-      assert(sem.count() === 40L)
     }
     // …and the fold path's keep set ≡ the pair-TABLE path's keep set when
     // the gate is off (the equality the scale rungs can't afford to check)

@@ -76,9 +76,5 @@ class PcaSpec extends SparkSpec {
       val v = xs.map(x => (x - m) * (x - m)).sum / n
       assert(math.abs(v - values(c)) < 1e-6, s"pc${c + 1} variance $v vs ${values(c)}")
     }
-    // pc1 explains at least as much variance as pc2 and the shares sum < 1
-    val ev = Pca.explainedVariance(emb, "embedding", 2)
-    assert(ev(0)._2 >= ev(1)._2)
-    assert(ev.map(_._3).sum < 1.0 + 1e-9)
   }
 }

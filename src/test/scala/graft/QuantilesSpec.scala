@@ -24,7 +24,7 @@ class QuantilesSpec extends SparkSpec {
     assert(sortedByBits === sortedByDouble)
   }
 
-  test("orderStatistics equals the sorted array on random data with negatives and dupes") {
+  test("quantileCont equals the sorted array's order statistics on random data with negatives and dupes") {
     val rnd = new scala.util.Random(11)
     val data = (for {
       g <- Seq("a", "b", "c")
@@ -32,12 +32,15 @@ class QuantilesSpec extends SparkSpec {
     } yield (g, if (rnd.nextBoolean()) rnd.nextGaussian() * 100 else rnd.nextInt(5).toDouble - 2))
     val df = data.toDF("k", "v").repartition(7)
     val byKey = data.groupBy(_._1).map { case (k, rows) => k -> rows.map(_._2).sorted.toIndexedSeq }
-    val ranks = byKey.map { case (k, vs) =>
-      k -> Seq(0L, vs.length.toLong - 1, vs.length.toLong / 2, vs.length.toLong / 3)
+    val got = Quantiles.quantileCont(df, "k", "v", Seq(0.0 -> "q0", 0.5 -> "q50", 1.0 -> "q100"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    for ((k, vs) <- byKey) {
+      // the median of an even count is the symmetric lerp of the middle pair
+      val mid = 0.5 * (vs.length - 1)
+      val (lo, hi) = (vs(math.floor(mid).toInt), vs(math.ceil(mid).toInt))
+      val median = if (lo == hi) lo else 0.5 * lo + 0.5 * hi
+      assert(got(k) === ((vs.head, median, vs.last)), s"group $k")
     }
-    val got = Quantiles.orderStatistics(df, "k", "v", ranks)
-    for ((k, rs) <- ranks; r <- rs)
-      assert(got((k, r)) === byKey(k)(r.toInt), s"group $k rank $r")
   }
 
   test("quantileCont matches the built-in exact percentile on events, bit for bit") {
@@ -240,15 +243,17 @@ class QuantilesSpec extends SparkSpec {
 
   test("a requested group key with no rows fails loudly") {
     val df = Seq(("a", 1.0)).toDF("k", "v")
-    intercept[IllegalArgumentException] {
-      Quantiles.orderStatistics(df, "k", "v", Map("a" -> Seq(0L), "zzz" -> Seq(0L)))
+    val err = intercept[IllegalArgumentException] {
+      Quantiles.quantileContWithCounts(df, "k", "v", Seq(0.5 -> "p50"), Map("a" -> 1L, "zzz" -> 1L))
     }
+    assert(err.getMessage.contains("zzz"), err.getMessage)
   }
 
   test("tiny groups and exact ranks resolve correctly") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("b", 3.0)).toDF("k", "v")
-    val stats = Quantiles.orderStatistics(df, "k", "v", Map("a" -> Seq(1L), "b" -> Seq(0L)))
-    assert(stats(("a", 1L)) === 2.0 && stats(("b", 0L)) === 3.0)
+    val stats = Quantiles.quantileCont(df, "k", "v", Seq(0.0 -> "lo", 1.0 -> "hi"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(stats === Map("a" -> ((1.0, 2.0)), "b" -> ((3.0, 3.0))))
   }
 
   test("discrete-quantile rank is boundary-exact where double ceil(q·n) is not") {

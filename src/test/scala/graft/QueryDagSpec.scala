@@ -50,30 +50,6 @@ class QueryDagSpec extends SparkSpec {
     assert(builds.toMap === Map("base" -> 1, "evens" -> 1, "odds" -> 1, "joined" -> 1))
   }
 
-  test("restate: only the changed stage and its transitive dependents rebuild") {
-    val builds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    def mk(name: String, deps: Seq[String], mult: Int): Stage =
-      Stage(name, deps, (s, _, up) => {
-        builds(name) += 1
-        val base = deps.headOption.map(up).getOrElse(s.range(1, 4).toDF("v"))
-        base.select(($"v" * mult).as("v"))
-      })
-    val stages = Seq(mk("load", Nil, 1), mk("clean", Seq("load"), 10),
-      mk("report", Seq("clean"), 10), mk("audit", Seq("load"), 100))
-    val first = QueryDag.run(spark, sfDir, stages)
-    assert(first("report").as[Long].collect().sorted === Array(100L, 200L, 300L))
-    assert(QueryDag.affected(stages, Set("clean")) === Set("clean", "report"))
-    builds.clear()
-    val second = QueryDag.restate(spark, sfDir, stages, first, Set("clean"))
-    // load and audit reused; clean + report rebuilt
-    assert(builds.toMap === Map("clean" -> 1, "report" -> 1))
-    assert(second("audit").as[Long].collect().sorted === Array(100L, 200L, 300L))
-    assert(second("report").as[Long].collect().sorted === Array(100L, 200L, 300L))
-    val e = intercept[IllegalArgumentException](
-      QueryDag.restate(spark, sfDir, stages, Map.empty, Set("clean")))
-    assert(e.getMessage.contains("prior output"))
-  }
-
   test("runPersisted kill-and-restart: a run that dies mid-DAG resumes from " +
     "completed stages — builds not re-invoked, output identical to a clean run") {
     val builds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)

@@ -222,21 +222,6 @@ class SimilaritySpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("maxCandidates")))
   }
 
-  test("ivfTopKBatch enforces its driver-sized query-batch precondition") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cents = Similarity.seedCentroids(emb, 8)
-    val index = Similarity.buildIvfIndex(emb, cents)
-    spark.conf.set("spark.graft.ann.maxBatchQueries", "3")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.ivfTopKBatch(index, cents, emb.limit(10), 5)
-      }
-      assert(e.getMessage.contains("spark.graft.ann.maxBatchQueries"))
-      // under the cap the same call runs
-      assert(Similarity.ivfTopKBatch(index, cents, emb.limit(2), 5).count() > 0)
-    } finally spark.conf.unset("spark.graft.ann.maxBatchQueries")
-  }
-
   test("topKBatch caps its collected query batch at spark.graft.ann.maxBatchQueries") {
     val emb = Tables.embeddings(spark, sfDir)
     spark.conf.set("spark.graft.ann.maxBatchQueries", "3")
@@ -250,31 +235,15 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.ann.maxBatchQueries")
   }
 
-  test("ivfTopKBatch equals per-query ivfTopKIndexed for every query in the batch") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cents = Similarity.seedCentroids(emb, 8)
-    val index = Similarity.buildIvfIndex(emb, cents)
-    val queries = emb.orderBy($"vec_id".desc).limit(3)
-    val batch = Similarity.ivfTopKBatch(index, cents, queries, 5, nprobe = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
-    queries.collect().foreach { qr =>
-      val qid = qr.getLong(0)
-      val single = Similarity.ivfTopKIndexed(
-        index, cents, emb.where($"vec_id" === qid), 5, nprobe = 3)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(batch(qid) === single, s"qid=$qid")
-    }
-  }
-
   test("int8 quantization: 4x smaller codes, small cosine error after round-trip") {
     val emb = Tables.embeddings(spark, sfDir)
-    val q = Similarity.quantized(emb)
+    val q = emb.select($"vec_id", graft.plans.Exprs.quantizeInt8($"embedding").as("q"))
+      .select($"vec_id", $"q.qscale".as("qscale"), $"q.codes".as("codes"))
     assert(q.schema("codes").dataType.simpleString === "array<tinyint>")
     // round-trip: cosine(original, dequantized) ≈ 1 for every vector
     val joined = emb.join(q, "vec_id")
       .select($"vec_id", $"embedding",
-        Similarity.dequantize("codes", "qscale").as("deq"))
+        expr("transform(codes, c -> cast(c as double) * qscale)").as("deq"))
     val cosErr = joined.select(
       (expr("aggregate(zip_with(embedding, deq, (a, b) -> cast(a as double) * b), cast(0 as double), (s, x) -> s + x)") /
         (sqrt(expr("aggregate(embedding, cast(0 as double), (s, x) -> s + cast(x as double) * cast(x as double))")) *
@@ -396,27 +365,6 @@ class SimilaritySpec extends SparkSpec {
     assert(trained <= adcErr(0) + 0.02)
   }
 
-  test("ivfPqTopK: probed-cell ADC results are a subset of full-corpus ADC ranking") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.orderBy($"vec_id".desc).limit(1)
-    val cents = Similarity.kmeansCentroids(emb, 8, 2)
-    val books = Similarity.pqCodebooks(emb, m = 8, ksub = 16, iters = 2)
-    val index = Similarity.buildIvfPqIndex(emb, cents, books)
-    val out = Similarity.ivfPqTopK(index, cents, books, q, 10, nprobe = 4).collect()
-    assert(out.length === 10)
-    assert(out.map(_.getDouble(1)).toSeq === out.map(_.getDouble(1)).sortBy(-_).toSeq)
-    // probing ALL cells must equal the pure-PQ ranking (same ADC scores)
-    val allCells = Similarity.ivfPqTopK(index, cents, books, q, 10, nprobe = 8)
-      .as[(Long, Double)].collect().toSeq
-    val purePq = Similarity.pqTopK(Similarity.pqEncoded(emb, books), books, q, 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(allCells === purePq)
-    // brute-force recall stays reasonable through both approximations
-    val brute = Similarity.topK(emb, q, 10).collect().map(_.getLong(0)).toSet
-    val recall = out.map(_.getLong(0)).count(brute.contains) / 10.0
-    assert(recall >= 0.2, s"recall@10 $recall")
-  }
-
   test("residual IVF-PQ: LUT algebra matches driver-side reconstruction; wins on clustered data") {
     // deterministic clustered corpus: 6 well-separated centers, small
     // residual noise — the geometry residual coding exists for. (The
@@ -441,8 +389,8 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.topK(emb, q, 300).as[(Long, Double)].collect().toMap
     val cents = Similarity.kmeansCentroids(emb, nClusters, 3)
     val books = Similarity.pqCodebooks(emb, m = 4, ksub = 4, iters = 2)
-    val plain = Similarity.ivfPqTopK(
-      Similarity.buildIvfPqIndex(emb, cents, books), cents, books, q, 300, nprobe = nClusters)
+    // plain PQ on the raw vectors: what an IVF-PQ index probing every cell scores
+    val plain = Similarity.pqTopK(Similarity.pqEncoded(emb, books), books, q, 300)
       .as[(Long, Double)].collect().toMap
     val (rBooks, rIndex) = Similarity.buildIvfPqResidualIndex(
       emb, cents, m = 4, ksub = 4, iters = 2, trainFraction = 1.0)
@@ -504,7 +452,7 @@ class SimilaritySpec extends SparkSpec {
     val sample = graft.operators.Sampling.deterministicSample(emb, "vec_id", 0.25)
     val cents8 = Similarity.kmeansCentroids(sample, 8, 2)
     val cents4 = Similarity.kmeansCentroids(sample, 4, 2)
-    val single = Similarity.semdedupPairs(emb, cents8, 0.4)
+    val single = Similarity.semdedupPairsEnsemble(emb, Seq(cents8), 0.4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val ensemble = Similarity.semdedupPairsEnsemble(emb, Seq(cents8, cents4), 0.4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -526,28 +474,7 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("semdedupKeep drops only vectors with an exact-cosine neighbor kept") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val kept = Similarity.semdedupKeep(emb, k = 8, threshold = 0.4)
-      .select("vec_id").as[Long].collect().toSet
-    val all = emb.select("vec_id").as[Long].collect().toSet
-    val dropped = all.diff(kept)
-    assert(kept.nonEmpty)
-    // every dropped vector has at least one exact cosine>τ partner (sound),
-    // and the dedup is deterministic across runs
-    if (dropped.nonEmpty) {
-      val exact = Similarity.cosinePairsExact(emb, 0.4)
-        .select("id_a", "id_b").as[(Long, Long)].collect()
-      val hasNeighbor = exact.flatMap(p => Seq(p._1, p._2)).toSet
-      assert(dropped.subsetOf(hasNeighbor), s"dropped w/o neighbor: ${dropped.diff(hasNeighbor).take(5)}")
-    }
-    val again = Similarity.semdedupKeep(emb, k = 8, threshold = 0.4)
-      .select("vec_id").as[Long].collect().toSet
-    assert(again === kept)
-  }
-
-  test("autoCellCount: √n-scaled with the small-corpus floor pinning the " +
-    "shipped clustering; semdedupKeep's auto path is sound and deterministic") {
+  test("autoCellCount: √n-scaled with the small-corpus floor pinning the shipped clustering") {
     // the floor — every corpus up to 2048 vectors keeps the bench-era
     // k = 8, so 1×-scale keep sets and recall diagnostics are unchanged
     assert(Similarity.autoCellCount(200) === 8)
@@ -557,22 +484,6 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.autoCellCount(20000) === 25)
     assert(Similarity.autoCellCount(200000) === 80)
     assert(Similarity.autoCellCount(20000000) === 791)
-    // auto-k keep (k = 0 default): sound — every dropped vector has an
-    // exact cosine>τ partner — and deterministic across runs
-    val emb = Tables.embeddings(spark, sfDir)
-    val kept = Similarity.semdedupKeep(emb, threshold = 0.4)
-      .select("vec_id").as[Long].collect().toSet
-    val all = emb.select("vec_id").as[Long].collect().toSet
-    val dropped = all.diff(kept)
-    assert(kept.nonEmpty)
-    if (dropped.nonEmpty) {
-      val hasNeighbor = Similarity.cosinePairsExact(emb, 0.4)
-        .select("id_a", "id_b").as[(Long, Long)].collect()
-        .flatMap(p => Seq(p._1, p._2)).toSet
-      assert(dropped.subsetOf(hasNeighbor))
-    }
-    assert(Similarity.semdedupKeep(emb, threshold = 0.4)
-      .select("vec_id").as[Long].collect().toSet === kept)
   }
 
   test("persisted cent_idx-partitioned IVF-PQ index probe equals the inline probe") {

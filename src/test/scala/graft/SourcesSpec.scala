@@ -70,14 +70,14 @@ class SourcesSpec extends SparkSpec {
     assert(rows.map(_.getDouble(2)).toSeq === Seq(1.0, 2.0))
   }
 
-  test("writeByDay partitions by day and serves date-pruned reads") {
+  test("restateDays lays out day partitions that serve date-pruned reads") {
     val out = Files.createTempDirectory("graft_byday").toFile.getAbsolutePath + "/t"
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val df = Seq(
       (1L, ts("2024-01-01 10:00:00"), 1.0),
       (2L, ts("2024-01-02 10:00:00"), 2.0),
       (3L, ts("2024-01-02 11:00:00"), 3.0)).toDF("user_id", "ts", "value")
-    Sinks.writeByDay(df, out, "ts")
+    Sinks.restateDays(df, out, "ts")
     val dirs = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("day="))
     assert(dirs.toSet === Set("day=2024-01-01", "day=2024-01-02"))
     val pruned = spark.read.parquet(out).where($"day" === "2024-01-02")
@@ -87,27 +87,10 @@ class SourcesSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters"), plan)
   }
 
-  test("writeByDay in ORC: same partition pruning AND predicate pushdown") {
-    val out = Files.createTempDirectory("graft_orc").toFile.getAbsolutePath + "/t"
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val df = Seq(
-      (1L, ts("2024-01-01 10:00:00"), 1.0),
-      (2L, ts("2024-01-02 10:00:00"), 2.0),
-      (3L, ts("2024-01-02 11:00:00"), 3.0)).toDF("user_id", "ts", "value")
-    Sinks.writeByDay(df, out, "ts", format = "orc")
-    val pruned = spark.read.orc(out)
-      .where($"day" === "2024-01-02" && $"value" > 2.5)
-    assert(pruned.count() === 1)
-    val plan = pruned.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters"), plan) // day -> directory pruning
-    assert(plan.contains("PushedFilters") &&
-      plan.contains("GreaterThan(value,2.5)"), plan) // value -> ORC reader
-  }
-
   test("restateDays overwrites only the touched day partitions, idempotently") {
     val out = Files.createTempDirectory("graft_restate").toFile.getAbsolutePath + "/t"
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    Sinks.writeByDay(Seq(
+    Sinks.restateDays(Seq(
       (1L, ts("2024-01-01 10:00:00"), 1.0),
       (2L, ts("2024-01-02 10:00:00"), 999.0) // bad value, to be corrected
     ).toDF("user_id", "ts", "value"), out, "ts")
@@ -118,123 +101,6 @@ class SourcesSpec extends SparkSpec {
     val rows = spark.read.parquet(out).orderBy($"ts")
       .select($"value").as[Double].collect().toSeq
     assert(rows === Seq(1.0, 2.0)) // day 1 untouched, day 2 converged
-  }
-
-  test("writeZOrdered clusters BOTH dimensions: per-file spans shrink vs an unordered write") {
-    import org.apache.spark.sql.functions.{col, input_file_name, max => fmax, min => fmin}
-    val dir = Files.createTempDirectory("graft_zorder").toFile.getAbsolutePath
-    val ev = Tables.events(spark, sfDir).select($"user_id", $"value")
-    // average per-file span of a column, as a fraction of its global span
-    def meanSpanFrac(path: String, c: String): Double = {
-      val df = spark.read.parquet(path)
-      val glob = df.agg(fmax(col(c)).cast("double") - fmin(col(c)).cast("double"))
-        .head().getDouble(0)
-      val spans = df.groupBy(input_file_name())
-        .agg((fmax(col(c)).cast("double") - fmin(col(c)).cast("double")).as("s"))
-        .select($"s").as[Double].collect()
-      spans.sum / spans.length / glob
-    }
-    Sinks.writeZOrdered(ev, s"$dir/z", "user_id", "value", numFiles = 16)
-    ev.repartition(16).write.parquet(s"$dir/plain") // baseline: hash-scattered
-    // z-ordered files cover a small window of each dimension; hash
-    // partitioning makes every file span ~the whole domain
-    val (zu, zv) = (meanSpanFrac(s"$dir/z", "user_id"), meanSpanFrac(s"$dir/z", "value"))
-    val (pu, pv) = (meanSpanFrac(s"$dir/plain", "user_id"), meanSpanFrac(s"$dir/plain", "value"))
-    assert(zu < pu * 0.6, s"user_id span: z=$zu plain=$pu")
-    assert(zv < pv * 0.6, s"value span: z=$zv plain=$pv")
-    // rows survive the round trip and predicates still push down
-    assert(spark.read.parquet(s"$dir/z").count() === ev.count())
-    val plan = spark.read.parquet(s"$dir/z").where($"user_id" === 3)
-      .queryExecution.executedPlan.toString()
-    assert(plan.contains("PushedFilters: [IsNotNull(user_id), EqualTo(user_id,3)]"), plan)
-  }
-
-  test("readCsvCorpus: declared schema, malformed rows quarantined, same reject-sink contract") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_csv").toFile
-    val f = new java.io.File(dir, "shard-000.csv")
-    val w = new java.io.PrintWriter(f)
-    w.println("doc_id,text,n_chars")
-    w.println("1,hello world,11")
-    w.println("2,bonjour,7")
-    w.println("3,type drift,not_a_number") // malformed numeric cell
-    w.println("4,ok,2")
-    w.close()
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("n_chars", LongType)))
-    val df = Sources.readCsvCorpus(spark, f.getAbsolutePath, schema).persist()
-    assert(df.where($"__corrupt".isNull).count() === 3)
-    val bad = df.where($"__corrupt".isNotNull)
-    assert(bad.count() === 1)
-    assert(bad.select($"__corrupt").as[String].head.contains("not_a_number"))
-    val cleanDir = new java.io.File(dir, "clean").getAbsolutePath
-    val rejDir = new java.io.File(dir, "rejects").getAbsolutePath
-    val (nClean, nBad) = Sinks.writeWithRejects(df, cleanDir, rejDir)
-    assert(nClean === 3 && nBad === 1)
-    assert(spark.read.parquet(rejDir).select($"raw_line").as[String].head
-      .contains("not_a_number"))
-  }
-
-  test("readJsonlCorpus: declared schema, corrupt lines quarantined not dropped") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_jsonl").toFile
-    val f = new java.io.File(dir, "shard-000.jsonl")
-    val w = new java.io.PrintWriter(f)
-    w.println("""{"doc_id": 1, "text": "hello world", "lang": "en"}""")
-    w.println("""{"doc_id": 2, "text": "bonjour", "lang": "fr"}""")
-    w.println("""{"doc_id": 3, "text": "truncated""") // malformed line
-    w.println("""{"doc_id": 4, "text": "ok", "lang": "en"}""")
-    w.close()
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType)))
-    // persist before corrupt-column-only queries (documented Spark
-    // restriction on raw JSON scans)
-    val df = Sources.readJsonlCorpus(spark, f.getAbsolutePath, schema).persist()
-    val clean = df.where($"__corrupt".isNull)
-    val bad = df.where($"__corrupt".isNotNull)
-    assert(clean.count() === 3)
-    assert(clean.orderBy($"doc_id").select($"doc_id").as[Long].collect().toSeq === Seq(1L, 2L, 4L))
-    // the quarantined row carries the raw line for a reject sink
-    assert(bad.count() === 1)
-    assert(bad.select($"__corrupt").as[String].head.contains("truncated"))
-    // downstream operators run unchanged on the clean side
-    val scored = graft.operators.TextAnalysis.qualityScore(clean.drop("__corrupt"))
-    assert(scored.count() === 3)
-
-    // the landing sink splits clean/reject without dropping either side
-    val cleanDir = new java.io.File(dir, "clean").getAbsolutePath
-    val rejDir = new java.io.File(dir, "rejects").getAbsolutePath
-    val (nClean, nBad) = Sinks.writeWithRejects(df, cleanDir, rejDir)
-    assert(nClean === 3 && nBad === 1)
-    assert(spark.read.parquet(cleanDir).columns.toSeq.sorted === Seq("doc_id", "lang", "text"))
-    assert(spark.read.parquet(rejDir).select($"raw_line").as[String].head.contains("truncated"))
-    // the ledger counts are per-CALL deltas, not cumulative path totals:
-    // a second append over pre-existing data reports only its own rows
-    val (nClean2, nBad2) = Sinks.writeWithRejects(df, cleanDir, rejDir)
-    assert(nClean2 === 3 && nBad2 === 1)
-    assert(spark.read.parquet(cleanDir).count() === 6)
-    assert(spark.read.parquet(rejDir).count() === 2)
-  }
-
-  test("events stream source feeds the shared windowedAgg transform") {
-    val streamDir = Files.createTempDirectory("graft_stream")
-    Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("part-0.parquet"))
-    val stream = Sources.readEventsStream(spark, streamDir.toString)
-    assert(stream.isStreaming)
-    val agg = graft.streaming.EventsStream.windowedAgg(stream)
-    val query = agg.writeStream.format("memory").queryName("src_win")
-      .outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      // append mode: nothing finalizes (watermark never passes), but the
-      // pipeline runs — state is bounded, schema is the batch schema
-      assert(spark.table("src_win").schema.fieldNames.toSeq
-        === Seq("wstart", "event_type", "n", "total"))
-    } finally query.stop()
   }
 
   // ---- the snapshot reader: one listing and schema per file set ----
@@ -269,9 +135,23 @@ class SourcesSpec extends SparkSpec {
       .count() === 2)
   }
 
+  test("appendNewerThan appends files in the incoming column order") {
+    // the key is not the first column: a USING join on it would move it first
+    val store = Files.createTempDirectory("graft_order").toFile.getAbsolutePath + "/t"
+    def pull(d: Int) = Seq((10L * d + 1, 1L, ts(f"2024-01-$d%02d 12:00:00"), 1.0),
+      (10L * d + 2, 2L, ts(f"2024-01-$d%02d 12:00:00"), 2.0)).toDF("event_id", "user_id", "ts", "value")
+    val order = pull(1).columns.toSeq
+    (1 to 3).foreach(d => Sinks.appendNewerThan(spark, pull(d), store, "user_id", "ts"))
+    val files = new java.io.File(store).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length >= 3)
+    for (f <- files) assert(spark.read.parquet(f.getPath).columns.toSeq === order, f.getName)
+    assert(spark.read.parquet(store).columns.toSeq === order)
+    assert(spark.read.parquet(store).count() === 6)
+  }
+
   test("snapshot reader: a read after restateDays in place returns the restated day") {
     val out = Files.createTempDirectory("graft_snap_restate").toFile.getAbsolutePath + "/t"
-    Sinks.writeByDay(Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 10:00:00"), 999.0))
+    Sinks.restateDays(Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 10:00:00"), 999.0))
       .toDF("user_id", "ts", "value"), out, "ts")
     def values = Sources.readParquet(spark, out).orderBy($"ts").select($"value").as[Double]
       .collect().toSeq
@@ -295,8 +175,9 @@ class SourcesSpec extends SparkSpec {
 
   test("snapshot fingerprint: the listStatus walk digests what listFiles lists") {
     val out = Files.createTempDirectory("graft_snap_fp").toFile.getAbsolutePath + "/t"
-    Sinks.writeByDay(Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 10:00:00"), 2.0))
-      .toDF("user_id", "ts", "value"), out, "ts")
+    Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 10:00:00"), 2.0))
+      .toDF("user_id", "ts", "value").withColumn("day", to_date($"ts"))
+      .write.partitionBy("day").parquet(out)
     val onDisk = Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
       .map(_.getFileName.toString).toSeq
     assert(onDisk.exists(_.endsWith(".crc")) && onDisk.contains("_SUCCESS"), onDisk)

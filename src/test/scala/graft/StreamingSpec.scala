@@ -8,12 +8,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 case class StreamDoc(doc_id: Long, ts: Timestamp, text: String)
-case class Chg(user_id: Long, ts: Timestamp, event_id: Long,
-               event_type: String, value: Double)
-case class StreamLangDoc(doc_id: Long, ts: Timestamp, lang: String)
-case class Qt(ticker: String, day: java.sql.Date, open: Double, high: Double,
-              low: Double, close: Double, volume: Long)
-case class StreamVec(vec_id: Long, embedding: Array[Float])
 case class CardDoc(doc_id: Long, text: String, lang: String, source: String,
                    n_chars: Long)
 
@@ -44,56 +38,6 @@ class StreamingSpec extends SparkSpec {
       assert(w10.isDefined, s"expected finalized 10:00 window, got ${rows.mkString(";")}")
       assert(w10.get.getLong(2) === 2L)
       assert(w10.get.getDouble(3) === 3.0)
-    } finally query.stop()
-  }
-
-  test("slidingAgg lands each event in both overlapping hop windows; batch mirror matches q_sliding_window") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val out = EventsStream.slidingAgg(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-    val query = out.writeStream.format("memory").queryName("slide_agg")
-      .outputMode("append").start()
-    try {
-      // 10:05 belongs to the 09:30 and 10:00 hop windows
-      input.addData(
-        Ev(1L, ts("2024-01-01 10:05:00"), "click", 1.0),
-        Ev(2L, ts("2024-01-01 10:40:00"), "click", 2.0))
-      query.processAllAvailable()
-      input.addData(Ev(3L, ts("2024-01-01 14:00:00"), "view", 5.0))
-      query.processAllAvailable()
-      input.addData(Ev(4L, ts("2024-01-01 17:00:00"), "view", 5.0))
-      query.processAllAvailable()
-      val rows = spark.table("slide_agg").collect()
-        .map(r => r.getTimestamp(0) -> (r.getLong(2), r.getDouble(3))).toMap
-      // 09:30 window sees only the 10:05 event; 10:00 sees both; 10:30 only 10:40
-      assert(rows(ts("2024-01-01 09:30:00")) === ((1L, 1.0)), rows.toString)
-      assert(rows(ts("2024-01-01 10:00:00")) === ((2L, 3.0)), rows.toString)
-      assert(rows(ts("2024-01-01 10:30:00")) === ((1L, 2.0)), rows.toString)
-    } finally query.stop()
-  }
-
-  test("sessionize closes a session when the inactivity gap is exceeded") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val sessions = EventsStream.sessionize(input.toDS(), gapSec = 1800)
-    val query = sessions.writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Ev(1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-        Ev(1L, ts("2024-01-01 10:10:00"), "click", 2.0))
-      query.processAllAvailable()
-      // next event is far beyond the gap → previous session closes
-      input.addData(Ev(1L, ts("2024-01-01 13:00:00"), "click", 7.0))
-      query.processAllAvailable()
-      val rows = spark.table("sessions").collect()
-      assert(rows.length === 1, s"got ${rows.mkString(";")}")
-      val s = rows.head
-      assert(s.getLong(0) === 1L)
-      assert(s.getLong(1) === 2L)
-      assert(s.getDouble(2) === 3.0)
-      assert(s.getDouble(3) === 600.0)
     } finally query.stop()
   }
 
@@ -128,35 +72,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.where($"wstart" === ts("2024-01-01 12:00:00")).count() === 1)
   }
 
-  test("sessionizeWindowed (built-in session_window) finalizes sessions like byGap") {
-    implicit val sqlCtx = spark.sqlContext
-    val evs = Seq(
-      Ev(1L, ts("2024-01-01 10:00:00"), "c", 1.0),
-      Ev(1L, ts("2024-01-01 10:10:00"), "c", 2.0),
-      Ev(1L, ts("2024-01-01 13:00:00"), "c", 7.0))
-    val input = MemoryStream[Ev]
-    val query = EventsStream.sessionizeWindowed(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-      .writeStream.format("memory").queryName("sess_win").outputMode("append").start()
-    try {
-      input.addData(evs: _*)
-      query.processAllAvailable()
-      input.addData(Ev(9L, ts("2024-01-02 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      input.addData(Ev(9L, ts("2024-01-03 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      val streamed = spark.table("sess_win")
-        .where($"user_id" === 1L)
-        .select("user_id", "session_start", "n_events", "total_value")
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSet
-      val batch = operators.Sessionize.byGap(
-        evs.toDF().withColumn("ts", col("ts").cast("timestamp")))
-        .select("user_id", "session_start", "n_events", "total_value")
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSet
-      assert(streamed === batch, s"streamed $streamed vs batch $batch")
-    } finally query.stop()
-  }
-
   test("streamingTopEntities emits each finalized window's top-k once") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
@@ -185,93 +100,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows === Set((1L, 3L), (2L, 2L)),
         spark.table("top_ent").collect().mkString(";"))
     } finally query.stop()
-  }
-
-  test("batch Sessionize.byGap agrees with the streaming sessionizer on closed sessions") {
-    implicit val sqlCtx = spark.sqlContext
-    val evs = Seq(
-      Ev(1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-      Ev(1L, ts("2024-01-01 10:10:00"), "click", 2.0),
-      Ev(1L, ts("2024-01-01 13:00:00"), "click", 7.0),
-      Ev(2L, ts("2024-01-01 09:00:00"), "view", 4.0),
-      Ev(2L, ts("2024-01-01 11:00:00"), "view", 5.0))
-    val input = MemoryStream[Ev]
-    val query = EventsStream.sessionize(input.toDS(), gapSec = 1800)
-      .writeStream.format("memory").queryName("sess_mirror").outputMode("append").start()
-    try {
-      input.addData(evs: _*)
-      query.processAllAvailable()
-      // push the watermark far enough that every session times out
-      input.addData(Ev(9L, ts("2024-01-02 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      input.addData(Ev(9L, ts("2024-01-03 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      val streamed = spark.table("sess_mirror")
-        .select("user_id", "n_events", "total_value", "duration_sec")
-        .where($"user_id" =!= 9L)
-        .as[(Long, Long, Double, Double)].collect().toSet
-      val batch = operators.Sessionize.byGap(
-        evs.toDF().withColumn("ts", col("ts").cast("timestamp")), gapSec = 1800)
-        .select("user_id", "n_events", "total_value", "duration_sec")
-        .where($"user_id" =!= 9L)
-        .as[(Long, Long, Double, Double)].collect().toSet
-      assert(streamed === batch, s"streamed $streamed vs batch $batch")
-    } finally query.stop()
-  }
-
-  test("streamingBars finalizes a day's OHLCV identical to the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val barsStream = EventsStream.streamingBars(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-    val query = barsStream.writeStream.format("memory").queryName("bars_stream")
-      .outputMode("append").start()
-    try {
-      val day1 = Seq(
-        Ev(1L, ts("2024-01-01 09:00:00"), "t", 10.0),
-        Ev(1L, ts("2024-01-01 12:00:00"), "t", 30.0),
-        Ev(1L, ts("2024-01-01 16:00:00"), "t", 20.0))
-      input.addData(day1: _*)
-      query.processAllAvailable()
-      // advance the watermark past day 1 (1-day delay → needs ts ≥ Jan 3)
-      input.addData(Ev(1L, ts("2024-01-03 09:00:00"), "t", 5.0))
-      query.processAllAvailable()
-      input.addData(Ev(1L, ts("2024-01-05 09:00:00"), "t", 6.0))
-      query.processAllAvailable()
-      val got = spark.table("bars_stream")
-        .where($"d" === "2024-01-01")
-        .select("open", "high", "low", "close", "volume").collect()
-      assert(got.length === 1, spark.table("bars_stream").collect().mkString(";"))
-      assert(got(0).getDouble(0) === 10.0 && got(0).getDouble(1) === 30.0
-        && got(0).getDouble(2) === 10.0 && got(0).getDouble(3) === 20.0
-        && got(0).getLong(4) === 3L)
-    } finally query.stop()
-  }
-
-  test("sessionize runs on the RocksDB state store (production state backend)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx = spark.sqlContext
-    try {
-      val input = MemoryStream[Ev]
-      val query = EventsStream.sessionize(input.toDS(), gapSec = 1800)
-        .writeStream.format("memory").queryName("sessions_rocks")
-        .outputMode("append").start()
-      try {
-        input.addData(Ev(9L, ts("2024-01-01 10:00:00"), "click", 1.0))
-        query.processAllAvailable()
-        input.addData(Ev(9L, ts("2024-01-01 13:00:00"), "click", 2.0))
-        query.processAllAvailable()
-        val rows = spark.table("sessions_rocks").collect()
-        assert(rows.length === 1 && rows.head.getLong(1) === 1L)
-      } finally query.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("streamingAsOf enriches each fact with the latest dim at-or-before it") {
@@ -379,28 +207,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("dedupWithinWatermark drops re-deliveries, state bounded by the delay") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val out = EventsStream.dedupWithinWatermark(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      Seq("user_id", "event_type"), delay = "1 hour")
-    val query = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Ev(1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-        Ev(1L, ts("2024-01-01 10:00:30"), "click", 1.0), // re-delivery, same key
-        Ev(2L, ts("2024-01-01 10:01:00"), "click", 2.0))
-      query.processAllAvailable()
-      input.addData(Ev(1L, ts("2024-01-01 10:05:00"), "click", 9.0)) // still duplicate
-      query.processAllAvailable()
-      val rows = spark.table("dedup_stream").collect()
-      assert(rows.length === 2, rows.mkString(";"))
-      assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
-    } finally query.stop()
-  }
-
   test("reachStream: chained dedup + daily window emit exact per-day distinct counts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
@@ -469,31 +275,6 @@ class StreamingSpec extends SparkSpec {
       rows.mkString(";"))
   }
 
-  test("nearDedupWithinWatermark folds reformatted duplicates, keeps distinct docs") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamDoc]
-    val out = EventsStream.nearDedupWithinWatermark(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-    val query = out.writeStream.format("memory").queryName("near_dedup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        StreamDoc(1L, ts("2024-01-01 10:00:00"), "The quick brown fox"),
-        // same text reformatted: extra whitespace + case — same fingerprint
-        StreamDoc(2L, ts("2024-01-01 10:00:30"), "  the   QUICK brown\tfox "),
-        StreamDoc(3L, ts("2024-01-01 10:01:00"), "an entirely different document"))
-      query.processAllAvailable()
-      val rows = spark.table("near_dedup_stream").collect()
-      assert(rows.length === 2, rows.mkString(";"))
-      assert(rows.map(_.getLong(0)).toSet === Set(1L, 3L))
-      // batch path: same fingerprint semantics through dropDuplicates
-      val batch = EventsStream.nearDedupWithinWatermark(
-        Seq(StreamDoc(1L, ts("2024-01-01 10:00:00"), "a b c"),
-          StreamDoc(2L, ts("2024-01-01 10:00:01"), "A  B  c")).toDS().toDF())
-      assert(batch.count() === 1)
-    } finally query.stop()
-  }
-
   test("qualityGateStream keeps exactly what the batch gate keeps at the landed threshold") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextAnalysis
@@ -548,56 +329,6 @@ class StreamingSpec extends SparkSpec {
           StreamDoc(2L, ts("2024-01-01 10:00:10"), "seen before"),
           StreamDoc(3L, ts("2024-01-01 10:00:20"), "brand new")).toDS().toDF(), store)
       assert(batch.count() === 1)
-    } finally query.stop()
-  }
-
-  test("temperatureMixStream samples against landed-corpus rates, refreshed without restart") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Sampling
-    // landed corpus: en-heavy (8 docs) vs fr (2 docs); alpha=0 flattens
-    // toward uniform → en keeps (2/8)^1 = 25% (threshold 0x4000), fr keeps all
-    val landed = ((1L to 8L).map(i => (i, "en")) ++ Seq((9L, "fr"), (10L, "fr")))
-      .toDF("doc_id", "lang")
-    val ratesDir = java.nio.file.Files.createTempDirectory("graft_rates").toString
-    Sampling.temperatureRates(landed, "lang", alpha = 0.0)
-      .write.mode("overwrite").parquet(ratesDir)
-    val input = MemoryStream[StreamLangDoc]
-    val sampled = scala.collection.mutable.Set.empty[Long]
-    val query = EventsStream.temperatureMixStreamRefreshing(
-      input.toDS().toDF(), ratesDir) { (batch, _) =>
-      sampled.synchronized {
-        sampled ++= batch.select(col("doc_id")).collect().map(_.getLong(0))
-      }
-    }.start()
-    def md5hex4(id: Long): String = java.security.MessageDigest.getInstance("MD5")
-      .digest(id.toString.getBytes("UTF-8")).take(2).map("%02x".format(_)).mkString
-    try {
-      val phase1 = (1L to 10L).map(i =>
-        StreamLangDoc(i, ts("2024-01-01 10:00:00"), if (i <= 8) "en" else "fr"))
-      input.addData(phase1: _*)
-      query.processAllAvailable()
-      val want1 = phase1.filter(d => d.lang == "fr" || md5hex4(d.doc_id) < "4000")
-        .map(_.doc_id).toSet
-      assert(sampled.synchronized(sampled.toSet) === want1,
-        "stream sample must equal the deterministic batch rule")
-      // batch mirror: applyRates on the same frame gives the same membership
-      val batch = Sampling.applyRates(
-        phase1.toDF().select($"doc_id", $"lang"), spark.read.parquet(ratesDir),
-        "lang", "doc_id").select($"doc_id").as[Long].collect().toSet
-      assert(batch === want1)
-      // REFRESH: corpus evolved — alpha=1 keeps natural proportions (all
-      // thresholds 2^16). Overwrite the rates table; the next micro-batch
-      // re-reads it — no query restart, no stale file listing.
-      Sampling.temperatureRates(landed, "lang", alpha = 1.0)
-        .write.mode("overwrite").parquet(ratesDir)
-      // ids chosen to FAIL the old en threshold — only the refreshed rates
-      // let them through
-      val phase2 = (11L to 30L).map(i => StreamLangDoc(i, ts("2024-01-01 11:00:00"), "en"))
-        .filter(d => md5hex4(d.doc_id) >= "4000").take(3)
-      assert(phase2.nonEmpty)
-      input.addData(phase2: _*)
-      query.processAllAvailable()
-      assert(sampled.synchronized(sampled.toSet) === want1 ++ phase2.map(_.doc_id).toSet)
     } finally query.stop()
   }
 
@@ -689,55 +420,6 @@ class StreamingSpec extends SparkSpec {
     assert(batchRows === Array((1L, 1), (1L, 2), (1L, 3), (2L, 1), (3L, 1), (3L, 2)))
   }
 
-  test("ivfMaintenanceStream: streamed appends ≡ full rebuild, replay-idempotent, drift reported") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Similarity
-    val emb = Tables.embeddings(spark, sfDir)
-    val hist = emb.where($"vec_id" % 10 =!= 0)
-    val cents = Similarity.kmeansCentroids(hist, 8, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString + "/idx"
-    Similarity.writeIvfBatch(path, hist, cents, batchId = -1)
-    val baseline = Similarity.ivfCellCounts(spark.read.parquet(path))
-    // the "daily" vectors arrive as two micro-batches
-    val newVecs = emb.where($"vec_id" % 10 === 0)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => StreamVec(r.getLong(0), r.getSeq[Float](1).toArray))
-    val (wave1, wave2) = newVecs.splitAt(newVecs.length / 2)
-    val drifts = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    val input = MemoryStream[StreamVec]
-    val query = EventsStream.ivfMaintenanceStream(
-      input.toDS().toDF(), path, cents, baseline) {
-      (id, d) => drifts.synchronized { drifts += ((id, d)) }
-    }.start()
-    try {
-      input.addData(wave1.toSeq: _*)
-      query.processAllAvailable()
-      input.addData(wave2.toSeq: _*)
-      query.processAllAvailable()
-    } finally query.stop()
-    assert(drifts.map(_._1).toSeq === Seq(0L, 1L))
-    drifts.foreach { case (_, d) => assert(d >= 0.0 && d <= 1.0) }
-    // merged index row-identical to a frozen-centroid full rebuild …
-    val merged = spark.read.parquet(path)
-    val full = Similarity.buildIvfIndex(emb, cents)
-    assert(merged.count() === full.count())
-    assert(merged.select("vec_id", "cent_idx")
-      .exceptAll(full.select("vec_id", "cent_idx")).count() === 0L)
-    // … so probes agree exactly
-    val q = emb.orderBy($"vec_id".desc).limit(1)
-    val mergedTop = Similarity.ivfTopKIndexed(merged, cents, q, 10, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fullTop = Similarity.ivfTopKIndexed(full, cents, q, 10, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(mergedTop === fullTop)
-    // failure replay: re-landing batch 0 overwrites its own (cell, batch)
-    // partitions — row count unchanged, no duplicated vectors
-    val before = spark.read.parquet(path).count()
-    Similarity.writeIvfBatch(path,
-      wave1.toSeq.toDF("vec_id", "embedding"), cents, batchId = 0)
-    assert(spark.read.parquet(path).count() === before)
-  }
-
   test("curationStream ≡ the batch pipeline stage for stage, replay-idempotent") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.{Dedup, TextAnalysis}
@@ -787,51 +469,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("curationForeachBatch admits the same set; the store join never shuffles the store") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Dedup, TextAnalysis}
-    val all = Tables.documents(spark, sfDir).limit(120)
-      .select($"doc_id", $"text").as[(Long, String)].collect()
-    val benchDF = all.filter(_._1 % 10 == 0).toSeq.toDF("doc_id", "text")
-    val corpus = all.filter(_._1 % 10 != 0)
-    val corpusDF = corpus.toSeq.toDF("doc_id", "text")
-    val thr = TextAnalysis.qualityThreshold(corpusDF, 0.25)
-    val store = Dedup.fingerprintStore(
-      Seq((9000L, corpus.head._2)).toDF("doc_id", "text"))
-    val benchGrams = EventsStream.benchmarkGrams(benchDF)
-
-    // oracle: the stream-static curationStream admission on the same wave
-    val expected = EventsStream.curationStream(
-      corpusDF.withColumn("ts", lit("2024-01-01 10:00:00").cast("timestamp")),
-      thr, store, benchGrams).select("doc_id").as[Long].collect().toSet
-
-    val input = MemoryStream[StreamDoc]
-    val admitted = scala.collection.mutable.Set[Long]()
-    val query = EventsStream.curationForeachBatch(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      () => thr, () => store, benchGrams) { (batch, _) =>
-      admitted ++= batch.select("doc_id").as[Long](implicitly).collect()
-      ()
-    }.start()
-    try {
-      input.addData(corpus.sortBy(_._1).map { case (id, t) =>
-        StreamDoc(id, ts("2024-01-01 10:00:00"), t) }.toSeq: _*)
-      query.processAllAvailable()
-      assert(admitted.toSet === expected)
-    } finally query.stop()
-
-    // plan shape: the store side of dedupAgainstStoreBatch only SCANS —
-    // both joins are broadcast with batch-derived build sides (no
-    // SortMergeJoin anywhere, so nothing store-sized can shuffle). The
-    // only hash exchanges are batch-sized: the keep-first GroupTopK and
-    // the distinct feeding the hash broadcast.
-    val p = EventsStream.dedupAgainstStoreBatch(corpusDF, store)
-      .queryExecution.executedPlan.toString()
-    assert(!p.contains("SortMergeJoin"), p)
-    assert("Exchange hashpartitioning".r.findAllIn(p).length <= 2, p)
-    assert("BroadcastExchange".r.findAllIn(p).length >= 2, p)
-  }
-
   test("winsorizeStream clips against landed bounds; unseen groups pass unclipped") {
     implicit val sqlCtx = spark.sqlContext
     // landed bounds: group g with [lo, hi] = [2.0, 8.0] (from a landed
@@ -862,180 +499,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("psiMonitor: in-distribution batches stay quiet, a shifted batch alarms") {
-    implicit val sqlCtx = spark.sqlContext
-    val ref = (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-    val input = MemoryStream[Ev]
-    val scores = scala.collection.mutable.Map[Long, Double]()
-    val query = EventsStream.psiMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")), ref) { (psi, id) =>
-      psi.collect().foreach(r => scores(id) = r.getDouble(1))
-      ()
-    }.start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      query.processAllAvailable()
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble + 150)).toSeq: _*)
-      query.processAllAvailable()
-      assert(scores(0L) < 0.1, s"in-distribution batch must stay quiet: $scores")
-      assert(scores(1L) > 0.25, s"shifted batch must cross the retrain bar: $scores")
-    } finally query.stop()
-  }
-
-  test("ksMonitor: identical batch scores ~0, a shifted batch's sup-norm is large") {
-    implicit val sqlCtx = spark.sqlContext
-    val ref = (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-    val input = MemoryStream[Ev]
-    val scores = scala.collection.mutable.Map[Long, Double]()
-    val query = EventsStream.ksMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")), ref) { (ks, id) =>
-      ks.collect().foreach(r => scores(id) = r.getDouble(2))
-      ()
-    }.start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      query.processAllAvailable()
-      // +150 shifts 3/4 of the mass past the old p75 — the exact KS is
-      // 0.75 and the k=10 grid sees it within 1/k
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble + 150)).toSeq: _*)
-      query.processAllAvailable()
-      assert(scores(0L) < 0.05, s"identical batch must score ~0: $scores")
-      assert(scores(1L) > 0.6, s"shifted batch sup-norm must be large: $scores")
-    } finally query.stop()
-  }
-
-  test("canonicalizeStream resolves stream values against the landed vocabulary") {
-    implicit val sqlCtx = spark.sqlContext
-    // landed corpus: "acme corp" dominates (min record id), with two
-    // fuzzy variants; stream rows carry a variant, the canonical form,
-    // and a value the landed corpus never saw
-    val landed = Seq(
-      (1L, "acme corp"), (2L, "acme corp"), (3L, "acme corp."),
-      (4L, "acmi corp"), (5L, "other name")
-    ).toDF("id", "event_type")
-    val input = MemoryStream[Ev]
-    val out = EventsStream.canonicalizeStream(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      landed, "id", "event_type")
-    val query = out.writeStream.format("memory").queryName("canon_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Ev(10L, ts("2024-01-01 10:00:00"), "acme corp.", 1.0), // variant → canonical
-        Ev(11L, ts("2024-01-01 10:00:01"), "acme corp", 2.0),  // already canonical
-        Ev(12L, ts("2024-01-01 10:00:02"), "brand new", 3.0))  // unseen → unchanged
-      query.processAllAvailable()
-      val rows = spark.table("canon_stream")
-        .select($"user_id", $"resolved").as[(Long, String)].collect().toMap
-      assert(rows(10L) === "acme corp")
-      assert(rows(11L) === "acme corp")
-      assert(rows(12L) === "brand new")
-    } finally query.stop()
-    // the vocabulary gate fails loudly, naming the foreachBatch escape hatch
-    spark.conf.set("spark.graft.linkage.maxVocab", "2")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        EventsStream.canonicalizeStream(
-          input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-          landed, "id", "event_type")
-      }
-      assert(e.getMessage.contains("maxVocab"))
-    } finally spark.conf.unset("spark.graft.linkage.maxVocab")
-  }
-
-  test("psiMonitor kill-and-restart: baseline frozen at build time, committed batches don't re-fire") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_psi_restart").toFile.getAbsolutePath
-    val (ckpt, refDir, outDir) = (s"$dir/ckpt", s"$dir/ref", s"$dir/out")
-    (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-      .write.mode("overwrite").parquet(refDir)
-    val input = MemoryStream[Ev]
-    val fires = scala.collection.mutable.ArrayBuffer[Long]()
-    def start() = EventsStream.psiMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      spark.read.parquet(refDir)) { (psi, id) =>
-      fires += id
-      psi.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      ()
-    }.option("checkpointLocation", ckpt).start()
-    def score(id: Int): Double = spark.read.parquet(s"$outDir/batch=$id")
-      .select("psi").as[Double].head()
-    val q1 = start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-      // GROW the landed reference mid-flight: a +1000 block that would move
-      // every bin bound if any batch re-resolved the reference plan
-      (1 to 200).map(i => ("click", i.toDouble + 1000)).toDF("event_type", "value")
-        .write.mode("append").parquet(refDir)
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // batch 1 binned against the BUILD-TIME baseline: same in-distribution
-    // score as batch 0, not the alarm the mutated reference would produce
-    assert(score(0) < 0.1, s"in-distribution: ${score(0)}")
-    assert(score(1) === score(0), "baseline must not shift within a query's lifetime")
-    // wave 3 lands while the query is DOWN; the restart rebuilds the
-    // baseline from the grown corpus (the documented refresh point) and
-    // must score ONLY the pending batch — committed ids don't re-fire
-    input.addData((1 to 200).map(i =>
-      Ev(2000L + i, ts("2024-01-01 12:00:00"), "click", i.toDouble)).toSeq: _*)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(fires.toSeq === Seq(0L, 1L, 2L),
-      s"restart must resume numbering and not re-fire committed batches: $fires")
-    // proof the restart DID re-resolve: the same wave now alarms (half the
-    // rebuilt reference's mass sits in the +1000 block the wave never hits)
-    assert(score(2) > 0.25, s"rebuilt baseline must alarm: ${score(2)}")
-  }
-
-  test("ksMonitor kill-and-restart: bounds frozen at build time, alarms don't double-fire") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ks_restart").toFile.getAbsolutePath
-    val (ckpt, refDir, outDir) = (s"$dir/ckpt", s"$dir/ref", s"$dir/out")
-    (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-      .write.mode("overwrite").parquet(refDir)
-    val input = MemoryStream[Ev]
-    val fires = scala.collection.mutable.ArrayBuffer[Long]()
-    def start() = EventsStream.ksMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      spark.read.parquet(refDir)) { (ks, id) =>
-      fires += id
-      ks.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      ()
-    }.option("checkpointLocation", ckpt).start()
-    def score(id: Int): Double = spark.read.parquet(s"$outDir/batch=$id")
-      .select("ks").as[Double].head()
-    val q1 = start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-      (1 to 200).map(i => ("click", i.toDouble + 1000)).toDF("event_type", "value")
-        .write.mode("append").parquet(refDir)
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(score(0) < 0.05, s"identical batch must score ~0: ${score(0)}")
-    assert(score(1) === score(0), "bounds must not shift within a query's lifetime")
-    input.addData((1 to 200).map(i =>
-      Ev(2000L + i, ts("2024-01-01 12:00:00"), "click", i.toDouble)).toSeq: _*)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(fires.toSeq === Seq(0L, 1L, 2L),
-      s"restart must resume numbering and not re-fire committed batches: $fires")
-    // rebuilt bounds: the wave covers only the lower half of the grown
-    // reference — sup-norm ≈ 0.5 at the median bound
-    assert(score(2) > 0.4, s"rebuilt bounds must alarm: ${score(2)}")
-  }
-
   test("decontaminator enforces its broadcastable-suite precondition") {
     val bench = Tables.documents(spark, sfDir).limit(5).select($"doc_id", $"text")
     val bg = EventsStream.benchmarkGrams(bench)
@@ -1048,173 +511,19 @@ class StreamingSpec extends SparkSpec {
     assert(EventsStream.decontaminator(bg) != null)
   }
 
-  test("curationForeachBatch kill-and-restart: pending wave processed once, store rejects re-sent texts") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Dedup, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("graft_cur_restart").toFile.getAbsolutePath
-    val (ckpt, storeDir, outDir) = (s"$dir/ckpt", s"$dir/store", s"$dir/out")
-    val all = Tables.documents(spark, sfDir).limit(80)
-      .select($"doc_id", $"text").as[(Long, String)].collect()
-    val benchDF = all.filter(_._1 % 10 == 0).toSeq.toDF("doc_id", "text")
-    val corpus = all.filter(_._1 % 10 != 0)
-    val corpusDF = corpus.toSeq.toDF("doc_id", "text")
-    val byId = scala.collection.mutable.Map(corpus: _*)
-    val thr = TextAnalysis.qualityThreshold(corpusDF, 0.25)
-    Dedup.fingerprintStore(Seq((9000L, corpus.head._2)).toDF("doc_id", "text"))
-      .write.mode("overwrite").parquet(storeDir)
-    val benchGrams = EventsStream.benchmarkGrams(benchDF)
-    val input = MemoryStream[StreamDoc]
-    // production-shaped sink: idempotent manifest landing (one dir per
-    // batch id, overwritten on replay) + the fingerprint-store append a
-    // curation loop does with each admitted wave — which is exactly what
-    // makes a restart's replayed texts rejectable by the store SCAN
-    def start() = EventsStream.curationForeachBatch(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      () => thr, () => spark.read.parquet(storeDir), benchGrams) { (batch, batchId) =>
-      val ids = batch.select("doc_id").as[Long](implicitly).collect()
-      ids.toSeq.toDF("doc_id")
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      if (ids.nonEmpty)
-        Dedup.fingerprintStore(ids.toSeq.map(id => (id, byId(id))).toDF("doc_id", "text"))
-          .write.mode("append").parquet(storeDir)
-      ()
-    }.option("checkpointLocation", ckpt).start()
-    val q1 = start()
-    try {
-      input.addData(corpus.sortBy(_._1).map { case (id, t) =>
-        StreamDoc(id, ts("2024-01-01 10:00:00"), t) }.toSeq: _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val admitted1 = spark.read.parquet(s"$outDir/batch=0")
-      .select("doc_id").as[Long].collect().toSet
-    assert(admitted1.nonEmpty)
-    // wave 2 arrives while the query is DOWN: every wave-1 text re-sent
-    // under FRESH ids (so only the fingerprint store can reject them)
-    // plus one genuinely new document
-    // base the new text on a doc KNOWN to clear the quality gate (it was
-    // admitted), so only its novel fingerprint decides its fate
-    val freshText = byId(admitted1.head) + " and the account continues with further words"
-    byId(7777L) = freshText
-    val fresh = StreamDoc(7777L, ts("2024-01-01 11:00:00"), freshText)
-    input.addData((corpus.sortBy(_._1).map { case (id, t) =>
-      StreamDoc(id + 100000L, ts("2024-01-01 11:00:00"), t) } :+ fresh).toSeq: _*)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val out = spark.read.parquet(outDir) // batch=N partition dirs
-    // batch numbering continued from the checkpoint (resumed, not reset),
-    // the committed wave-1 batch was not re-delivered, and the pending
-    // wave was processed exactly once: re-sent texts all rejected by the
-    // store, the new document admitted
-    assert(out.select("batch").distinct().as[Int].collect().toSet === Set(0, 1))
-    assert(out.where($"batch" === 0).select("doc_id").as[Long].collect().toSet === admitted1)
-    val wave2 = out.where($"batch" === 1).select("doc_id").as[Long].collect().toSet
-    assert(wave2 === Set(7777L), s"wave 2 must admit only the new doc, got $wave2")
-  }
-
-  test("cdcUpsertForeachBatch kill-and-restart: upserts win, tombstones delete, buckets converge") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toFile.getAbsolutePath
-    val (ckpt, snap) = (s"$dir/ckpt", s"$dir/snap")
-    val input = MemoryStream[Chg]
-    var batches = Vector.empty[(Long, Int)]
-    def start() = EventsStream.cdcUpsertForeachBatch(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      snap, nBuckets = 8) { (id, n) => batches :+= (id, n) }
-      .option("checkpointLocation", ckpt).start()
-
-    val q1 = start()
-    try {
-      input.addData(
-        Chg(1L, ts("2024-01-01 10:00:00"), 1L, "insert", 1.0),
-        Chg(2L, ts("2024-01-01 10:00:00"), 2L, "insert", 2.0),
-        Chg(3L, ts("2024-01-01 10:00:00"), 3L, "insert", 3.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    def state(): Map[Long, Double] = spark.read.parquet(snap)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-    assert(state() === Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0))
-
-    // wave 2 arrives while the query is DOWN: an out-of-order pair for key
-    // 2 (the later ts must win), a tombstone for key 3, a new key 4
-    input.addData(
-      Chg(2L, ts("2024-01-02 10:00:00"), 10L, "update", 9.0),
-      Chg(2L, ts("2024-01-01 12:00:00"), 11L, "update", 7.0), // earlier — loses
-      Chg(3L, ts("2024-01-02 10:00:00"), 12L, "error", 0.0),  // delete
-      Chg(4L, ts("2024-01-02 10:00:00"), 13L, "insert", 4.0))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(state() === Map(1L -> 1.0, 2L -> 9.0, 4L -> 4.0))
-    // the checkpoint resumed batch numbering; each wave reported its buckets
-    assert(batches.map(_._1) === Vector(0L, 1L))
-  }
-
-  test("quoteStoreForeachBatch kill-and-restart: day restatement through the " +
-    "DSv2 catalog — corrected days replaced, untouched days intact, no re-fire") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_qstore_stream").toString
-    spark.conf.set("spark.sql.catalog.qstream",
-      classOf[graft.sources.v2.QuoteStoreCatalog].getName)
-    spark.conf.set("spark.sql.catalog.qstream.root", dir)
-    spark.sql("""CREATE TABLE qstream.nyse (
-      ticker STRING, day DATE, open DOUBLE, high DOUBLE, low DOUBLE,
-      close DOUBLE, volume BIGINT) PARTITIONED BY (day)""")
-    val ckpt = s"$dir/ckpt"
-    def qt(t: String, d: String, px: Double, v: Long) =
-      Qt(t, java.sql.Date.valueOf(d), px, px + 1, px - 1, px + 0.5, v)
-    val input = MemoryStream[Qt]
-    var batches = Vector.empty[(Long, Int)]
-    def start() = EventsStream.quoteStoreForeachBatch(
-      input.toDS().toDF(), "qstream.nyse") { (id, n) => batches :+= (id, n) }
-      .option("checkpointLocation", ckpt).start()
-
-    // wave 1: days 02 and 03 land
-    val q1 = start()
-    try {
-      input.addData(
-        qt("aapl", "2024-01-02", 100.0, 1000L),
-        qt("aapl", "2024-01-03", 999.0, 9990L), // bad day, corrected below
-        qt("msft", "2024-01-03", 888.0, 8880L))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    def state(): Set[(String, String, Double, Long)] = spark.table("qstream.nyse")
-      .select($"ticker", $"day".cast("string"), $"open", $"volume")
-      .as[(String, String, Double, Long)].collect().toSet
-    assert(state() === Set(
-      ("aapl", "2024-01-02", 100.0, 1000L),
-      ("aapl", "2024-01-03", 999.0, 9990L),
-      ("msft", "2024-01-03", 888.0, 8880L)))
-
-    // wave 2 arrives while the query is DOWN: the complete corrected
-    // day-03 snapshot plus a new day 04 — the restart must restate day 03
-    // wholly (the bad msft row goes), leave day 02 untouched, add day 04
-    input.addData(
-      qt("aapl", "2024-01-03", 103.0, 1300L),
-      qt("xom", "2024-01-04", 50.0, 500L))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(state() === Set(
-      ("aapl", "2024-01-02", 100.0, 1000L),
-      ("aapl", "2024-01-03", 103.0, 1300L),
-      ("xom", "2024-01-04", 50.0, 500L)))
-    // checkpoint resumed numbering; each wave reported its touched days
-    assert(batches === Vector((0L, 2), (1L, 2)))
-    // a replay of committed data is a no-op by idempotence: restart again
-    // with nothing pending — no batch fires, the store is unchanged
-    val q3 = start()
-    try q3.processAllAvailable() finally q3.stop()
-    assert(batches.size === 2)
-  }
-
-  test("cardForeachBatch kill-and-restart: card converges to the batch card, " +
+  test("cardMergeBatch kill-and-restart: card converges to the batch card, " +
     "replay absorbed by delta overwrite + hash anti-join") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_card_stream").toString
     val (ckpt, store) = (s"$dir/ckpt", s"$dir/card")
     val input = MemoryStream[CardDoc]
     var seen = Vector.empty[Long]
-    def start() = EventsStream.cardForeachBatch(input.toDS().toDF(), store) {
-      id => seen :+= id
-    }.option("checkpointLocation", ckpt).start()
+    def start() = input.toDS().toDF().writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        EventsStream.cardMergeBatch(batch, store, id)
+        seen :+= id
+      }
+      .option("checkpointLocation", ckpt).start()
     def doc(id: Long, text: String, lang: String, src: String) =
       CardDoc(id, text, lang, src, text.length.toLong)
 
@@ -1262,27 +571,5 @@ class StreamingSpec extends SparkSpec {
       .as[(String, String, Long, Long, Long, Double, Double)].collect().toSet
     assert(replayed === expected)
     assert(seen.size === 2)
-  }
-
-  test("cdcUpsertForeachBatch drops a bucket its last tombstone empties") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_empty").toFile.getAbsolutePath
-    val (ckpt, snap) = (s"$dir/ckpt", s"$dir/snap")
-    val input = MemoryStream[Chg]
-    val q = EventsStream.cdcUpsertForeachBatch(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      snap, nBuckets = 1)() // one bucket: the delete below EMPTIES it
-      .option("checkpointLocation", ckpt).start()
-    try {
-      input.addData(Chg(1L, ts("2024-01-01 10:00:00"), 1L, "insert", 1.0))
-      q.processAllAvailable()
-      assert(spark.read.parquet(snap).count() === 1)
-      input.addData(Chg(1L, ts("2024-01-02 10:00:00"), 2L, "error", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    // the emptied partition dir is gone, not a stale survivor
-    val bucketDirs = Option(new java.io.File(snap).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("__bucket="))
-    assert(bucketDirs.isEmpty, s"stale bucket dirs: ${bucketDirs.map(_.getName)}")
   }
 }

@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 
 class TextAnalysisSpec extends SparkSpec {
 
-  test("qualityThresholdScalable equals the buffering percentile threshold, bit for bit") {
-    import graft.operators.TextAnalysis
+  test("qualityThreshold equals the bounded-memory quantileCont over the scores, bit for bit") {
+    import graft.operators.Quantiles
     val docs = Tables.documents(spark, sfDir)
     val buffering = TextAnalysis.qualityThreshold(docs, 0.25).head().getDouble(0)
-    val scalable = TextAnalysis.qualityThresholdScalable(docs, 0.25).head().getDouble(0)
+    val scored = TextAnalysis.qualityScore(docs, "text", "doc_id").withColumn("__g", lit("all"))
+    val scalable = Quantiles.quantileCont(scored, "__g", "quality", Seq(0.25 -> "__thr"))
+      .head().getDouble(1)
     assert(scalable === buffering)
   }
   import spark.implicits._
@@ -215,22 +217,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(kept > 0 && kept < total, s"$kept of $total")
   }
 
-  test("multimodal attachBinary: payload bytes + typed metadata struct") {
-    val df = graft.operators.Multimodal.attachBinary(Tables.documents(spark, sfDir))
-    assert(df.schema.fieldNames.toSeq === Seq("doc_id", "payload", "meta"))
-    assert(df.schema("payload").dataType.simpleString === "binary")
-    assert(df.schema("meta").dataType.simpleString === "struct<kind:string,width:int,height:int>")
-    val r = df.orderBy($"doc_id").head()
-    assert(new String(r.getAs[Array[Byte]](1), "UTF-8").nonEmpty)
-    assert(Set("image", "audio", "video").contains(r.getStruct(2).getString(0)))
-  }
-
-  test("charShingles produces distinct k-grams") {
-    val out = Seq((1L, "abcabc")).toDF("doc_id", "text")
-      .select(graft.operators.Dedup.charShingles("text", 3)).head.getSeq[String](0)
-    assert(out.toSet === Set("abc", "bca", "cab"))
-  }
-
   test("multimodal sampleFrames: one row per sampled chunk, deterministic checksums") {
     val media = Multimodal.mediaRecords(spark, Tables.documents(spark, sfDir))
       .filter($"kind" === "video")
@@ -244,15 +230,6 @@ class TextAnalysisSpec extends SparkSpec {
     }
     val again = Multimodal.sampleFrames(media, frameBytes = 100, everyN = 2).collect()
     assert(frames.map(_.checksum).sorted.toSeq === again.map(_.checksum).sorted.toSeq)
-  }
-
-  test("multimodal resize: payload resampled to the target pixel budget") {
-    val media = Multimodal.mediaRecords(spark, Tables.documents(spark, sfDir)).limit(5)
-    val out = Multimodal.resize(media, 320, 240).collect()
-    out.foreach { r =>
-      assert(r.width === 320 && r.height === 240)
-      assert(r.payload.length === 320 * 240 / 64)
-    }
   }
 
   test("multimodal featurize: deterministic 16-bin byte histogram summing to ~1") {

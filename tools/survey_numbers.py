@@ -6,7 +6,9 @@ three rounds running because they were transcribed mid-round by hand. This
 tool is the fix: it reads bench_out.json, SCALE*_out.json, the ScalaTest XML
 reports, and (optionally) a selfcheck log, and prints a markdown block whose
 every number IS the artifact value. Paste the output verbatim at the final
-commit — never hand-edit a measured number again.
+commit — never hand-edit a measured number again. It also prints the main
+source size (lines of src/main/**/*.scala, as `wc -l` counts them), the
+one count CHANGES.md and ROADMAP track the code's size by.
 
 Usage: python3 tools/survey_numbers.py [--selfcheck /tmp/selfcheck.log]
 """
@@ -80,8 +82,22 @@ def scale_block():
     return lines
 
 
+def source_block():
+    files = glob.glob(os.path.join(REPO, "src/main/**/*.scala"), recursive=True)
+    lines = 0
+    for p in files:
+        with open(p, "rb") as f:
+            lines += f.read().count(b"\n")
+    return [f"- **Main source**: {lines:,} lines in {len(files)} files "
+            f"(src/main/**/*.scala)."]
+
+
 def tests_block():
-    reports = glob.glob(os.path.join(REPO, "target/test-reports/TEST-*.xml"))
+    def live(report):  # a report whose suite's source is gone is from an older tree
+        suite = os.path.basename(report)[len("TEST-"):-len(".xml")].split(".")[-1]
+        return glob.glob(os.path.join(REPO, "src/test/**", suite + ".scala"), recursive=True)
+    reports = [p for p in glob.glob(os.path.join(REPO, "target/test-reports/TEST-*.xml"))
+               if live(p)]
     if not reports:
         return ["- test-reports: MISSING (run sbt test)"]
     tests = failures = 0
@@ -150,7 +166,7 @@ def main():
                     help="git rev whose bench_out.json to compare against")
     args = ap.parse_args()
     print("<!-- generated by tools/survey_numbers.py — do not hand-edit -->")
-    for line in (tests_block() + selfcheck_block(args.selfcheck)
+    for line in (source_block() + tests_block() + selfcheck_block(args.selfcheck)
                  + bench_block() + prev_block(args.prev) + scale_block()):
         print(line)
 
