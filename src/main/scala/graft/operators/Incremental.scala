@@ -49,4 +49,15 @@ object Incremental {
       .where(col("__latest_ts").isNull || col(tsCol) > col("__latest_ts"))
       .select(incoming.columns.map(col).toIndexedSeq: _*)
   }
+
+  /** Global (un-keyed) variant — the literal reference behavior for a single
+    * ticker table: filter rows after the table-wide latest date.
+    */
+  def newerThanGlobal(existing: DataFrame, incoming: DataFrame, tsCol: String): DataFrame = {
+    val latest = existing.agg(max(col(tsCol)).as("__latest_ts"))
+    incoming
+      .join(broadcast(latest))
+      .where(col("__latest_ts").isNull || col(tsCol) > col("__latest_ts"))
+      .drop("__latest_ts")
+  }
 }

@@ -66,6 +66,16 @@ object PivotOps {
       .where(col(valueName).isNotNull)
   }
 
+  /** Dynamic-vocabulary pivot (vocabulary discovered from the data) — the
+    * built-in two-phase path, for when the value set is genuinely unknown.
+    */
+  def pivotDynamic(
+      df: DataFrame,
+      key: String,
+      pivotCol: String,
+      agg: Column): DataFrame =
+    df.groupBy(col(key)).pivot(pivotCol).agg(agg)
+
   /** Union snapshots whose wide schemas drifted: missing columns become NULL
     * (the reference's ALTER TABLE ADD COLUMN ... NULL path, sector.py:70-84).
     */
@@ -73,4 +83,21 @@ object PivotOps {
     snapshots
       .map { case (tag, df) => df.withColumn("snapshot", lit(tag)) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** Project a wide table onto a declared vocabulary: keep `keyCols` plus
+    * exactly the `vocabulary` columns — dropping columns for entities that
+    * left the index (the reference's old-ticker column removal,
+    * sector.py:126-131) and adding typed NULL columns for entities not yet
+    * seen. unionEvolved handles schema *growth*; this is the other half of
+    * the drift story, and together they make any snapshot conform to the
+    * current catalog vocabulary.
+    */
+  def projectToVocabulary(df: DataFrame, keyCols: Seq[String], vocabulary: Seq[String],
+                          fillType: String = "double"): DataFrame = {
+    val present = df.columns.toSet
+    val cols = keyCols.map(col) ++ vocabulary.map { v =>
+      if (present(v)) col(v) else lit(null).cast(fillType).as(v)
+    }
+    df.select(cols: _*)
+  }
 }

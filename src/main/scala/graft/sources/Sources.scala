@@ -181,4 +181,30 @@ object Sources {
       .groupBy(lit(asOfDate).cast("date").as("date"))
       .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** An events directory as a stream: parquet files dropped into `dir` are
+    * consumed incrementally — file-source streaming is the zero-infra
+    * stand-in for the reference's daily re-pull loop.
+    */
+  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = spark.read.parquet(dir).schema
+    val raw = spark.readStream.schema(schema).parquet(dir)
+    // watermarks require TIMESTAMP (LTZ), so unlike the batch/oracle path
+    // the stream keeps the session-zone type (UTC session ⇒ same instants).
+    // The physical encoding of ts varies across testdata generations —
+    // branch on what actually loaded, as in Fns.normalizeTsNtz.
+    import org.apache.spark.sql.types._
+    schema("ts").dataType match {
+      case LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case _: TimestampType => raw
+      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
+      case other =>
+        // fail like the batch loader (Fns.normalizeTsNtz): a silent cast
+        // would null the timestamps and drop every row at the watermark
+        throw new IllegalArgumentException(
+          s"unsupported physical type for streaming ts column: $other")
+    }
+  }
 }

@@ -29,6 +29,40 @@ object EventsStream {
       .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("total"))
   }
 
+  /** Hopping-window face of [[windowedAgg]] (the streaming side of
+    * q_sliding_window): 1 h windows sliding every 30 min, so each event
+    * lands in size/slide = 2 open windows. State is (types × open windows)
+    * and the watermark finalizes a window once per slide step — the
+    * overlap multiplies state by the constant size/slide, never the event
+    * rate.
+    */
+  def slidingAgg(events: DataFrame): DataFrame = {
+    val src = if (events.isStreaming) events.withWatermark("ts", "1 hour") else events
+    src
+      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(28,6)")).cast("double").as("total"))
+      .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("total"))
+  }
+
+  /** Daily OHLCV bars maintained continuously — the streaming face of the
+    * bar columns of Ohlc.dailySummary (identical aggregate functions), with
+    * a 1-day watermark bounding state to the open day per entity.
+    */
+  def streamingBars(events: DataFrame): DataFrame = {
+    val src = if (events.isStreaming) events.withWatermark("ts", "1 day") else events
+    src
+      .groupBy(col("user_id"), window(col("ts"), "1 day").as("w"))
+      .agg(
+        min_by(col("value"), col("ts")).as("open"),
+        max(col("value")).as("high"),
+        min(col("value")).as("low"),
+        max_by(col("value"), col("ts")).as("close"),
+        count(lit(1)).as("volume"))
+      .select(col("user_id"), col("w.start").cast("date").as("d"),
+        col("open"), col("high"), col("low"), col("close"), col("volume"))
+  }
+
   /** Watermarked stream-stream interval join: each fact (click) row pairs
     * with the dim (purchase) rows for the same key within `lookbackSec`
     * BEFORE it. Both sides' state is bounded by watermark + interval — the
@@ -48,6 +82,28 @@ object EventsStream {
         col("dim_ts") <= col("fact_ts"),
       "leftOuter")
       .select(col("user_id"), col("fact_ts"), col("fact_value"), col("dim_ts"), col("dim_value"))
+  }
+
+  /** Streaming NEAR-dedup for a document stream: rows whose SimHash64
+    * fingerprints collide within the watermark delay collapse to the first
+    * arrival — trivially-reformatted duplicates (the normalizer runs before
+    * hashing) fold together without any pairwise comparison, the only
+    * near-dup shape a one-pass stream admits (bucketed LSH candidate
+    * generation needs a second pass over the bucket; run the batch
+    * operators over the landed data for hamming > 0 recall). State per
+    * fingerprint expires with the watermark — O(docs within the delay).
+    * Batch path: the same fingerprint through dropDuplicates.
+    */
+  def nearDedupWithinWatermark(docs: DataFrame, textCol: String = "text",
+                               delay: String = "1 hour"): DataFrame = {
+    val normed = lower(regexp_replace(col(textCol), "\\s+", " "))
+    val keyed = docs.withColumn("__simhash",
+      graft.plans.Exprs.simhash(split(trim(normed), " ")))
+    val out =
+      if (docs.isStreaming)
+        keyed.withWatermark("ts", delay).dropDuplicatesWithinWatermark("__simhash")
+      else keyed.dropDuplicates("__simhash")
+    out.drop("__simhash")
   }
 
   /** Daily-reach maintenance — the streaming side of q_rolling_distinct's
@@ -76,6 +132,19 @@ object EventsStream {
       .agg(count(lit(1)).as("daily_active"))
       .select(col("w.start").cast("date").as("d"), col("daily_active"))
   }
+
+  /** Streaming exact dedup on `keys`: duplicates arriving within the
+    * watermark delay of each other collapse to the first arrival; state per
+    * key expires with the watermark, so memory is O(keys within the delay),
+    * not O(all keys ever) — the difference between dropDuplicates (unbounded
+    * state, eventually OOM on an infinite stream) and the production shape.
+    * Batch path: plain dropDuplicates (same key semantics, no time bound).
+    */
+  def dedupWithinWatermark(events: DataFrame, keys: Seq[String],
+                           delay: String = "1 hour"): DataFrame =
+    if (events.isStreaming)
+      events.withWatermark("ts", delay).dropDuplicatesWithinWatermark(keys)
+    else events.dropDuplicates(keys)
 
   /** Streaming incremental dedup — the continuous face of
     * `Dedup.deduplicateIncremental`: a live document stream anti-joins its
@@ -224,6 +293,71 @@ object EventsStream {
       .withColumn("clipped", col("__lo").isNotNull && col(valueCol).isNotNull &&
         (col(valueCol) < col("__lo") || col(valueCol) > col("__hi")))
       .drop("__lo", "__hi")
+
+  /** Streaming drift monitor — each micro-batch's Population Stability
+    * Index against the LANDED reference distribution
+    * ([[graft.operators.Quantiles.psiReference]]): the retrain alarm,
+    * continuously. The reference bin bounds and smoothed proportions are
+    * materialized ONCE at build time (model-sized: group × k rows — a
+    * micro-batch must never re-run the landed quantiles); each batch then
+    * bins at scan speed against the broadcast bounds and `sink` receives
+    * one (group, psi, batch_id) row per group per batch. Groups absent
+    * from the reference emit nothing — a new entity has no reference
+    * distribution to drift from; extend the landed corpus and rebuild the
+    * monitor when it should.
+    */
+  def psiMonitor(stream: DataFrame, reference: DataFrame,
+                 keyCol: String = "event_type", valueCol: String = "value",
+                 k: Int = 10)(sink: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    import graft.operators.Quantiles
+    val spark = reference.sparkSession
+    val (bounds, props) = Quantiles.psiReference(reference, keyCol, valueCol, k)
+    // BOTH reference frames collapse to local relations at build time —
+    // passing the lazy `bounds` plan through would re-run the landed
+    // quantile aggregation inside every micro-batch (and silently shift
+    // the baseline if the reference path grows between batches)
+    val boundsLocal = spark.createDataFrame(
+      spark.sparkContext.parallelize(bounds.collect().toSeq, 1), bounds.schema)
+    val propsLocal = spark.createDataFrame(
+      spark.sparkContext.parallelize(props.collect().toSeq, 1), props.schema)
+    stream.writeStream.foreachBatch {
+      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        sink(Quantiles.psiAgainst(batch.toDF(), keyCol, valueCol, k, boundsLocal, propsLocal)
+          .withColumn("batch_id", lit(batchId)), batchId)
+        ()
+    }
+  }
+
+  /** Streaming grid-KS drift monitor — [[psiMonitor]]'s sup-norm sibling
+    * ([[graft.operators.Quantiles.ksAgainst]]): each micro-batch's
+    * empirical CDF is compared against the LANDED reference's quantile
+    * grid at the grid points, where the reference CDF is i/k by
+    * construction — so scoring a batch never touches reference rows, only
+    * the model-sized broadcast bounds. PSI reacts to mass reallocation
+    * between bins; KS bounds the worst single CDF gap — a narrow shift
+    * that PSI smears across two bins still moves the sup-norm. Same
+    * build-once contract: bounds materialize at query build, a batch must
+    * never re-run the landed quantiles.
+    */
+  def ksMonitor(stream: DataFrame, reference: DataFrame,
+                keyCol: String = "event_type", valueCol: String = "value",
+                k: Int = 10)(sink: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    import graft.operators.Quantiles
+    val spark = reference.sparkSession
+    val (bounds, _) = Quantiles.psiReference(reference, keyCol, valueCol, k)
+    // materialize at build time (same contract as psiMonitor): a lazy
+    // bounds plan would re-execute the reference quantiles every batch
+    val boundsLocal = spark.createDataFrame(
+      spark.sparkContext.parallelize(bounds.collect().toSeq, 1), bounds.schema)
+    stream.writeStream.foreachBatch {
+      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        sink(Quantiles.ksAgainst(batch.toDF(), keyCol, valueCol, k, boundsLocal)
+          .withColumn("batch_id", lit(batchId)), batchId)
+        ()
+    }
+  }
 
   /** Streaming benchmark decontamination — the continuous face of
     * `Dedup.decontaminate`. The batch shape (explode grams → semi-join →
@@ -401,6 +535,25 @@ object EventsStream {
         })
   }
 
+  /** Sessionization through the built-in session window — the declarative
+    * sibling of [[sessionize]] (custom state) and operators.Sessionize
+    * (batch windows): `session_window(ts, gap)` merges events whose gaps
+    * stay under `gapSec`, state expires with the watermark, and the SAME
+    * expression aggregates a batch frame. Prefer this when per-session
+    * output is a plain aggregate; drop to [[sessionize]] when the session
+    * logic needs imperative state (mid-session emission, custom close
+    * conditions).
+    */
+  def sessionizeWindowed(events: DataFrame, gapSec: Long = 1800): DataFrame = {
+    val src = if (events.isStreaming) events.withWatermark("ts", "10 seconds") else events
+    src
+      .groupBy(col("user_id"), session_window(col("ts"), s"$gapSec seconds").as("sw"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(28,6)")).cast("double").as("total_value"))
+      .select(col("user_id"), col("sw.start").as("session_start"),
+        col("n_events"), col("total_value"))
+  }
+
   case class WinCount(wstart: Timestamp, wend: Timestamp, user_id: Long, n: Long)
   case class TopKBuf(items: Seq[(Long, Long)]) // (n, user_id), bounded at k
   case class TopOut(wstart: Timestamp, user_id: Long, n: Long)
@@ -485,4 +638,54 @@ object EventsStream {
   }
 
   case class Ev(user_id: Long, ts: Timestamp, event_type: String, value: Double)
+  case class SessionState(nEvents: Long, total: Double, startMs: Long, lastMs: Long)
+  case class SessionOut(user_id: Long, n_events: Long, total_value: Double, duration_sec: Double)
+
+  /** Sessionization with explicit state: a session closes after `gapSec` of
+    * event-time inactivity — either inline (the key's next event arrives
+    * past the gap) or via event-time timeout once the watermark passes the
+    * gap. Event-time (not processing-time) timeout matters operationally:
+    * batches trigger only on data/watermark progress, so an idle stream is
+    * idle — no busy empty-batch loop. State per user is O(1).
+    */
+  def sessionize(events: Dataset[Ev], gapSec: Long = 1800): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    val streaming = events.isStreaming
+    val src = if (streaming) events.withWatermark("ts", "10 seconds") else events
+    src
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (userId: Long, rows: Iterator[Ev], state: GroupState[SessionState]) => {
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            Iterator.single(SessionOut(userId, s.nEvents, s.total, (s.lastMs - s.startMs) / 1000.0))
+          } else {
+            val sorted = rows.toSeq.sortBy(_.ts.getTime)
+            var cur = state.getOption
+            val closed = Seq.newBuilder[SessionOut]
+            sorted.foreach { e =>
+              val t = e.ts.getTime
+              cur match {
+                case Some(s) if t - s.lastMs <= gapSec * 1000 =>
+                  cur = Some(s.copy(nEvents = s.nEvents + 1, total = s.total + e.value, lastMs = t))
+                case Some(s) =>
+                  closed += SessionOut(userId, s.nEvents, s.total, (s.lastMs - s.startMs) / 1000.0)
+                  cur = Some(SessionState(1, e.value, t, t))
+                case None =>
+                  cur = Some(SessionState(1, e.value, t, t))
+              }
+            }
+            cur.foreach { s =>
+              state.update(s)
+              if (streaming) {
+                // must stay ahead of the current watermark or Spark rejects it
+                val wm = state.getCurrentWatermarkMs()
+                state.setTimeoutTimestamp(math.max(s.lastMs + gapSec * 1000, wm + 1))
+              }
+            }
+            closed.result().iterator
+          }
+        })
+  }
 }

@@ -116,6 +116,9 @@ class GraphGateSpec extends SparkSpec {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val edges = spark.range(0, 5000, 1, 8).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    // earlier tests' collects are still on the asynchronous bus: deliver
+    // them before listening, so only this test's reads are recorded
+    GraftTestBridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     val out = try {
       val df = Graph.connectedComponents(edges, iters = 2, localSolveMaxEdges = cap)

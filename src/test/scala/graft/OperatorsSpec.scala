@@ -44,6 +44,29 @@ class OperatorsSpec extends SparkSpec {
     assert(out.toSeq === Seq(11.0, 12.0, 13.0))
   }
 
+  test("Incremental.newerThanGlobal filters on the table-wide latest timestamp") {
+    val existing = Seq((1L, ts("2024-01-05 00:00:00"), 1.0)).toDF("user_id", "ts", "value")
+    val incoming = Seq(
+      (1L, ts("2024-01-05 00:00:00"), 10.0), // equal instant — dropped
+      (2L, ts("2024-01-04 00:00:00"), 11.0), // older than GLOBAL max — dropped
+      (3L, ts("2024-01-06 00:00:00"), 12.0)  // newer — kept
+    ).toDF("user_id", "ts", "value")
+    val out = Incremental.newerThanGlobal(existing, incoming, "ts")
+      .select($"value").as[Double].collect().toSeq
+    assert(out === Seq(12.0))
+    // empty existing table → everything is new
+    val empty = existing.where(lit(false))
+    assert(Incremental.newerThanGlobal(empty, incoming, "ts").count() === 3)
+  }
+
+  test("PivotOps.pivotDynamic discovers the vocabulary and matches the declared pivot") {
+    val ev = Seq((1L, "a", 2.0), (1L, "b", 3.0), (2L, "a", 5.0)).toDF("k", "t", "v")
+    val dyn = PivotOps.pivotDynamic(ev, "k", "t", sum($"v"))
+    assert(dyn.columns.toSeq === Seq("k", "a", "b"))
+    val declared = PivotOps.pivotAgg(ev, "k", "t", Seq("a", "b"), "v", sum(_))
+    assert(dyn.collect().map(_.toSeq).toSet === declared.collect().map(_.toSeq).toSet)
+  }
+
   test("AsOfJoin.asOf picks the most recent right row at-or-before, else null") {
     val left = Seq((1L, ts("2024-01-01 10:00:00"), "l1"), (1L, ts("2024-01-03 10:00:00"), "l2"),
       (2L, ts("2024-01-01 00:00:00"), "l3"))
@@ -219,6 +242,16 @@ class OperatorsSpec extends SparkSpec {
     val r = hourly.head()
     assert(r.schema.fieldNames.toSeq ===
       Seq("user_id", "bucket", "open", "high", "low", "close", "volume"))
+  }
+
+  test("PivotOps.projectToVocabulary drops departed columns and adds missing ones") {
+    // snapshot has x (stays), w (ticker left the index), lacks z (new ticker)
+    val snap = Seq((1L, 1.0, 9.0)).toDF("k", "x", "w")
+    val out = PivotOps.projectToVocabulary(snap, Seq("k"), Seq("x", "z"))
+    assert(out.columns.toSeq === Seq("k", "x", "z"))
+    val r = out.head()
+    assert(r.getDouble(1) === 1.0 && r.isNullAt(2))
+    assert(out.schema("z").dataType.simpleString === "double")
   }
 
   test("Analytics.weightedPrice = sum(price*qty)/sum(qty) per brand") {

@@ -314,6 +314,33 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("ksAgainst equals the naive grid-KS over seeds") {
+    import graft.operators.Quantiles
+    val k = 10
+    for (seed <- 1L to 3L) {
+      val ref = genData(seed, 300).map(e => (s"g${e.k % 2}", e.v))
+      val cur = genData(seed + 100, 200).map(e => (s"g${e.k % 2}", e.v + (seed - 2) * 5.0))
+      val refDf = ref.toDF("event_type", "value")
+      val (bounds, _) = Quantiles.psiReference(refDf, "event_type", "value", k)
+      val got = Quantiles.ksAgainst(cur.toDF("event_type", "value"),
+          "event_type", "value", k, bounds)
+        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      // naive: per group, the reference's interpolated i/k quantiles, then
+      // max_i |fraction of current <= b_i − i/k|
+      val boundRows = bounds.collect().map { r =>
+        r.getString(0) -> (1 until k).map(i => r.getDouble(i)) }.toMap
+      cur.groupBy(_._1).foreach { case (g, rows) =>
+        boundRows.get(g).foreach { bs =>
+          val vs = rows.map(_._2)
+          val d = (1 until k).map { i =>
+            math.abs(vs.count(_ <= bs(i - 1)).toDouble / vs.size - i.toDouble / k)
+          }.max
+          assert(math.abs(got(g) - d) < 1e-5, s"seed=$seed group=$g: ${got(g)} vs $d")
+        }
+      }
+    }
+  }
+
   test("melt of pivotAgg equals the naive long aggregate over seeds") {
     import graft.operators.PivotOps
     for (seed <- 1L to 3L) {

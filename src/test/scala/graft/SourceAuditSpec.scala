@@ -102,7 +102,15 @@ class SourceAuditSpec extends SparkSpec {
     "Sources.readCsv" -> "holdings ingest with a declared schema (PAPER.md §1 step 1)",
     "Sources.readCsvSmall" -> "config-sized holdings and sector tables (PAPER.md §1 step 1)",
     "Sources.cleanHoldings" -> "holdings normalization (PAPER.md §1 step 2)",
-    "Sources.holdingsWide" -> "the holdings pivot long to wide (PAPER.md §1 step 4)")
+    "Sources.holdingsWide" -> "the holdings pivot long to wide (PAPER.md §1 step 4)",
+    "Incremental.newerThanGlobal" -> "the single-table MAX(date) append (PAPER.md §1 step 3)",
+    "PivotOps.pivotDynamic" -> "the pivot over a vocabulary found in the data (PAPER.md §1 step 4)",
+    "PivotOps.projectToVocabulary" -> "departed-ticker column removal (PAPER.md §1 step 4)") ++
+    // Streaming faces of reached batch operators, kept for the second
+    // deletion step (ROADMAP item 7b).
+    (Seq("slidingAgg", "streamingBars", "dedupWithinWatermark", "nearDedupWithinWatermark",
+      "sessionize", "sessionizeWindowed", "psiMonitor", "ksMonitor").map(d => s"EventsStream.$d") :+
+      "Sources.readEventsStream").map(_ -> "deferred to ROADMAP item 7b")
 
   private val toolEntries =
     Set("Bench", "ScaleBench", "Verify", "EntrySmoke", "PlanDump", "LoopBodyDump", "SparkEntry")
