@@ -211,8 +211,7 @@ object ScaleBench {
       .where(col("doc_id") % 50 === 0).withColumn("ts", stamp)
     val thr = TextAnalysis.qualityThreshold(corpus, 0.25)
     val store = Dedup.fingerprintStore(corpus.limit(0))
-    val bg = graft.streaming.EventsStream.benchmarkGrams(bench)
-    graft.streaming.EventsStream.curationStream(corpus, thr, store, bg)
+    graft.streaming.EventsStream.curationStream(corpus, thr, store, Dedup.gramScreen(bench))
       .select(col("doc_id"), col("n_tokens"), col("quality"))
   }
 

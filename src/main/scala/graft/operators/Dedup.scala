@@ -233,22 +233,20 @@ object Dedup {
   def tokens(textCol: String): Column =
     split(trim(lower(col(textCol))), "\\s+")
 
-  /** Word n-gram set over an already-materialized token array column — one
-    * compiled pass per row (graft.plans.WordNgrams).
+  /** A document's word n-gram set: whitespace tokens ([[tokens]]) → one
+    * compiled n-gram pass per row (graft.plans.WordNgrams).
     */
-  def ngramsOfTokens(toksCol: String, n: Int): Column =
-    graft.plans.Exprs.wordNgrams(col(toksCol), n)
+  private[graft] def gramsOf(textCol: String, n: Int): Column =
+    graft.plans.Exprs.wordNgrams(tokens(textCol), n)
 
-  /** The word n-gram table of a corpus, (gid, grams): whitespace tokens
-    * ([[tokens]]) → one compiled n-gram pass per row. `rows = true`
-    * explodes it to one (gid, gram) row per n-gram instead of one set per
-    * document.
+  /** The word n-gram table of a corpus, (gid, grams): [[gramsOf]] per
+    * document. `rows = true` explodes it to one (gid, gram) row per n-gram
+    * instead of one set per document.
     */
   private[graft] def wordGrams(docs: DataFrame, n: Int, textCol: String, idCol: String,
                               rows: Boolean = false): DataFrame = {
-    val grams = ngramsOfTokens("__toks", n)
-    docs.select(col(idCol).as("gid"), tokens(textCol).as("__toks"))
-      .select(col("gid"), (if (rows) explode(grams) else grams).as("grams"))
+    val grams = gramsOf(textCol, n)
+    docs.select(col(idCol).as("gid"), (if (rows) explode(grams) else grams).as("grams"))
   }
 
   /** MinHash signature: `num` permutations — one compiled pass per row via
@@ -751,53 +749,83 @@ object Dedup {
           s => s.getField("unit")), ". ").as("clean_text"))
   }
 
-  /** Benchmark decontamination — remove training documents that share any
-    * word `n`-gram with an evaluation/benchmark set, the standard guard
-    * against test-set leakage into a training corpus. The benchmark's
-    * distinct n-gram set is eval-suite-sized (≪ corpus), so the membership
-    * join broadcasts it; the corpus side is a map-side compiled n-gram
-    * explode (graft.plans.WordNgrams) → semi-join → anti-join on doc ids —
-    * wide document rows shuffle at most once, the gram stream never does.
-    * Returns the KEPT (clean) corpus rows.
-    */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    corpus.join(contaminatedIds(corpus, benchmark, n, textCol, idCol),
-      Seq(idCol), "left_anti")
+  private val MaxSuiteGrams = "spark.graft.decontaminate.maxSuiteGrams"
 
-  /** The contaminated-id side of [[decontaminate]], exposed so a composed
-    * pipeline can derive the dirty set from the CHEAP raw scan and
-    * anti-join it against an expensive downstream stage — referencing that
-    * stage once instead of twice (the anti-join intersects, so extra dirty
-    * ids for rows the stage already dropped are harmless).
+  /** Benchmark decontamination's one gram-membership screen: does a
+    * document share a word `n`-gram with the evaluation suite? Built once
+    * per suite by [[gramScreen]]; `inSuite` is its membership test on a
+    * gram column. At or under the cap it is an exact probe of a broadcast
+    * hash set (graft.plans.StringSetContains), fused into the scan as a
+    * per-row filter, batch or stream. Over the cap it is a bloom
+    * pre-screen (false positives, no false negatives) whose survivors an
+    * exact join against the suite's grams confirms; that side is batch
+    * only.
     */
-  def contaminatedIds(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
-                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val benchGrams = wordGrams(benchmark, n, textCol, idCol, rows = true)
-      .select(col("grams")).distinct()
-    wordGrams(corpus, n, textCol, idCol, rows = true)
-      .join(broadcast(benchGrams), "grams")
-      .select(col("gid").as(idCol)).distinct()
+  final class GramScreen private[Dedup] (n: Int, textCol: String, cap: Long,
+                                         confirm: Option[DataFrame],
+                                         val inSuite: Column => Column) {
+
+    /** `docs` without the documents that share a gram with the suite. A
+      * NULL-text document has no grams and is kept, as by an anti-join.
+      */
+    def apply(docs: DataFrame, idCol: String = "doc_id"): DataFrame = confirm match {
+      case None => docs.where(!coalesce(exists(gramsOf(textCol, n), inSuite), lit(false)))
+      case Some(suite) =>
+        require(!docs.isStreaming, s"the suite has more than $cap distinct grams, so the " +
+          s"screen confirms by a join, which a stream cannot run; raise $MaxSuiteGrams")
+        val dirty = wordGrams(docs, n, textCol, idCol, rows = true)
+          .where(inSuite(col("grams"))).join(suite, "grams")
+          .select(col("gid").as(idCol)).distinct()
+        docs.join(dirty, Seq(idCol), "left_anti")
+    }
   }
 
-  /** Eval-integrity leak report — the INVERSE direction of
-    * [[decontaminate]]: for each benchmark document, how many DISTINCT
-    * corpus documents share at least one n-gram with it. Dropping leaked
-    * corpus docs protects training; this is what the eval-integrity
-    * review publishes about the SUITE — which items are compromised and
-    * how broadly, so a too-leaked task can be retired. Scale shape: the
-    * corpus gram stream probes the broadcast (gram → bench id) table
-    * map-side; the shuffle carries distinct (bench, corpus) id PAIRS —
-    * leak-sized, never gram-sized. Benchmark docs with zero leaks still
-    * appear (n_leaked_docs = 0): absence of evidence is part of the
-    * report.
+  /** The [[GramScreen]] of `benchmark`'s word `n`-grams. One job pulls at
+    * most `cap + 1` distinct suite grams to the driver (default cap: the
+    * `maxSuiteGrams` conf, 10M grams, about 0.5 GB). At or under the cap
+    * they become the exact probe set; over it the suite is aggregated into
+    * a bloom filter instead, sized by Spark's own runtime bloom-filter
+    * confs and shipped inside the plan.
+    */
+  def gramScreen(benchmark: DataFrame, n: Int = 8, textCol: String = "text",
+                 cap: Option[Long] = None): GramScreen = {
+    import graft.plans.Exprs
+    val spark = benchmark.sparkSession
+    val max = cap.getOrElse(spark.conf.get(MaxSuiteGrams, "10000000").toLong)
+    require(max >= 0 && max < Int.MaxValue, s"$MaxSuiteGrams must be in [0, ${Int.MaxValue})")
+    val suite = benchmark.select(explode(gramsOf(textCol, n)).as("grams")).distinct()
+    val probe = suite.limit(max.toInt + 1).collect()
+    if (probe.length <= max) {
+      val set = spark.sparkContext.broadcast(
+        probe.map(_.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      new GramScreen(n, textCol, max, None, g => Exprs.stringSetContains(g, set))
+    } else {
+      val bloom = suite.agg(Exprs.bloomAgg(xxhash64(col("grams"))))
+        .head().getAs[Array[Byte]](0)
+      new GramScreen(n, textCol, max, Some(suite),
+        g => Exprs.bloomMightContain(lit(bloom), xxhash64(g)))
+    }
+  }
+
+  /** Eval-integrity leak report, the inverse direction of the
+    * [[GramScreen]]: for each benchmark document, how many DISTINCT corpus
+    * documents share at least one n-gram with it. Dropping leaked corpus
+    * docs protects training; this is what the eval-integrity review
+    * publishes about the SUITE — which items are compromised and how
+    * broadly, so a too-leaked task can be retired. The corpus gram rows
+    * pass the screen's membership test first, so only the leaked rows
+    * join the suite's (bench id, gram) table; the shuffle carries distinct
+    * (bench, corpus) id PAIRS. Benchmark docs with zero leaks still appear
+    * (n_leaked_docs = 0): absence of evidence is part of the report.
     */
   def contaminationReport(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
                           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    val inSuite = gramScreen(benchmark, n, textCol).inSuite
     val bg = wordGrams(benchmark, n, textCol, idCol, rows = true)
       .select(col("gid").as("__bid"), col("grams")).distinct()
     val pairs = wordGrams(corpus, n, textCol, idCol, rows = true)
-      .join(broadcast(bg), "grams")
+      .where(inSuite(col("grams")))
+      .join(bg, "grams")
       .select(col("__bid"), col("gid").as("__cid")).distinct()
     val counts = pairs.groupBy(col("__bid").as("bench_id"))
       .agg(count(lit(1)).as("n_leaked_docs"))
@@ -805,37 +833,6 @@ object Dedup {
       .join(broadcast(counts), Seq("bench_id"), "left") // leak-report sized
       .select(col("bench_id"),
         coalesce(col("n_leaked_docs"), lit(0L)).as("n_leaked_docs"))
-  }
-
-  /** Decontamination past broadcast scale: [[decontaminate]] broadcasts the
-    * benchmark's raw gram STRINGS, which stops working when the eval suite
-    * union grows to hundreds of millions of grams. Here the membership set
-    * ships as a fixed-size BLOOM FILTER (Spark's own runtime-filter
-    * aggregate — `numBits` bytes/8 regardless of gram count), the corpus
-    * gram stream probes it map-side, and the few bloom survivors (true
-    * hits + the fp rate) are CONFIRMED by an exact join against the gram
-    * set — which now touches a candidate set, not the corpus, so AQE can
-    * shuffle-join it without anyone broadcasting strings. No false
-    * negatives (bloom) + exact confirm (join) ⇒ semantics identical to
-    * [[decontaminate]], checked by the same oracle.
-    */
-  def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
-                         expectedGrams: Long = 1000 * 1000, numBits: Long = 8L * 1000 * 1000,
-                         textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val benchGrams = wordGrams(benchmark, n, textCol, idCol, rows = true)
-      .select(col("grams")).distinct()
-    // the sketch is MODEL-sized (numBits/8 bytes regardless of gram count)
-    // and might_contain requires a constant filter — driver-resident like
-    // every codebook, shipped once inside the plan
-    val bloomBytes = benchGrams
-      .agg(graft.plans.Exprs.bloomAgg(xxhash64(col("grams")), expectedGrams, numBits).as("__bf"))
-      .head().getAs[Array[Byte]](0)
-    val candidates = wordGrams(corpus, n, textCol, idCol, rows = true)
-      .where(graft.plans.Exprs.bloomMightContain(lit(bloomBytes), xxhash64(col("grams"))))
-    val contaminated = candidates
-      .join(benchGrams, "grams")
-      .select(col("gid").as(idCol)).distinct()
-    corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
   /** 64-bit SimHash fingerprint over whitespace tokens — one compiled

@@ -335,15 +335,13 @@ object Quantiles {
     psiAgainst(current, keyCol, valueCol, k, bounds, props)
   }
 
-  /** The reference side of a PSI monitor, computed once: the k-quantile
-    * bin bounds and the SMOOTHED reference proportion per (group, bin)
+  /** The reference side of [[populationStability]]: the k-quantile bin
+    * bounds and the SMOOTHED reference proportion per (group, bin)
     * (`__p`, Laplace (c + 0.5)/(n + k/2)) — both model-sized (group × k
-    * rows). A streaming monitor materializes these at build time and
-    * scores every micro-batch against them ([[psiAgainst]]); the batch
-    * [[populationStability]] is exactly that composition.
+    * rows).
     */
-  def psiReference(reference: DataFrame, keyCol: String, valueCol: String,
-                   k: Int = 10): (DataFrame, DataFrame) = {
+  private def psiReference(reference: DataFrame, keyCol: String, valueCol: String,
+                           k: Int = 10): (DataFrame, DataFrame) = {
     require(k >= 2 && k <= 256, "need 2 <= k <= 256 bins")
     val qs = (1 until k).map(i => i.toDouble / k -> s"__b$i")
     val bounds = quantileCont(reference, keyCol, valueCol, qs)
@@ -366,8 +364,8 @@ object Quantiles {
     * reference emit nothing — a new entity has no reference distribution
     * to drift from.
     */
-  def psiAgainst(current: DataFrame, keyCol: String, valueCol: String, k: Int,
-                 bounds: DataFrame, refProps: DataFrame): DataFrame = {
+  private def psiAgainst(current: DataFrame, keyCol: String, valueCol: String, k: Int,
+                         bounds: DataFrame, refProps: DataFrame): DataFrame = {
     val cc = binCounts(current, bounds, keyCol, valueCol)
     val filled = refProps
       .join(broadcast(cc), Seq("__k", "bin"), "left")
@@ -379,35 +377,6 @@ object Quantiles {
       .select(col("__k"), ((col("__p") - q) * log(col("__p") / q)).as("__term"))
       .groupBy(col("__k").as(keyCol))
       .agg(round(sum(col("__term").cast("decimal(28,12)")).cast("double"), 6).as("psi"))
-  }
-
-  /** Grid-KS of `current` against a [[psiReference]] bounds frame — the
-    * sup-norm companion to [[psiAgainst]]. The reference's CDF at its own
-    * i/k-th quantile bound is i/k BY CONSTRUCTION, so only the current
-    * side needs counting: one pass computes, per group, the fraction of
-    * rows at or below each bound, and KS_grid = max_i |F_cur(b_i) − i/k| —
-    * within 1/k of the exact two-sample statistic, with model-sized state
-    * (group × k) and no access to the reference rows at score time.
-    * Groups absent from the reference emit nothing (same contract as PSI).
-    */
-  def ksAgainst(current: DataFrame, keyCol: String, valueCol: String, k: Int,
-                bounds: DataFrame): DataFrame = {
-    val boundCols = bounds.columns.filter(_.startsWith("__b"))
-      .sortBy(_.drop(3).toInt)
-    val pre = current.where(col(valueCol).isNotNull)
-      .join(broadcast(bounds), current(keyCol).cast("string") <=> bounds(keyCol))
-      .select(bounds(keyCol).as("__k") +: col(valueCol) +: boundCols.map(col): _*)
-    val aggs = boundCols.map { n =>
-      sum((col(valueCol) <= col(n)).cast("long")).as("__c" + n.drop(3))
-    } :+ count(lit(1)).as("__n")
-    val st = pre.groupBy(col("__k")).agg(aggs.head, aggs.tail: _*)
-    val devs = boundCols.map { n =>
-      val i = n.drop(3).toInt
-      abs(col("__c" + i).cast("double") / col("__n").cast("double")
-        - lit(i.toDouble / k))
-    }
-    val ks = if (devs.size == 1) devs.head else greatest(devs: _*)
-    st.select(col("__k").as(keyCol), col("__n").as("n"), round(ks, 6).as("ks"))
   }
 
   /** Shared branch-free bin assignment + count against a bounds frame. */

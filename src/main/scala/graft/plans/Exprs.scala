@@ -126,16 +126,16 @@ object Exprs {
       ipLut, resNormSq, qCentDot, centNormSq, centCross, qNorm))
 
   /** Bloom-filter aggregate over xxhash64'd values (Spark's own runtime-
-    * filter machinery, surfaced as a library call): one binary sketch whose
-    * size is `numBits` regardless of item count — the membership-set shape
-    * when the set outgrows a broadcast of its raw values. `hashed` MUST be
-    * an xxhash64 column (the aggregate hashes longs).
+    * filter machinery, surfaced as a library call): one binary sketch sized
+    * by `spark.sql.optimizer.runtime.bloomFilter.expectedNumItems` and
+    * `.numBits` regardless of item count — the membership-set shape when
+    * the set outgrows a broadcast of its raw values. `hashed` MUST be an
+    * xxhash64 column (the aggregate hashes longs).
     */
-  def bloomAgg(hashed: Column, expectedItems: Long, numBits: Long): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+  def bloomAgg(hashed: Column): Column = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    GraftBridge.column(new BloomFilterAggregate(GraftBridge.expression(hashed),
-      Literal(expectedItems), Literal(numBits)).toAggregateExpression())
+    GraftBridge.column(
+      new BloomFilterAggregate(GraftBridge.expression(hashed)).toAggregateExpression())
   }
 
   /** Membership probe against a [[bloomAgg]] sketch: false positives at the
@@ -154,7 +154,8 @@ object Exprs {
 
   /** EXACT string-set membership probe against a broadcast, executor-cached
     * hash set (see [[StringSetContains]]): O(1) per row where an
-    * `arrays_overlap` confirm against a literal array is O(|set|).
+    * `arrays_overlap` confirm against a literal array is O(|set|). The
+    * exact side of `Dedup.gramScreen`.
     */
   def stringSetContains(item: Column,
                         set: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]): Column =

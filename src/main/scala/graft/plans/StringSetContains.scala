@@ -19,8 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * process-global cache keyed by broadcast id. String equality is exact
   * UTF8String equality — no hashing-only shortcut, so semantics are
   * identical to `arrays_overlap` / an exact semi-join, with zero false
-  * positives. Use for sets up to broadcast scale; past that, the
-  * bloom + confirm-join path (Dedup.decontaminateBloom) is the shape.
+  * positives. Use for sets up to broadcast scale; past that,
+  * `Dedup.gramScreen` switches to a bloom pre-screen and a confirm join.
   */
 case class StringSetContains(child: Expression,
                              set: Broadcast[Array[Array[Byte]]])

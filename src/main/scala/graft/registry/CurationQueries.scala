@@ -303,9 +303,8 @@ object CurationQueries {
       // benchmark decontamination: docs sharing any 8-gram with the
       // (deterministically chosen) benchmark slice are removed
       val docs = Tables.documents(s, dir)
-      Dedup.decontaminate(
-        docs.where(col("doc_id") % 50 =!= 0),
-        docs.where(col("doc_id") % 50 === 0))
+      Dedup.gramScreen(docs.where(col("doc_id") % 50 === 0))(
+        docs.where(col("doc_id") % 50 =!= 0))
         .select("doc_id", "lang", "source")
     },
       Oracle(
@@ -324,17 +323,17 @@ object CurationQueries {
           |WHERE doc_id % 50 <> 0 AND doc_id NOT IN (SELECT doc_id FROM dirty)""".stripMargin)),
 
     QuerySpec("q_decontaminate_bloom", (s, dir) => {
-      // same semantics as q_decontaminate (same oracle!), but the gram
-      // membership set ships as a fixed-size bloom filter with an exact
-      // confirm join on the bloom survivors — the shape that scales past
-      // a broadcastable benchmark gram set
+      // same semantics as q_decontaminate (same oracle!), but a cap of 0
+      // forces the screen's over-cap side: the gram membership set ships
+      // as a fixed-size bloom filter with an exact confirm join on the
+      // bloom survivors — the shape that scales past a broadcastable
+      // benchmark gram set
       val docs = Tables.documents(s, dir)
-      Dedup.decontaminateBloom(
-        docs.where(col("doc_id") % 50 =!= 0),
-        docs.where(col("doc_id") % 50 === 0))
+      Dedup.gramScreen(docs.where(col("doc_id") % 50 === 0), cap = Some(0L))(
+        docs.where(col("doc_id") % 50 =!= 0))
         .select("doc_id", "lang", "source")
     },
-      // bloom pre-screen + exact confirm = exactly decontaminate's semantics,
+      // bloom pre-screen + exact confirm = exactly the exact side's semantics,
       // so the bloom variant shares its oracle verbatim
       Oracle(
         """WITH toks AS (
@@ -399,8 +398,9 @@ object CurationQueries {
       // output frame feeds the next, Catalyst fuses the whole thing, and
       // the DuckDB oracle replays the composition as chained CTEs. Scale
       // shape is the union of the stages': one percentile aggregate +
-      // broadcast-back, hash-partitioned md5 dedup, gram-bucketed
-      // decontamination join — no stage materializes, no driver loop.
+      // broadcast-back, hash-partitioned md5 dedup, the suite's gram
+      // screen as a per-row filter — no stage materializes, no driver loop
+      // but the screen's one capped suite-gram collect.
       val docs = Tables.documents(s, dir)
       val bench = docs.where(col("doc_id") % 50 === 0)
       val corpus = docs.where(col("doc_id") % 50 =!= 0)
@@ -413,10 +413,7 @@ object CurationQueries {
       val deduped = graft.plans.GroupTopK.topKPerKey(
         gated.withColumn("__h", md5(col("text"))),
         Seq("__h"), Seq(col("doc_id").asc), 1).drop("__h")
-      // dirty ids derive from the RAW corpus scan (cheap subtree), so the
-      // gate+dedup stage is referenced exactly once — the anti-join
-      // intersects, making the wider dirty set equivalent
-      deduped.join(Dedup.contaminatedIds(corpus, bench), Seq("doc_id"), "left_anti")
+      Dedup.gramScreen(bench)(deduped)
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_tokens"), col("quality"))
     },
@@ -431,7 +428,7 @@ object CurationQueries {
       // dependency loop as data): corpus/bench splits → quality gate →
       // keep-first dedup → decontaminated manifest, each stage
       // materialized ONCE at its boundary, deterministic topological
-      // order, per-stage restatement (QueryDagSpec). Rows are identical
+      // order (QueryDagSpec). Rows are identical
       // to q_pipeline_e2e by construction — the SAME oracle SQL
       // hash-checks both faces, so the orchestrator's stage-boundary
       // semantics are oracle-verified, not just spec'd. Runs the
@@ -453,10 +450,8 @@ object CurationQueries {
           graft.plans.GroupTopK.topKPerKey(
             up("gated").withColumn("__h", md5(col("text"))),
             Seq("__h"), Seq(col("doc_id").asc), 1).drop("__h")),
-        Stage("curated", Seq("deduped", "corpus", "bench"), (_, _, up) =>
-          up("deduped")
-            .join(Dedup.contaminatedIds(up("corpus"), up("bench")),
-              Seq("doc_id"), "left_anti")
+        Stage("curated", Seq("deduped", "bench"), (_, _, up) =>
+          Dedup.gramScreen(up("bench"))(up("deduped"))
             .select(col("doc_id"), col("lang"), col("source"),
               col("n_tokens"), col("quality"))))
       // fresh run id per invocation (repeat bench passes measure the full
@@ -493,8 +488,7 @@ object CurationQueries {
       val corpus = docs.where(col("doc_id") % 50 =!= 0)
       val thr = TextAnalysis.qualityThreshold(corpus, 0.25)
       val store = Dedup.fingerprintStore(corpus.limit(0))
-      val bg = streaming.EventsStream.benchmarkGrams(bench)
-      streaming.EventsStream.curationStream(corpus, thr, store, bg)
+      streaming.EventsStream.curationStream(corpus, thr, store, Dedup.gramScreen(bench))
         .select(col("doc_id"), col("n_tokens"), col("quality"))
     },
       // the streaming curation pipeline's batch mirror shares the composed

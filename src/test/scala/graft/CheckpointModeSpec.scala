@@ -174,14 +174,11 @@ class CheckpointModeSpec extends SparkSpec {
     }
   }
 
-  test("QueryDag.run with only spark.graft.checkpointDir set writes reliable checkpoints") {
-    val stages = Seq(
-      QueryDag.Stage("base", Nil, (s, _, _) => s.range(10).toDF("v")),
-      QueryDag.Stage("sum", Seq("base"), (_, _, in) => in("base").agg(sum(col("v")).as("s"))))
+  test("Graft.materialize with only checkpointDir is reliable") {
     def run(): (Set[String], Long) = {
-      val out = QueryDag.run(spark, sfDir, stages)
-      (checkpointDirs(out("base")) ++ checkpointDirs(out("sum")),
-        out("sum").head().getLong(0))
+      val base = Graft.materialize(spark.range(10).toDF("v"), eager = true)
+      val total = Graft.materialize(base.agg(sum(col("v")).as("s")), eager = true)
+      (checkpointDirs(base) ++ checkpointDirs(total), total.head().getLong(0))
     }
     val (localDirs, localSum) = run()
     assert(localDirs.isEmpty)

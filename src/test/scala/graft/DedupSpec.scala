@@ -126,9 +126,21 @@ class DedupSpec extends SparkSpec {
       (2L, "completely unrelated text with none of those benchmark words here"),
       (3L, "alpha beta gamma only shares a short fragment not eight grams")
     ).toDF("doc_id", "text")
-    val kept = Dedup.decontaminate(corpus, bench)
+    val kept = Dedup.gramScreen(bench)(corpus)
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(2L, 3L))
+  }
+
+  test("gram screen keeps a NULL-text document on both sides of the size switch") {
+    // the anti-join shape keeps it (a NULL text has no grams); a per-row
+    // `!exists(grams, …)` is NULL there and would filter the row out
+    val bench = Seq((100L, "x y z")).toDF("doc_id", "text")
+    val corpus = Seq((1L, null: String), (2L, "a b c"), (3L, "x y z")).toDF("doc_id", "text")
+    for (cap <- Seq(None, Some(0L))) {
+      val kept = Dedup.gramScreen(bench, cap = cap)(corpus)
+        .select("doc_id").as[Long].collect().toSet
+      assert(kept === Set(1L, 2L), s"cap=$cap")
+    }
   }
 
   test("contaminationReport counts distinct leaked corpus docs per bench doc, zero-leak items included") {
@@ -145,22 +157,23 @@ class DedupSpec extends SparkSpec {
     assert(rep === Map(100L -> 2L, 200L -> 0L))
   }
 
-  test("decontaminateBloom equals exact decontaminate, even with a saturated filter") {
+  test("gram screen: the bloom side equals the exact side, even saturated") {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.where($"doc_id" % 50 =!= 0)
     val bench = docs.where($"doc_id" % 50 === 0)
-    val exact = Dedup.decontaminate(corpus, bench)
+    def kept(cap: Option[Long]) = Dedup.gramScreen(bench, cap = cap)(corpus)
       .select("doc_id").as[Long].collect().toSet
-    val bloom = Dedup.decontaminateBloom(corpus, bench)
-      .select("doc_id").as[Long].collect().toSet
-    assert(bloom === exact)
+    val exact = kept(None)
+    assert(exact.nonEmpty && exact.size < corpus.count())
+    assert(kept(Some(0L)) === exact)
     // a deliberately tiny filter saturates (high fp rate) — the exact
     // confirm join must still keep the results identical, proving the
     // bloom stage is a pure pre-screen that can only over-ADMIT candidates
-    val saturated = Dedup.decontaminateBloom(corpus, bench,
-      expectedGrams = 8, numBits = 64)
-      .select("doc_id").as[Long].collect().toSet
-    assert(saturated === exact)
+    val bloomConf = "spark.sql.optimizer.runtime.bloomFilter"
+    spark.conf.set(s"$bloomConf.expectedNumItems", "8")
+    spark.conf.set(s"$bloomConf.numBits", "64")
+    try assert(kept(Some(0L)) === exact)
+    finally Seq("expectedNumItems", "numBits").foreach(k => spark.conf.unset(s"$bloomConf.$k"))
   }
 
   test("winnowOverlapPairs flags shared-substring docs, not disjoint ones") {

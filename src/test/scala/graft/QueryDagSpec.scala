@@ -45,7 +45,8 @@ class QueryDagSpec extends SparkSpec {
       counted(Stage("odds", Seq("base"), (_, _, up) => up("base").where($"v" % 2 === 1))),
       counted(Stage("joined", Seq("evens", "odds"), (_, _, up) =>
         up("evens").unionByName(up("odds")))))
-    val out = QueryDag.run(spark, sfDir, stages)
+    val out = QueryDag.runPersisted(spark, sfDir, stages,
+      java.nio.file.Files.createTempDirectory("dag-once").toString)
     assert(out("joined").count() === 10L)
     assert(builds.toMap === Map("base" -> 1, "evens" -> 1, "odds" -> 1, "joined" -> 1))
   }
@@ -90,29 +91,6 @@ class QueryDagSpec extends SparkSpec {
     builds.clear()
     QueryDag.runPersisted(spark, sfDir, stages, root)
     assert(builds.isEmpty, builds.toMap.toString)
-  }
-
-  test("invalidate: persisted restatement drops exactly the affected stages' " +
-    "outputs, and the next run recomputes only those") {
-    val builds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    def mk(name: String, deps: Seq[String], mult: Int): Stage =
-      Stage(name, deps, (s, _, up) => {
-        builds(name) += 1
-        val base = deps.headOption.map(up).getOrElse(s.range(1, 4).toDF("v"))
-        base.select(($"v" * mult).as("v"))
-      })
-    val stages = Seq(mk("load", Nil, 1), mk("clean", Seq("load"), 10),
-      mk("report", Seq("clean"), 10), mk("audit", Seq("load"), 100))
-    val root = java.nio.file.Files.createTempDirectory("dag-invalidate").toString
-    QueryDag.runPersisted(spark, sfDir, stages, root)
-    builds.clear()
-    QueryDag.invalidate(spark, root, stages, Set("clean"))
-    assert(!QueryDag.stageCompleted(spark, root, "clean"))
-    assert(!QueryDag.stageCompleted(spark, root, "report"))
-    assert(QueryDag.stageCompleted(spark, root, "load"))
-    assert(QueryDag.stageCompleted(spark, root, "audit"))
-    QueryDag.runPersisted(spark, sfDir, stages, root)
-    assert(builds.toMap === Map("clean" -> 1, "report" -> 1), builds.toMap.toString)
   }
 
   test("q_dag_run reproduces q_pipeline_e2e row-for-row (same oracle)") {

@@ -48,7 +48,8 @@ class SourceAuditSpec extends SparkSpec {
 
   private val oneDefinition: Seq[(String, String)] = Seq(
     "input spread" -> """getNumPartitions""",
-    "word n-gram table" -> """[^.]tokens\(textCol\)\.as\("__toks"\)""",
+    "word n-grams of a text" -> """(?<!def )wordNgrams\(""",
+    "gram screen" -> """spark\.graft\.decontaminate\.maxSuiteGrams""",
     "int8 screen predicate" -> """dotInt8\(col\("ca"\), col\("cb"\)\)""",
     "exact-verify join-back" -> """normExact\(vecCol\)\.as\("nd"\)""",
     "single-query prelude" -> """query\.select\(col\(idCol\), col\(vecCol\)\)\.head\(\)""",
@@ -105,12 +106,7 @@ class SourceAuditSpec extends SparkSpec {
     "Sources.holdingsWide" -> "the holdings pivot long to wide (PAPER.md §1 step 4)",
     "Incremental.newerThanGlobal" -> "the single-table MAX(date) append (PAPER.md §1 step 3)",
     "PivotOps.pivotDynamic" -> "the pivot over a vocabulary found in the data (PAPER.md §1 step 4)",
-    "PivotOps.projectToVocabulary" -> "departed-ticker column removal (PAPER.md §1 step 4)") ++
-    // Streaming faces of reached batch operators, kept for the second
-    // deletion step (ROADMAP item 7b).
-    (Seq("slidingAgg", "streamingBars", "dedupWithinWatermark", "nearDedupWithinWatermark",
-      "sessionize", "sessionizeWindowed", "psiMonitor", "ksMonitor").map(d => s"EventsStream.$d") :+
-      "Sources.readEventsStream").map(_ -> "deferred to ROADMAP item 7b")
+    "PivotOps.projectToVocabulary" -> "departed-ticker column removal (PAPER.md §1 step 4)")
 
   private val toolEntries =
     Set("Bench", "ScaleBench", "Verify", "EntrySmoke", "PlanDump", "LoopBodyDump", "SparkEntry")

@@ -103,25 +103,6 @@ class SourcesSpec extends SparkSpec {
     assert(rows === Seq(1.0, 2.0)) // day 1 untouched, day 2 converged
   }
 
-  test("events stream source feeds the shared windowedAgg transform") {
-    val streamDir = Files.createTempDirectory("graft_stream")
-    Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("part-0.parquet"))
-    val stream = Sources.readEventsStream(spark, streamDir.toString)
-    assert(stream.isStreaming)
-    val agg = graft.streaming.EventsStream.windowedAgg(stream)
-    val query = agg.writeStream.format("memory").queryName("src_win")
-      .outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      // append mode: nothing finalizes (watermark never passes), but the
-      // pipeline runs — state is bounded, schema is the batch schema
-      assert(spark.table("src_win").schema.fieldNames.toSeq
-        === Seq("wstart", "event_type", "n", "total"))
-    } finally query.stop()
-  }
-
   // ---- the snapshot reader: one listing and schema per file set ----
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)

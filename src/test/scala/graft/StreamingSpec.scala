@@ -41,56 +41,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("slidingAgg lands each event in both overlapping hop windows; batch mirror matches q_sliding_window") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val out = EventsStream.slidingAgg(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-    val query = out.writeStream.format("memory").queryName("slide_agg")
-      .outputMode("append").start()
-    try {
-      // 10:05 belongs to the 09:30 and 10:00 hop windows
-      input.addData(
-        Ev(1L, ts("2024-01-01 10:05:00"), "click", 1.0),
-        Ev(2L, ts("2024-01-01 10:40:00"), "click", 2.0))
-      query.processAllAvailable()
-      input.addData(Ev(3L, ts("2024-01-01 14:00:00"), "view", 5.0))
-      query.processAllAvailable()
-      input.addData(Ev(4L, ts("2024-01-01 17:00:00"), "view", 5.0))
-      query.processAllAvailable()
-      val rows = spark.table("slide_agg").collect()
-        .map(r => r.getTimestamp(0) -> (r.getLong(2), r.getDouble(3))).toMap
-      // 09:30 window sees only the 10:05 event; 10:00 sees both; 10:30 only 10:40
-      assert(rows(ts("2024-01-01 09:30:00")) === ((1L, 1.0)), rows.toString)
-      assert(rows(ts("2024-01-01 10:00:00")) === ((2L, 3.0)), rows.toString)
-      assert(rows(ts("2024-01-01 10:30:00")) === ((1L, 2.0)), rows.toString)
-    } finally query.stop()
-  }
-
-  test("sessionize closes a session when the inactivity gap is exceeded") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val sessions = EventsStream.sessionize(input.toDS(), gapSec = 1800)
-    val query = sessions.writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Ev(1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-        Ev(1L, ts("2024-01-01 10:10:00"), "click", 2.0))
-      query.processAllAvailable()
-      // next event is far beyond the gap → previous session closes
-      input.addData(Ev(1L, ts("2024-01-01 13:00:00"), "click", 7.0))
-      query.processAllAvailable()
-      val rows = spark.table("sessions").collect()
-      assert(rows.length === 1, s"got ${rows.mkString(";")}")
-      val s = rows.head
-      assert(s.getLong(0) === 1L)
-      assert(s.getLong(1) === 2L)
-      assert(s.getDouble(2) === 3.0)
-      assert(s.getDouble(3) === 600.0)
-    } finally query.stop()
-  }
-
   test("streaming query restarts from its checkpoint without duplicating output") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_restart").toFile.getAbsolutePath
@@ -122,35 +72,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.where($"wstart" === ts("2024-01-01 12:00:00")).count() === 1)
   }
 
-  test("sessionizeWindowed (built-in session_window) finalizes sessions like byGap") {
-    implicit val sqlCtx = spark.sqlContext
-    val evs = Seq(
-      Ev(1L, ts("2024-01-01 10:00:00"), "c", 1.0),
-      Ev(1L, ts("2024-01-01 10:10:00"), "c", 2.0),
-      Ev(1L, ts("2024-01-01 13:00:00"), "c", 7.0))
-    val input = MemoryStream[Ev]
-    val query = EventsStream.sessionizeWindowed(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-      .writeStream.format("memory").queryName("sess_win").outputMode("append").start()
-    try {
-      input.addData(evs: _*)
-      query.processAllAvailable()
-      input.addData(Ev(9L, ts("2024-01-02 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      input.addData(Ev(9L, ts("2024-01-03 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      val streamed = spark.table("sess_win")
-        .where($"user_id" === 1L)
-        .select("user_id", "session_start", "n_events", "total_value")
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSet
-      val batch = operators.Sessionize.byGap(
-        evs.toDF().withColumn("ts", col("ts").cast("timestamp")))
-        .select("user_id", "session_start", "n_events", "total_value")
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSet
-      assert(streamed === batch, s"streamed $streamed vs batch $batch")
-    } finally query.stop()
-  }
-
   test("streamingTopEntities emits each finalized window's top-k once") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
@@ -179,93 +100,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows === Set((1L, 3L), (2L, 2L)),
         spark.table("top_ent").collect().mkString(";"))
     } finally query.stop()
-  }
-
-  test("batch Sessionize.byGap agrees with the streaming sessionizer on closed sessions") {
-    implicit val sqlCtx = spark.sqlContext
-    val evs = Seq(
-      Ev(1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-      Ev(1L, ts("2024-01-01 10:10:00"), "click", 2.0),
-      Ev(1L, ts("2024-01-01 13:00:00"), "click", 7.0),
-      Ev(2L, ts("2024-01-01 09:00:00"), "view", 4.0),
-      Ev(2L, ts("2024-01-01 11:00:00"), "view", 5.0))
-    val input = MemoryStream[Ev]
-    val query = EventsStream.sessionize(input.toDS(), gapSec = 1800)
-      .writeStream.format("memory").queryName("sess_mirror").outputMode("append").start()
-    try {
-      input.addData(evs: _*)
-      query.processAllAvailable()
-      // push the watermark far enough that every session times out
-      input.addData(Ev(9L, ts("2024-01-02 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      input.addData(Ev(9L, ts("2024-01-03 00:00:00"), "x", 0.0))
-      query.processAllAvailable()
-      val streamed = spark.table("sess_mirror")
-        .select("user_id", "n_events", "total_value", "duration_sec")
-        .where($"user_id" =!= 9L)
-        .as[(Long, Long, Double, Double)].collect().toSet
-      val batch = operators.Sessionize.byGap(
-        evs.toDF().withColumn("ts", col("ts").cast("timestamp")), gapSec = 1800)
-        .select("user_id", "n_events", "total_value", "duration_sec")
-        .where($"user_id" =!= 9L)
-        .as[(Long, Long, Double, Double)].collect().toSet
-      assert(streamed === batch, s"streamed $streamed vs batch $batch")
-    } finally query.stop()
-  }
-
-  test("streamingBars finalizes a day's OHLCV identical to the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val barsStream = EventsStream.streamingBars(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-    val query = barsStream.writeStream.format("memory").queryName("bars_stream")
-      .outputMode("append").start()
-    try {
-      val day1 = Seq(
-        Ev(1L, ts("2024-01-01 09:00:00"), "t", 10.0),
-        Ev(1L, ts("2024-01-01 12:00:00"), "t", 30.0),
-        Ev(1L, ts("2024-01-01 16:00:00"), "t", 20.0))
-      input.addData(day1: _*)
-      query.processAllAvailable()
-      // advance the watermark past day 1 (1-day delay → needs ts ≥ Jan 3)
-      input.addData(Ev(1L, ts("2024-01-03 09:00:00"), "t", 5.0))
-      query.processAllAvailable()
-      input.addData(Ev(1L, ts("2024-01-05 09:00:00"), "t", 6.0))
-      query.processAllAvailable()
-      val got = spark.table("bars_stream")
-        .where($"d" === "2024-01-01")
-        .select("open", "high", "low", "close", "volume").collect()
-      assert(got.length === 1, spark.table("bars_stream").collect().mkString(";"))
-      assert(got(0).getDouble(0) === 10.0 && got(0).getDouble(1) === 30.0
-        && got(0).getDouble(2) === 10.0 && got(0).getDouble(3) === 20.0
-        && got(0).getLong(4) === 3L)
-    } finally query.stop()
-  }
-
-  test("sessionize runs on the RocksDB state store (production state backend)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx = spark.sqlContext
-    try {
-      val input = MemoryStream[Ev]
-      val query = EventsStream.sessionize(input.toDS(), gapSec = 1800)
-        .writeStream.format("memory").queryName("sessions_rocks")
-        .outputMode("append").start()
-      try {
-        input.addData(Ev(9L, ts("2024-01-01 10:00:00"), "click", 1.0))
-        query.processAllAvailable()
-        input.addData(Ev(9L, ts("2024-01-01 13:00:00"), "click", 2.0))
-        query.processAllAvailable()
-        val rows = spark.table("sessions_rocks").collect()
-        assert(rows.length === 1 && rows.head.getLong(1) === 1L)
-      } finally query.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("streamingAsOf enriches each fact with the latest dim at-or-before it") {
@@ -373,28 +207,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("dedupWithinWatermark drops re-deliveries, state bounded by the delay") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val out = EventsStream.dedupWithinWatermark(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      Seq("user_id", "event_type"), delay = "1 hour")
-    val query = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Ev(1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-        Ev(1L, ts("2024-01-01 10:00:30"), "click", 1.0), // re-delivery, same key
-        Ev(2L, ts("2024-01-01 10:01:00"), "click", 2.0))
-      query.processAllAvailable()
-      input.addData(Ev(1L, ts("2024-01-01 10:05:00"), "click", 9.0)) // still duplicate
-      query.processAllAvailable()
-      val rows = spark.table("dedup_stream").collect()
-      assert(rows.length === 2, rows.mkString(";"))
-      assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
-    } finally query.stop()
-  }
-
   test("reachStream: chained dedup + daily window emit exact per-day distinct counts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
@@ -461,31 +273,6 @@ class StreamingSpec extends SparkSpec {
     // not inflate Jan 1 to 3
     assert(rows.sortBy(_._1).toSeq === Seq("2024-01-01" -> 2L, "2024-01-02" -> 1L),
       rows.mkString(";"))
-  }
-
-  test("nearDedupWithinWatermark folds reformatted duplicates, keeps distinct docs") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamDoc]
-    val out = EventsStream.nearDedupWithinWatermark(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")))
-    val query = out.writeStream.format("memory").queryName("near_dedup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        StreamDoc(1L, ts("2024-01-01 10:00:00"), "The quick brown fox"),
-        // same text reformatted: extra whitespace + case — same fingerprint
-        StreamDoc(2L, ts("2024-01-01 10:00:30"), "  the   QUICK brown\tfox "),
-        StreamDoc(3L, ts("2024-01-01 10:01:00"), "an entirely different document"))
-      query.processAllAvailable()
-      val rows = spark.table("near_dedup_stream").collect()
-      assert(rows.length === 2, rows.mkString(";"))
-      assert(rows.map(_.getLong(0)).toSet === Set(1L, 3L))
-      // batch path: same fingerprint semantics through dropDuplicates
-      val batch = EventsStream.nearDedupWithinWatermark(
-        Seq(StreamDoc(1L, ts("2024-01-01 10:00:00"), "a b c"),
-          StreamDoc(2L, ts("2024-01-01 10:00:01"), "A  B  c")).toDS().toDF())
-      assert(batch.count() === 1)
-    } finally query.stop()
   }
 
   test("qualityGateStream keeps exactly what the batch gate keeps at the landed threshold") {
@@ -644,12 +431,12 @@ class StreamingSpec extends SparkSpec {
     val thr = TextAnalysis.qualityThreshold(corpusDF, 0.25)
     val store = Dedup.fingerprintStore(
       Seq((9000L, corpus.head._2)).toDF("doc_id", "text")) // head text pre-seen
-    val benchGrams = EventsStream.benchmarkGrams(benchDF)
+    val screen = Dedup.gramScreen(benchDF)
 
     val input = MemoryStream[StreamDoc]
     val out = EventsStream.curationStream(
       input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      thr, store, benchGrams)
+      thr, store, screen)
     val query = out.writeStream.format("memory").queryName("curation_stream")
       .outputMode("append").start()
     try {
@@ -666,9 +453,7 @@ class StreamingSpec extends SparkSpec {
       val unseen = gated.join(store, gated("__h") === store("text_hash"), "left_anti")
       val deduped = graft.plans.GroupTopK.topKPerKey(
         unseen, Seq("__h"), Seq($"doc_id".asc), 1)
-      val batch = deduped
-        .join(Dedup.contaminatedIds(corpusDF, benchDF), Seq("doc_id"), "left_anti")
-        .select("doc_id").as[Long].collect().toSet
+      val batch = screen(deduped).select("doc_id").as[Long].collect().toSet
       assert(streamed === batch)
       assert(streamed.nonEmpty && streamed.size < corpus.length)
 
@@ -712,151 +497,32 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("psiMonitor: in-distribution batches stay quiet, a shifted batch alarms") {
+  test("gram screen on a stream: batch rows, conf named over cap") {
     implicit val sqlCtx = spark.sqlContext
-    val ref = (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-    val input = MemoryStream[Ev]
-    val scores = scala.collection.mutable.Map[Long, Double]()
-    val query = EventsStream.psiMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")), ref) { (psi, id) =>
-      psi.collect().foreach(r => scores(id) = r.getDouble(1))
-      ()
-    }.start()
+    import graft.operators.Dedup
+    val docs = Tables.documents(spark, sfDir).limit(100)
+      .select($"doc_id", $"text").as[(Long, String)].collect()
+    val bench = docs.filter(_._1 % 10 == 0).toSeq.toDF("doc_id", "text")
+    // one corpus doc copies a suite doc, so the screen has a row to drop
+    val copied = docs.find(_._1 % 10 == 0).get._2
+    val corpus = docs.filter(_._1 % 10 != 0).toSeq :+ (99999L -> copied)
+    val screen = Dedup.gramScreen(bench)
+    val input = MemoryStream[StreamDoc]
+    val stream = input.toDS().toDF()
+    val query = screen(stream).writeStream.format("memory").queryName("gram_screen")
+      .outputMode("append").start()
     try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
+      input.addData(corpus.map { case (id, t) => StreamDoc(id, ts("2024-01-01 10:00:00"), t) }: _*)
       query.processAllAvailable()
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble + 150)).toSeq: _*)
-      query.processAllAvailable()
-      assert(scores(0L) < 0.1, s"in-distribution batch must stay quiet: $scores")
-      assert(scores(1L) > 0.25, s"shifted batch must cross the retrain bar: $scores")
+      val streamed = spark.table("gram_screen").select("doc_id").as[Long].collect().toSet
+      val batch = screen(corpus.toDF("doc_id", "text")).select("doc_id").as[Long].collect().toSet
+      assert(streamed === batch)
+      assert(batch.nonEmpty && batch.size < corpus.length)
     } finally query.stop()
-  }
-
-  test("ksMonitor: identical batch scores ~0, a shifted batch's sup-norm is large") {
-    implicit val sqlCtx = spark.sqlContext
-    val ref = (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-    val input = MemoryStream[Ev]
-    val scores = scala.collection.mutable.Map[Long, Double]()
-    val query = EventsStream.ksMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")), ref) { (ks, id) =>
-      ks.collect().foreach(r => scores(id) = r.getDouble(2))
-      ()
-    }.start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      query.processAllAvailable()
-      // +150 shifts 3/4 of the mass past the old p75 — the exact KS is
-      // 0.75 and the k=10 grid sees it within 1/k
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble + 150)).toSeq: _*)
-      query.processAllAvailable()
-      assert(scores(0L) < 0.05, s"identical batch must score ~0: $scores")
-      assert(scores(1L) > 0.6, s"shifted batch sup-norm must be large: $scores")
-    } finally query.stop()
-  }
-
-  test("psiMonitor kill-and-restart: baseline frozen at build time, committed batches don't re-fire") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_psi_restart").toFile.getAbsolutePath
-    val (ckpt, refDir, outDir) = (s"$dir/ckpt", s"$dir/ref", s"$dir/out")
-    (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-      .write.mode("overwrite").parquet(refDir)
-    val input = MemoryStream[Ev]
-    val fires = scala.collection.mutable.ArrayBuffer[Long]()
-    def start() = EventsStream.psiMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      spark.read.parquet(refDir)) { (psi, id) =>
-      fires += id
-      psi.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      ()
-    }.option("checkpointLocation", ckpt).start()
-    def score(id: Int): Double = spark.read.parquet(s"$outDir/batch=$id")
-      .select("psi").as[Double].head()
-    val q1 = start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-      // GROW the landed reference mid-flight: a +1000 block that would move
-      // every bin bound if any batch re-resolved the reference plan
-      (1 to 200).map(i => ("click", i.toDouble + 1000)).toDF("event_type", "value")
-        .write.mode("append").parquet(refDir)
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // batch 1 binned against the BUILD-TIME baseline: same in-distribution
-    // score as batch 0, not the alarm the mutated reference would produce
-    assert(score(0) < 0.1, s"in-distribution: ${score(0)}")
-    assert(score(1) === score(0), "baseline must not shift within a query's lifetime")
-    // wave 3 lands while the query is DOWN; the restart rebuilds the
-    // baseline from the grown corpus (the documented refresh point) and
-    // must score ONLY the pending batch — committed ids don't re-fire
-    input.addData((1 to 200).map(i =>
-      Ev(2000L + i, ts("2024-01-01 12:00:00"), "click", i.toDouble)).toSeq: _*)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(fires.toSeq === Seq(0L, 1L, 2L),
-      s"restart must resume numbering and not re-fire committed batches: $fires")
-    // proof the restart DID re-resolve: the same wave now alarms (half the
-    // rebuilt reference's mass sits in the +1000 block the wave never hits)
-    assert(score(2) > 0.25, s"rebuilt baseline must alarm: ${score(2)}")
-  }
-
-  test("ksMonitor kill-and-restart: bounds frozen at build time, alarms don't double-fire") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ks_restart").toFile.getAbsolutePath
-    val (ckpt, refDir, outDir) = (s"$dir/ckpt", s"$dir/ref", s"$dir/out")
-    (1 to 200).map(i => ("click", i.toDouble)).toDF("event_type", "value")
-      .write.mode("overwrite").parquet(refDir)
-    val input = MemoryStream[Ev]
-    val fires = scala.collection.mutable.ArrayBuffer[Long]()
-    def start() = EventsStream.ksMonitor(
-      input.toDS().toDF().withColumn("ts", col("ts").cast("timestamp")),
-      spark.read.parquet(refDir)) { (ks, id) =>
-      fires += id
-      ks.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      ()
-    }.option("checkpointLocation", ckpt).start()
-    def score(id: Int): Double = spark.read.parquet(s"$outDir/batch=$id")
-      .select("ks").as[Double].head()
-    val q1 = start()
-    try {
-      input.addData((1 to 200).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-      (1 to 200).map(i => ("click", i.toDouble + 1000)).toDF("event_type", "value")
-        .write.mode("append").parquet(refDir)
-      input.addData((1 to 200).map(i =>
-        Ev(1000L + i, ts("2024-01-01 11:00:00"), "click", i.toDouble)).toSeq: _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(score(0) < 0.05, s"identical batch must score ~0: ${score(0)}")
-    assert(score(1) === score(0), "bounds must not shift within a query's lifetime")
-    input.addData((1 to 200).map(i =>
-      Ev(2000L + i, ts("2024-01-01 12:00:00"), "click", i.toDouble)).toSeq: _*)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(fires.toSeq === Seq(0L, 1L, 2L),
-      s"restart must resume numbering and not re-fire committed batches: $fires")
-    // rebuilt bounds: the wave covers only the lower half of the grown
-    // reference — sup-norm ≈ 0.5 at the median bound
-    assert(score(2) > 0.4, s"rebuilt bounds must alarm: ${score(2)}")
-  }
-
-  test("decontaminator enforces its broadcastable-suite precondition") {
-    val bench = Tables.documents(spark, sfDir).limit(5).select($"doc_id", $"text")
-    val bg = EventsStream.benchmarkGrams(bench)
-    spark.conf.set("spark.graft.decontaminate.maxSuiteGrams", "5")
-    try {
-      val e = intercept[IllegalArgumentException] { EventsStream.decontaminator(bg) }
-      assert(e.getMessage.contains("decontaminateBloom"))
-    } finally spark.conf.unset("spark.graft.decontaminate.maxSuiteGrams")
-    // default cap: the same suite builds fine
-    assert(EventsStream.decontaminator(bg) != null)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.gramScreen(bench, cap = Some(0L))(stream)
+    }
+    assert(e.getMessage.contains("spark.graft.decontaminate.maxSuiteGrams"))
   }
 
   test("cardMergeBatch kill-and-restart: card converges to the batch card, " +

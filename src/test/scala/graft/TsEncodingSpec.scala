@@ -75,32 +75,6 @@ class TsEncodingSpec extends SparkSpec {
     assert(asLong.except(asLtz).isEmpty && asLtz.except(asLong).isEmpty)
   }
 
-  test("the STREAMING loader normalizes all three encodings to the same instants") {
-    import graft.sources.Sources
-    def run(tag: String, mk: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Seq[String] = {
-      val dir = Files.createTempDirectory(s"graft_tsenc_stream_$tag").toString
-      Seq(("u1", microsA), ("u2", microsB)).toDF("user_id", "us")
-        .select($"user_id", mk($"us").as("ts"))
-        .write.parquet(s"$dir/in.parquet")
-      // file-stream sources read directories of parquet parts
-      val stream = Sources.readEventsStream(spark, s"$dir/in.parquet")
-      assert(stream.isStreaming)
-      assert(stream.schema("ts").dataType === TimestampType) // watermarkable
-      val q = stream.select($"user_id", $"ts")
-        .writeStream.format("memory").queryName(s"tsenc_$tag")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        spark.table(s"tsenc_$tag").orderBy($"user_id")
-          .select(date_format($"ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")).as[String].collect().toSeq
-      } finally q.stop()
-    }
-    val expected = Seq("2021-03-04 05:06:07.123456", "2021-03-04 06:06:07.123456")
-    assert(run("long", c => (c * 1000L)) === expected)
-    assert(run("ntz", c => timestamp_micros(c).cast("timestamp_ntz")) === expected)
-    assert(run("ltz", c => timestamp_micros(c)) === expected)
-  }
-
   test("embeddings loader normalizes double-element vectors to the array<float> contract") {
     val dir = Files.createTempDirectory("graft_embenc").toString
     Seq((1L, Seq(1.25, -2.5), 0), (2L, Seq(0.5, 3.0), 1))
