@@ -232,7 +232,7 @@ object ScaleBench {
       // branch — a key gated in an earlier pass can still genuinely fail
       // in a later one, and that must print FAILED, not GATED)
       var outcome = ""
-      try SparkEntry.queries(name)(spark, dir).count()
+      try Bench.evaluate(SparkEntry.queries(name)(spark, dir))
       catch {
         // classified by TYPE: only the gate's own refusal counts as
         // designed behavior — an unrelated require() echoing the conf key
@@ -376,7 +376,7 @@ object ScaleBench {
         def t(corpusDir: String): Double =
           (1 to iters).map { _ =>
             val t0 = System.nanoTime()
-            curationFixedSuite(spark, corpusDir, base).count()
+            Bench.evaluate(curationFixedSuite(spark, corpusDir, base))
             (System.nanoTime() - t0) / 1e9
           }.min
         val (fb, fs) = (t(base), t(out))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * center of the purchase network).
   *
   * Size gate: the BSP loops (pagerank, label propagation, BFS) first read
-  * the edge list with ONE capped collect ([[LocalGraph.edges]]). A graph of
+  * the edge list with ONE capped collect ([[LocalGraph.edges]]), kept per
+  * input table snapshot so a repeated query skips it. A graph of
   * at most `localSolveMaxEdges` edges (default [[LocalGraph.MaxEdges]], 1M)
   * with integral ids is solved in the driver on a CSR and returned as a
   * local frame with the loop's exact rows; a small graph otherwise pays a

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.StateCache
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GenericInternalRow}
@@ -25,10 +27,25 @@ import org.apache.spark.sql.types._
   * k-round min-label propagation (not union-find), BFS within the round
   * budget, and union-find for Dedup's converge-to-fixpoint components.
   *
+  * The read is kept per input snapshot: when every leaf of the edge frame's
+  * plan is a table snapshot that `Sources.parquetSnapshot` handed out and
+  * its path still lists that file set (and the plan is deterministic),
+  * the gate's outcome — the [[Csr]], or the verdict that the graph is over
+  * the cap or has a null id — is a [[graft.StateCache]] value tied to all
+  * of those snapshots, so a later call over the same tables runs no
+  * collect, no scan and no job. It lives until a table it reads lists a
+  * new file set, or the context stops. Anything else (checkpoint-backed
+  * frames, direct `spark.read` reads, literal frames, nondeterministic
+  * plans) is read on every call. A kept [[Csr]] is shared by every later
+  * call, so it is read-only.
+  *
   * Driver memory at the 1M-edge cap: the collected rows (Spark Row
   * objects, on the order of 100 B an edge) live until they are unpacked
-  * into long arrays; the CSR and a kernel's state are then tens of MB of
-  * primitive arrays. Nothing is retained past the returned frame.
+  * into long arrays. A directed [[Csr]] of m edges holds at most 28·m
+  * bytes (2m node ids, 2m + 1 offsets, m targets: 28 MB at the cap); its
+  * symmetrized form shares the ids and adds at most 16·m (16 MB). One kept
+  * edge plan therefore holds at most 44 MB, and a kernel's state is a few
+  * arrays of one slot per node on top.
   */
 private[graft] object LocalGraph {
 
@@ -46,28 +63,90 @@ private[graft] object LocalGraph {
     case _ => false
   }
 
-  /** A graph on dense ids: `ids` holds the distinct node ids ascending (a
+  /** A read-only graph on dense ids: the distinct node ids ascending (a
     * node's dense id is its index there, so dense order IS id order), and
-    * `offsets`/`targets` are the CSR of its arcs — duplicate arcs dropped,
-    * self-loops kept. `idType` is the id type the distributed loop would
-    * output (the wider of the two endpoint types).
+    * the CSR of its arcs — duplicate arcs dropped, self-loops kept.
+    * `idType` is the id type the distributed loop would output (the wider
+    * of the two endpoint types). The arrays never leave it: a kept graph is
+    * shared by every call over the same snapshots.
     */
-  final class Csr(val ids: Array[Long], val offsets: Array[Int],
-                  val targets: Array[Int], val idType: DataType) {
+  final class Csr private (ids: Array[Long], offsets: Array[Int],
+                           targets: Array[Int], val idType: DataType) {
     def n: Int = ids.length
-    def degree(v: Int): Int = offsets(v + 1) - offsets(v)
+    /** The node id of dense id `v`. */
+    def id(v: Int): Long = ids(v)
+    /** The dense id of node `id`, negative when it is not a node. */
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    /** `v`'s arcs are `target(k)` for `k` in `start(v) until end(v)`. */
+    def start(v: Int): Int = offsets(v)
+    def end(v: Int): Int = offsets(v + 1)
+    def target(k: Int): Int = targets(k)
+    def degree(v: Int): Int = end(v) - start(v)
+
+    /** The undirected graph: every arc with its reverse. Same nodes, so
+      * the ids are shared.
+      */
+    def symmetrized: Csr = {
+      val arcs = new Array[Long](2 * targets.length)
+      var k = 0
+      var v = 0
+      while (v < n) {
+        while (k < offsets(v + 1)) {
+          arcs(2 * k) = v.toLong << 32 | targets(k)
+          arcs(2 * k + 1) = targets(k).toLong << 32 | v
+          k += 1
+        }
+        v += 1
+      }
+      Csr.of(ids, arcs, idType)
+    }
+  }
+
+  private object Csr {
+    /** The graph on `nodes` (distinct, ascending) with `arcs` packed as
+      * (src << 32 | dst) on dense ids: one sort orders them by source and
+      * drops duplicates in a single pass.
+      */
+    def of(nodes: Array[Long], arcs: Array[Long], idType: DataType): Csr = {
+      val uniq = distinctSorted(arcs)
+      val offsets = new Array[Int](nodes.length + 1)
+      val targets = new Array[Int](uniq.length)
+      var i = 0
+      while (i < uniq.length) {
+        offsets((uniq(i) >>> 32).toInt + 1) += 1
+        targets(i) = uniq(i).toInt
+        i += 1
+      }
+      i = 0
+      while (i < nodes.length) { offsets(i + 1) += offsets(i); i += 1 }
+      new Csr(nodes, offsets, targets, idType)
+    }
   }
 
   /** The gate: the edge list as a [[Csr]] (symmetrized when `undirected`)
     * when it has at most `cap` edges with integral, non-null ids, else None
     * and the caller's distributed path runs. A cap below 1 turns the gate
-    * off without a job.
+    * off without a job. The outcome is kept per input snapshot (see the
+    * header): the symmetrized graph is derived from the kept directed one,
+    * so a directed and an undirected key over one edge plan share a read.
     */
   def edges(edges: DataFrame, srcCol: String, dstCol: String, cap: Long,
             undirected: Boolean): Option[Csr] = {
     val pair = edges.select(col(srcCol), col(dstCol))
     val types = pair.schema.fields.map(_.dataType)
     if (cap < 1 || !types.forall(integral)) return None
+    val spark = pair.sparkSession
+    val plan = pair.queryExecution.analyzed
+    val tables = Sources.snapshotSources(spark, plan)
+    def kept(symmetric: Boolean)(read: => Option[Csr]): Option[Csr] = tables.fold(read) { sources =>
+      StateCache.value(spark, ("LocalGraph.edges", plan.canonicalized, sources, cap, symmetric), sources)(read)
+    }
+    val directed = kept(symmetric = false)(collect(pair, srcCol, dstCol, cap, types.maxBy(_.defaultSize)))
+    if (undirected) kept(symmetric = true)(directed.map(_.symmetrized)) else directed
+  }
+
+  private def collect(pair: DataFrame, srcCol: String, dstCol: String, cap: Long,
+                      idType: DataType): Option[Csr] = {
     // the one collect a gated key runs while its plan is built — it stands
     // in for every BSP round's jobs; capped at cap + 1 rows (never a count
     // followed by a collect), so an over-cap input sends at most that many
@@ -92,39 +171,18 @@ private[graft] object LocalGraph {
     val dst = new Array[Long](m)
     var i = 0
     while (i < m) { src(i) = rows(i).getLong(0); dst(i) = rows(i).getLong(1); i += 1 }
-    Some(csr(src, dst, undirected, types.maxBy(_.defaultSize)))
-  }
-
-  private def csr(src: Array[Long], dst: Array[Long], undirected: Boolean,
-                  idType: DataType): Csr = {
-    val m = src.length
     val ids = new Array[Long](2 * m)
     System.arraycopy(src, 0, ids, 0, m)
     System.arraycopy(dst, 0, ids, m, m)
     val nodes = distinctSorted(ids)
-    // arcs packed as (src << 32 | dst) on dense ids: one sort orders them
-    // by source and drops duplicates in a single pass
-    val arcs = new Array[Long](if (undirected) 2 * m else m)
-    var i = 0
+    val arcs = new Array[Long](m)
+    i = 0
     while (i < m) {
-      val s = java.util.Arrays.binarySearch(nodes, src(i)).toLong
-      val d = java.util.Arrays.binarySearch(nodes, dst(i)).toLong
-      arcs(i) = s << 32 | d
-      if (undirected) arcs(m + i) = d << 32 | s
+      arcs(i) = java.util.Arrays.binarySearch(nodes, src(i)).toLong << 32 |
+        java.util.Arrays.binarySearch(nodes, dst(i))
       i += 1
     }
-    val uniq = distinctSorted(arcs)
-    val offsets = new Array[Int](nodes.length + 1)
-    val targets = new Array[Int](uniq.length)
-    i = 0
-    while (i < uniq.length) {
-      offsets((uniq(i) >>> 32).toInt + 1) += 1
-      targets(i) = uniq(i).toInt
-      i += 1
-    }
-    i = 0
-    while (i < nodes.length) { offsets(i + 1) += offsets(i); i += 1 }
-    new Csr(nodes, offsets, targets, idType)
+    Some(Csr.of(nodes, arcs, idType))
   }
 
   /** `a` sorted in place, returned without duplicates. */
@@ -175,9 +233,9 @@ private[graft] object LocalGraph {
         if (deg == 0) dm = Math.addExact(dm, term(rank(v)))
         else {
           val t = term(rank(v) / deg.toDouble)
-          var k = g.offsets(v)
-          while (k < g.offsets(v + 1)) {
-            in(g.targets(k)) = Math.addExact(in(g.targets(k)), t)
+          var k = g.start(v)
+          while (k < g.end(v)) {
+            in(g.target(k)) = Math.addExact(in(g.target(k)), t)
             k += 1
           }
         }
@@ -206,9 +264,9 @@ private[graft] object LocalGraph {
       changed = false
       var v = 0
       while (v < g.n) {
-        var k = g.offsets(v)
-        while (k < g.offsets(v + 1)) {
-          val l = label(g.targets(k))
+        var k = g.start(v)
+        while (k < g.end(v)) {
+          val l = label(g.target(k))
           if (l < next(v)) { next(v) = l; changed = true }
           k += 1
         }
@@ -226,7 +284,7 @@ private[graft] object LocalGraph {
     */
   def hops(g: Csr, source: Long, iters: Int): Array[Long] = {
     val hop = Array.fill(g.n)(Graph.Unreached)
-    val s = java.util.Arrays.binarySearch(g.ids, source)
+    val s = g.indexOf(source)
     if (s < 0) return hop
     hop(s) = 0L
     val queue = new Array[Int](g.n)
@@ -236,9 +294,9 @@ private[graft] object LocalGraph {
     while (head < tail && hop(queue(head)) < iters) {
       val v = queue(head)
       head += 1
-      var k = g.offsets(v)
-      while (k < g.offsets(v + 1)) {
-        val t = g.targets(k)
+      var k = g.start(v)
+      while (k < g.end(v)) {
+        val t = g.target(k)
         if (hop(t) == Graph.Unreached) { hop(t) = hop(v) + 1; queue(tail) = t; tail += 1 }
         k += 1
       }
@@ -260,9 +318,9 @@ private[graft] object LocalGraph {
     }
     var v = 0
     while (v < g.n) {
-      var k = g.offsets(v)
-      while (k < g.offsets(v + 1)) {
-        val (a, b) = (find(v), find(g.targets(k)))
+      var k = g.start(v)
+      while (k < g.end(v)) {
+        val (a, b) = (find(v), find(g.target(k)))
         if (a < b) parent(b) = a else if (b < a) parent(a) = b
         k += 1
       }
@@ -281,7 +339,7 @@ private[graft] object LocalGraph {
   /** [[frame]] of dense-id labels, relabeled to node ids in `g.idType`. */
   def labelFrame(spark: SparkSession, g: Csr, idCol: String, labelCol: String,
                  label: Array[Int]): DataFrame =
-    build(spark, g, idCol, labelCol, LongType, v => g.ids(label(v)), relabel = true)
+    build(spark, g, idCol, labelCol, LongType, v => g.id(label(v)), relabel = true)
 
   /** One partition: what reads a node-sized result (an aggregate, a
     * top-k) then plans no exchange and runs as one job.
@@ -289,7 +347,7 @@ private[graft] object LocalGraph {
   private def build(spark: SparkSession, g: Csr, idCol: String, valueCol: String,
                     valueType: DataType, value: Int => Any, relabel: Boolean): DataFrame = {
     val out = Seq(AttributeReference(idCol, LongType)(), AttributeReference(valueCol, valueType)())
-    val rows = Array.tabulate[InternalRow](g.n)(v => new GenericInternalRow(Array[Any](g.ids(v), value(v))))
+    val rows = Array.tabulate[InternalRow](g.n)(v => new GenericInternalRow(Array[Any](g.id(v), value(v))))
     GraftBridge.ofRows(spark, LocalRelation(out, rows.toSeq))
       .select(col(idCol).cast(g.idType).as(idCol),
         if (relabel) col(valueCol).cast(g.idType).as(valueCol) else col(valueCol))

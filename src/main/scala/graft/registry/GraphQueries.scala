@@ -3,6 +3,7 @@ package registry
 
 import graft.operators._
 import graft.registry.QueryKit._
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** Graph keys over the purchase and co-purchase networks, with their
@@ -148,7 +149,7 @@ object GraphQueries {
       // graph via degree-ordered orientation: wedge join bounded by
       // Σ outdeg² ≤ O(|E|^1.5) no matter the hubs; edge list from the
       // process-shared materialization (a warehouse edge table)
-      Graph.triangleStats(s.read.parquet(sharedCoPurchaseEdges(s, dir))),
+      Graph.triangleStats(Sources.readParquet(s, sharedCoPurchaseEdges(s, dir))),
       Oracle(
         s"""$coPurchaseEdgesSql,
           |deg AS MATERIALIZED (
@@ -168,7 +169,7 @@ object GraphQueries {
     QuerySpec("q_degree_hist", (s, dir) =>
       // co-purchase degree distribution: the hub/isolate shape audit —
       // two partial-aggregated keyed passes, output distinct-degree small
-      Graph.degreeHistogram(s.read.parquet(sharedCoPurchaseEdges(s, dir))),
+      Graph.degreeHistogram(Sources.readParquet(s, sharedCoPurchaseEdges(s, dir))),
       Oracle(
         s"""$coPurchaseEdgesSql
           |SELECT deg, count(*) AS n_nodes FROM (

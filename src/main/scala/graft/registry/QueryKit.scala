@@ -3,7 +3,7 @@ package registry
 
 import graft.functions.Fns
 import graft.operators._
-import graft.sources.DailySummary
+import graft.sources.{DailySummary, Sources}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -236,10 +236,10 @@ object QueryKit {
       val path = s"${indexRoot(s)}/ivf_append_${new java.io.File(dir).getName}"
       Similarity.buildIvfIndex(hist, cents).write.mode("overwrite")
         .partitionBy("cent_idx").parquet(path)
-      val baseCounts = Similarity.ivfCellCounts(s.read.parquet(path))
+      val baseCounts = Similarity.ivfCellCounts(Sources.readParquet(s, path))
       Similarity.appendToIvfIndex(path, batch, cents)
       val drift = Similarity.ivfOccupancyDrift(
-        baseCounts, Similarity.ivfCellCounts(s.read.parquet(path)))
+        baseCounts, Similarity.ivfCellCounts(Sources.readParquet(s, path)))
       (path, cents, drift)
     }
 

@@ -4,7 +4,7 @@ package registry
 import graft.functions.Fns
 import graft.operators._
 import graft.registry.QueryKit._
-import graft.sources.DailySummary
+import graft.sources.{DailySummary, Sources}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -543,7 +543,7 @@ object ReferenceQueries {
       // is the incremental path it models — read stored summary rows, take
       // each fresh tick as a one-row summary, merge in one aggregate — never
       // a re-derivation of history. Oracle = full recompute (they must agree).
-      val stored = s.read.parquet(sharedBarStore(s, dir))
+      val stored = Sources.readParquet(s, sharedBarStore(s, dir))
       val fresh = Ohlc.summaryRows(events(s, dir).where(col("ts") >= tsNtz("2024-01-20")), Nil, Nil)
       Ohlc.mergeDaily(stored.unionByName(fresh), Nil, Nil)
         .select("user_id", "d", "open", "high", "low", "close", "volume")

@@ -3,6 +3,7 @@ package registry
 
 import graft.operators._
 import graft.registry.QueryKit._
+import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -213,7 +214,7 @@ object RetrievalQueries {
       // queries exactly as it would at 100 TB.
       val emb = Tables.embeddings(s, dir)
       val (path, cents) = sharedIvfIndex(s, dir)
-      Similarity.ivfTopKIndexed(s.read.parquet(path), cents,
+      Similarity.ivfTopKIndexed(Sources.readParquet(s, path), cents,
         emb.orderBy(col("vec_id").desc).limit(1), 10, nprobe = 4)
     },
       RowsOnly("IVF probing of the persisted index is approximate")),
@@ -227,7 +228,7 @@ object RetrievalQueries {
       // signal, not just a green row count.
       val emb = Tables.embeddings(s, dir)
       val (path, cents, drift) = sharedIvfAppendIndex(s, dir)
-      Similarity.ivfTopKIndexed(s.read.parquet(path), cents,
+      Similarity.ivfTopKIndexed(Sources.readParquet(s, path), cents,
         emb.orderBy(col("vec_id").desc).limit(1), 10, nprobe = 4)
         .withColumn("occupancy_drift", round(lit(drift), 6))
     },
@@ -241,7 +242,7 @@ object RetrievalQueries {
       // (q_ann_ivf_indexed covers plain IVF).
       val emb = Tables.embeddings(s, dir)
       val (path, cents, books) = sharedIvfPqIndex(s, dir)
-      Similarity.ivfPqResidualTopK(s.read.parquet(path), cents, books,
+      Similarity.ivfPqResidualTopK(Sources.readParquet(s, path), cents, books,
         emb.orderBy(col("vec_id").desc).limit(1), 10, nprobe = 4)
     },
       RowsOnly("IVF-PQ probing of the persisted index is approximate")),
@@ -271,9 +272,9 @@ object RetrievalQueries {
       val methods: Seq[(String, DataFrame)] = Seq(
         "ivf_trained" -> Similarity.ivfTopK(emb, q, 10, nlist = 16, nprobe = 4),
         "ivf_append" -> Similarity.ivfTopKIndexed(
-          s.read.parquet(appendPath), appendCents, q, 10, nprobe = 4),
+          Sources.readParquet(s, appendPath), appendCents, q, 10, nprobe = 4),
         "ivfpq_residual" -> Similarity.ivfPqResidualTopK(
-          s.read.parquet(pqPath), pqCents, pqBooks, q, 10, nprobe = 4),
+          Sources.readParquet(s, pqPath), pqCents, pqBooks, q, 10, nprobe = 4),
         "pq_adc" -> Similarity.pqTopK(encoded, books, q, 10),
         "pq_adc_rerank" -> Similarity.pqTopKReranked(encoded, books, emb, q, 10))
       methods

@@ -48,7 +48,7 @@ object DailySummary {
     * and the fill itself rides in the first reader's job.
     */
   def of(spark: SparkSession, snap: Sources.Snapshot): DataFrame = {
-    val summary = StateCache.frame(spark, key(snap.source), Some(snap.source)) {
+    val summary = StateCache.frame(spark, key(snap.source), Set(snap.source)) {
       val merged = snap.base.flatMap(b => StateCache.live(spark, key(b)))
         .map(refresh(_, Fns.normalizeTsNtz(snap.addedRows, "ts")))
       Graft.materialize(merged.getOrElse(build(Fns.normalizeTsNtz(snap.df, "ts"))), eager = false)

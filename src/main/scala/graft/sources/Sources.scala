@@ -2,7 +2,10 @@ package graft.sources
 
 import graft.StateCache
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 /** Ingestion — the Spark-native replacement for the reference's IO layer
@@ -30,6 +33,10 @@ object Sources {
       val base: Option[StateCache.Source] = None,
       val added: Seq[String] = Nil) {
     def df: DataFrame = GraftBridge.newInstance(relation)
+
+    /** The relation every [[df]] instance reads. */
+    private[sources] val scanned: Option[BaseRelation] =
+      relation.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
 
     /** The rows of the [[added]] files alone, read under this snapshot's
       * schema: no schema-inference job, and no older file is opened.
@@ -63,7 +70,7 @@ object Sources {
     val listed = dataFiles(spark, path)
     val files = listed.map(f => f.getPath.toString -> (f.getLen, f.getModificationTime)).toMap
     val source = StateCache.Source(path, digest(listed))
-    def snapshot(read: => Snapshot) = StateCache.value(spark, (spark, path), Some(source))(read)
+    def snapshot(read: => Snapshot) = StateCache.value(spark, (spark, path), Set(source))(read)
     val last = snapshot(new Snapshot(source, spark.read.parquet(path), files))
     if (last.source == source) last
     else {
@@ -88,6 +95,28 @@ object Sources {
     def byName(schema: StructType) = schema.fields.toSeq.sortBy(_.name)
     GraftBridge.dataSchema(df).map(byName).exists(data => files.forall(f =>
       scala.util.Try(byName(GraftBridge.parquetSchema(spark, f))).toOption.contains(data)))
+  }
+
+  /** The table snapshots `plan` reads, when it reads nothing else: the
+    * plan is deterministic and every leaf (subqueries' too) is the relation
+    * [[parquetSnapshot]] last handed out for its path, which still lists
+    * that file set. None for any other plan — a checkpoint, a literal
+    * frame, a direct `spark.read`, or a snapshot its path has moved past.
+    * A state derived from such a plan can be kept as long as the returned
+    * sources ([[StateCache.value]]).
+    */
+  private[graft] def snapshotSources(spark: SparkSession, plan: LogicalPlan)
+      : Option[Set[StateCache.Source]] = {
+    val leaves = plan.collectWithSubqueries { case l: LeafNode => l }
+    lazy val current = StateCache.built(spark).collect { case (s: Snapshot, _) => s }
+    val read = leaves.map {
+      // by identity: an older snapshot's relation over the same path is equal
+      case l: LogicalRelation => current.find(_.scanned.exists(_ eq l.relation))
+      case _ => None
+    }
+    if (!plan.deterministic || read.isEmpty || read.contains(None)) None
+    else Some(read.flatten.map(_.source).toSet)
+      .filter(_.forall(s => fingerprint(spark, s.path) == s.fingerprint))
   }
 
   /** [[parquetSnapshot]]'s frame — the one parquet table reader. */

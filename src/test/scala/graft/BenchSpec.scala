@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 /** The bench's failure contract (round-6 lesson: for a whole round, 48
   * analysis-failing queries reported their time-to-throw as query times
   * and the process exited 0). A forced failure must surface in the
-  * artifact, stay out of every total, and poison the exit path.
+  * artifact, stay out of every total, and poison the exit path; and the
+  * timed action computes the whole result, so a failure in a column a
+  * count would prune still surfaces.
   */
 class BenchSpec extends SparkSpec {
 
@@ -33,6 +35,16 @@ class BenchSpec extends SparkSpec {
     assert(out.results.keySet === Set("q_a", "q_b"))
     assert(math.abs(out.total - (out.results("q_a") + out.results("q_b"))) < 1e-9)
     assert(out.headline(sfDir).contains(""""n_failed":0"""))
+  }
+
+  test("the timed action computes every column: a failing one is a failure") {
+    // a count() never computes `bad`: Catalyst prunes the column it does not need
+    def query(s: org.apache.spark.sql.SparkSession) = s.range(3).toDF("n")
+      .select(col("n"), raise_error(concat(lit("boom "), col("n").cast("string"))).as("bad"))
+    assert(query(spark).count() === 3L)
+    val out = Bench.run(spark, Map("q_unused_col" -> ((s, _) => query(s))), sfDir, iters = 1)
+    assert(out.errors.keySet === Set("q_unused_col"))
+    assert(out.results.isEmpty)
   }
 
   test("error messages with control characters still produce strictly valid JSON") {

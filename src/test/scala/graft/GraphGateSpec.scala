@@ -3,6 +3,8 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import graft.operators.{Dedup, Graph, LocalGraph}
+import graft.registry.QueryKit
+import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{CollectLimitExec, LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -13,8 +15,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** The graph loops' size gate ([[LocalGraph]]): both sides return the same
-  * rows bit for bit, the gate switches exactly at the cap, and a gated key
-  * runs a handful of jobs instead of one per BSP round.
+  * rows bit for bit, the gate switches exactly at the cap, and its read is
+  * kept per input snapshot — a gated key over unchanged tables runs one
+  * job, and a new file set, or an input that is not a table snapshot, is
+  * read again.
   */
 class GraphGateSpec extends SparkSpec {
   import spark.implicits._
@@ -107,43 +111,127 @@ class GraphGateSpec extends SparkSpec {
     }
   }
 
-  test("an over-cap input sends at most cap + 1 rows to the driver") {
-    val cap = 100L
-    val collects = ArrayBuffer[QueryExecution]()
+  /** `f`'s value and the queries it ran, each with its action's name. */
+  private def executions[T](f: => T): (T, Seq[(String, QueryExecution)]) = {
+    val seen = ArrayBuffer[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (f == "collect") collects.synchronized(collects += qe)
+        seen.synchronized(seen += f -> qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val edges = spark.range(0, 5000, 1, 8).select(col("id").as("src"), (col("id") + 1).as("dst"))
-    // earlier tests' collects are still on the asynchronous bus: deliver
-    // them before listening, so only this test's reads are recorded
+    // earlier tests' queries are still on the asynchronous bus: deliver
+    // them before listening, so only this block's are recorded
     GraftTestBridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
-    val out = try {
-      val df = Graph.connectedComponents(edges, iters = 2, localSolveMaxEdges = cap)
+    try {
+      val v = f
       GraftTestBridge.drainListenerBus(spark.sparkContext)
-      df
+      (v, seen.synchronized(seen.toList))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def root(qe: QueryExecution) = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+    case p => p
+  }
+
+  /** `f`'s value and the number of edge reads the gate at `cap` ran in it. */
+  private def gateReads[T](cap: Long)(f: => T): (T, Int) = {
+    val (v, qes) = executions(f)
+    (v, qes.count { case (_, qe) =>
+      root(qe) match { case c: CollectLimitExec => c.limit == cap + 1; case _ => false }
+    })
+  }
+
+  test("an over-cap input sends at most cap + 1 rows to the driver") {
+    val cap = 100L
+    val edges = spark.range(0, 5000, 1, 8).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val (out, qes) = executions(Graph.connectedComponents(edges, iters = 2, localSolveMaxEdges = cap))
+    val collects = qes.collect { case ("collect", qe) => qe }
     assert(!local(out))
     assert(collects.nonEmpty)
     collects.foreach { qe =>
-      val root = qe.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
-        case p => p
-      }
-      assert(root.isInstanceOf[CollectLimitExec], root.treeString)
-      assert(root.asInstanceOf[CollectLimitExec].limit === cap + 1)
+      assert(root(qe).isInstanceOf[CollectLimitExec], root(qe).treeString)
+      assert(root(qe).asInstanceOf[CollectLimitExec].limit === cap + 1)
     }
     assert(out.count() === 5001L)
   }
 
-  test("q_pagerank and q_components run at most 3 jobs each") {
+  /** `edges` written as a parquet table under a new directory. */
+  private def table(edges: DataFrame, name: String): String = {
+    val path = s"${java.nio.file.Files.createTempDirectory("graft-gate").toString}/$name.parquet"
+    edges.write.parquet(path)
+    path
+  }
+
+  test("a repeated q_pagerank or q_components runs 1 job and scans no file") {
     for (key <- Seq("q_pagerank", "q_components")) {
-      SparkEntry.queries(key)(spark, sfDir).collect() // the tables' first read lists their files
+      val first = SparkEntry.queries(key)(spark, sfDir).collect() // reads the edge list
       val (rows, probe) = JobProbe.during(spark)(SparkEntry.queries(key)(spark, sfDir).collect())
-      assert(rows.nonEmpty, key)
-      assert(probe.jobs <= 3, s"$key ran ${probe.jobs} jobs")
+      assert(rows.toSeq === first.toSeq, key)
+      assert(probe.jobs === 1, s"$key ran ${probe.jobs} jobs")
+      assert(!probe.rddNames.contains("FileScanRDD"), s"$key: ${probe.rddNames}")
     }
+  }
+
+  test("an append or an in-place rewrite of an input table reads the edge list again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-gate-tables").toString
+    Tables.orders(spark, sfDir).write.parquet(s"$dir/orders.parquet")
+    Tables.lineitem(spark, sfDir).write.parquet(s"$dir/lineitem.parquet")
+    val cap = LocalGraph.MaxEdges
+    def ranks(edges: DataFrame) = Graph.pagerank(edges, iters = 3).collect().toSet
+    /** The rows the gate computes from the same edges with no memo: a
+      * literal frame is read on every call.
+      */
+    def unkept(edges: DataFrame) = ranks(spark.createDataFrame(edges.collectAsList(), edges.schema))
+    def source(table: String) = Sources.parquetSnapshot(spark, s"$dir/$table.parquet").source
+    def tied(s: StateCache.Source) = StateCache.built(spark).exists(_._2.contains(s))
+    def check(change: String): Unit = {
+      val edges = QueryKit.purchaseEdges(spark, dir)
+      val (first, reads) = gateReads(cap)(ranks(edges))
+      assert(reads === 1, change)
+      assert(first === unkept(edges), change)
+      val (again, rereads) = gateReads(cap)(ranks(QueryKit.purchaseEdges(spark, dir)))
+      assert(rereads === 0 && again === first, change)
+    }
+    check("first read")
+    val (orders, lineitem) = (source("orders"), source("lineitem"))
+    assert(tied(orders) && tied(lineitem))
+    val stale = QueryKit.purchaseEdges(spark, dir)
+    // new orders for existing order keys under other customers: new edges
+    Tables.orders(spark, sfDir).limit(40).withColumn("o_custkey", col("o_custkey") + 1)
+      .write.mode("append").parquet(s"$dir/orders.parquet")
+    // a frame built before the append reads a snapshot its path has moved past
+    assert(gateReads(cap)(ranks(stale))._2 === 1 && gateReads(cap)(ranks(stale))._2 === 1)
+    check("append to orders")
+    assert(!tied(orders) && source("orders") != orders)
+    assert(source("lineitem") === lineitem && tied(lineitem)) // the kept read's other table
+    Tables.lineitem(spark, sfDir).where(col("l_suppkey") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    check("rewrite of lineitem")
+    assert(!tied(lineitem) && source("lineitem") != lineitem)
+  }
+
+  test("an over-cap graph is probed once per snapshot, with the loop's rows") {
+    val cap = 100L
+    val path = table(spark.range(0, 500, 1, 4).select(col("id").as("src"), (col("id") + 1).as("dst")), "chain")
+    def run() = Graph.connectedComponents(Sources.readParquet(spark, path), iters = 2, localSolveMaxEdges = cap)
+    val (first, reads) = gateReads(cap)(run())
+    val (second, rereads) = gateReads(cap)(run())
+    assert(reads === 1 && rereads === 0)
+    assert(!local(first) && !local(second))
+    val distributed = Graph.connectedComponents(Sources.readParquet(spark, path), iters = 2, localSolveMaxEdges = 0L)
+    assert(longs(second) === longs(distributed) && longs(first) === longs(distributed))
+  }
+
+  test("checkpointed, nondeterministic and directly read edges read on every call") {
+    val cap = 1000L
+    val path = table(randomEdges(11L).toDF("src", "dst"), "random")
+    def reads(edges: => DataFrame): Int =
+      gateReads(cap)((1 to 2).map(_ => Graph.connectedComponents(edges, localSolveMaxEdges = cap)))._2
+    assert(reads(Sources.readParquet(spark, path)) === 1) // the snapshot's read is kept
+    assert(reads(Graft.materialize(Sources.readParquet(spark, path), eager = true)) === 2)
+    assert(reads(Sources.readParquet(spark, path).where(rand(7) >= 0)) === 2)
+    assert(reads(spark.read.parquet(path)) === 2)
   }
 }

@@ -5,9 +5,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 
-/** The state cache's concurrency contract: a key is built once however
-  * many callers race for it, so a frame owned by the entry is owned once,
-  * and a failed build is retried by the next caller.
+/** The state cache's contract: a key is built once however many callers
+  * race for it, so a frame owned by the entry is owned once; a failed
+  * build is retried by the next caller; and an entry tied to several
+  * sources goes when any one of them changes.
   */
 class MemoSpec extends SparkSpec {
   import spark.implicits._
@@ -42,6 +43,20 @@ class MemoSpec extends SparkSpec {
     StateCache.flush(spark)
     assert(StateCache.ownedIds(spark).isEmpty)
     assert(!spark.sparkContext.getPersistentRDDs.contains(added.head))
+  }
+
+  test("an entry tied to two sources is forgotten when either path changes") {
+    val (a, b) = (StateCache.Source(s"memo-a-${System.nanoTime()}", "1"),
+      StateCache.Source(s"memo-b-${System.nanoTime()}", "1"))
+    for (changed <- Seq(a, b)) {
+      val key = s"memo-two-${changed.path}"
+      assert(StateCache.value(spark, key, Set(a, b))(1) === 1)
+      assert(StateCache.value(spark, key, Set(a, b))(2) === 1) // kept
+      StateCache.invalidate(spark, "memo-unrelated")
+      assert(StateCache.value(spark, key, Set(a, b))(2) === 1)
+      StateCache.invalidate(spark, changed.path)
+      assert(StateCache.value(spark, key, Set(a, b))(3) === 3, s"${changed.path} changed")
+    }
   }
 
   test("a failed build is forgotten: the next caller builds again") {

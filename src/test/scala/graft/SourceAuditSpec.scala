@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   * expression (matching its inline copies too) occurs exactly once.
   *
   * The query keys are declared once, in the registry's family objects:
-  * the tools that run every key name none of them.
+  * the tools that run every key name none of them. The registry reads
+  * parquet only through `Sources.readParquet`, one listing and schema per
+  * table snapshot.
   *
   * Every public def of the library is reached: named, transitively, from
   * the registry, the benchmark harness or a tool entry point, or listed
@@ -84,6 +86,13 @@ class SourceAuditSpec extends SparkSpec {
     val missing = Seq("Fns.gapOffPeak(", "Fns.gapOnPeak(", "Fns.pctChangeFromFirst(",
       "Fns.sma(", "Fns.dollarVolume(").filterNot(family.contains(_))
     assert(missing.isEmpty, missing.mkString(", "))
+  }
+
+  test("the registry reads parquet through Sources, never spark.read") {
+    val hits = sources.toSeq.filter(_._1.toString.contains("/registry/"))
+      .flatMap { case (p, src) => """\.read\.parquet\(""".r.findAllIn(src).map(m => s"$p: $m") }
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(source("GraphQueries.scala").contains("Sources.readParquet(")) // the reader is there
   }
 
   test("the tools name no query key: they iterate the registry") {

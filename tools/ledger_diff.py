@@ -6,7 +6,8 @@
 PARENT and CHANGE are ledger files (`<workload>-seed<N>-trace1-ledger.jsonl`,
 one JSON line per op) or directories holding them (e.g. two checkouts'
 `.bench_work/out`); directories are paired by file name. Only the counts
-that repeat exactly from run to run are compared, so any difference is a
+that repeat exactly from run to run are compared (jobs, stages, tasks,
+Exchanges, scans, records scanned, eager jobs), so any difference is a
 change in what the program did, not host noise. A label that occurs more
 than once (a key run in two passes) is paired by occurrence. Prints one
 line per op label: the counters that differ as `parent -> change`, or
@@ -19,8 +20,8 @@ import sys
 # plan.codegen_compiles is left out: Spark's codegen cache keeps 100
 # classes, fewer than a market_daily day compiles, so its count moves
 # from run to run on one tree
-COUNTERS = ("sched.jobs", "sched.stages", "plan.exchanges", "plan.scans",
-            "registry.eager_jobs")
+COUNTERS = ("sched.jobs", "sched.stages", "sched.tasks", "plan.exchanges", "plan.scans",
+            "sources.scan_records", "registry.eager_jobs")
 
 
 def ops(path):
